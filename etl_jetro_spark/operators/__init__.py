@@ -50,6 +50,7 @@ from etl_jetro_spark.operators.sort import (  # noqa: F401
     lot_last4_key,
     nth_occurrence,
     numeric_first_key,
+    numeric_first_order,
     sort_numeric_first,
 )
 from etl_jetro_spark.operators.sampling import (  # noqa: F401

@@ -90,6 +90,8 @@ def to_canonical(
 
     Columns already present on ``df`` (e.g. a joined XDCK/FOB) win over the
     default blank fills — mirroring the reference's reindex-then-assign.
+    The result is unordered: the ordered sinks sort the collected table on
+    the driver (``sinks.excel_sink.collect_canonical``).
     """
     existing = set(df.columns)
     out = df.withColumns(
@@ -115,4 +117,4 @@ def to_canonical(
     if fills:
         out = out.withColumns(fills)
     cols = CANONICAL_COLS + [c for c in cfg.extra_cols if c in out.columns]
-    return out.select(*cols).orderBy("Branch", "Item", "Distro Size")
+    return out.select(*cols)

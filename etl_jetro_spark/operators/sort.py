@@ -1,11 +1,16 @@
 """Sort / window operators (SURVEY §2.6 W1–W5).
 
-Sorts in this engine appear only (a) just before ordered sinks — where the
-post-agg result is small by construction — and (b) as SortMergeJoin inputs
-chosen by Catalyst. Neither is a full-data total sort at 100 TB.
+Ordered sinks sort on the driver: their post-agg table is small by
+construction, is collected once, and is ordered in Python with
+:func:`numeric_first_order`, the driver-side twin of
+:func:`numeric_first_key`. In Spark, sorts appear only as SortMergeJoin
+inputs chosen by Catalyst and in row-ordered outputs such as the baby-flip
+table. Neither is a full-data total sort at 100 TB.
 """
 
 from __future__ import annotations
+
+import math
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -18,6 +23,20 @@ def numeric_first_key(col: str | Column) -> Column:
     last), mirroring the reference's ``to_numeric`` two-level sort."""
     c = F.col(col) if isinstance(col, str) else col
     return c.cast("string").try_cast("double")
+
+
+def numeric_first_order(key: float | None, text: str | None, item: str | None) -> tuple:
+    """W1 on the driver: a Python sort key that orders rows exactly like
+    Spark's ``orderBy(numeric_first_key(c).asc_nulls_last(), c, item)``,
+    given each row's ``numeric_first_key`` value ``key``. NULL keys sort
+    last and NaN above every number; NULL ``c``/``item`` sort first (Spark's
+    ascending default)."""
+    nan = key is not None and math.isnan(key)
+    return (
+        key is None, nan, 0.0 if key is None or nan else key,
+        text is not None, text or "",
+        item is not None, item or "",
+    )
 
 
 def sort_numeric_first(df: DataFrame, col: str, *extra: Column) -> DataFrame:

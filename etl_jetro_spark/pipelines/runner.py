@@ -11,10 +11,15 @@ from __future__ import annotations
 import os
 from datetime import date
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from etl_jetro_spark.pipelines import batch as B
-from etl_jetro_spark.sinks.excel_sink import write_canonical
+from etl_jetro_spark.sinks.excel_sink import (
+    collect_arrow,
+    collect_canonical,
+    write_canonical,
+    write_parquet_dir,
+)
 from etl_jetro_spark.sinks.macro import render_adpo_x, render_dlpm
 from etl_jetro_spark.sources.excel import (
     read_allocation_pricesheet,
@@ -28,6 +33,22 @@ def _write_text(out_dir: str, name: str, text: str) -> str:
     with open(path, "w", newline="\n") as fh:
         fh.write(text)
     return path
+
+
+def emit_order(
+    canon: DataFrame,
+    out_dir: str,
+    run_date: date | None = None,
+    name: str = "order_sheet",
+) -> dict:
+    """A run's ordered sinks: execute the canonical plan once (one Arrow
+    collect, sorted on the driver), then write the order sheet and, given
+    ``run_date``, the ADPO,X macro from that one table."""
+    table = collect_canonical(canon)
+    manifest = {"order_sheet": write_canonical(table, out_dir, name=name)}
+    if run_date is not None:
+        manifest["adpo_x"] = _write_text(out_dir, *render_adpo_x(table, run_date=run_date))
+    return manifest
 
 
 def run_247(
@@ -46,14 +67,11 @@ def run_247(
         canon = B.build_allocation(
             spark, wide, "247", base_date=run_date.isoformat()
         )
-        manifest["order_sheet"] = write_canonical(canon, out_dir)
-        name, text = render_adpo_x(canon, run_date=run_date)
-        manifest["adpo_x"] = _write_text(out_dir, name, text)
+        manifest = emit_order(canon, out_dir, run_date)
     if price_grid is not None:
         wide = B.clean_pricesheet(price_grid)
         long = B.build_pricesheet_long(spark, wide)
-        name, text = render_dlpm(long, initials, run_date)
-        manifest["dlpm"] = _write_text(out_dir, name, text)
+        manifest["dlpm"] = _write_text(out_dir, *render_dlpm(long, initials, run_date))
     return manifest
 
 
@@ -64,10 +82,7 @@ def run_acme(
     grid, token = read_single_with_token(in_folder)
     wide = B.clean_acme_like(grid, leading_junk_cols=2)
     canon = B.build_acme_like(spark, wide, "acme", token, run_date.isoformat())
-    manifest = {"order_sheet": write_canonical(canon, out_dir)}
-    name, text = render_adpo_x(canon, run_date=run_date)
-    manifest["adpo_x"] = _write_text(out_dir, name, text)
-    return manifest
+    return emit_order(canon, out_dir, run_date)
 
 
 def run_flips_big(
@@ -80,10 +95,7 @@ def run_flips_big(
     block = B.build_flips_store_block(big)
     wide = B.clean_big_flip(big)
     canon = B.build_big_flip(spark, wide, block, base_date=run_date.isoformat())
-    return {
-        "token": token,
-        "order_sheet": write_canonical(canon, out_dir, name="big_flip_order"),
-    }
+    return {"token": token, **emit_order(canon, out_dir, name="big_flip_order")}
 
 
 def run_leavins(
@@ -104,10 +116,7 @@ def run_leavins(
     canon = B.build_allocation(
         spark, wide, "leavins", edd=F.lit(edd.isoformat()).cast("date")
     )
-    manifest = {"order_sheet": write_canonical(canon, out_dir)}
-    name, text = render_adpo_x(canon, run_date=run_date)
-    manifest["adpo_x"] = _write_text(out_dir, name, text)
-    return manifest
+    return emit_order(canon, out_dir, run_date)
 
 
 def run_southern_cross(
@@ -117,10 +126,7 @@ def run_southern_cross(
     grid, _token = read_single_with_token(in_folder)
     wide = B.clean_southern_cross(grid)
     canon = B.build_southern_cross(spark, wide, run_date.isoformat())
-    manifest = {"order_sheet": write_canonical(canon, out_dir)}
-    name, text = render_adpo_x(canon, run_date=run_date)
-    manifest["adpo_x"] = _write_text(out_dir, name, text)
-    return manifest
+    return emit_order(canon, out_dir, run_date)
 
 
 def run_flips_baby(
@@ -131,7 +137,8 @@ def run_flips_baby(
     out_dir: str,
 ) -> dict:
     """Flips baby sub-pipeline: split → melt/agg → PO + carrier joins →
-    audit table (reference Flips/Flips.ipynb baby branch)."""
+    audit table (reference Flips/Flips.ipynb baby branch), executed once
+    and written from the collected Arrow table."""
     from etl_jetro_spark.sources.csv_po import read_latest_po_csv
     from etl_jetro_spark.sources.json_dim import read_carrier_json
 
@@ -140,8 +147,7 @@ def run_flips_baby(
     wide = B.clean_baby_flip(baby)
     po = read_latest_po_csv(spark, po_folder).select("PO #", "Store")
     carrier = read_carrier_json(spark, token, carrier_dir)
-    out = B.build_baby_flip(spark, wide, po, carrier)
-    os.makedirs(out_dir, exist_ok=True)
+    table = collect_arrow(B.build_baby_flip(spark, wide, po, carrier))
     pq = os.path.join(out_dir, "baby_flip_araho.parquet")
-    out.write.mode("overwrite").parquet(pq)
-    return {"token": token, "araho": pq, "rows": out.count()}
+    write_parquet_dir(table, pq)
+    return {"token": token, "araho": pq, "rows": table.num_rows}

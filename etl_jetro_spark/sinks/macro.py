@@ -7,21 +7,29 @@ reference output format exactly (K3 DLPM: 247/tools/pricesheet_tool.py:
 Flips/tools/adpo_I_tool.py:7-288). The clock is an injected parameter
 (the reference stamps wall-clock time — SURVEY §7 hard-part 4).
 
-These are *ordered sinks*: output depends on total row order, so the
-engine sorts in Spark (post-agg results are small by construction —
-stores × items, not fact volume) and renders driver-side.
+These are *ordered sinks*: output depends on total row order. Their
+inputs are small by construction (stores × items, not fact volume), so
+each is executed once and ordered on the driver: ADPO,X and ADPO,I render
+from the run's collected canonical Arrow table
+(``sinks.excel_sink.collect_canonical``), and DLPM collects the price table
+once, unsorted, with its ``numeric_first_key`` column. Every renderer is
+one pass over its sorted rows.
 """
 
 from __future__ import annotations
 
 import re
 from datetime import date
+from decimal import Decimal
+from itertools import groupby
+from operator import itemgetter
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from etl_jetro_spark.functions.text import item7
-from etl_jetro_spark.operators.sort import numeric_first_key
+from etl_jetro_spark.operators.sort import numeric_first_key, numeric_first_order
 
 FREIGHT_ITEM = "0990033"   # reference allocation_tool.py:304
 FAXSHARE_UNC = "\\\\10.1.12.12\\faxshare\\DailyPOCount\\POs"
@@ -29,6 +37,27 @@ FAXSHARE_UNC = "\\\\10.1.12.12\\faxshare\\DailyPOCount\\POs"
 
 def _mdy2(d: date) -> str:
     return d.strftime("%m/%d/%y")
+
+
+def _item7(v: int | None) -> str | None:
+    """``functions.text.item7`` over the canonical (long) Item column."""
+    return None if v is None else str(abs(v)).zfill(7)
+
+
+def _num_text(v: object) -> str | None:
+    """Spark's cast to string: doubles in Java notation (plain for
+    1e-3 <= |v| < 1e7, else ``d.dddE±n``; shortest round-trip digits, where
+    the JVM differs only on a few extreme values such as 4.9E-324), other
+    values as ``str``."""
+    if v is None or not isinstance(v, float):
+        return None if v is None else str(v)
+    if v != v or v in (float("inf"), float("-inf")):
+        return {"nan": "NaN", "inf": "Infinity", "-inf": "-Infinity"}[repr(v)]
+    if v == 0 or 1e-3 <= abs(v) < 1e7:
+        return repr(v)
+    sign, digits, exp = Decimal(repr(v)).normalize().as_tuple()
+    mant = "".join(map(str, digits))
+    return f"{'-' if sign else ''}{mant[0]}.{mant[1:] or '0'}E{exp + len(mant) - 1}"
 
 
 def _clean_num_str(s: object) -> str:
@@ -62,53 +91,26 @@ def render_dlpm(
     """
     from etl_jetro_spark.functions.text import money2dp
 
-    rows = (
-        price_long.select(
-            F.trim(F.col("Store#").cast("string")).alias("store"),
-            item7(F.col("Item#")).alias("item"),
-            F.trim(F.col("Vendor#").cast("string")).alias("vendor"),
-            money2dp(F.col("Cost")).alias("cost"),
-        )
-        .orderBy(numeric_first_key("store").asc_nulls_last(), "store", "item")
-        .collect()
-    )
+    store = F.trim(F.col("Store#").cast("string"))
+    rows = price_long.select(
+        store.alias("store"),
+        item7(F.col("Item#")).alias("item"),
+        F.trim(F.col("Vendor#").cast("string")).alias("vendor"),
+        money2dp(F.col("Cost")).alias("cost"),
+        numeric_first_key(store).alias("key"),
+    ).collect()
+    rows.sort(key=lambda r: numeric_first_order(r["key"], r["store"], r["item"]))
     date_text = _mdy2(run_date)
     out: list[str] = []
     for r in rows:
         cost = (r["cost"] or "0.00").replace(",", "")
         out += [
-            "Key Tab",
-            f"Type {r['store']}-{r['item']}",
-            "Key Tab",
-            "Key Delete",
-            "Type H",
-            "Key Tab",
-            "Type A",
-            "Key Enter",
-            f"Type {date_text}",
-            "Key Tab",
-            "Key Tab",
-            "Key Tab",
-            f"Type {initials}",
-            "Key Tab",
-            "Key Tab",
-            "Key Tab",
-            "Key Tab",
-            f"Type {r['vendor']}",
-            "Key Tab",
-            "Key Tab",
-            "Key Tab",
-            "Key Tab",
-            "Key Tab",
-            f"Type {cost}",
-            "Key Enter",
-            "Type n",
-            "Key Enter",
-            "Key Enter",
-            "Key Enter",
-            "Key Enter",
-            "Key Enter",
-            "Key Enter",
+            "Key Tab", f"Type {r['store']}-{r['item']}", "Key Tab", "Key Delete",
+            "Type H", "Key Tab", "Type A", "Key Enter", f"Type {date_text}",
+            *["Key Tab"] * 3, f"Type {initials}",
+            *["Key Tab"] * 4, f"Type {r['vendor']}",
+            *["Key Tab"] * 5, f"Type {cost}",
+            "Key Enter", "Type n", *["Key Enter"] * 6,
         ]
     name = f"{run_date.strftime('%m-%d-%y')} 247DLPM.txt"
     return name, "\n".join(out)
@@ -136,61 +138,44 @@ def _clipboard_block(supplier: str, buyer: str, run_date: date) -> list[str]:
     ]
 
 
-def render_adpo_x(canonical: DataFrame, run_date: date) -> tuple[str, str]:
+def render_adpo_x(canonical: pa.Table, run_date: date) -> tuple[str, str]:
     """Grouped ordered render per Branch (numeric order): 5-line group
     header, 10-line item block, freight trailer with EDD, and the
     clipboard block appending cut-PO CSVs.
 
-    Supplier and buyer come from the canonical table itself (first row),
-    like the reference. Returns
-    (filename '{iso}_ADPO_X_Vendor{supplier}.txt', text).
+    ``canonical`` is the run's collected canonical table. Supplier and
+    buyer come from the table itself (first row), like the reference.
+    Returns (filename '{iso}_ADPO_X_Vendor{supplier}.txt', text).
     """
-    rows = (
-        canonical.select(
-            F.col("Branch").cast("string").alias("branch"),
-            item7(F.col("Item").cast("string")).alias("item"),
-            F.col("Distro Size").try_cast("long").alias("qty"),
-            F.date_format(F.col("Expected Delivery Date"), "MM/dd/yy").alias("edd"),
-            F.col("Supplier On Record").cast("string").alias("supplier"),
-            F.col("WW Buyer").cast("string").alias("buyer"),
-        )
-        .orderBy(numeric_first_key("branch").asc_nulls_last(), "branch", "item")
-        .collect()
-    )
+    cols = ("Branch", "Item", "Distro Size", "Expected Delivery Date",
+            "Supplier On Record", "WW Buyer")
+    rows = []
+    for b, i, qty, edd, supplier, buyer in zip(*(canonical.column(c).to_pylist() for c in cols)):
+        branch, item = (None if b is None else str(b)), _item7(i)
+        key = numeric_first_order(None if b is None else float(b), branch, item)
+        rows.append((key, branch, item, qty, edd and _mdy2(edd), _num_text(supplier), buyer))
     if not rows:
         raise ValueError("canonical output is empty")
-    supplier = "".join(ch for ch in rows[0]["supplier"].removesuffix(".0") if ch.isdigit()) or rows[0]["supplier"]
-    buyer = (rows[0]["buyer"] or "P20").strip() or "P20"
+    rows.sort(key=itemgetter(0))
+    first_supplier, first_buyer = rows[0][5], rows[0][6]
+    supplier = "".join(ch for ch in first_supplier.removesuffix(".0") if ch.isdigit()) or first_supplier
+    buyer = (first_buyer or "P20").strip() or "P20"
 
     lines: list[str] = []
-    current = None
-    for r in rows:
-        if r["branch"] != current:
+    current = group_edd = None
+    for _key, branch, item, qty, edd, _s, _b in rows:
+        if branch != current:
             if current is not None:
-                lines += _group_trailer(current, rows, run_date)
+                lines += _group_trailer(current, group_edd)
                 lines += _clipboard_block(supplier, buyer, run_date)
-            current = r["branch"]
-            lines += [
-                "Key tab",
-                f"Type {buyer}",
-                f"Type {r['branch']}",
-                f"Type {supplier}",
-                "Key Enter",
-            ]
+            current, group_edd = branch, edd
+            lines += ["Key tab", f"Type {buyer}", f"Type {branch}", f"Type {supplier}", "Key Enter"]
         lines += [
-            f"Type  {r['branch']}-{r['item']}",
-            "Key enter",
-            "Key tab",
-            "Key delete",
-            "Key delete",
-            "Key delete",
-            "Key delete",
-            f"Type  {r['qty'] if r['qty'] is not None else 0}",
-            "Key Enter",
-            "Key PF24",
+            f"Type  {branch}-{item}", "Key enter", "Key tab", *["Key delete"] * 4,
+            f"Type  {qty if qty is not None else 0}", "Key Enter", "Key PF24",
         ]
     if current is not None:
-        lines += _group_trailer(current, rows, run_date)
+        lines += _group_trailer(current, group_edd)
         lines += _clipboard_block(supplier, buyer, run_date)
 
     text = "\n".join(str(ln).replace("\r", "") for ln in lines)
@@ -200,23 +185,12 @@ def render_adpo_x(canonical: DataFrame, run_date: date) -> tuple[str, str]:
     return name, text
 
 
-def _group_trailer(branch: str, rows, run_date: date) -> list[str]:
-    edd = next(r["edd"] for r in rows if r["branch"] == branch)
+def _group_trailer(branch: str, edd: str | None) -> list[str]:
+    """Freight line and EDD entry closing a branch group; ``edd`` is the
+    group's first row's."""
     return [
-        f"Type  {branch}-{FREIGHT_ITEM}",
-        "Key Enter",
-        "Key tab",
-        "Key delete",
-        "Key delete",
-        "Key delete",
-        "Key delete",
-        "Type 0",
-        "Key Enter",
-        "Key PF13",
-        "Key Enter",
-        f"Type {edd}",
-        "Key Enter",
-        "Key Enter",
+        f"Type  {branch}-{FREIGHT_ITEM}", "Key Enter", "Key tab", *["Key delete"] * 4,
+        "Type 0", "Key Enter", "Key PF13", "Key Enter", f"Type {edd}", "Key Enter", "Key Enter",
     ]
 
 
@@ -225,7 +199,7 @@ def _group_trailer(branch: str, rows, run_date: date) -> list[str]:
 # --------------------------------------------------------------------------
 
 def render_adpo_i(
-    canonical: DataFrame,
+    canonical: pa.Table,
     run_date: date,
     xdck_letter: str = "M",
     warehouse: str = "498",
@@ -236,141 +210,56 @@ def render_adpo_i(
     """K5: per-branch blocks with warehouse-addressed items, a freight
     trailer whose terminal choreography varies with FOB presence, and
     per-branch XDCK/FOB value injection. Groups iterate in string-sorted
-    Branch order (reference groupby sort=True on the string column)."""
-    rows = (
-        canonical.select(
-            F.trim(F.col("Branch").cast("string")).alias("branch"),
-            item7(F.col("Item").cast("string")).alias("item"),
-            F.col("Distro Size").cast("string").alias("qty"),
-            F.date_format(F.col("Expected Delivery Date"), "MM/dd/yy").alias("edd"),
-            F.col("XDCK").cast("string").alias("xdck"),
-            F.col("FOB").cast("string").alias("fob"),
-        )
-        .orderBy(F.col("branch").asc(), "item")
-        .collect()
+    Branch order (reference groupby sort=True on the string column);
+    ``canonical`` is the run's collected canonical table."""
+    cols = ("Branch", "Item", "Distro Size", "Expected Delivery Date", "XDCK", "FOB")
+    rows = sorted(
+        (
+            (_num_text(b), _item7(i), _num_text(q), edd and _mdy2(edd),
+             _num_text(x), _num_text(f))
+            for b, i, q, edd, x, f in zip(*(canonical.column(c).to_pylist() for c in cols))
+        ),
+        key=lambda r: (r[0] is not None, r[0] or "", r[1] is not None, r[1] or ""),
     )
+    iso = run_date.isoformat()
     lines: list[str] = []
-
-    def add(s: str) -> None:
-        lines.append(s.rstrip())
-
-    def items_of(branch: str):
-        return [r for r in rows if r["branch"] == branch]
-
-    seen: list[str] = []
-    for r in rows:
-        if r["branch"] in seen:
-            continue
-        seen.append(r["branch"])
-        group = items_of(r["branch"])
-        first = group[0]
-        edd = first["edd"] or ""
-        xdck = _clean_num_str(first["xdck"])
-        fob = _clean_num_str(first["fob"])
-
-        # outer cycle start
-        add("")
-        add("Key tab")
-        add(f"Type {buyer_code}")
-        add(f"Type {r['branch']}")
-        add("Type 20000")
-        add("Key Enter")
-        # item blocks
-        for it in group:
-            add("")
-            add(f"Type {warehouse}-{it['item']}")
-            add("Key enter")
-            add("Key tab")
-            add("Key delete")
-            add("Key delete")
-            add("Key delete")
-            add("Key delete")
-            add(f"Type {it['qty']}")
-            add("Key Enter")
-            add("Key PF24")
-        # trailer (shared head)
-        add("")
-        add(f"Type {warehouse}-{FREIGHT_ITEM}")
-        add("Key enter")
-        add("Key tab")
-        add("Key delete")
-        add("Key delete")
-        add("Key delete")
-        add("Key delete")
-        add("Type 0")
-        add("Key Enter")
-        add("Key PF13")
-        add("Key Enter")
-        add("wait 500")
-        add("wait 500")
-        add(f"Type {edd}")
-        add("Key PF2")
-        add("wait 500")
-        add(f"Type {xdck_letter}")
-        add("key pf2")
-        add("wait 1500")
-        add("key cursorup")
-        add("key cursorup")
-        add("wait 500")
-        add("key cursorup")
-        add("key cursorup")
-        add("key tab")
-        add("wait 500")
-        add("key cursordown")
-        add(f"Type {edd}")
-        add("Key Tab")
+    for _branch, group in groupby(rows, key=itemgetter(0)):
+        group = list(group)
+        branch, _item, _qty, edd, xdck, fob = group[0]
+        edd, xdck, fob = edd or "", _clean_num_str(xdck), _clean_num_str(fob)
+        # outer cycle start, then one block per item
+        lines += ["", "Key tab", f"Type {buyer_code}", f"Type {branch}", "Type 20000", "Key Enter"]
+        for _b, item, qty, *_ in group:
+            lines += [
+                "", f"Type {warehouse}-{item}", "Key enter", "Key tab", *["Key delete"] * 4,
+                f"Type {qty}", "Key Enter", "Key PF24",
+            ]
+        # trailer: shared head, FOB-dependent middle, XDCK tail + clipboard
+        lines += [
+            "", f"Type {warehouse}-{FREIGHT_ITEM}", "Key enter", "Key tab", *["Key delete"] * 4,
+            "Type 0", "Key Enter", "Key PF13", "Key Enter", "wait 500", "wait 500",
+            f"Type {edd}", "Key PF2", "wait 500", f"Type {xdck_letter}", "key pf2", "wait 1500",
+            "key cursorup", "key cursorup", "wait 500", "key cursorup", "key cursorup",
+            "key tab", "wait 500", "key cursordown", f"Type {edd}", "Key Tab",
+        ]
         if fob:
-            add("key delete")
-            add("key delete")
-            add("key delete")
-            add("key delete")
-            add(f"type {fob}")
-            add("wait 500")
-            add("key tab")
-            add(f"type {freight_type}")
-            add("Key cursordown")
-            add("Key tab")
-            add("key tab")
+            lines += [
+                *["key delete"] * 4, f"type {fob}", "wait 500", "key tab",
+                f"type {freight_type}", "Key cursordown", "Key tab", "key tab",
+            ]
         else:
-            add("key tab")
-            add("key tab")
-            add("wait 500")
-            add("key tab")
-            add("Key cursordown")
-            add("Key tab")
-        add("")
-        add("key delete")
-        add("wait 500")
-        add("key delete")
-        add("key delete")
-        add("key delete")
-        add(f"Type {xdck}")
-        add("wait 500")
-        add("key tab")
-        add(f"type {freight_type}")
-        add("Key tab")
-        add("key tab")
-        add("wait 500")
-        add("key tab")
-        add("wait 500")
-        add("Key cursordown")
-        add("wait 500")
-        add("Key cursordown")
-        add("key tab")
-        add("")
-        add("key Enter")
-        add("wait 500")
-        add("key Enter")
-        add("wait 3000")
-        add("EditSelect 13,39,13,47")
-        add("key EditCopy")
-        add("wait 1000")
-        iso = run_date.isoformat()
-        add(f"FileSpec clipboard,C:\\POs\\{iso}_114544_{buyer_code}.csv,append")
-        add("key EditSaveClipboard")
-        add("wait 1000")
-        add(f"FileSpec clipboard,{FAXSHARE_UNC}\\{iso}_{buyer_code}.csv,append")
-        add("key EditSaveClipboard")
+            lines += ["key tab", "key tab", "wait 500", "key tab", "Key cursordown", "Key tab"]
+        lines += [
+            "", "key delete", "wait 500", *["key delete"] * 3, f"Type {xdck}", "wait 500",
+            "key tab", f"type {freight_type}", "Key tab", "key tab", "wait 500", "key tab",
+            "wait 500", "Key cursordown", "wait 500", "Key cursordown", "key tab",
+            "", "key Enter", "wait 500", "key Enter",
+            "wait 3000", "EditSelect 13,39,13,47", "key EditCopy", "wait 1000",
+            f"FileSpec clipboard,C:\\POs\\{iso}_114544_{buyer_code}.csv,append",
+            "key EditSaveClipboard", "wait 1000",
+            f"FileSpec clipboard,{FAXSHARE_UNC}\\{iso}_{buyer_code}.csv,append",
+            "key EditSaveClipboard",
+        ]
 
-    name = f"{run_date.isoformat()}_ADPO_I_{file_token}.txt"
-    return name, "\n".join(lines) + "\n"
+    name = f"{iso}_ADPO_I_{file_token}.txt"
+    return name, "\n".join(ln.rstrip() for ln in lines) + "\n"

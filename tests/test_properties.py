@@ -15,6 +15,7 @@ from hypothesis import strategies as st
 
 from etl_jetro_spark import functions as EF
 from etl_jetro_spark import operators as O
+from etl_jetro_spark.operators.unpivot import _is_numeric_name
 
 slow_ok = settings(
     max_examples=12,
@@ -101,6 +102,46 @@ def test_parse_money_never_errors_and_sign_rule(spark, s):
         stripped = s.strip()
         if stripped.startswith("(") and stripped.endswith(")"):
             assert out <= 0
+
+
+# What the ordered renderers sort on: int branches (ADPO,X), melted store
+# labels that pass the melt's numeric-name filter (DLPM), NULLs, and text.
+store_labels = st.one_of(
+    st.sampled_from(
+        [" 12 ", "449.5", "1e3", "nan", "NaN", "inf", "-inf", "Infinity",
+         "+0", "-0", "0.0", "007", "1_0", "1d"]
+    ),
+    st.integers(10, 999).map(str),
+    st.floats().map(repr),
+).filter(_is_numeric_name)
+sort_values = st.one_of(
+    st.none(),
+    st.integers(-(2**31), 2**31 - 1),
+    store_labels,
+    st.text(alphabet="ab Z-#.0", max_size=4),
+)
+
+
+@settings(max_examples=25, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(st.lists(
+    st.tuples(sort_values, st.one_of(st.none(), st.text(alphabet="019a", max_size=3))),
+    min_size=1, max_size=15,
+))
+def test_numeric_first_order_matches_spark_sort(spark, rows):
+    """The driver-side sort key orders rows exactly like Spark's
+    ``numeric_first_key(c).asc_nulls_last(), c, item``."""
+    df = spark.createDataFrame(
+        [(None if c is None else str(c), item) for c, item in rows],
+        "c string, item string",
+    )
+    want = df.orderBy(O.numeric_first_key("c").asc_nulls_last(), "c", "item").collect()
+    keyed = df.select("c", "item", O.numeric_first_key("c").alias("k")).collect()
+    for (c, _), r in zip(rows, keyed):
+        if isinstance(c, int):  # ADPO,X takes an int branch's key as float(branch)
+            assert r["k"] == float(c)
+    got = sorted(keyed, key=lambda r: O.numeric_first_order(r["k"], r["c"], r["item"]))
+    assert [(r["c"], r["item"]) for r in got] == [(r["c"], r["item"]) for r in want]
 
 
 grid_cells = st.one_of(

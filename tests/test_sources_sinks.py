@@ -107,7 +107,7 @@ def test_render_adpo_x_groups(spark):
         ["Branch", "Item", "Distro Size"],
     )
     canon = to_canonical(fact, PIPELINES["247"], edd=F.lit("2026-08-17").cast("date"))
-    name, text = render_adpo_x(canon, run_date=date(2026, 8, 13))
+    name, text = render_adpo_x(canon.toArrow(), run_date=date(2026, 8, 13))
     assert name == "2026-08-13_ADPO_X_Vendor81214.txt"
     # two branch groups -> two headers, freight trailers, clipboard blocks
     assert text.count("Type P2E") == 2 and text.count("Type 81214") == 2
@@ -155,7 +155,7 @@ def test_render_adpo_i(spark):
     canon = to_canonical(
         fact, PIPELINES["flips_big"], edd=F.lit("2026-08-14").cast("date")
     )
-    name, text = render_adpo_i(canon, run_date=date(2026, 8, 13))
+    name, text = render_adpo_i(canon.toArrow(), run_date=date(2026, 8, 13))
     assert name == "2026-08-13_ADPO_I_output.txt"
     lines = text.splitlines()
     assert "Type 20000" in lines                       # supplier literal
@@ -293,14 +293,14 @@ def test_write_canonical_emits_real_workbook(spark, tmp_path, sf_dir):
     m/d/yyyy EDD text."""
     from etl_jetro_spark.pipelines import batch as B
     from etl_jetro_spark.plans import fixtures as FX
-    from etl_jetro_spark.sinks.excel_sink import write_canonical
+    from etl_jetro_spark.sinks.excel_sink import collect_canonical, write_canonical
     from etl_jetro_spark.sources.xlsx import read_xlsx_grid, sheet_names
 
     canon = B.build_allocation(
         spark, B.clean_allocation(FX.allocation_grid(sf_dir)), "247",
         base_date="2026-01-05",
     )
-    man = write_canonical(canon, str(tmp_path))
+    man = write_canonical(collect_canonical(canon), str(tmp_path))
     assert man["xlsx"] and os.path.exists(man["xlsx"])
     assert [n for n, _ in sheet_names(man["xlsx"])] == [
         "Scripting", "ANOMALY", "STORE CLUSTER"
