@@ -9,10 +9,10 @@ sheet_bot/email_sender.py:30-175). The transport is an injectable callable
 transport; no network is ever touched unless the caller wires one in.
 
 K8: Google Sheet status write-back — the reference batches A1-addressed
-updates (sheets.py:182-189). The *planning* of updates is pure (DataFrame →
-[{range, values}] payload); applying it goes through the
-``sources.sheets_client.SheetsClient`` adapter (same injectable-transport
-design).
+updates (sheets.py:182-189). The *planning* of updates is pure
+((status_a1, new_status) pairs → [{range, values}] payload); applying it
+goes through the ``sources.sheets_client.SheetsClient`` adapter (same
+injectable-transport design).
 
 Both are designed as foreachBatch sinks: idempotent per (key, status), so
 micro-batch replays are safe.
@@ -24,8 +24,6 @@ import base64
 import mimetypes
 import re
 from collections.abc import Callable, Iterable
-
-from pyspark.sql import DataFrame
 
 # injectable transport: (method, url, headers, form, json_body) -> (status, payload)
 HttpFn = Callable[..., tuple[int, dict]]
@@ -268,16 +266,13 @@ def send_email_graph(
     return payload
 
 
-def status_update_payload(updates: DataFrame) -> list[dict]:
-    """K8: (status_a1, new_status) rows → the Sheets batch_update payload.
+def status_update_payload(updates: Iterable[tuple[str, str]]) -> list[dict]:
+    """K8: (status_a1, new_status) pairs → the Sheets batch_update payload.
     Sorted for determinism; safe to re-send (last-write-wins upsert)."""
-    rows = sorted(
-        (r["status_a1"], r["new_status"]) for r in updates.collect()
-    )
-    return [{"range": a1, "values": [[status]]} for a1, status in rows]
+    return [{"range": a1, "values": [[status]]} for a1, status in sorted(updates)]
 
 
-def write_status_updates(updates: DataFrame, client=None) -> list[dict]:
+def write_status_updates(updates: Iterable[tuple[str, str]], client=None) -> list[dict]:
     """Apply the payload through a ``SheetsClient`` (or any object with
     ``batch_update``) when one is wired; always returns the payload."""
     payload = status_update_payload(updates)

@@ -7,19 +7,15 @@ store columns, possibly compound (``452/490``). Rows become records with a
 ``stores`` map (reference sheet_bot/sheets.py:38-178, main.py:76-84).
 
 The fetch itself is an API call (gspread — not installed here); this module
-takes the raw grid as ``list[list[str]]`` so the parse logic is fully
-testable, and ``sections_to_spark`` lands it as a DataFrame with a
-MapType stores column. The sheet is also a *sink* (status write-back);
-see streaming/ for the transition side.
+takes the raw grid as ``list[list[str]]`` and returns plain ``VendorRow``
+records, which the control tick consumes directly. The sheet is also a
+*sink* (status write-back); see streaming/ for the transition side.
 """
 
 from __future__ import annotations
 
 import re
 from dataclasses import dataclass, field
-
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F  # noqa: F401
 
 # Weekday → tab-name prefix (reference sheet_bot/utils.py:29-35)
 WEEKDAY_TAB_PREFIX = {0: "Mon", 1: "Tues", 2: "Wed", 3: "Thurs", 4: "Fri"}
@@ -118,18 +114,6 @@ def parse_sections(grid: list[list[str]]) -> list[VendorRow]:
                 )
             )
     return out
-
-
-def sections_to_spark(spark: SparkSession, grid: list[list[str]]) -> DataFrame:
-    rows = parse_sections(grid)
-    return spark.createDataFrame(
-        [
-            (v.section, v.sheet_row, v.vendor_num, v.vendor_name, v.status, v.status_a1, v.stores)
-            for v in rows
-        ],
-        "section int, sheet_row int, vendor_num string, vendor_name string, "
-        "status string, status_a1 string, stores map<string,string>",
-    )
 
 
 def pick_today_tab(names: list[str], weekday: int) -> str | None:

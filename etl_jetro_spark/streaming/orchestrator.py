@@ -3,32 +3,26 @@
 The reference's control loop (sheet_bot/main.py:336-395): every 60 s, parse
 the day's sheet, lock ``Ready`` rows to ``SENDING`` (so a second tick can't
 double-pick them), fan vendors out to workers, and finalize each to
-``Sent`` or ``ERROR`` with the missing-PO detail. The transitions here are
-pure DataFrame functions — deterministic, testable, and usable both from a
-batch poll loop and from a foreachBatch micro-batch.
+``Sent`` or ``ERROR`` with the missing-PO detail. A tick handles at most a
+few hundred (vendor, PO) pairs, so the transitions are pure Python over the
+``VendorRow`` list of ``sources.sheet.parse_sections`` — deterministic,
+testable, and runnable without a Spark session.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+from collections.abc import Iterable
+
+from etl_jetro_spark.sources.sheet import VendorRow
 
 READY, SENDING, SENT, ERROR = "Ready", "SENDING", "Sent", "ERROR"
 
 
-def select_ready(control: DataFrame, active_keys: DataFrame | None = None) -> DataFrame:
+def select_ready(rows: Iterable[VendorRow], active: Iterable[str] = ()) -> list[VendorRow]:
     """Rows eligible for pickup: status Ready and not currently active
-    (T2 lock precondition). ``active_keys`` is a 1-col (status_a1) set."""
-    ready = control.filter(F.col("status") == READY)
-    if active_keys is not None:
-        ready = ready.join(active_keys, "status_a1", "left_anti")
-    return ready
-
-
-def lock_updates(ready: DataFrame) -> DataFrame:
-    """The Ready→SENDING lock batch: (status_a1, new_status) write-back
-    rows (reference sheets.py:182-189 batch_update)."""
-    return ready.select("status_a1", F.lit(SENDING).alias("new_status"))
+    (T2 lock precondition). ``active`` holds the status_a1 keys in flight."""
+    active = set(active)
+    return [r for r in rows if r.status == READY and r.status_a1 not in active]
 
 
 def expected_pos_for_vendor(control_row_stores: dict[str, str]) -> list[str]:
@@ -38,33 +32,26 @@ def expected_pos_for_vendor(control_row_stores: dict[str, str]) -> list[str]:
 
 
 def finalize(
-    expected: DataFrame, status: DataFrame
-) -> DataFrame:
+    expected: Iterable[tuple[str, str, str]], status: Iterable[tuple[str, str]]
+) -> list[tuple[str, str, str, str | None]]:
     """Terminal transition per vendor: Sent iff every expected PO reached
-    ``done``; else ERROR with the missing/failed PO detail (anti-join D3,
-    reference main.py:309-314).
+    ``done`` (under any vendor's watch); else ERROR with the sorted missing
+    POs as detail (set difference D3, reference main.py:309-314).
 
     ``expected``: (vendor_num, status_a1, po); ``status``: (po, status).
+    Returns (vendor_num, status_a1, new_status, detail) per vendor row.
     """
-    done = status.filter(F.col("status") == "done").select("po").distinct()
-    missing = (
-        expected.join(done, "po", "left_anti")
-        .groupBy("vendor_num", "status_a1")
-        .agg(F.sort_array(F.collect_list("po")).alias("missing_pos"))
-    )
-    all_vendors = expected.select("vendor_num", "status_a1").distinct()
-    out = all_vendors.join(missing, ["vendor_num", "status_a1"], "left")
-    return out.select(
-        "vendor_num",
-        "status_a1",
-        F.when(F.col("missing_pos").isNull() | (F.size("missing_pos") == 0), SENT)
-        .otherwise(ERROR)
-        .alias("new_status"),
-        F.when(
-            F.col("missing_pos").isNotNull() & (F.size("missing_pos") > 0),
-            F.concat(F.lit("missing: "), F.concat_ws(",", "missing_pos")),
-        ).alias("detail"),
-    )
+    done = {po for po, s in status if s == "done"}
+    missing: dict[tuple[str, str], list[str]] = {}
+    for vendor, a1, po in expected:
+        pos = missing.setdefault((vendor, a1), [])
+        if po not in done:
+            pos.append(po)
+    return [
+        (vendor, a1, ERROR, "missing: " + ",".join(sorted(pos))) if pos
+        else (vendor, a1, SENT, None)
+        for (vendor, a1), pos in missing.items()
+    ]
 
 
 def orchestrate_tick(
@@ -81,17 +68,19 @@ def orchestrate_tick(
     parse sections → select Ready → lock (Ready→SENDING payload) →
     watch/settle/move per expected PO → finalize (Sent/ERROR payload).
 
+    ``spark`` is unused (the tick needs no session; pass ``None``).
     ``poll_fn(state, dest_dir) -> None`` drives the snapshot poller until
     done/deadline; the default polls the real directories with no sleep
     (tests and batch replays). Returns a manifest with both write-back
-    payloads and the final per-PO status.
+    payloads, the final per-PO status and each ERROR row's reason. Every
+    locked row ends Sent or ERROR; a row with no expected PO is ERROR.
     """
+    # looked up per call so perfbench's attribute wrappers see every call
     from etl_jetro_spark.sinks.notify import status_update_payload
     from etl_jetro_spark.sources.sheet import parse_sections
     from etl_jetro_spark.streaming import snapshot as S
 
-    rows = parse_sections(control_grid)
-    ready = [r for r in rows if r.status == READY and r.vendor_num]
+    ready = select_ready(parse_sections(control_grid))
     lock_payload = [
         {"range": r.status_a1, "values": [[SENDING]]} for r in sorted(
             ready, key=lambda r: r.status_a1
@@ -100,8 +89,12 @@ def orchestrate_tick(
 
     expected_rows = []
     status_rows = []
+    final = []
     for r in ready:
         pos = expected_pos_for_vendor(r.stores)
+        if not pos:
+            final.append((r.vendor_num, r.status_a1, ERROR, "no expected POs"))
+            continue
         expected_rows += [(r.vendor_num, r.status_a1, po) for po in pos]
         st = S.new_watch(pos, deadline_polls=deadline_polls)
         S.precheck_dest(st, dest_dir)
@@ -115,18 +108,10 @@ def orchestrate_tick(
                     break
         status_rows += [(po, s) for po, s in st.status.items()]
 
-    if not expected_rows:
-        return {"lock": lock_payload, "final": [], "po_status": {}}
-
-    expected = spark.createDataFrame(
-        expected_rows, "vendor_num string, status_a1 string, po string"
-    )
-    status = spark.createDataFrame(status_rows, "po string, status string")
-    final_payload = status_update_payload(
-        finalize(expected, status).select("status_a1", "new_status")
-    )
+    final += finalize(expected_rows, status_rows)
     return {
         "lock": lock_payload,
-        "final": final_payload,
+        "final": status_update_payload((a1, new) for _, a1, new, _ in final),
         "po_status": dict(status_rows),
+        "errors": {a1: detail for _, a1, new, detail in final if new == ERROR},
     }

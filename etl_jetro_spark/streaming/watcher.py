@@ -272,8 +272,9 @@ def run_po_watch(
     ``_track_po`` stays as a second, state-level guard, but the sink
     deadline is the one that fires deterministically under local triggers.)
     Under availableNow the heartbeat is skipped: the stream drains once,
-    and the missing set is the caller's anti-join (orchestrator
-    ``finalize``)."""
+    and the missing set is the caller's expected POs minus the ``done``
+    rows of ``po_status`` (the set difference ``orchestrator.finalize``
+    computes)."""
     import time as _time
 
     events = file_events_stream(spark, watch_dirs)

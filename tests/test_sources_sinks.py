@@ -122,7 +122,7 @@ def test_render_adpo_x_groups(spark):
     assert "\n\n" not in text and " \n" not in text
 
 
-def test_notify_body_and_status_payload(spark):
+def test_notify_body_and_status_payload():
     body = notify.generate_body(["88101", " 88102 ", ""])
     # reference body doc: greeting, confirm line, one PO per line, escaped
     assert "Please confirm the following POs:" in body
@@ -131,9 +131,7 @@ def test_notify_body_and_status_payload(spark):
     assert combined.index("88101") < combined.index("<p>sig</p>")
     assert 'style="height:24px;"' in combined
 
-    updates = spark.createDataFrame(
-        [("G2", "SENDING"), ("E7", "Sent")], ["status_a1", "new_status"]
-    )
+    updates = [("G2", "SENDING"), ("E7", "Sent")]
     payload = notify.write_status_updates(updates)
     assert payload == [
         {"range": "E7", "values": [["Sent"]]},
@@ -402,7 +400,7 @@ def test_graph_device_code_and_send():
     assert len([c for c in http.calls if "devicecode" in c["url"]]) == 1
 
 
-def test_sheets_client_fetch_and_writeback(spark):
+def test_sheets_client_fetch_and_writeback():
     """S6 fetch + F12 tab pick + K8 batch write through the adapter."""
     from etl_jetro_spark.sinks.notify import write_status_updates
     from etl_jetro_spark.sources.sheets_client import SheetsClient
@@ -425,9 +423,7 @@ def test_sheets_client_fetch_and_writeback(spark):
 
     assert c.pick_today_tab(_d(2026, 1, 6)) == "Tues Orders"  # a Tuesday
 
-    updates = spark.createDataFrame(
-        [("C2", "SENDING"), ("C5", "Sent")], ["status_a1", "new_status"]
-    )
+    updates = [("C2", "SENDING"), ("C5", "Sent")]
     payload = write_status_updates(updates, client=c)
     assert payload == [
         {"range": "C2", "values": [["SENDING"]]},

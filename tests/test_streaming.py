@@ -2,13 +2,16 @@
 
 from __future__ import annotations
 
+import hashlib
+import json
 import os
+import random
 import time
 
 import pytest
 from pyspark.sql import functions as F
 
-from etl_jetro_spark.sources.sheet import parse_sections, sections_to_spark, to_a1
+from etl_jetro_spark.sources.sheet import parse_sections, to_a1
 from etl_jetro_spark.streaming import orchestrator as orch
 from etl_jetro_spark.streaming import watcher as W
 
@@ -277,33 +280,60 @@ def test_parse_sections_schema_discovery():
     assert rows[2].section == 1 and rows[2].stores == {"86": "88104"}
 
 
-def test_orchestrator_transitions(spark):
-    control = sections_to_spark(spark, CONTROL_GRID)
-    ready = orch.select_ready(control)
-    assert {r["vendor_num"] for r in ready.collect()} == {"79906", "44602"}
+def test_orchestrator_transitions(tmp_path):
+    rows = parse_sections(CONTROL_GRID)
+    ready = orch.select_ready(rows)
+    assert {r.vendor_num for r in ready} == {"79906", "44602"}
 
     # lock: Ready -> SENDING write-backs
-    locks = {r["status_a1"]: r["new_status"] for r in orch.lock_updates(ready).collect()}
+    m = orch.orchestrate_tick(
+        None, CONTROL_GRID, [str(tmp_path)], str(tmp_path / "d"), deadline_polls=1
+    )
+    locks = {p["range"]: p["values"][0][0] for p in m["lock"]}
     assert locks == {"G2": "SENDING", "E7": "SENDING"}
 
     # active-key exclusion prevents double pickup (T2)
-    active = spark.createDataFrame([("G2",)], ["status_a1"])
-    left = orch.select_ready(control, active)
-    assert {r["vendor_num"] for r in left.collect()} == {"44602"}
+    left = orch.select_ready(rows, ["G2"])
+    assert {r.vendor_num for r in left} == {"44602"}
 
     # finalize: vendor 79906 got 88101 but not 88102 -> ERROR with detail
-    expected = spark.createDataFrame(
-        [("79906", "G2", "88101"), ("79906", "G2", "88102"), ("44602", "E7", "88104")],
-        ["vendor_num", "status_a1", "po"],
-    )
-    status = spark.createDataFrame(
-        [("88101", "done"), ("88104", "done"), ("88102", "waiting")],
-        ["po", "status"],
-    )
-    fin = {r["vendor_num"]: r for r in orch.finalize(expected, status).collect()}
-    assert fin["44602"]["new_status"] == "Sent" and fin["44602"]["detail"] is None
-    assert fin["79906"]["new_status"] == "ERROR"
-    assert fin["79906"]["detail"] == "missing: 88102"
+    expected = [("79906", "G2", "88101"), ("79906", "G2", "88102"), ("44602", "E7", "88104")]
+    status = [("88101", "done"), ("88104", "done"), ("88102", "waiting")]
+    fin = {v: (new, detail) for v, _, new, detail in orch.finalize(expected, status)}
+    assert fin["44602"][0] == "Sent" and fin["44602"][1] is None
+    assert fin["79906"][0] == "ERROR"
+    assert fin["79906"][1] == "missing: 88102"
+
+    # a PO is done once any vendor's watch saw it done (a shared PO moved
+    # by one vendor is found by the next one's pre-check); missing POs are
+    # listed sorted
+    expected = [
+        ("1", "A2", "30"), ("1", "A2", "10"), ("1", "A2", "20"),
+        ("2", "A3", "10"), ("2", "A3", "40"),
+        ("3", "A4", "30"),
+    ]
+    status = [("10", "error"), ("10", "done"), ("20", "waiting"), ("30", "error"), ("40", "done")]
+    got = orch.finalize(expected, status)
+    assert sorted(got) == [
+        ("1", "A2", "ERROR", "missing: 20,30"),
+        ("2", "A3", "Sent", None),
+        ("3", "A4", "ERROR", "missing: 30"),
+    ]
+    assert orch.finalize([], []) == []
+
+
+def test_ready_row_without_expected_po_ends_in_error(tmp_path):
+    """A Ready row whose store cells are all 'x' is locked like any other
+    and must reach a terminal status, not stay SENDING forever."""
+    grid = [
+        ["Note", "Vendor #", "Vendor Name", "452/490", "114", "PO count", "Status"],
+        ["", "50001", "Empty", "x", "x", "0", "Ready"],
+    ]
+    m = orch.orchestrate_tick(None, grid, [str(tmp_path)], str(tmp_path), deadline_polls=1)
+    assert m["lock"] == [{"range": "G2", "values": [["SENDING"]]}]
+    assert m["final"] == [{"range": "G2", "values": [["ERROR"]]}]
+    assert m["errors"] == {"G2": "no expected POs"}
+    assert m["po_status"] == {}
 
 
 def test_expected_pos_order_preserving_distinct():
@@ -427,6 +457,76 @@ def test_orchestrate_tick_full_loop(spark, tmp_path):
     finals = {p["range"]: p["values"][0][0] for p in m["final"]}
     assert finals == {"G2": "ERROR", "E7": "Sent"}
     assert (dest / "79906-114-88101.pdf").exists()
+
+
+def _tick_day(seed, root):
+    """A seeded two-section control grid shaped like the benchmark's PO day:
+    compound '452/490' headers, 'x' and '.0' cells, a blank-vendor row, an
+    already-Sent row, one PO shared by two vendors, and a watch folder with
+    a PDF per expected PO except a seeded missing few."""
+    rng, vendors, stores = random.Random(seed), 6, 3
+    watch = root / "watch"
+    watch.mkdir(parents=True)
+    grid, pos = [], []
+    next_po = rng.randint(100_000, 200_000)
+    nums = rng.sample(range(10_000, 99_999), vendors + 2)
+    for _ in range(2):
+        codes = [str(c) for c in rng.sample(range(1, 999), stores + 1)]
+        header = [f"{codes[0]}/{codes[1]}"] + codes[2:]
+        grid.append(["Note", "Vendor #", "Vendor Name", *header, "PO count", "Status"])
+        for _ in range(vendors // 2):
+            vnum, cells = str(nums.pop()), []
+            for _ in header:
+                if rng.random() < 0.1:
+                    cells.append("x")
+                    continue
+                po, next_po = str(next_po), next_po + 1
+                cells.append(po + (".0" if rng.random() < 0.1 else ""))
+                pos.append((vnum, po))
+            grid.append(["", vnum + ".0", f"Vendor {vnum}", *cells, "", "Ready"])
+        grid.append(["", "", "skipped", *["1"] * len(header), "", "Ready"])
+        grid.append(["", str(nums.pop()), "done", *["x"] * len(header), "0", "Sent"])
+    shared = pos[0][1]  # also expected by section 1's first vendor
+    grid[vendors // 2 + 4][3] = shared
+    missing = set(rng.sample([po for _, po in pos], max(2, len(pos) // 8))) - {shared}
+    for vnum, po in pos:
+        if po not in missing:
+            (watch / f"{vnum}-{rng.randint(100, 999)}-{po}.pdf").write_bytes(po.encode())
+    return grid, watch
+
+
+def _tick_digest(m: dict) -> str:
+    keep = {k: m[k] for k in ("lock", "final", "po_status")}
+    return hashlib.sha256(json.dumps(keep, sort_keys=True).encode()).hexdigest()
+
+
+# sha256 of the tick's {lock, final, po_status}, recorded when finalize was
+# a Spark anti-join; the pure-Python tick must reproduce them.
+TICK_GOLDEN = {
+    "control": "b866bfdab4916d2e03a47406c923a826ea314967463828145bd65f05e6cbcd91",
+    1: "7a380b03300973ebb138e8c91252df617d3d11f7f37b50ef417a883f29e9e6ac",
+    2: "3466823966349556d21fa7d8da41f12ea5362bddafc05aa45716e628cd6670f1",
+    3: "a3f57365a7016ff3c07d1ece6942d461dd1b6e6ab8fcc57bfffa42ee7f22ce58",
+}
+
+
+@pytest.mark.parametrize("case", list(TICK_GOLDEN))
+def test_tick_outputs_unchanged(case, tmp_path):
+    """The tick's write-back payloads and per-PO status do not drift; the
+    tick runs with ``spark=None``, so any Spark use in it raises."""
+    if case == "control":
+        grid, watch = CONTROL_GRID, tmp_path / "w"
+        watch.mkdir()
+        (tmp_path / "d").mkdir()
+        (watch / "79906-114-88101.pdf").write_bytes(b"x")
+        (tmp_path / "d" / "44602-86-88104.pdf").write_bytes(b"y")
+        polls = 3
+    else:
+        grid, watch = _tick_day(case, tmp_path)
+        polls = 4
+    m = orch.orchestrate_tick(None, grid, [str(watch)], str(tmp_path / "d"), deadline_polls=polls)
+    assert _tick_digest(m) == TICK_GOLDEN[case]
+    assert set(m["errors"]) == {p["range"] for p in m["final"] if p["values"] == [["ERROR"]]}
 
 
 def test_streaming_dedup_within_watermark(spark, tmp_path):
