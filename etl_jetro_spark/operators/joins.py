@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from etl_jetro_spark.plans.hints import bcast_sized
 
 from etl_jetro_spark.functions.text import norm_key
+from etl_jetro_spark.sqltext import string_lit
 
 
 def broadcast_lookup(
@@ -54,18 +55,15 @@ def map_join(
     ``zero_to_null`` reproduces the reference's zero→blank rule
     (big_flip_tool.py:238-245).
     """
-    import itertools
-
     norm = (lambda s: "".join(str(s).strip().lower().split()).replace("#", "")) if normalize_keys else str
-    # stringify values: create_map unifies value types, which would silently
-    # coerce mixed dicts (e.g. {"114": "8", "999": 0}) to a numeric map
-    pairs = list(
-        itertools.chain.from_iterable(
-            (F.lit(norm(k)), F.lit(None if v is None else str(v)))
-            for k, v in mapping.items()
-        )
+    # stringify values: a map literal unifies value types, which would
+    # silently coerce mixed dicts (e.g. {"114": "8", "999": 0}) to a numeric
+    # map. The literal is one SQL text, however many keys the dict has.
+    entries = ", ".join(
+        f"{string_lit(norm(k))}, {'CAST(NULL AS STRING)' if v is None else string_lit(str(v))}"
+        for k, v in mapping.items()
     )
-    m = F.create_map(*pairs)
+    m = F.expr(f"map({entries})")
     k = norm_key(key) if normalize_keys else F.col(key).cast("string")
     val = m[k]
     if zero_to_null:

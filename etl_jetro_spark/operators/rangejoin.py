@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from etl_jetro_spark.sqltext import ident
+
 # internal working columns; inputs carrying these (or range keys listed as
 # join keys) would silently produce wrong joins, so both entry points verify
 _RESERVED = ("_bucket", "_canon")
@@ -58,10 +60,8 @@ def range_join(
     # cast loses precision above 2^53 (epoch-ns keys) and truncates toward
     # zero for negatives (double-width bucket 0); subtracting pmod keeps
     # everything in long arithmetic with true floor semantics.
-    bucket = F.expr(
-        f"(`{range_col}` - pmod(`{range_col}`, {max_distance}))"
-        f" div {max_distance}"
-    )
+    rc = ident(range_col)
+    bucket = F.expr(f"({rc} - pmod({rc}, {max_distance})) div {max_distance}")
     lb = left.withColumn(
         "_bucket", F.explode(F.array(*[bucket + k for k in (-1, 0, 1)]))
     )
@@ -116,14 +116,9 @@ def interval_overlap_join(
     _check_inputs(left, right, keys, (start_col, end_col))
 
     def bucketed(df: DataFrame, suffix: str) -> DataFrame:
-        lo = F.expr(
-            f"(`{start_col}` - pmod(`{start_col}`, {bucket_width}))"
-            f" div {bucket_width}"
-        )
-        hi = F.expr(
-            f"(`{end_col}` - pmod(`{end_col}`, {bucket_width}))"
-            f" div {bucket_width}"
-        )
+        sc, ec = ident(start_col), ident(end_col)
+        lo = F.expr(f"({sc} - pmod({sc}, {bucket_width})) div {bucket_width}")
+        hi = F.expr(f"({ec} - pmod({ec}, {bucket_width})) div {bucket_width}")
         # inverted intervals (end < start) must vanish, but
         # sequence(lo, hi) with hi < lo yields a DESCENDING sequence,
         # not an empty one — drop them before the explode

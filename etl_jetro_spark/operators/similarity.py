@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from etl_jetro_spark.plans.hints import bcast_small
+from etl_jetro_spark.sqltext import ident
 
 
 def _vec(col) -> Column:
@@ -113,13 +114,6 @@ def knn_join(
 
 # --- approximate path ----------------------------------------------------
 
-def _bq(name: str) -> str:
-    """Backtick-quote a column name for interpolation into generated SQL
-    (``F.expr`` builders): identifiers with spaces, dots or reserved
-    words parse the same way ``F.col(name)`` resolves them (ADVICE r11)."""
-    return "`" + name.replace("`", "``") + "`"
-
-
 def _hyperplane(bit: int, dim: int) -> float:
     """Deterministic pseudo-random hyperplane component in [-1, 1), derived
     from md5 — reproducible across engines and runs, no RNG state."""
@@ -141,7 +135,7 @@ def signature_bits(vec: Column | str, dims: int, bits: int = 16) -> Column:
     (``repr`` doubles round-trip exactly through the SQL lexer), so
     execution and results are identical."""
     if isinstance(vec, str):
-        vq = _bq(vec)
+        vq = ident(vec)
         parts = []
         for b in range(bits):
             arr = ",".join(f"{_hyperplane(b, d)!r}D" for d in range(dims))
@@ -1046,7 +1040,7 @@ def random_projection(
     # query construction; one F.expr per output dim parses to the same
     # aggregate/zip_with fold, so execution and results are identical
     outs = []
-    vq = _bq(vec_col)
+    vq = ident(vec_col)
     for j in range(out_dims):
         arr = ",".join(f"{float(sign(j, i))!r}D" for i in range(in_dims))
         outs.append(

@@ -1,9 +1,11 @@
 """Unpivot / melt operators (SURVEY §2.3 U1–U4) — the reference's signature op.
 
-Spark ≥3.4 has a native ``DataFrame.unpivot`` (Expand physical node): it
-GENERATES rows partition-locally with **no shuffle**, so melting a 100 TB wide
-scan is embarrassingly parallel — the first shuffle happens only at the
-downstream aggregation, exactly where it must.
+``melt`` is one ``stack`` generator (a Generate physical node): it emits
+rows partition-locally with **no shuffle**, so melting a 100 TB wide scan
+is embarrassingly parallel — the first shuffle happens only at the
+downstream aggregation, exactly where it must. The whole generator goes to
+the JVM as one SQL text, so building the plan costs the same few Py4J
+round trips for 8 store columns as for 64.
 
 Reference cites (into /root/reference/):
 - U1 1-id melt + header normalize: 247/tools/allocation_tool.py:53-91
@@ -15,8 +17,11 @@ Reference cites (into /root/reference/):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
+import re
+
+from pyspark.sql import DataFrame
+
+from etl_jetro_spark.sqltext import ident, string_lit
 
 
 def _is_numeric_name(name: str) -> bool:
@@ -36,46 +41,34 @@ def melt(
     numeric_vars_only: bool = False,
     clean_var_label: bool = True,
 ) -> DataFrame:
-    """Wide→long unpivot.
+    """Wide→long unpivot: the ``ids`` columns, then ``var_name`` (the
+    header label) and ``value_name`` (the cell cast to string; the
+    reference's cells are arbitrarily messy, so the caller parses).
 
     - ``value_cols`` defaults to every non-id column.
     - ``numeric_vars_only``: keep only columns whose *name* is numeric-ish
       (store/branch headers like ``114`` / ``449.0``) — U4 semantics.
     - ``clean_var_label``: strip trailing ``.0`` from the label column
       (``'449.0'`` → ``'449'``) — U1 header normalization.
+
+    The plan node is a Generate, ``stack(n, '<label>', CAST(<col> AS
+    STRING), …)``, still partition-local with no shuffle; the cleaned
+    labels are string literals in it.
     """
     vals = value_cols if value_cols is not None else [c for c in df.columns if c not in ids]
     if numeric_vars_only:
         vals = [c for c in vals if _is_numeric_name(c)]
     if not vals:
         raise ValueError("melt: no value columns to unpivot")
-    # Wide-sheet headers are arbitrary text ('449.0', 'Lot #') that breaks
-    # dotted-name resolution, so unpivot through positional temp names and
-    # restore the (optionally cleaned) label via a map literal afterwards.
-    import re
 
     def label(c: str) -> str:
         return re.sub(r"\.0{1,2}$", "", c.strip()) if clean_var_label else c
 
-    tmp = {f"_v{i}": c for i, c in enumerate(vals)}
-    # unify value types: unpivot requires a common type; cast to string and
-    # let the caller parse (the reference's cells are arbitrarily messy too)
-    def q(c: str) -> Column:
-        return F.col(f"`{c}`")
-
-    casted = df.select(
-        *[q(c) for c in ids],
-        *[q(c).cast("string").alias(t) for t, c in tmp.items()],
+    terms = ", ".join(f"{string_lit(label(c))}, CAST({ident(c)} AS STRING)" for c in vals)
+    return df.selectExpr(
+        *[ident(c) for c in ids],
+        f"stack({len(vals)}, {terms}) AS ({ident(var_name)}, {ident(value_name)})",
     )
-    out = casted.unpivot(ids, list(tmp), var_name, value_name)
-    import itertools
-
-    mapping = F.create_map(
-        *itertools.chain.from_iterable(
-            (F.lit(t), F.lit(label(c))) for t, c in tmp.items()
-        )
-    )
-    return out.withColumn(var_name, mapping[F.col(var_name)])
 
 
 def melt_between(

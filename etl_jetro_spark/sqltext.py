@@ -1,0 +1,23 @@
+"""Quoting for SQL text that plan builders send to the JVM in one piece.
+
+Every ``F.*`` call costs at least one Py4J round trip while the plan is
+built, so a builder whose expression grows with the data's width (one
+term per store column or per map key) renders that expression as SQL text
+and sends it in a single ``selectExpr`` / ``F.expr`` call instead. Every
+name and value interpolated into such text goes through these helpers.
+"""
+
+from __future__ import annotations
+
+
+def ident(name: str) -> str:
+    """Backtick-quoted identifier (embedded backticks doubled), so headers
+    with spaces, dots or reserved words resolve like ``F.col(name)``."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def string_lit(value: str) -> str:
+    """Single-quoted string literal for Spark's default parser
+    (``spark.sql.parser.escapedStringLiterals=false``): ``\\`` and ``'``
+    are backslash-escaped, every other character is taken as is."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"

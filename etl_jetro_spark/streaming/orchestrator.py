@@ -70,11 +70,15 @@ def orchestrate_tick(
 
     ``spark`` is unused (the tick needs no session; pass ``None``).
     ``poll_fn(state, dest_dir) -> None`` drives the snapshot poller until
-    done/deadline; the default polls the real directories with no sleep
-    (tests and batch replays). Returns a manifest with both write-back
-    payloads, the final per-PO status and each ERROR row's reason. Every
-    locked row ends Sent or ERROR; a row with no expected PO is ERROR.
+    done/deadline; the default polls ``watch_dirs`` with no sleep (tests
+    and batch replays), so it needs at least one directory: an empty list
+    would never count a poll toward the deadline and raises ValueError.
+    Returns a manifest with both write-back payloads, the final per-PO
+    status and each ERROR row's reason. Every locked row ends Sent or
+    ERROR; a row with no expected PO is ERROR.
     """
+    if poll_fn is None and not watch_dirs:
+        raise ValueError("orchestrate_tick: watch_dirs is empty and no poll_fn is given")
     # looked up per call so perfbench's attribute wrappers see every call
     from etl_jetro_spark.sinks.notify import status_update_payload
     from etl_jetro_spark.sources.sheet import parse_sections

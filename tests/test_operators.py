@@ -5,6 +5,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 import pytest
 
+from etl_jetro_spark import functions as EF
 from etl_jetro_spark import operators as O
 from tests.conftest import rows
 
@@ -50,6 +51,63 @@ def test_melt_between(spark):
     )
     long = O.melt_between(df, ["Item", "DESC"], after="DESC", before="Lot #", var_name="Store")
     assert rows(long.select("Store")) == [("114",), ("86",)]
+
+
+def _store_sheet(spark, width: int):
+    """One-row baby-flip-shaped sheet with ``width`` store columns."""
+    stores = [f"{100 + i}.0" for i in range(width)]
+    return spark.createDataFrame(
+        [tuple(["i1", "d"] + [str(i) for i in range(width)] + ["L1"])],
+        ["Item", "DESC"] + stores + ["Lot #"],
+    )
+
+
+def _store_map(spark, width: int):
+    """A one-column fact frame and a ``width``-key store → carrier dict."""
+    fact = spark.createDataFrame([("114",)], ["Store"])
+    return fact, {f"{100 + i}": str(i) for i in range(width)}
+
+
+# builder -> (input made outside the count, the plan build that is counted)
+_WIDTH_BUILDERS = {
+    "melt": (_store_sheet, lambda df: O.melt(
+        df, ["Item"], var_name="Branch", value_name="v", numeric_vars_only=True)),
+    "melt_between": (_store_sheet, lambda df: O.melt_between(
+        df, ["Item", "DESC"], after="DESC", before="Lot #", var_name="Store")),
+    "normalize_na_strings": (_store_sheet, EF.normalize_na_strings),
+    "map_join": (_store_map, lambda fm: O.map_join(fm[0], fm[1], "Store", "carrier")),
+}
+
+
+@pytest.mark.parametrize("builder", sorted(_WIDTH_BUILDERS))
+def test_plan_building_is_width_independent(spark, monkeypatch, builder):
+    """Building (no action) a melt, an NA normalization or a map join costs
+    the same number of Py4J round trips at 8 and at 64 store columns or map
+    keys: each sends its width-dependent expression as one SQL text. One
+    uncounted build first keeps first-call lookups out of the count, and
+    the JVM-object releases that Python's garbage collector sends at any
+    time are not counted."""
+    from py4j import protocol
+    from py4j.java_gateway import GatewayClient
+
+    make_input, build = _WIDTH_BUILDERS[builder]
+    send = GatewayClient.send_command
+    calls = []
+
+    def counting(self, command, *args, **kwargs):
+        if not command.startswith(protocol.MEMORY_COMMAND_NAME):
+            calls.append(command)
+        return send(self, command, *args, **kwargs)
+
+    counts = {}
+    for width in (8, 8, 64):
+        arg = make_input(spark, width)
+        calls.clear()
+        monkeypatch.setattr(GatewayClient, "send_command", counting)
+        build(arg)
+        monkeypatch.setattr(GatewayClient, "send_command", send)
+        counts[width] = len(calls)
+    assert counts[8] == counts[64], counts
 
 
 def test_sum_by_a1(spark, wide):

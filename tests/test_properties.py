@@ -67,30 +67,66 @@ def test_branch_fix_only_touches_two_digit(spark, vals):
             assert g == int(v)
 
 
+def _melt_label(header: str) -> str:
+    """The melt's cleaned store label: stripped, trailing .0/.00 dropped."""
+    return re.sub(r"\.0{1,2}$", "", header.strip())
+
+
+# Headers that need SQL quoting: quotes, backslashes, backticks, spaces,
+# non-ASCII text and the .0/.00 suffixes the melt strips from labels.
+# Distinct labels (case-insensitively) keep the pivot's columns distinct.
+quoting_headers = st.lists(
+    st.tuples(
+        st.text(alphabet="a1 '\\`\".éß中", min_size=1, max_size=6).filter(str.strip),
+        st.sampled_from(["", ".0", ".00"]),
+    ).map("".join),
+    min_size=1,
+    max_size=4,
+    unique_by=lambda h: _melt_label(h).lower(),
+)
+
+
 @slow_ok
-@given(
-    st.lists(
-        st.tuples(st.sampled_from(["i1", "i2", "i3"]), st.integers(0, 50), st.integers(0, 50)),
+@given(st.data())
+def test_melt_groupby_roundtrip(spark, data):
+    """melt ∘ (groupBy.pivot) round-trips the wide table's cell sums, and
+    melt's labels and values equal a plain-Python melt, for store headers
+    that need quoting. A map_join keyed on those labels, with values that
+    carry the same characters, returns each label's value."""
+    headers = data.draw(quoting_headers)
+    labels = [_melt_label(h) for h in headers]
+    rows = data.draw(st.lists(
+        st.tuples(
+            st.sampled_from(["i1", "i2", "i3"]),
+            st.lists(st.integers(0, 50), min_size=len(headers), max_size=len(headers)),
+        ).map(lambda r: (r[0], *r[1])),
         min_size=1,
         max_size=10,
-    )
-)
-def test_melt_groupby_roundtrip(spark, rows):
-    """melt ∘ (groupBy.pivot) round-trips the wide table's cell sums."""
-    wide = spark.createDataFrame(rows, ["item", "114", "86"])
+    ))
+    wide = spark.createDataFrame(rows, ["item", *headers])
     long = O.melt(wide, ["item"], var_name="store", value_name="v")
+    assert long.columns == ["item", "store", "v"]
+    want_long = sorted(
+        (r[0], lab, str(v)) for r in rows for lab, v in zip(labels, r[1:])
+    )
+    assert sorted(tuple(r) for r in long.collect()) == want_long
+
     back = (
         long.groupBy("item")
-        .pivot("store", ["114", "86"])
+        .pivot("store", labels)
         .agg(F.sum(F.col("v").try_cast("long")))
     )
     want = {}
-    for item, a, b in rows:
-        w = want.setdefault(item, [0, 0])
-        w[0] += a
-        w[1] += b
-    got = {r["item"]: [r["114"], r["86"]] for r in back.collect()}
+    for item, *vals in rows:
+        w = want.setdefault(item, [0] * len(vals))
+        for j, v in enumerate(vals):
+            w[j] += v
+    got = {r["item"]: [r[lab] for lab in labels] for r in back.collect()}
     assert got == want
+
+    mapping = {lab: f"{h}'\\`\"" for lab, h in zip(labels, headers)}
+    mapped = O.map_join(long, mapping, "store", "m", normalize_keys=False, zero_to_null=False)
+    assert {(r["store"], r["m"]) for r in mapped.collect()} == set(mapping.items())
 
 
 @slow_ok

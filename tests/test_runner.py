@@ -299,6 +299,22 @@ def test_golden_artifacts_unchanged(spark, tmp_path, sf_dir):
     assert run_golden_cases(spark, tmp_path, sf_dir) == GOLDEN
 
 
+def test_runners_compile_without_codegen_fallback(spark, tmp_path, sf_dir):
+    """Every supplier plan compiles under whole-stage codegen. With
+    ``spark.sql.codegen.fallback=false`` a generated-code compile error
+    fails the query instead of silently running it interpreted (the
+    Expand-based melt did that on the 247 and Flips baby runs). The six
+    runners still produce the golden artifacts."""
+    key = "spark.sql.codegen.fallback"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        got = run_golden_cases(spark, tmp_path, sf_dir)
+    finally:
+        spark.conf.set(key, before)
+    assert got == GOLDEN
+
+
 def _jobs_fired(spark, fn) -> int:
     sc = spark.sparkContext
     group = f"jobs-{uuid.uuid4().hex}"

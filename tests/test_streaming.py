@@ -336,6 +336,33 @@ def test_ready_row_without_expected_po_ends_in_error(tmp_path):
     assert m["po_status"] == {}
 
 
+def test_tick_rejects_empty_watch_dirs(tmp_path):
+    """The default poller counts polls per watched directory, so with no
+    directory a Ready row's deadline is never reached. The tick refuses an
+    empty list up front; the call runs in a thread so a regression fails
+    instead of hanging the suite. A caller's ``poll_fn`` needs no dirs."""
+    import threading
+
+    got = {}
+
+    def tick():
+        try:
+            orch.orchestrate_tick(None, CONTROL_GRID, [], str(tmp_path), deadline_polls=3)
+        except ValueError as e:
+            got["error"] = str(e)
+
+    t = threading.Thread(target=tick, daemon=True)
+    t.start()
+    t.join(30)
+    assert not t.is_alive(), "orchestrate_tick(watch_dirs=[]) did not return"
+    assert "watch_dirs" in got.get("error", "")
+
+    m = orch.orchestrate_tick(
+        None, CONTROL_GRID, [], str(tmp_path), deadline_polls=3, poll_fn=lambda st, d: None
+    )
+    assert set(m["errors"]) == {"G2", "E7"}
+
+
 def test_expected_pos_order_preserving_distinct():
     stores = {"452": "88101", "490": "88101", "114": "88102"}
     assert orch.expected_pos_for_vendor(stores) == ["88101", "88102"]
