@@ -48,7 +48,6 @@ from etl_jetro_spark.operators.similarity import (  # noqa: F401
 )
 from etl_jetro_spark.operators.sort import (  # noqa: F401
     lot_last4_key,
-    nth_occurrence,
     numeric_first_key,
     numeric_first_order,
     sort_numeric_first,

@@ -91,7 +91,7 @@ def to_canonical(
     Columns already present on ``df`` (e.g. a joined XDCK/FOB) win over the
     default blank fills — mirroring the reference's reindex-then-assign.
     The result is unordered: the ordered sinks sort the collected table on
-    the driver (``sinks.excel_sink.collect_canonical``).
+    the driver (``sinks.excel_sink.collect_ordered``).
     """
     existing = set(df.columns)
     out = df.withColumns(

@@ -10,8 +10,8 @@ read. The md5-derived fake decode survives only behind an explicit
 bytes) — fakes never ship silently.
 
 Scale notes: binary payloads dominate row size, so
-- `spark.sql.files.maxPartitionBytes` governs scan parallelism (set in
-  session.py);
+- `spark.sql.files.maxPartitionBytes` governs scan parallelism (Spark's
+  128 MiB default; ``tests/test_session.py`` pins it);
 - feature extraction uses ``mapInPandas`` (Arrow batches, one Python worker
   per core, streaming iterator — no full-partition materialization);
 - metadata is a typed struct column so filters on width/height/duration

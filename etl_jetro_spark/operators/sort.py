@@ -1,18 +1,20 @@
-"""Sort / window operators (SURVEY §2.6 W1–W5).
+"""Sort operators (SURVEY §2.6 W1/W3).
 
-Ordered sinks sort on the driver: their post-agg table is small by
-construction, is collected once, and is ordered in Python with
+Row-ordered outputs are not Spark sorts. Their post-agg tables are small
+by construction, are collected once and are ordered on the driver: the
+canonical sheet and the baby-flip table by
+``sinks.excel_sink.collect_ordered`` (the baby-flip table by
+:func:`lot_last4_key`, computed in its plan), and the DLPM macro with
 :func:`numeric_first_order`, the driver-side twin of
-:func:`numeric_first_key`. In Spark, sorts appear only as SortMergeJoin
-inputs chosen by Catalyst and in row-ordered outputs such as the baby-flip
-table. Neither is a full-data total sort at 100 TB.
+:func:`numeric_first_key`. :func:`sort_numeric_first` is W1 as a Spark
+sort; no runner calls it.
 """
 
 from __future__ import annotations
 
 import math
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 NUMERIC_SENTINEL = 10**9  # reference's missing-lot sort sentinel (baby_flip_tool.py:330)
@@ -58,12 +60,3 @@ def lot_last4_key(lot: str | Column) -> Column:
         F.nullif(last4, F.lit("")).try_cast("int"), F.lit(NUMERIC_SENTINEL)
     )
 
-
-def nth_occurrence(
-    df: DataFrame, predicate: Column, order_by: Column, n: int = 2
-) -> DataFrame:
-    """W5: the Nth row (by ``order_by``) satisfying ``predicate`` — the
-    reference finds the SECOND 'Item' marker row this way."""
-    w = Window.orderBy(order_by)
-    ranked = df.filter(predicate).withColumn("_rn", F.row_number().over(w))
-    return ranked.filter(F.col("_rn") == n).drop("_rn")

@@ -52,15 +52,17 @@ def build_allocation(
 ) -> DataFrame:
     """Melt (U1) → sum per (Branch, Item) (A1) → ≠0 (P8) → canonical.
 
-    ``edd`` defaults to the today+2-roll-Monday rule (F9) from ``base_date``
-    — Leavins passes an explicit one (the reference errors without it).
+    The build of 247, Leavins and SouthernCross (whose clean step pins its
+    Item column first). ``edd`` defaults to the today+2-roll-Monday rule
+    (F9) from ``base_date`` — Leavins passes an explicit one (the reference
+    errors without it).
     """
     if edd is None:
         if base_date is None and pipeline == "leavins":
             raise ValueError("leavins requires an explicit EDD")  # :133-134
         edd = default_edd(F.lit(base_date).cast("date"))
     df = _to_spark(spark, wide)
-    item_col = next(c for c in df.columns if c.strip().lower().replace("#", "").strip() in ("item", "item item"))
+    item_col = next(c for c in df.columns if G._norm_name(c) in ("item", "itemitem"))
     long = O.melt(
         df, [item_col], var_name="Branch", value_name="qty", numeric_vars_only=True
     ).withColumnRenamed(item_col, "Item")
@@ -201,22 +203,6 @@ def clean_southern_cross(raw: pd.DataFrame) -> pd.DataFrame:
     return wide[[item] + rest]
 
 
-def build_southern_cross(
-    spark: SparkSession, wide: pd.DataFrame, base_date: str
-) -> DataFrame:
-    df = _to_spark(spark, wide)
-    item_col = next(c for c in df.columns if G._norm_name(c) == "item")
-    long = O.melt(df, [item_col], var_name="Branch", value_name="qty",
-                  numeric_vars_only=True).withColumnRenamed(item_col, "Item")
-    agg = O.sum_by(long, ["Branch", "Item"], "qty", out="Distro Size")
-    agg = agg.withColumn("Distro Size", F.col("Distro Size").cast("long"))
-    return O.to_canonical(
-        agg,
-        O.PIPELINES["southern_cross"],
-        edd=default_edd(F.lit(base_date).cast("date")),
-    )
-
-
 # --------------------------------------------------------------------------
 # Flips big + baby  (reference Flips/tools/big_flip_tool.py:55-297,
 # baby_flip_tool.py:7-338)
@@ -331,9 +317,10 @@ def build_baby_flip(
     sum (A3) → PO join (J1) + carrier join (J2) → the reference's exact
     output schema [Store, PO #, Invoice Date, DESC, Value, LOT#, weight,
     pack size, carrier code] with Store int, weight = Value×pack (long),
-    Invoice Date M/d/yyyy, sorted Store then LOT#-last4 (W3)
-    (reference baby_flip_tool.py:213-338). ``invoice_date`` is the
-    injected clock (ISO string)."""
+    Invoice Date M/d/yyyy (reference baby_flip_tool.py:213-338).
+    ``invoice_date`` is the injected clock (ISO string). The rows are
+    unordered: ``runner.run_flips_baby`` orders the collected table by
+    Store then LOT#-last4 (W3), and the K2 manifest orders its sheets."""
     from etl_jetro_spark.functions.na import normalize_na_strings
 
     df = normalize_na_strings(_to_spark(spark, wide))
@@ -369,19 +356,16 @@ def build_baby_flip(
         if invoice_date
         else F.lit(None).cast("string")
     )
-    return (
-        out.select(
-            F.col("Store").try_cast("int").alias("Store"),
-            F.col("PO #"),
-            inv.alias("Invoice Date"),
-            F.col("DESC"),
-            F.col("Value"),
-            F.col("LOT#"),
-            (F.col("Value") * pack).try_cast("long").alias("weight"),
-            pack.alias("pack size"),
-            F.col("carrier code"),
-        )
-        .orderBy(F.col("Store").asc(), O.lot_last4_key("LOT#"))
+    return out.select(
+        F.col("Store").try_cast("int").alias("Store"),
+        F.col("PO #"),
+        inv.alias("Invoice Date"),
+        F.col("DESC"),
+        F.col("Value"),
+        F.col("LOT#"),
+        (F.col("Value") * pack).try_cast("long").alias("weight"),
+        pack.alias("pack size"),
+        F.col("carrier code"),
     )
 
 
@@ -397,6 +381,9 @@ def build_baby_audit_manifest(
     sinks.excel_sink.write_audit_workbook (or per-table parquet when no
     Excel engine is present).
 
+    'Araho Sheet' and 'Last Level Master' are in (Store, LOT# last-4)
+    order (W3).
+
     - 'Araho Sheet': the output with Store renamed Column (P16)
     - 'RD master' / 'RD clean': the cleaned wide input, raw and
       NA-normalized
@@ -406,6 +393,7 @@ def build_baby_audit_manifest(
     from etl_jetro_spark.functions.na import normalize_na_strings
 
     rd_master = _to_spark(spark, wide)
+    output = output.orderBy(F.col("Store").asc(), O.lot_last4_key("LOT#"))
     return {
         "Araho Sheet": output.withColumnRenamed("Store", "Column"),
         "RD master": rd_master,

@@ -13,10 +13,11 @@ from datetime import date
 
 from pyspark.sql import DataFrame, SparkSession
 
+from etl_jetro_spark import operators as O
 from etl_jetro_spark.pipelines import batch as B
 from etl_jetro_spark.sinks.excel_sink import (
-    collect_arrow,
-    collect_canonical,
+    CANONICAL_ORDER,
+    collect_ordered,
     write_canonical,
     write_parquet_dir,
 )
@@ -44,7 +45,7 @@ def emit_order(
     """A run's ordered sinks: execute the canonical plan once (one Arrow
     collect, sorted on the driver), then write the order sheet and, given
     ``run_date``, the ADPO,X macro from that one table."""
-    table = collect_canonical(canon)
+    table = collect_ordered(canon, *CANONICAL_ORDER)
     manifest = {"order_sheet": write_canonical(table, out_dir, name=name)}
     if run_date is not None:
         manifest["adpo_x"] = _write_text(out_dir, *render_adpo_x(table, run_date=run_date))
@@ -125,7 +126,9 @@ def run_southern_cross(
     """SouthernCross IBT batch: coercion matrix + alphabetical reorder."""
     grid, _token = read_single_with_token(in_folder)
     wide = B.clean_southern_cross(grid)
-    canon = B.build_southern_cross(spark, wide, run_date.isoformat())
+    canon = B.build_allocation(
+        spark, wide, "southern_cross", base_date=run_date.isoformat()
+    )
     return emit_order(canon, out_dir, run_date)
 
 
@@ -137,8 +140,9 @@ def run_flips_baby(
     out_dir: str,
 ) -> dict:
     """Flips baby sub-pipeline: split → melt/agg → PO + carrier joins →
-    audit table (reference Flips/Flips.ipynb baby branch), executed once
-    and written from the collected Arrow table."""
+    audit table (reference Flips/Flips.ipynb baby branch), executed once,
+    ordered on the driver by Store then LOT# last-4 (W3) and written from
+    the collected Arrow table."""
     from etl_jetro_spark.sources.csv_po import read_latest_po_csv
     from etl_jetro_spark.sources.json_dim import read_carrier_json
 
@@ -147,7 +151,9 @@ def run_flips_baby(
     wide = B.clean_baby_flip(baby)
     po = read_latest_po_csv(spark, po_folder).select("PO #", "Store")
     carrier = read_carrier_json(spark, token, carrier_dir)
-    table = collect_arrow(B.build_baby_flip(spark, wide, po, carrier))
+    table = collect_ordered(
+        B.build_baby_flip(spark, wide, po, carrier), "Store", O.lot_last4_key("LOT#")
+    )
     pq = os.path.join(out_dir, "baby_flip_araho.parquet")
     write_parquet_dir(table, pq)
     return {"token": token, "araho": pq, "rows": table.num_rows}

@@ -1,15 +1,20 @@
-"""SparkSession factory with scale-oriented defaults.
+"""SparkSession factory.
 
-Every knob here is chosen for the 100 TB design point and merely *also works*
-on local[32]:
+Only settings that differ from Spark's defaults are set; adaptive query
+execution, scan sizing and the Arrow batch size keep Spark's defaults
+(``tests/test_session.py`` pins their effective values). Each setting:
 
-- AQE on (runtime re-plan: skew-join splitting, partition coalescing,
-  broadcast-join demotion/promotion based on observed sizes).
-- ``spark.sql.shuffle.partitions`` is a default, not a law — AQE coalesces.
-- Arrow enabled so the few Pandas-UDF paths (ingest normalizer, multimodal
-  feature extraction, streaming state) batch-transfer instead of pickling rows.
+- ``spark.sql.shuffle.partitions`` follows the local core count
+  (``SPARK_GRAFT_CPUS``) instead of Spark's 200: the tables are small, and
+  AQE coalesces what is left.
+- ``spark.sql.autoBroadcastJoinThreshold`` 64 MiB: dims in this engine are
+  KB–MB, so Spark may broadcast them.
+- Arrow enabled so ``toPandas``/``createDataFrame`` and the Pandas-UDF
+  paths batch-transfer instead of pickling rows.
 - Session timezone pinned to America/Chicago, matching the reference's
   business clock (reference: sheet_bot/utils.py:16-27, big_flip_tool.py:247).
+- ``nanosAsLong`` reads TIMESTAMP(NANOS) parquet columns, see below.
+- UI and console progress bars off; driver heap sized from RAM.
 """
 
 from __future__ import annotations
@@ -61,19 +66,11 @@ def get_spark(
     b = (
         SparkSession.builder.appName(app_name)
         .master(master)
-        # --- scale: adaptive execution --------------------------------
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         # dims in this engine are KB–MB; let Spark broadcast aggressively
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # --- scale: scan sizing --------------------------------------
-        .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
-        .config("spark.sql.parquet.filterPushdown", "true")
         # --- python boundary: always Arrow ----------------------------
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         # --- determinism ----------------------------------------------
         .config("spark.sql.session.timeZone", SESSION_TZ)
         # testdata events.parquet carries TIMESTAMP(NANOS) which Spark's

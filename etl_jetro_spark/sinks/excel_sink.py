@@ -6,11 +6,12 @@ format (reference 247/tools/allocation_tool.py:168-207, dup ×5); K2 is the
 6-sheet audit workbook (baby_flip_tool.py:384-512).
 
 The canonical table is small by construction (stores × items), so a run
-executes its plan once: :func:`collect_canonical` collects it as one Arrow
+executes its plan once: :func:`collect_ordered` collects it as one Arrow
 table and orders it on the driver, and every artifact is written from that
 table — the Parquet directory (pyarrow), the workbook (the engine's native
 OOXML writer, ``sources/xlsx.py``, no optional dependencies) and the
-keystroke macros (``sinks/macro.py``).
+keystroke macros (``sinks/macro.py``). The Flips baby table is ordered the
+same way, by its own key.
 """
 
 from __future__ import annotations
@@ -22,7 +23,7 @@ import shutil
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 
 from etl_jetro_spark.sources.xlsx import write_xlsx
 
@@ -42,12 +43,16 @@ def collect_arrow(df: DataFrame) -> pa.Table:
     return table.cast(to_arrow_schema(StructType.fromJson(json.loads(plan_schema))))
 
 
-def collect_canonical(df: DataFrame) -> pa.Table:
-    """The canonical table, executed once and ordered on the driver by
-    Branch, Item, Distro Size (NULLs first, as Spark's ascending sort)."""
-    return collect_arrow(df).sort_by(
-        [(c, "ascending") for c in CANONICAL_ORDER], null_placement="at_start"
-    )
+def collect_ordered(df: DataFrame, *by: str | Column) -> pa.Table:
+    """``df`` executed once and ordered on the driver by ``by``, ascending
+    with NULLs first (Spark's ascending default). A Column key is computed
+    in the same plan as a temporary column and dropped after the sort."""
+    names = [b if isinstance(b, str) else f"__order_{i}" for i, b in enumerate(by)]
+    keys = {n: b for n, b in zip(names, by) if isinstance(b, Column)}
+    table = collect_arrow(df.withColumns(keys) if keys else df)
+    return table.sort_by(
+        [(n, "ascending") for n in names], null_placement="at_start"
+    ).drop_columns(list(keys))
 
 
 def write_parquet_dir(table: pa.Table, path: str) -> None:
@@ -77,7 +82,7 @@ def write_canonical(table: pa.Table, out_dir: str, name: str = "order_sheet") ->
     empty ``ANOMALY``/``STORE CLUSTER`` (247/tools/allocation_tool.py:168-207).
 
     ``table`` is the collected, ordered canonical table
-    (:func:`collect_canonical`); both files are written from it with no
+    (:func:`collect_ordered`); both files are written from it with no
     Spark job. Returns a manifest {parquet: path, xlsx: path, rows: n}.
     """
     pq_path = os.path.join(out_dir, f"{name}.parquet")

@@ -11,7 +11,7 @@ These are *ordered sinks*: output depends on total row order. Their
 inputs are small by construction (stores × items, not fact volume), so
 each is executed once and ordered on the driver: ADPO,X and ADPO,I render
 from the run's collected canonical Arrow table
-(``sinks.excel_sink.collect_canonical``), and DLPM collects the price table
+(``sinks.excel_sink.collect_ordered``), and DLPM collects the price table
 once, unsorted, with its ``numeric_first_key`` column. Every renderer is
 one pass over its sorted rows.
 """

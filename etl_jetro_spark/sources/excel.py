@@ -44,12 +44,13 @@ def clean_file_token(stem: str) -> str:
     return re.sub(r"\s+", " ", stem.strip().lower())
 
 
-def list_sheet_files(folder: str) -> list[str]:
-    """Excel files in a folder, skipping ``~$`` lock files."""
+def list_sheet_files(folder: str, exts: tuple[str, ...]) -> list[str]:
+    """Files in a folder with one of ``exts``, sorted, skipping ``~$``
+    lock files."""
     return sorted(
         os.path.join(folder, f)
         for f in os.listdir(folder)
-        if f.lower().endswith(EXCEL_EXTS) and not f.startswith("~$")
+        if f.lower().endswith(exts) and not f.startswith("~$")
     )
 
 
@@ -86,15 +87,7 @@ def read_allocation_pricesheet(
     """S1: pick ≤2 sheet files by filename keyword ('allocation'/'price');
     returns (allocation_grid, price_grid), either possibly None."""
     alloc = price = None
-    files = (
-        list_sheet_files(folder)
-        if reader is grid_from_excel
-        else sorted(
-            os.path.join(folder, f)
-            for f in os.listdir(folder)
-            if f.lower().endswith(".csv")
-        )
-    )
+    files = list_sheet_files(folder, EXCEL_EXTS if reader is grid_from_excel else (".csv",))
     if len(files) > 2:
         raise ValueError(f"expected at most 2 sheet files in {folder}, found {len(files)}")
     for path in files:
@@ -118,12 +111,7 @@ def read_single_with_token(
     (reference SouthernCross/tools/read_file_tool.py:12,53-61); CSV inputs
     ignore it (single-table files).
     """
-    exts = EXCEL_EXTS if reader is grid_from_excel else (".csv",)
-    files = sorted(
-        os.path.join(folder, f)
-        for f in os.listdir(folder)
-        if f.lower().endswith(exts) and not f.startswith("~$")
-    )
+    files = list_sheet_files(folder, EXCEL_EXTS if reader is grid_from_excel else (".csv",))
     if len(files) != 1:
         raise ValueError(f"expected exactly 1 sheet file in {folder}, found {len(files)}")
     token = clean_file_token(os.path.splitext(os.path.basename(files[0]))[0])

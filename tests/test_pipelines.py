@@ -121,7 +121,7 @@ def test_southern_cross_e2e(spark):
     )
     wide = P.clean_southern_cross(grid)
     assert list(wide.columns) == ["Item", "114", "449"]  # alpha ci, Item pinned
-    out = P.build_southern_cross(spark, wide, "2026-08-10")
+    out = P.build_allocation(spark, wide, "southern_cross", base_date="2026-08-10")
     rows = {(r["Branch"], r["Item"]): r["Distro Size"] for r in out.collect()}
     assert rows[(449, 555)] == 12 and rows[(114, 777)] == 3 and rows[(449, 777)] == 2
     assert all(r["Supplier On Record"] == 80104 for r in out.collect())
@@ -209,6 +209,9 @@ def test_baby_audit_manifest(spark):
         "Araho Sheet", "RD master", "RD clean", "Last Level Master", "PO#", "carriers",
     }
     assert "Column" in manifest["Araho Sheet"].columns
+    # the audit sheets keep the reference's (Store, LOT# last-4) order (W3)
+    araho = manifest["Araho Sheet"].collect()
+    assert [(r["Column"], r["LOT#"][-4:]) for r in araho] == [(86, "8999"), (114, "9024")]
     assert "PO #" not in manifest["Last Level Master"].columns
     # RD clean nulls the 'na' cell that RD master keeps
     raw = manifest["RD master"].collect()

@@ -175,9 +175,9 @@ def _artifact_digests(manifest: dict) -> dict[str, str]:
     its Arrow schema with nullability, and the xlsx ``Scripting`` cells.
 
     Canonical rows are taken in file order, which the driver-side sort
-    fixes. The baby-flip table is sorted in Spark by (Store, LOT# last-4),
-    whose ties have no defined order, so its rows are compared as a
-    multiset and its file order is checked against that key."""
+    fixes. The baby-flip table is ordered by (Store, LOT# last-4), whose
+    ties have no defined order, so its rows are compared as a multiset and
+    its file order is checked against that key."""
     import pyarrow.parquet as pq
 
     from etl_jetro_spark.sources.xlsx import read_xlsx_grid
@@ -210,7 +210,9 @@ def _adpo_i_digest(parquet: str) -> str:
     return _sha(name.encode() + text.encode())
 
 
-def run_golden_cases(spark, root, sf_dir: str) -> dict[str, dict[str, str]]:
+def _golden_cases(root, sf_dir: str) -> dict[str, tuple]:
+    """Every golden case's drop folder, built under ``root``. Returns
+    {case: (runner name, drop folder, extra runner args)}."""
     root.mkdir(parents=True, exist_ok=True)
     cases = {
         "runner_247": ("run_247", root / "runner_247", (RUN_DATE,)),
@@ -221,13 +223,19 @@ def run_golden_cases(spark, root, sf_dir: str) -> dict[str, dict[str, str]]:
     _drop_acme(cases["runner_acme"][1])
     _drop_247_edges(cases["runner_247_edges"][1])
     cases.update(_fixture_drops(root, sf_dir))
+    return cases
+
+
+def _run_case(spark, fn: str, drop, extra: tuple, out: str) -> dict:
+    if fn == "run_flips_baby":
+        return R.run_flips_baby(spark, str(drop), *extra, out)
+    return getattr(R, fn)(spark, str(drop), out, *extra)
+
+
+def run_golden_cases(spark, root, sf_dir: str) -> dict[str, dict[str, str]]:
     got = {}
-    for case, (fn, drop, extra) in cases.items():
-        out = str(root / "out" / case)
-        if fn == "run_flips_baby":
-            manifest = R.run_flips_baby(spark, str(drop), *extra, out)
-        else:
-            manifest = getattr(R, fn)(spark, str(drop), out, *extra)
+    for case, (fn, drop, extra) in _golden_cases(root, sf_dir).items():
+        manifest = _run_case(spark, fn, drop, extra, str(root / "out" / case))
         got[case] = _artifact_digests(manifest)
         if fn == "run_flips_big":  # no runner emits ADPO,I; render it from the sheet
             got[case]["adpo_i"] = _adpo_i_digest(manifest["order_sheet"]["parquet"])
@@ -328,16 +336,23 @@ def _jobs_fired(spark, fn) -> int:
 
 
 @pytest.mark.parametrize(
-    "fn,drop,max_jobs",
-    [(run_acme, _drop_acme, 1), (run_247, _drop_247, 3)],
-    ids=["acme", "247"],
+    "case,max_jobs",
+    [
+        ("runner_acme", 1),
+        ("runner_247", 3),
+        ("fx_southern_cross", 2),
+        ("fx_flips_baby", 4),
+    ],
+    ids=["acme", "247", "southern_cross", "flips_baby"],
 )
-def test_one_execution_per_artifact_table(spark, tmp_path, fn, drop, max_jobs):
-    """The canonical table runs once (one Arrow collect), the price sheet
-    once more: ACME fires exactly one job, 247 at most three (the
-    allocation's aggregation adds a shuffle-map job under AQE). A first,
-    uncounted run keeps session warm-up out of the count."""
-    drop(tmp_path / "drop")
-    fn(spark, str(tmp_path / "drop"), str(tmp_path / "warm"), RUN_DATE)
-    jobs = _jobs_fired(spark, lambda: fn(spark, str(tmp_path / "drop"), str(tmp_path / "out"), RUN_DATE))
+def test_one_execution_per_artifact_table(spark, tmp_path, sf_dir, case, max_jobs):
+    """Each plan runs once (one Arrow collect, ordered on the driver):
+    ACME fires exactly one job; 247 at most three (the allocation's
+    aggregation adds a shuffle-map job under AQE, the price sheet one
+    more); SouthernCross, the allocation build, at most two; Flips baby
+    at most four (its PO and carrier reads add theirs). A first, uncounted
+    run keeps session warm-up out of the count."""
+    fn, drop, extra = _golden_cases(tmp_path, sf_dir)[case]
+    _run_case(spark, fn, drop, extra, str(tmp_path / "warm"))
+    jobs = _jobs_fired(spark, lambda: _run_case(spark, fn, drop, extra, str(tmp_path / "out")))
     assert 1 <= jobs <= max_jobs

@@ -169,8 +169,11 @@ def test_render_adpo_i(spark):
 def test_pair_scan_too_many_files(tmp_path):
     from etl_jetro_spark.sources.excel import read_allocation_pricesheet
 
-    for n in ("allocation.csv", "price.csv", "extra.csv"):
+    for n in ("allocation.csv", "price.csv", "~$allocation.csv"):
         (tmp_path / n).write_text("a,b\n1,2\n")
+    alloc, price = read_allocation_pricesheet(str(tmp_path))  # lock file skipped
+    assert alloc is not None and price is not None
+    (tmp_path / "extra.csv").write_text("a,b\n1,2\n")
     with pytest.raises(ValueError, match="at most 2"):
         read_allocation_pricesheet(str(tmp_path))
 
@@ -291,14 +294,18 @@ def test_write_canonical_emits_real_workbook(spark, tmp_path, sf_dir):
     m/d/yyyy EDD text."""
     from etl_jetro_spark.pipelines import batch as B
     from etl_jetro_spark.plans import fixtures as FX
-    from etl_jetro_spark.sinks.excel_sink import collect_canonical, write_canonical
+    from etl_jetro_spark.sinks.excel_sink import (
+        CANONICAL_ORDER,
+        collect_ordered,
+        write_canonical,
+    )
     from etl_jetro_spark.sources.xlsx import read_xlsx_grid, sheet_names
 
     canon = B.build_allocation(
         spark, B.clean_allocation(FX.allocation_grid(sf_dir)), "247",
         base_date="2026-01-05",
     )
-    man = write_canonical(collect_canonical(canon), str(tmp_path))
+    man = write_canonical(collect_ordered(canon, *CANONICAL_ORDER), str(tmp_path))
     assert man["xlsx"] and os.path.exists(man["xlsx"])
     assert [n for n, _ in sheet_names(man["xlsx"])] == [
         "Scripting", "ANOMALY", "STORE CLUSTER"
