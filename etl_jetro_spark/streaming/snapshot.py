@@ -5,9 +5,9 @@ debounces each candidate on a size-stability window, moves settled files,
 and errors POs that never complete within the deadline. Directory listings
 are control-plane small (hundreds of names), so the state machine is a
 deterministic pure-Python step function over successive snapshots —
-trivially testable, restartable, and drivable from any scheduler (a cron, a
-foreachBatch, or the reference's 60 s loop). The data-plane (what's *in*
-the PDFs) never touches this path.
+trivially testable, restartable, and drivable from any scheduler (a cron
+or the reference's 60 s loop). The data-plane (what's *in* the PDFs) never
+touches this path.
 
 State transitions per PO (T2/T4/T5):
     (unseen) --sighting--> waiting --same size next poll--> done
@@ -17,11 +17,12 @@ Pre-check: a file already in the destination counts as done immediately.
 
 from __future__ import annotations
 
+import errno
 import os
 import re
+import shutil
+import time
 from dataclasses import dataclass, field
-
-from etl_jetro_spark.streaming.watcher import move_file_idempotent
 
 PO_FROM_NAME = re.compile(r"-(\d+)\.pdf$", re.IGNORECASE)
 
@@ -55,6 +56,67 @@ class WatchState:
 
 def new_watch(expected: list[str], deadline_polls: int = 600) -> WatchState:
     return WatchState(expected=set(expected), deadline_polls=deadline_polls)
+
+
+def _stage_and_commit(src: str, dest: str, tmp: str) -> None:
+    """Deliver ``src`` to ``dest`` so the final name only ever appears
+    FULLY WRITTEN. Same-filesystem: plain atomic ``os.rename``.
+    Cross-filesystem (EXDEV): copy to ``tmp`` (a temp name inside the
+    dest dir, hence on dest's filesystem), atomically ``os.replace`` it
+    into place, then unlink the source. A hard crash mid-copy — a
+    window a copy-then-unlink ``shutil.move`` would leave open — strands
+    only the ``tmp`` staging file, never a truncated ``dest``, so a
+    re-run's pre-check can trust dest's existence as proof of complete
+    delivery."""
+    try:
+        os.rename(src, dest)
+        return
+    except OSError as e:
+        if e.errno != errno.EXDEV:
+            raise
+    shutil.copy2(src, tmp)
+    os.replace(tmp, dest)
+    os.unlink(src)
+
+
+def move_file_idempotent(
+    src: str, dest_dir: str, retries: int = 5, retry_sleep: float = 0.0
+) -> str | None:
+    """T5/T6/T7: move with pre-check (already-delivered wins), bounded
+    retries, and skip-if-same-name — safe to repeat on a re-run tick.
+
+    Reference parity: ``open_retry=5`` / ``open_retry_sleep`` move loop
+    (sheet_bot/utils.py:273-285). Delivery goes through
+    :func:`_stage_and_commit`, so ``dest`` appears atomically: the
+    pre-check below never sees a partial file, even after a hard crash
+    (only a ``*.partial`` staging file can be stranded, and each retry
+    sweeps it). Returns the dest path, or None when all retries are
+    exhausted (the caller reports ERROR; the reference leaves the PO in
+    ``remaining`` and its status row never flips to done)."""
+    os.makedirs(dest_dir, exist_ok=True)
+    dest = os.path.join(dest_dir, os.path.basename(src))
+    tmp = dest + ".partial"
+    if os.path.exists(dest):
+        return dest  # already delivered (replay or duplicate drop)
+    if os.path.exists(tmp):
+        try:
+            os.remove(tmp)  # stale staging file from a prior hard crash
+        except OSError:
+            pass
+    for attempt in range(retries):
+        try:
+            _stage_and_commit(src, dest, tmp)
+            return dest
+        except OSError:
+            if os.path.exists(tmp):
+                try:
+                    os.remove(tmp)  # half-staged copy: source not consumed
+                except OSError:
+                    pass
+            if attempt == retries - 1:
+                return None
+            time.sleep(retry_sleep)
+    return None
 
 
 def precheck_dest(state: WatchState, dest_dir: str) -> WatchState:

@@ -1,7 +1,7 @@
 """Custom stateful streaming with Spark 4's transformWithStateInPandas.
 
 The modern arbitrary-state API (successor to applyInPandasWithState,
-which the PO watcher uses — ``streaming/watcher.py``): typed state
+whose twin here is :func:`run_running_totals_gks`): typed state
 handles (ValueState/ListState/MapState) backed by the RocksDB state
 store, per-key timers, and TTL. Here: an exactly-once running
 (sum, count) per key — the stateful-streaming twin of the
@@ -162,7 +162,7 @@ def run_running_totals(
         raise NotImplementedError(
             "transformWithStateInPandas needs google.protobuf (no pip "
             "package and no vendored pure-Python runtime found); the "
-            "applyInPandasWithState path (streaming/watcher.py) and the "
+            "applyInPandasWithState twin (run_running_totals_gks) and the "
             "foreachBatch incremental view (streaming/incremental.py) "
             "cover stateful streaming without it"
         )

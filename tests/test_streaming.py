@@ -13,99 +13,23 @@ from pyspark.sql import functions as F
 
 from etl_jetro_spark.sources.sheet import parse_sections, to_a1
 from etl_jetro_spark.streaming import orchestrator as orch
-from etl_jetro_spark.streaming import watcher as W
-
-
-def test_extract_po(spark):
-    df = spark.createDataFrame(
-        [("/w/79906-123-45879.PDF",), ("/w/x-88.pdf",), ("/w/nope.txt",)], ["path"]
-    )
-    got = [r[0] for r in df.select(W.extract_po(F.col("path"))).collect()]
-    assert got == ["45879", "88", ""]
-
-
-def test_po_watch_timeout_to_error(spark, tmp_path):
-    """T4 through the REAL stream (processing-time trigger): an expected PO
-    whose PDF never arrives is heartbeat-seeded into waiting state and
-    times out into ERROR; the arrived PO goes done and never errors."""
-    watch = tmp_path / "watch"
-    dest = tmp_path / "dest"
-    ckpt = tmp_path / "ckpt"
-    watch.mkdir()
-    (watch / "79906-114-7001.pdf").write_bytes(b"pdf-one")
-
-    expected = spark.createDataFrame([("7001",), ("7002",)], ["po"])
-    q = W.run_po_watch(
-        spark,
-        [str(watch)],
-        expected,
-        str(dest),
-        str(ckpt),
-        timeout_seconds=3,
-        poll_seconds=1,
-    )
-    try:
-        deadline = time.time() + 90
-        want = {("7001", "done"), ("7002", "error")}
-        got = set()
-        while time.time() < deadline and not want <= got:
-            got = {
-                (r["po"], r["status"])
-                for r in W.memory_status_rows()
-                if r["po"] in ("7001", "7002")
-            }
-            time.sleep(1)
-    finally:
-        q.stop()
-    assert want <= got
-    # the done PO must never produce a spurious late error
-    assert ("7001", "error") not in got
-    assert os.path.exists(dest / "79906-114-7001.pdf")
-
-
-@pytest.mark.slow
-def test_po_watch_end_to_end(spark, tmp_path):
-    """Drop PDFs into a watch dir; matched arrivals go done and move to
-    dest; unmatched files stay put (stream-static semi join)."""
-    watch = tmp_path / "watch"
-    dest = tmp_path / "dest"
-    ckpt = tmp_path / "ckpt"
-    watch.mkdir()
-    (watch / "79906-114-1001.pdf").write_bytes(b"pdf-one")
-    (watch / "79906-86-1002.PDF").write_bytes(b"pdf-two")
-    (watch / "79906-99-9999.pdf").write_bytes(b"unexpected")
-    (watch / "notes.txt").write_text("ignored")
-
-    expected = spark.createDataFrame([("1001",), ("1002",), ("1003",)], ["po"])
-    q = W.run_po_watch(
-        spark,
-        [str(watch)],
-        expected,
-        str(dest),
-        str(ckpt),
-        timeout_seconds=300,
-        available_now=True,
-    )
-    q.awaitTermination(150)
-
-    by_po = {}
-    for r in W.memory_status_rows():
-        by_po.setdefault(r["po"], []).append(r["status"])
-    assert "done" in by_po.get("1001", []) and "done" in by_po.get("1002", [])
-    assert "9999" not in by_po  # unmatched PO filtered by stream-static join
-    assert "1003" not in by_po  # never arrived; timeout handled in poller path
-    assert sorted(os.listdir(dest)) == ["79906-114-1001.pdf", "79906-86-1002.PDF"]
-    assert (watch / "79906-99-9999.pdf").exists()
+from etl_jetro_spark.streaming import snapshot as S
 
 
 def test_snapshot_poller_settle_timeout_precheck(tmp_path):
-    """Reference-fidelity poll semantics: settle window, pre-check, timeout."""
-    from etl_jetro_spark.streaming import snapshot as S
+    """Reference-fidelity poll semantics: settle window, pre-check, timeout;
+    files whose name is not an expected PO stay in the watch folder."""
+    # PO from the file name: any case of .pdf, any prefix; non-PDF -> None
+    assert S.po_of("79906-123-45879.PDF") == "45879"
+    assert S.po_of("x-88.pdf") == "88"
+    assert S.po_of("nope.txt") is None
 
     watch = tmp_path / "w"
     dest = tmp_path / "d"
     watch.mkdir()
     dest.mkdir()
+    (watch / "79906-99-9999.pdf").write_bytes(b"unexpected")
+    (watch / "notes.txt").write_text("ignored")
     # PO 2001 already delivered -> pre-check done
     (dest / "v-1-2001.pdf").write_bytes(b"done")
 
@@ -129,6 +53,8 @@ def test_snapshot_poller_settle_timeout_precheck(tmp_path):
     assert ("2002", "done") in t3 and ("2003", "error") in t3
     assert (dest / "v-2-2002.pdf").exists() and not f.exists()
     assert st.pending() == set()
+    # unmatched files stay put
+    assert sorted(os.listdir(watch)) == ["79906-99-9999.pdf", "notes.txt"]
 
 
 def test_move_retries_exhausted_cleans_partial_copy(tmp_path, monkeypatch):
@@ -148,15 +74,27 @@ def test_move_retries_exhausted_cleans_partial_copy(tmp_path, monkeypatch):
             fh.write(b"partial")  # crash mid-copy: staging file stranded
         raise OSError("injected: device gone mid-copy")
 
-    monkeypatch.setattr(W, "_stage_and_commit", failing_commit)
-    got = W.move_file_idempotent(str(src), str(dest_dir), retries=5)
+    monkeypatch.setattr(S, "_stage_and_commit", failing_commit)
+    got = S.move_file_idempotent(str(src), str(dest_dir), retries=5)
     assert got is None
     assert len(attempts) == 5
     assert os.listdir(dest_dir) == []  # no dest, no orphan .partial
     assert src.read_bytes() == b"full-pdf-payload"  # source untouched
+    # through the poller: the settled PDF's move keeps failing until the
+    # deadline, so the PO ends in ERROR exactly once, never done, with the
+    # found path kept, the source still in the watch folder and nothing
+    # of any name in the destination
+    st = S.new_watch(["5001"], deadline_polls=3)
+    transitions = []
+    for _ in range(st.deadline_polls):
+        transitions += S.poll_step(st, S.list_dir(str(tmp_path)), str(dest_dir))
+    assert transitions == [("5001", "waiting"), ("5001", "error")]
+    assert st.sightings["5001"].path.endswith(src.name)
+    assert src.read_bytes() == b"full-pdf-payload"
+    assert os.listdir(dest_dir) == []
     # recovery: once moves work again, the same call delivers normally
     monkeypatch.undo()
-    got2 = W.move_file_idempotent(str(src), str(dest_dir), retries=5)
+    got2 = S.move_file_idempotent(str(src), str(dest_dir), retries=5)
     assert got2 and open(got2, "rb").read() == b"full-pdf-payload"
 
 
@@ -187,7 +125,7 @@ def test_hard_crash_mid_copy_never_exposes_partial_dest(tmp_path, monkeypatch):
     monkeypatch.setattr(os, "rename", exdev_rename)
     monkeypatch.setattr(shutil, "copy2", crashing_copy2)
     try:
-        W.move_file_idempotent(str(src), str(dest_dir), retries=5)
+        S.move_file_idempotent(str(src), str(dest_dir), retries=5)
     except KeyboardInterrupt:
         pass
     dest = dest_dir / src.name
@@ -195,65 +133,21 @@ def test_hard_crash_mid_copy_never_exposes_partial_dest(tmp_path, monkeypatch):
     assert src.read_bytes() == b"full-pdf-payload"
     # replay after recovery: pre-check misses (dest absent), delivery runs
     monkeypatch.undo()
-    got = W.move_file_idempotent(str(src), str(dest_dir), retries=5)
+    got = S.move_file_idempotent(str(src), str(dest_dir), retries=5)
     assert got and open(got, "rb").read() == b"full-pdf-payload"
     assert os.listdir(dest_dir) == [src.name]  # stale .partial replaced/gone
-
-
-@pytest.mark.slow
-def test_po_watch_move_failure_reports_error_row(spark, tmp_path, monkeypatch):
-    """E2E failure injection: the PDF arrives and matches, but every move
-    attempt fails — the status row for that PO must say ERROR (not done),
-    exactly once, with found_path preserved; the file stays in the watch
-    dir. The reference leaves the PO in `remaining` forever in this case
-    (status never flips to done); the engine maps that terminal not-done
-    state to an explicit ERROR row."""
-    import shutil
-
-    watch = tmp_path / "watch"
-    dest = tmp_path / "dest"
-    ckpt = tmp_path / "ckpt"
-    watch.mkdir()
-    (watch / "79906-114-6001.pdf").write_bytes(b"pdf-payload")
-
-    def failing_commit(s, d, tmp):
-        raise OSError("injected: move always fails")
-
-    monkeypatch.setattr(W, "_stage_and_commit", failing_commit)
-    expected = spark.createDataFrame([("6001",)], ["po"])
-    q = W.run_po_watch(
-        spark,
-        [str(watch)],
-        expected,
-        str(dest),
-        str(ckpt),
-        timeout_seconds=300,
-        available_now=True,
-    )
-    q.awaitTermination(150)
-
-    rows = [r for r in W.memory_status_rows() if r["po"] == "6001"]
-    statuses = [r["status"] for r in rows]
-    assert "error" in statuses and "done" not in statuses
-    assert statuses.count("error") == 1  # exactly-once ERROR
-    err = next(r for r in rows if r["status"] == "error")
-    assert err["found_path"] and err["found_path"].endswith("6001.pdf")
-    assert (watch / "79906-114-6001.pdf").exists()  # never consumed
-    # round-8 verdict ask #6: after an exhausted-retry ERROR the dest dir
-    # must hold NO orphan partial file of any name
-    assert not dest.exists() or os.listdir(dest) == []
 
 
 def test_move_idempotent(tmp_path):
     src = tmp_path / "a.pdf"
     src.write_bytes(b"x")
     dest = tmp_path / "out"
-    got = W.move_file_idempotent(str(src), str(dest))
+    got = S.move_file_idempotent(str(src), str(dest))
     assert got and os.path.exists(got) and not src.exists()
     # replay with same name: keeps existing, reports dest
     src2 = tmp_path / "a.pdf"
     src2.write_bytes(b"different")
-    got2 = W.move_file_idempotent(str(src2), str(dest))
+    got2 = S.move_file_idempotent(str(src2), str(dest))
     assert got2 == got and open(got2, "rb").read() == b"x"
 
 
@@ -716,8 +610,6 @@ def test_orchestrate_tick_wall_clock_soak(spark, tmp_path):
     second PO never arrives (deadline -> ERROR exactly once). The whole
     soak completes in a few seconds."""
     import threading
-
-    from etl_jetro_spark.streaming import snapshot as S
 
     watch = tmp_path / "w"
     dest = tmp_path / "d"
