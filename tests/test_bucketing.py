@@ -1,50 +1,16 @@
-"""Bucketed co-located join: the shuffle disappears from the plan."""
+"""Physical-plan tests for the scale-out join and scan paths: partition
+pruning, shuffle reuse in the shingle self-join, AQE skew splitting in a
+fact-fact sort-merge join, and runtime bloom-filter injection."""
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
 
-from etl_jetro_spark.plans.bucketing import (
-    bucketed_join,
-    join_shuffle_count,
-    write_bucketed,
-)
-
-
-def test_bucketed_join_is_shuffle_free(spark, sf_dir, tmp_path):
-    # warehouse.dir is a static conf; tables land in ./spark-warehouse
-    # (gitignored) and are dropped at the end
-    spark.conf.set("spark.sql.sources.bucketing.enabled", "true")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")  # force SMJ path
-
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    write_bucketed(li.select("l_orderkey", "l_quantity").withColumnRenamed("l_orderkey", "o_orderkey"),
-                   "li_b", "o_orderkey", 8, sort_by="o_orderkey")
-    write_bucketed(o.select("o_orderkey", "o_totalprice"), "o_b", "o_orderkey", 8,
-                   sort_by="o_orderkey")
-
-    joined = bucketed_join(spark, "li_b", "o_b", "o_orderkey")
-    n_rows = joined.count()
-    assert n_rows == li.count()  # every lineitem has its order
-
-    # co-located: zero Exchange nodes in the join plan
-    assert join_shuffle_count(joined) == 0
-
-    # the unbucketed equivalent of the same join needs shuffles
-    plain = li.withColumnRenamed("l_orderkey", "o_orderkey").join(o, "o_orderkey")
-    assert join_shuffle_count(plain) >= 1
-
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-    spark.sql("DROP TABLE IF EXISTS li_b")
-    spark.sql("DROP TABLE IF EXISTS o_b")
-
 
 def test_partitioned_layout_prunes(spark, sf_dir, tmp_path):
     """Hive-partitioned fact layout: a filter on the partition column
     reaches the scan as a PartitionFilter, so only matching directories
-    are read — the data-skipping half of the 100 TB story (bucketing
-    co-locates joins; partitioning prunes scans)."""
+    are read."""
     from etl_jetro_spark.plans.queries import load_events
 
     e = load_events(spark, sf_dir).select("event_id", "ts", "user_id", "event_type")
@@ -92,11 +58,11 @@ def test_ngram_selfjoin_reuses_shuffle_at_smj_scale(spark):
 
 
 def test_aqe_skew_join_splits_hot_partition(spark):
-    """SCALE.md claims unbucketed fact-fact joins fall back to SMJ with
-    AQE splitting skewed partitions — proved here like the bucketing
-    plan test: one hot key carries ~90% of the left side, and the
-    EXECUTED final adaptive plan must mark the join skew=true (the hot
-    partition was split across tasks instead of landing on one)."""
+    """SCALE.md claims fact-fact joins run as SMJ with AQE splitting
+    skewed partitions — proved here on the plan: one hot key carries
+    ~90% of the left side, and the EXECUTED final adaptive plan must mark
+    the join skew=true (the hot partition was split across tasks instead
+    of landing on one)."""
     confs = {
         "spark.sql.adaptive.enabled": "true",  # a prior small-SF load() turns it off
         "spark.sql.autoBroadcastJoinThreshold": "-1",
@@ -133,8 +99,8 @@ def test_aqe_skew_join_splits_hot_partition(spark):
 
 def test_runtime_bloom_filter_injected_for_selective_join(spark):
     """Spark injects a runtime bloom filter on the fact side of a
-    selective fact-dim join (the shuffle-reduction path when neither
-    bucketing nor broadcast applies): with thresholds lowered, the
+    selective fact-dim join (the shuffle-reduction path when broadcast
+    does not apply): with thresholds lowered, the
     optimized plan must contain bloom_filter_agg + might_contain."""
     confs = {
         "spark.sql.adaptive.enabled": "true",

@@ -1023,50 +1023,6 @@ def test_weighted_hash_sample_threshold_rounds_not_truncates(spark):
         assert r["doc_id"] in got
 
 
-def test_compact_state_inplace_swaps_safely(tmp_path, spark):
-    """compact_state materializes before returning (write-back can't
-    corrupt the files the plan reads); compact_state_inplace folds the
-    partials into a single epoch-0 partition with identical totals."""
-    from etl_jetro_spark.streaming.incremental import (
-        compact_state,
-        compact_state_inplace,
-        read_incremental_agg,
-    )
-
-    state = str(tmp_path / "state")
-    for batch, rows in enumerate([[("a", 1.0), ("b", 2.0)], [("a", 3.0)]]):
-        df = spark.createDataFrame(rows, ["event_type", "value"])
-        (
-            df.groupBy("event_type")
-            .agg(F.sum("value").alias("psum"), F.count("value").alias("pcnt"))
-            .withColumn("_batch", F.lit(batch))
-            .write.mode("append")
-            .partitionBy("_batch")
-            .parquet(state)
-        )
-    before = {
-        r["event_type"]: (r["psum"], r["pcnt"])
-        for r in read_incremental_agg(spark, state).collect()
-    }
-    merged = compact_state(spark, state)
-    # the returned frame must survive state_dir being overwritten
-    import shutil
-
-    compact_state_inplace(spark, state)
-    after = {
-        r["event_type"]: (r["psum"], r["pcnt"])
-        for r in read_incremental_agg(spark, state).collect()
-    }
-    assert after == before == {"a": (4.0, 2), "b": (2.0, 1)}
-    # exactly one _batch partition remains
-    batches = {r["_batch"] for r in spark.read.parquet(state).select("_batch").collect()}
-    assert batches == {0}
-    # and the pre-swap materialized frame still reads correctly
-    still = {r["event_type"]: (r["psum"], r["pcnt"]) for r in merged.collect()}
-    assert still == before
-    shutil.rmtree(state, ignore_errors=True)
-
-
 @pytest.mark.slow
 def test_star_cc_path_graph_converges_sublinearly(spark):
     """10^4-node path graph: diameter 9999 would need ~10^4 min-propagation

@@ -1,9 +1,6 @@
-"""Tests for snapshot reconciliation (table/schema diff) and physical
-layout management (compaction, clustered export)."""
+"""Tests for snapshot reconciliation (table/schema diff)."""
 
 from __future__ import annotations
-
-import os
 
 import pyspark.sql.functions as F
 
@@ -11,11 +8,6 @@ from etl_jetro_spark.operators.reconcile import (
     diff_summary,
     schema_diff,
     table_diff,
-)
-from etl_jetro_spark.sinks.layout import (
-    compact_parquet,
-    plan_target_files,
-    write_clustered,
 )
 
 
@@ -68,49 +60,3 @@ def test_schema_diff_detects_drift(spark):
     assert by_col["s"]["drift"] == "removed"
     assert by_col["v"]["drift"] == "type_changed"
     assert by_col["v"]["type"] == "double->int"
-
-
-def test_plan_target_files():
-    mb = 1024 * 1024
-    assert plan_target_files(0) == 1
-    assert plan_target_files(256 * mb, 256) == 1
-    assert plan_target_files(257 * mb, 256) == 2
-    assert plan_target_files(10 * 256 * mb, 256) == 10
-
-
-def test_compact_parquet_reduces_file_count(spark, tmp_path):
-    src, dest = str(tmp_path / "src"), str(tmp_path / "dest")
-    df = spark.range(10_000).withColumn("v", F.col("id") * 2)
-    df.repartition(40).write.parquet(src)
-    n_src = len([f for f in os.listdir(src) if f.endswith(".parquet")])
-    assert n_src == 40
-    compact_parquet(spark, src, dest, target_mb=256)
-    n_dest = len([f for f in os.listdir(dest) if f.endswith(".parquet")])
-    assert n_dest == 1  # tiny dataset → single target file
-    assert (
-        sorted(r.id for r in spark.read.parquet(dest).collect())
-        == list(range(10_000))
-    )
-
-
-def test_write_clustered_partitions_and_orders(spark, tmp_path):
-    dest = str(tmp_path / "clustered")
-    df = spark.createDataFrame(
-        [(d % 3, i, float(i % 17)) for i, d in enumerate(range(300))],
-        "part INT, id INT, v DOUBLE",
-    )
-    write_clustered(df, dest, ["part"], ["v"])
-    # hive layout with one file per partition
-    parts = [p for p in os.listdir(dest) if p.startswith("part=")]
-    assert sorted(parts) == ["part=0", "part=1", "part=2"]
-    for p in parts:
-        files = [f for f in os.listdir(os.path.join(dest, p))
-                 if f.endswith(".parquet")]
-        assert len(files) == 1
-        # within-file clustering: rows sorted by v
-        pdf = spark.read.parquet(os.path.join(dest, p)).toPandas()
-        assert list(pdf["v"]) == sorted(pdf["v"])
-    # partition pruning reaches the scan
-    pruned = spark.read.parquet(dest).filter(F.col("part") == 1)
-    plan = pruned._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [isnotnull(part" in plan

@@ -486,51 +486,3 @@ def test_sheets_client_url_encodes_tab():
     http = FakeHttp([(200, {"values": [["x"]]})])
     SheetsClient("s", http).get_all_values("Tues 8/12")
     assert http.calls[0]["url"].endswith("/values/Tues%208%2F12")
-
-
-def test_jsonl_corpus_roundtrip(spark, tmp_path):
-    """JSONL ingest: schema enforced, deterministic fingerprint ids, corrupt
-    lines quarantined not dropped; partitioned write prunes at the scan."""
-    import json
-
-    from etl_jetro_spark.sources.corpus import (
-        corrupt_jsonl_lines,
-        read_jsonl_corpus,
-        write_partitioned_corpus,
-    )
-
-    src = tmp_path / "corpus"
-    src.mkdir()
-    docs = [
-        {"text": "hello world one", "lang": "en", "source": "web"},
-        {"text": "bonjour le monde", "lang": "fr", "source": "web"},
-        {"text": "hello world one", "lang": "en", "source": "crawl"},  # same text
-    ]
-    with open(src / "part0.jsonl", "w") as f:
-        for d in docs:
-            f.write(json.dumps(d) + "\n")
-        f.write("{not valid json\n")
-
-    d = read_jsonl_corpus(spark, str(src))
-    rows_ = d.collect()
-    assert len(rows_) == 3 and set(d.columns) == {"doc_id", "text", "lang", "source"}
-    ids = {r.text: r.doc_id for r in rows_}
-    # identical text -> identical deterministic id (fingerprint-derived)
-    assert len({r.doc_id for r in rows_}) == 2
-    d2 = read_jsonl_corpus(spark, str(src)).collect()
-    assert {r.doc_id for r in d2} == {r.doc_id for r in rows_}  # stable re-read
-
-    bad = corrupt_jsonl_lines(spark, str(src)).collect()
-    assert len(bad) == 1 and "not valid" in bad[0]._corrupt_record
-
-    out = tmp_path / "laid"
-    write_partitioned_corpus(d, str(out), partition_cols=("lang",))
-    back = spark.read.parquet(str(out))
-    assert back.count() == 3
-    plan = (
-        back.filter(F.col("lang") == "en")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "PartitionFilters: [isnotnull(lang" in plan  # pruning reaches the scan

@@ -9,7 +9,6 @@ import random
 import time
 
 import pytest
-from pyspark.sql import functions as F
 
 from etl_jetro_spark.sources.sheet import parse_sections, to_a1
 from etl_jetro_spark.streaming import orchestrator as orch
@@ -262,57 +261,7 @@ def test_expected_pos_order_preserving_distinct():
     assert orch.expected_pos_for_vendor(stores) == ["88101", "88102"]
 
 
-def test_hourly_rollup_stream_matches_batch(spark, tmp_path):
-    """The streaming windowed agg (watermark, append mode) agrees with the
-    batch q26 rollup on the same closed windows."""
-    from etl_jetro_spark.plans.queries import QUERIES
-    from etl_jetro_spark.streaming.windows import run_hourly_rollup
-
-    sf = "/root/testdata/sf0.001"
-    q = run_hourly_rollup(spark, sf, str(tmp_path / "ck"))
-    q.awaitTermination(120)
-    got = {
-        (int(r["window_start"].timestamp()), r["event_type"]): (r["n"], r["sum_value"])
-        for r in spark.sql("SELECT * FROM hourly_rollup").collect()
-    }
-    batch = {
-        (r["hour_epoch"], r["event_type"]): (r["n"], r["sum_value"])
-        for r in QUERIES["q26_events_hourly"](spark, sf).collect()
-    }
-    # append mode withholds windows the watermark hasn't passed; everything
-    # emitted must match the batch rollup exactly
-    assert 0 < len(got) <= len(batch)
-    for k, v in got.items():
-        assert batch[k][0] == v[0] and abs(batch[k][1] - v[1]) < 1e-6
-
-
-def test_session_windows_stream_matches_batch(spark, tmp_path):
-    """Streaming session windows (native session_window, 30-min gap) agree
-    with the batch q44 lag→flag→running-sum sessionization on emitted
-    (closed) sessions: same per-user session event-count multisets."""
-    from etl_jetro_spark.plans.queries import QUERIES
-    from etl_jetro_spark.streaming.windows import run_session_rollup
-
-    sf = "/root/testdata/sf0.001"
-    q = run_session_rollup(spark, sf, str(tmp_path / "ck"))
-    q.awaitTermination(120)
-    rows = spark.sql("SELECT * FROM session_rollup").collect()
-    assert rows  # the watermark passed at least some sessions
-    got_sessions = {}
-    for r in rows:
-        got_sessions.setdefault(r["user_id"], []).append(r["n_events"])
-    batch = {
-        r["user_id"]: (r["n_sessions"], r["max_session_events"])
-        for r in QUERIES["q44_sessionization"](spark, sf).collect()
-    }
-    for uid, counts in got_sessions.items():
-        n_sessions, max_events = batch[uid]
-        # append emits only closed sessions — a subset of the batch's
-        assert len(counts) <= n_sessions
-        assert max(counts) <= max_events
-
-
-def test_orchestrate_tick_through_sheets_transport(spark, tmp_path):
+def test_orchestrate_tick_through_sheets_transport(tmp_path):
     """The whole control loop against the REST adapter: fetch today's tab
     grid through the (fake) transport, run the tick, write both payloads
     back through batch_update — the reference main() shape end-to-end."""
@@ -344,7 +293,7 @@ def test_orchestrate_tick_through_sheets_transport(spark, tmp_path):
 
     tab = client.pick_today_tab(date(2026, 1, 6))  # a Tuesday
     grid = client.get_all_values(tab)
-    m = orch.orchestrate_tick(spark, grid, [str(watch)], str(dest), deadline_polls=3)
+    m = orch.orchestrate_tick(None, grid, [str(watch)], str(dest), deadline_polls=3)
     client.batch_update(m["lock"])
     client.batch_update(m["final"])
     finals = {p["range"]: p["values"][0][0] for p in m["final"]}
@@ -354,7 +303,7 @@ def test_orchestrate_tick_through_sheets_transport(spark, tmp_path):
     assert posted[1]["json"]["data"] == m["final"]
 
 
-def test_orchestrate_tick_full_loop(spark, tmp_path):
+def test_orchestrate_tick_full_loop(tmp_path):
     """The whole sheet_bot tick: parse -> lock -> watch -> finalize."""
     watch = tmp_path / "w"
     dest = tmp_path / "d"
@@ -366,7 +315,7 @@ def test_orchestrate_tick_full_loop(spark, tmp_path):
     (dest / "44602-86-88104.pdf").write_bytes(b"y")
 
     m = orch.orchestrate_tick(
-        spark, CONTROL_GRID, [str(watch)], str(dest), deadline_polls=3
+        None, CONTROL_GRID, [str(watch)], str(dest), deadline_polls=3
     )
     assert m["lock"] == [
         {"range": "E7", "values": [["SENDING"]]},
@@ -450,160 +399,7 @@ def test_tick_outputs_unchanged(case, tmp_path):
     assert set(m["errors"]) == {p["range"] for p in m["final"] if p["values"] == [["ERROR"]]}
 
 
-def test_streaming_dedup_within_watermark(spark, tmp_path):
-    """dropDuplicatesWithinWatermark drops re-delivered event_ids: feed the
-    events file TWICE (two files, same rows — at-least-once redelivery);
-    the deduped stream must emit each event_id once."""
-    import shutil
-
-    from etl_jetro_spark.streaming.windows import run_deduped_count
-
-    src = tmp_path / "src"
-    src.mkdir()
-    shutil.copy("/root/testdata/sf0.001/events.parquet", src / "a.parquet")
-    shutil.copy("/root/testdata/sf0.001/events.parquet", src / "b.parquet")
-    q = run_deduped_count(
-        spark, str(src), str(tmp_path / "ck"), queryName="dedup_t", glob="*.parquet"
-    )
-    q.awaitTermination(120)
-    got = spark.sql("SELECT event_id, count(*) AS c FROM dedup_t GROUP BY event_id")
-    n_events = spark.read.parquet("/root/testdata/sf0.001/events.parquet").count()
-    assert got.count() == n_events                      # every id present once
-    assert got.filter("c > 1").count() == 0             # no duplicates emitted
-
-
-def test_stream_stream_interval_join_matches_batch(spark, tmp_path):
-    """The watermarked stream-stream click→purchase join emits exactly the
-    pairs the equivalent batch join produces (availableNow lets every
-    watermark advance past the data, so no pair is withheld)."""
-    from etl_jetro_spark.streaming.windows import run_attribution_join
-
-    sf = "/root/testdata/sf0.001"
-    q = run_attribution_join(spark, sf, str(tmp_path / "ck"), queryName="attr_t")
-    q.awaitTermination(120)
-    got = {
-        (r["l_event"], r["r_event"])
-        for r in spark.sql("SELECT * FROM attr_t").collect()
-    }
-
-    from etl_jetro_spark.plans.queries import load_events
-
-    e = load_events(spark, sf)
-    c = e.filter(F.col("event_type") == "click").select(
-        F.col("user_id").alias("u"), F.col("event_id").alias("ce"), F.col("ts_utc").alias("ct")
-    )
-    p = e.filter(F.col("event_type") == "purchase").select(
-        F.col("user_id").alias("pu"), F.col("event_id").alias("pe"), F.col("ts_utc").alias("pt")
-    )
-    batch = {
-        (r["ce"], r["pe"])
-        for r in c.join(
-            p,
-            (F.col("u") == F.col("pu"))
-            & (F.col("ct") <= F.col("pt"))
-            & (F.col("pt") <= F.col("ct") + F.expr("INTERVAL 1 hour")),
-        ).collect()
-    }
-    assert batch, "fixture must produce at least one attribution pair"
-    assert got == batch
-
-
-def test_incremental_agg_stream_matches_batch(spark, tmp_path):
-    """The streaming partial-merge view equals the batch aggregate after
-    each ingest: one file, then a second (same rows — counts double)."""
-    import shutil
-
-    from etl_jetro_spark.plans.queries import load_events
-    from etl_jetro_spark.streaming.incremental import (
-        read_incremental_agg,
-        run_incremental_agg,
-    )
-
-    src = tmp_path / "src"
-    src.mkdir()
-    state, ck = str(tmp_path / "state"), str(tmp_path / "ck")
-    shutil.copy("/root/testdata/sf0.001/events.parquet", src / "a.parquet")
-    run_incremental_agg(spark, str(src), state, ck).awaitTermination(120)
-
-    batch = {
-        r["event_type"]: (r["pcnt"], r["psum"])
-        for r in load_events(spark, "/root/testdata/sf0.001")
-        .groupBy("event_type")
-        .agg(F.sum("value").alias("psum"), F.count("value").alias("pcnt"))
-        .collect()
-    }
-    got1 = {
-        r["event_type"]: (r["pcnt"], r["psum"])
-        for r in read_incremental_agg(spark, state).collect()
-    }
-    assert got1.keys() == batch.keys()
-    for k, (n, s) in batch.items():
-        assert got1[k][0] == n and abs(got1[k][1] - s) < 1e-6
-
-    # second delta: same rows again -> every partial doubles, and the
-    # second epoch lands in its own _batch partition (idempotency unit)
-    shutil.copy("/root/testdata/sf0.001/events.parquet", src / "b.parquet")
-    run_incremental_agg(spark, str(src), state, ck).awaitTermination(120)
-    got2 = {
-        r["event_type"]: (r["pcnt"], r["psum"])
-        for r in read_incremental_agg(spark, state).collect()
-    }
-    for k, (n, s) in batch.items():
-        assert got2[k][0] == 2 * n and abs(got2[k][1] - 2 * s) < 1e-5
-    batches = spark.read.parquet(state).select("_batch").distinct().count()
-    assert batches == 2
-
-
-def test_running_totals_processor_logic(spark, tmp_path):
-    """transformWithStateInPandas running-totals processor: the
-    accumulate semantics run live against a fake state handle (the
-    protobuf state server is gated in this env — HAS_PROTOBUF; the
-    gated wiring raises a clear NotImplementedError)."""
-    import pandas as pd
-    import pytest as _pytest
-
-    from etl_jetro_spark.streaming import stateful as S
-
-    class FakeState:
-        def __init__(self):
-            self.v = None
-
-        def exists(self):
-            return self.v is not None
-
-        def get(self):
-            return self.v
-
-        def update(self, v):
-            self.v = v
-
-    class FakeHandle:
-        def getValueState(self, name, schema, ttlDurationMs=None):
-            return FakeState()
-
-    p = S.RunningTotals("value")
-    p.init(FakeHandle())
-    out1 = list(
-        p.handleInputRows(
-            (7,), iter([pd.DataFrame({"value": [2.0, 3.0]})]), None
-        )
-    )[0]
-    assert out1.iloc[0].tolist() == [7, 5.0, 2]
-    # second micro-batch accumulates onto persisted state
-    out2 = list(
-        p.handleInputRows((7,), iter([pd.DataFrame({"value": [5.0]})]), None)
-    )[0]
-    assert out2.iloc[0].tolist() == [7, 10.0, 3]
-
-    # when NO protobuf runtime exists anywhere (pip or vendored), the
-    # wiring must refuse with a clear error; the live end-to-end path is
-    # covered by test_transform_with_state_live_matches_batch
-    if not S.ensure_protobuf():
-        with _pytest.raises(NotImplementedError):
-            S.run_running_totals(spark, str(tmp_path), str(tmp_path / "ck"))
-
-
-def test_orchestrate_tick_wall_clock_soak(spark, tmp_path):
+def test_orchestrate_tick_wall_clock_soak(tmp_path):
     """T1 cadence + T4 timeout together under REAL wall-clock triggers:
     the poll loop sleeps a 0.4 s cadence while a background thread drops
     one expected PDF mid-watch (arrive -> settle -> done -> moved) and a
@@ -636,7 +432,7 @@ def test_orchestrate_tick_wall_clock_soak(spark, tmp_path):
 
     t0 = time.time()
     m = orch.orchestrate_tick(
-        spark,
+        None,
         CONTROL_GRID,
         [str(watch)],
         str(dest),
@@ -658,629 +454,3 @@ def test_orchestrate_tick_wall_clock_soak(spark, tmp_path):
     # exactly-once ERROR in the status map (dict by construction, and the
     # error set is only the never-arrived PO)
     assert [po for po, s in m["po_status"].items() if s == "error"] == ["88102"]
-
-
-def test_stateful_running_totals_live_matches_batch(spark, tmp_path):
-    """Arbitrary per-key state executed LIVE end-to-end (GroupState /
-    applyInPandasWithState — the protobuf-free twin of the
-    transformWithState processor): running (sum, count) per user over the
-    real events stream must equal the batch aggregate. Update mode emits
-    per micro-batch; pcnt is monotone, so each key's final row is its
-    max-pcnt emission."""
-    import shutil
-
-    from etl_jetro_spark.streaming.stateful import run_running_totals_gks
-
-    src = tmp_path / "src"
-    src.mkdir()
-    shutil.copy("/root/testdata/sf0.001/events.parquet", src / "a.parquet")
-
-    q = run_running_totals_gks(
-        spark, str(src), str(tmp_path / "ck"), queryName="rt_gks", glob="*.parquet"
-    )
-    q.awaitTermination(120)
-
-    got = {
-        r["user_id"]: (round(r["psum"], 6), r["pcnt"])
-        for r in spark.sql(
-            """
-            SELECT user_id, psum, pcnt FROM (
-              SELECT *, row_number() OVER (
-                PARTITION BY user_id ORDER BY pcnt DESC) AS rn
-              FROM rt_gks) WHERE rn = 1
-            """
-        ).collect()
-    }
-    ev = spark.read.parquet(str(src / "a.parquet"))
-    want = {
-        r["user_id"]: (round(r["s"], 6), r["c"])
-        for r in ev.groupBy("user_id")
-        .agg(F.sum("value").alias("s"), F.count("value").alias("c"))
-        .collect()
-    }
-    assert got == want
-
-
-def test_stream_stream_left_outer_join_emits_unmatched(spark, tmp_path):
-    """leftOuter attribution: a click with no purchase in its horizon
-    emits ONCE, null-padded, after the watermark passes its window — the
-    second availableNow run (with a watermark-pushing later file) is
-    what surfaces the outer rows; the inner pairs still match batch."""
-    import datetime as dt
-
-    from etl_jetro_spark.streaming.windows import run_attribution_join
-
-    src = tmp_path / "src"
-    src.mkdir()
-    base = dt.datetime(2026, 1, 1, 12, 0, 0)
-
-    def ev(eid, minutes, uid, typ):
-        return (eid, base + dt.timedelta(minutes=minutes), uid, typ, 1.0, "{}")
-
-    cols = ["event_id", "ts", "user_id", "event_type", "value", "props"]
-    first = spark.createDataFrame(
-        [
-            ev(1, 0, 10, "click"),      # matched by purchase 3
-            ev(2, 5, 20, "click"),      # never matched -> outer row
-            ev(3, 30, 10, "purchase"),
-            ev(4, 40, 30, "purchase"),  # purchase with no click (dropped: left outer)
-        ],
-        cols,
-    )
-    def ship(df, name):
-        # the file-stream source globs files directly under src, so stage
-        # the single part file and move it in as <name>.parquet
-        import glob as _glob
-        import shutil
-
-        stage = tmp_path / f"stage_{name}"
-        df.coalesce(1).write.mode("overwrite").parquet(str(stage))
-        part = _glob.glob(str(stage / "part-*.parquet"))[0]
-        shutil.copy(part, src / f"{name}.parquet")
-
-    ship(first, "a")
-    ck = str(tmp_path / "ck")
-    out_dir = str(tmp_path / "out")
-
-    # parquet sink: unlike the memory sink it RESUMES from the checkpoint,
-    # which the second drain needs to keep the join state
-    from etl_jetro_spark.streaming.windows import correlated_stream_join, events_stream
-
-    def drain():
-        ev_s = events_stream(spark, str(src), "*.parquet")
-        j = correlated_stream_join(ev_s, ev_s, how="leftOuter")
-        q = (
-            j.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ck)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-
-    drain()
-    # push the watermark far past every click's horizon, then drain again
-    # BOTH event types must advance: each side carries its own watermark
-    # node and the global watermark is their MINIMUM — later clicks alone
-    # leave the purchase side (and thus outer-emission) held back
-    later = spark.createDataFrame(
-        [ev(99, 60 * 24, 99, "click"), ev(98, 60 * 24, 99, "purchase")], cols
-    )
-    ship(later, "b")
-    drain()
-    # outer rows flush on the batch AFTER the watermark advance — one more
-    # file + drain triggers the state-eviction emit
-    ship(
-        spark.createDataFrame(
-            [ev(100, 60 * 25, 99, "click"), ev(101, 60 * 25, 99, "purchase")], cols
-        ),
-        "c",
-    )
-    drain()
-
-    rows = spark.read.parquet(out_dir).collect()
-    inner = {(r["l_event"], r["r_event"]) for r in rows if r["r_event"] is not None}
-    outer = {r["l_event"] for r in rows if r["r_event"] is None}
-    # core fixture: click 1 attributes to purchase 3; click 2 never does
-    # (watermark-pusher events pair among themselves — ignore those)
-    assert (1, 3) in inner
-    assert not any(a == 2 for (a, _) in inner)
-    assert 2 in outer, f"unmatched click must emit null-padded: {rows}"
-    assert 4 not in {r["r_event"] for r in rows if r["l_event"] is None}, (
-        "leftOuter must not emit right-side-only rows"
-    )
-    # the outer row for click 2 appears exactly once across both drains
-    assert sum(1 for r in rows if r["l_event"] == 2 and r["r_event"] is None) == 1
-
-
-def test_transform_with_state_live_matches_batch(tmp_path):
-    """transformWithStateInPandas executed LIVE end-to-end on the RocksDB
-    state store provider — the stream≡batch parity its
-    applyInPandasWithState twin has. Runs in a SUBPROCESS because
-    ensure_protobuf() must export PYTHONPATH / the protobuf version-skew
-    opt-out BEFORE the JVM starts (executor Python workers inherit the
-    JVM's environment, and the state server runs inside them). Skips only
-    when no protobuf runtime (pip or vendored) exists on this host."""
-    import json
-    import subprocess
-    import sys
-
-    from etl_jetro_spark.streaming.stateful import ensure_protobuf
-
-    if not ensure_protobuf():
-        pytest.skip("no protobuf runtime (pip or vendored) on this host")
-
-    script = r"""
-import json, os, shutil, sys
-sys.path.insert(0, "/root/repo")
-from etl_jetro_spark.streaming.stateful import ensure_protobuf
-assert ensure_protobuf()
-os.environ["SPARK_GRAFT_CPUS"] = "4"
-from etl_jetro_spark.session import get_spark
-from pyspark.sql import functions as F
-spark = get_spark(app_name="tws-live", shuffle_partitions=4)
-tmp = sys.argv[1]
-src = os.path.join(tmp, "src"); os.makedirs(src, exist_ok=True)
-shutil.copy("/root/testdata/sf0.001/events.parquet", os.path.join(src, "a.parquet"))
-from etl_jetro_spark.streaming.stateful import run_running_totals
-q = run_running_totals(spark, src, os.path.join(tmp, "ck"), queryName="rt_tws")
-q.awaitTermination(180)
-got = {
-    r["user_id"]: (round(r["psum"], 6), r["pcnt"])
-    for r in spark.sql(
-        "SELECT user_id, psum, pcnt FROM (SELECT *, row_number() OVER ("
-        "PARTITION BY user_id ORDER BY pcnt DESC) rn FROM rt_tws) WHERE rn = 1"
-    ).collect()
-}
-ev = spark.read.parquet(os.path.join(src, "a.parquet"))
-want = {
-    r["user_id"]: (round(r["s"], 6), r["c"])
-    for r in ev.groupBy("user_id")
-    .agg(F.sum("value").alias("s"), F.count("value").alias("c"))
-    .collect()
-}
-assert got == want, (got, want)
-print("TWS_PARITY_OK", json.dumps({"keys": len(got)}))
-spark.stop()
-"""
-    r = subprocess.run(
-        [sys.executable, "-c", script, str(tmp_path)],
-        capture_output=True,
-        text=True,
-        timeout=400,
-    )
-    assert r.returncode == 0, r.stdout[-2000:] + r.stderr[-2000:]
-    assert "TWS_PARITY_OK" in r.stdout
-    assert json.loads(r.stdout.split("TWS_PARITY_OK ")[1].splitlines()[0])["keys"] == 15
-
-
-def test_transform_with_state_mapstate_live(tmp_path):
-    """MapState (the second typed-state handle family) executed LIVE on
-    transformWithStateInPandas + RocksDB: per-user per-event-type counts
-    must equal the batch (countDistinct, count) aggregate. Subprocess for
-    the same env-before-JVM reason as the ValueState twin."""
-    import subprocess
-    import sys
-
-    from etl_jetro_spark.streaming.stateful import ensure_protobuf
-
-    if not ensure_protobuf():
-        pytest.skip("no protobuf runtime (pip or vendored) on this host")
-
-    script = r"""
-import os, shutil, sys
-sys.path.insert(0, "/root/repo")
-from etl_jetro_spark.streaming.stateful import ensure_protobuf
-assert ensure_protobuf()
-os.environ["SPARK_GRAFT_CPUS"] = "4"
-from etl_jetro_spark.session import get_spark
-from pyspark.sql import functions as F
-spark = get_spark(app_name="tws-map-test", shuffle_partitions=4)
-tmp = sys.argv[1]
-src = os.path.join(tmp, "src"); os.makedirs(src, exist_ok=True)
-shutil.copy("/root/testdata/sf0.001/events.parquet", os.path.join(src, "a.parquet"))
-from etl_jetro_spark.streaming.stateful import run_type_counts
-q = run_type_counts(spark, src, os.path.join(tmp, "ck"))
-q.awaitTermination(180)
-got = {r["user_id"]: (r["n_types"], r["total"]) for r in spark.sql(
-    "SELECT user_id, n_types, total FROM (SELECT *, row_number() OVER ("
-    "PARTITION BY user_id ORDER BY total DESC) rn FROM type_counts) WHERE rn=1"
-).collect()}
-ev = spark.read.parquet(os.path.join(src, "a.parquet"))
-want = {r["user_id"]: (r["n"], r["c"]) for r in ev.groupBy("user_id").agg(
-    F.countDistinct("event_type").alias("n"), F.count("event_type").alias("c")
-).collect()}
-assert got == want, (got, want)
-print("TWS_MAP_OK", len(got))
-spark.stop()
-"""
-    r = subprocess.run(
-        [sys.executable, "-c", script, str(tmp_path)],
-        capture_output=True,
-        text=True,
-        timeout=400,
-    )
-    assert r.returncode == 0, r.stdout[-2000:] + r.stderr[-2000:]
-    assert "TWS_MAP_OK 15" in r.stdout
-
-
-def test_transform_with_state_liststate_live(tmp_path):
-    """ListState executed LIVE (third typed-state family): with a buffer
-    larger than any key's stream the retained count/max must equal the
-    batch count/max (a small buffer's contents depend on arrival order —
-    valid semantics, but not a deterministic assertion)."""
-    import subprocess
-    import sys
-
-    from etl_jetro_spark.streaming.stateful import ensure_protobuf
-
-    if not ensure_protobuf():
-        pytest.skip("no protobuf runtime (pip or vendored) on this host")
-
-    script = r"""
-import os, shutil, sys
-sys.path.insert(0, "/root/repo")
-from etl_jetro_spark.streaming.stateful import ensure_protobuf
-assert ensure_protobuf()
-os.environ["SPARK_GRAFT_CPUS"] = "4"
-from etl_jetro_spark.session import get_spark
-from pyspark.sql import functions as F
-spark = get_spark(app_name="tws-list-test", shuffle_partitions=4)
-tmp = sys.argv[1]
-src = os.path.join(tmp, "src"); os.makedirs(src, exist_ok=True)
-shutil.copy("/root/testdata/sf0.001/events.parquet", os.path.join(src, "a.parquet"))
-from etl_jetro_spark.streaming.stateful import run_recent_values
-q = run_recent_values(spark, src, os.path.join(tmp, "ck"), keep=100000)
-q.awaitTermination(180)
-got = {r["user_id"]: (r["n_kept"], round(r["recent_max"], 6)) for r in spark.sql(
-    "SELECT user_id, n_kept, recent_max FROM (SELECT *, row_number() OVER ("
-    "PARTITION BY user_id ORDER BY n_kept DESC) rn FROM recent_values) WHERE rn=1"
-).collect()}
-ev = spark.read.parquet(os.path.join(src, "a.parquet")).filter(F.col("value").isNotNull())
-want = {r["user_id"]: (r["n"], round(r["mx"], 6)) for r in ev.groupBy("user_id").agg(
-    F.count("value").alias("n"), F.max("value").alias("mx")).collect()}
-assert got == want, (got, want)
-print("TWS_LIST_OK", len(got))
-spark.stop()
-"""
-    r = subprocess.run(
-        [sys.executable, "-c", script, str(tmp_path)],
-        capture_output=True,
-        text=True,
-        timeout=400,
-    )
-    assert r.returncode == 0, r.stdout[-2000:] + r.stderr[-2000:]
-    assert "TWS_LIST_OK 15" in r.stdout
-
-
-def test_transform_with_state_timers_live(tmp_path):
-    """PROCESSING-TIME TIMERS executed LIVE — the scheduled-callback half
-    of the arbitrary-state API (round-4 verdict ask #5, the last typed-
-    state feature after Value/Map/List): keys from the first file
-    register flush timers; a second (key-disjoint) file arriving after
-    the deadline drives the next micro-batch, the expired timers fire,
-    and handleExpiredTimer emits flushed=true finals that must equal the
-    batch per-key counts. Subprocess for the env-before-JVM reason the
-    other live tests document."""
-    import subprocess
-    import sys
-
-    from etl_jetro_spark.streaming.stateful import ensure_protobuf
-
-    if not ensure_protobuf():
-        pytest.skip("no protobuf runtime (pip or vendored) on this host")
-
-    script = r"""
-import os, sys, time
-sys.path.insert(0, "/root/repo")
-from etl_jetro_spark.streaming.stateful import ensure_protobuf
-assert ensure_protobuf()
-os.environ["SPARK_GRAFT_CPUS"] = "4"
-from etl_jetro_spark.session import get_spark
-from pyspark.sql import functions as F
-spark = get_spark(app_name="tws-timer-test", shuffle_partitions=4)
-tmp = sys.argv[1]
-src = os.path.join(tmp, "src"); os.makedirs(src, exist_ok=True)
-ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-SPLIT = 8
-a = ev.filter(F.col("user_id") < SPLIT)
-b = ev.filter(F.col("user_id") >= SPLIT)
-# write via temp dirs, move single files into the watched dir atomically
-for name, df in (("a", a), ("b", b)):
-    d = os.path.join(tmp, f"stage_{name}")
-    df.coalesce(1).write.mode("overwrite").parquet(d)
-    part = [f for f in os.listdir(d) if f.endswith(".parquet")][0]
-    os.rename(os.path.join(d, part), os.path.join(tmp, f"{name}.parquet"))
-os.rename(os.path.join(tmp, "a.parquet"), os.path.join(src, "a.parquet"))
-from etl_jetro_spark.streaming.stateful import run_timed_flush
-q = run_timed_flush(spark, src, os.path.join(tmp, "ck"), delay_ms=1000)
-def table():
-    return spark.sql(
-        "SELECT user_id, pcnt, flushed FROM timed_flush").collect()
-# wait until batch A's running (non-flushed) rows appear
-deadline = time.time() + 120
-while time.time() < deadline:
-    if any(not r["flushed"] for r in table()):
-        break
-    time.sleep(0.5)
-else:
-    raise AssertionError("batch A never produced running rows")
-# let every A timer pass its deadline, then land file B to drive the
-# next micro-batch (file-source streams do not tick without new data)
-time.sleep(2.0)
-os.rename(os.path.join(tmp, "b.parquet"), os.path.join(src, "b.parquet"))
-want = {r["user_id"]: r["n"] for r in a.groupBy("user_id").agg(
-    F.count("value").alias("n")).collect()}
-deadline = time.time() + 120
-got = {}
-while time.time() < deadline:
-    got = {r["user_id"]: r["pcnt"] for r in table()
-           if r["flushed"] and r["user_id"] < SPLIT}
-    if set(got) >= set(want):
-        break
-    time.sleep(0.5)
-q.stop()
-assert got == want, (got, want)
-print("TWS_TIMER_OK", len(got))
-spark.stop()
-"""
-    r = subprocess.run(
-        [sys.executable, "-c", script, str(tmp_path)],
-        capture_output=True,
-        text=True,
-        timeout=500,
-    )
-    assert r.returncode == 0, r.stdout[-2000:] + r.stderr[-2000:]
-    assert "TWS_TIMER_OK" in r.stdout
-
-
-@pytest.mark.slow
-def test_transform_with_state_timer_reregister_live(tmp_path):
-    """Timer RE-REGISTRATION executed LIVE — the same keys appear in two
-    consecutive micro-batches within delay_ms, so the second batch finds
-    a pending timer and must delete + re-register it (ADVICE r5 high:
-    ``listTimers()`` yields plain ints, not tuples — the old tuple
-    unpacking raised TypeError and killed the query exactly here; the
-    key-disjoint timers test never reached this path). Asserts the query
-    survives batch B AND each key flushes exactly once with the combined
-    A+B count — one flush proves the A-timer was superseded, not fired."""
-    import subprocess
-    import sys
-
-    from etl_jetro_spark.streaming.stateful import ensure_protobuf
-
-    if not ensure_protobuf():
-        pytest.skip("no protobuf runtime (pip or vendored) on this host")
-
-    script = r"""
-import os, shutil, sys, time
-sys.path.insert(0, "/root/repo")
-from etl_jetro_spark.streaming.stateful import ensure_protobuf
-assert ensure_protobuf()
-os.environ["SPARK_GRAFT_CPUS"] = "4"
-from etl_jetro_spark.session import get_spark
-from pyspark.sql import functions as F
-spark = get_spark(app_name="tws-rereg-test", shuffle_partitions=4)
-tmp = sys.argv[1]
-src = os.path.join(tmp, "src"); os.makedirs(src, exist_ok=True)
-ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-a = ev.filter(F.col("user_id") < 8)
-d = os.path.join(tmp, "stage")
-a.coalesce(1).write.mode("overwrite").parquet(d)
-part = [f for f in os.listdir(d) if f.endswith(".parquet")][0]
-staged = os.path.join(d, part)
-shutil.copy(staged, os.path.join(tmp, "b.parquet"))
-os.rename(staged, os.path.join(src, "a.parquet"))
-from etl_jetro_spark.streaming.stateful import run_timed_flush
-DELAY = 15000
-q = run_timed_flush(spark, src, os.path.join(tmp, "ck"), delay_ms=DELAY)
-def table():
-    return spark.sql("SELECT user_id, pcnt, flushed FROM timed_flush").collect()
-deadline = time.time() + 120
-while time.time() < deadline:
-    if any(not r["flushed"] for r in table()):
-        break
-    time.sleep(0.25)
-else:
-    raise AssertionError("batch A never produced running rows")
-# land B IMMEDIATELY — well inside delay_ms, so every key's A-timer is
-# still pending when batch B calls handleInputRows (the re-register path)
-os.rename(os.path.join(tmp, "b.parquet"), os.path.join(src, "b.parquet"))
-want = {r["user_id"]: 2 * r["n"] for r in a.groupBy("user_id").agg(
-    F.count("value").alias("n")).collect()}
-deadline = time.time() + 180
-flushed = {}
-while time.time() < deadline:
-    if q.exception() is not None:
-        raise AssertionError("query died: %s" % q.exception())
-    rows = [r for r in table() if r["flushed"]]
-    flushed = {}
-    for r in rows:
-        flushed.setdefault(r["user_id"], []).append(r["pcnt"])
-    if set(flushed) >= set(want):
-        break
-    time.sleep(0.5)
-q.stop()
-# exactly one flush per key at the combined count: the A-timer was
-# deleted and superseded, never fired early
-assert {k: v for k, v in flushed.items()} == {k: [v] for k, v in want.items()}, (flushed, want)
-print("TWS_REREG_OK", len(flushed))
-spark.stop()
-"""
-    r = subprocess.run(
-        [sys.executable, "-c", script, str(tmp_path)],
-        capture_output=True,
-        text=True,
-        timeout=500,
-    )
-    assert r.returncode == 0, r.stdout[-2000:] + r.stderr[-2000:]
-    assert "TWS_REREG_OK" in r.stdout
-
-
-def test_transform_with_state_event_time_timers_live(tmp_path):
-    """EVENT-TIME timers + watermark interplay executed LIVE (round-5
-    verdict ask #5 — the one arbitrary-state dimension still untested):
-    keys from file A register timers at max(event_ts)+gap in EVENT time;
-    nothing fires while the wall clock runs because the watermark is
-    pinned at A's max event time. File B carries events ~400 days later
-    for DISJOINT keys — its only effect on A's keys is advancing the
-    query watermark past their deadlines, after which the next
-    (no-data) micro-batch fires the timers and the flushed counts must
-    equal file A's per-key batch counts."""
-    import subprocess
-    import sys
-
-    from etl_jetro_spark.streaming.stateful import ensure_protobuf
-
-    if not ensure_protobuf():
-        pytest.skip("no protobuf runtime (pip or vendored) on this host")
-
-    script = r"""
-import os, sys, time
-sys.path.insert(0, "/root/repo")
-from etl_jetro_spark.streaming.stateful import ensure_protobuf
-assert ensure_protobuf()
-os.environ["SPARK_GRAFT_CPUS"] = "4"
-from etl_jetro_spark.session import get_spark
-from pyspark.sql import functions as F
-spark = get_spark(app_name="tws-evt-timer-test", shuffle_partitions=4)
-tmp = sys.argv[1]
-src = os.path.join(tmp, "src"); os.makedirs(src, exist_ok=True)
-ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-SPLIT = 8
-a = ev.filter(F.col("user_id") < SPLIT)
-# B: disjoint keys, event time shifted far past every A deadline —
-# advances the watermark without touching A's state
-b = ev.filter(F.col("user_id") >= SPLIT).withColumn(
-    "ts", F.col("ts") + F.expr("INTERVAL 400 DAYS"))
-for name, df in (("a", a), ("b", b)):
-    d = os.path.join(tmp, f"stage_{name}")
-    df.coalesce(1).write.mode("overwrite").parquet(d)
-    part = [f for f in os.listdir(d) if f.endswith(".parquet")][0]
-    os.rename(os.path.join(d, part), os.path.join(tmp, f"{name}.parquet"))
-os.rename(os.path.join(tmp, "a.parquet"), os.path.join(src, "a.parquet"))
-from etl_jetro_spark.streaming.stateful import run_event_time_flush
-# 60 days of EVENT time: bigger than file A's ~30-day internal spread
-# (so no per-key deadline sits behind A's own watermark), unreachable
-# by wall clock, and far behind B's +400-day watermark push
-GAP_MS = 60 * 86_400_000
-q = run_event_time_flush(spark, src, os.path.join(tmp, "ck"), gap_ms=GAP_MS)
-def table():
-    return spark.sql(
-        "SELECT user_id, pcnt, flushed FROM event_time_flush").collect()
-deadline = time.time() + 120
-while time.time() < deadline:
-    if any(not r["flushed"] for r in table()):
-        break
-    time.sleep(0.25)
-else:
-    raise AssertionError("batch A never produced running rows")
-# give the wall clock a moment: event-time timers must NOT fire on
-# wall time alone (watermark is still at A's max event time)
-time.sleep(3.0)
-assert not any(r["flushed"] for r in table()), "fired without watermark advance"
-os.rename(os.path.join(tmp, "b.parquet"), os.path.join(src, "b.parquet"))
-want = {r["user_id"]: r["n"] for r in a.groupBy("user_id").agg(
-    F.count("value").alias("n")).collect()}
-deadline = time.time() + 180
-got = {}
-while time.time() < deadline:
-    if q.exception() is not None:
-        raise AssertionError("query died: %s" % q.exception())
-    got = {r["user_id"]: r["pcnt"] for r in table()
-           if r["flushed"] and r["user_id"] < SPLIT}
-    if set(got) >= set(want):
-        break
-    time.sleep(0.5)
-q.stop()
-assert got == want, (got, want)
-print("TWS_EVT_TIMER_OK", len(got))
-spark.stop()
-"""
-    r = subprocess.run(
-        [sys.executable, "-c", script, str(tmp_path)],
-        capture_output=True,
-        text=True,
-        timeout=500,
-    )
-    assert r.returncode == 0, r.stdout[-2000:] + r.stderr[-2000:]
-    assert "TWS_EVT_TIMER_OK" in r.stdout
-
-
-def test_transform_with_state_ttl_and_initial_state_live(tmp_path):
-    """TTL + batch-seeded initial state executed LIVE — the final two
-    arbitrary-state features after Value/Map/List/timers. Phase 1: the
-    first file's emitted counts must equal seed + batch count
-    (handleInitialState ran before the first micro-batch). Phase 2: a
-    second identical file lands after the TTL has expired every key, so
-    the emitted counts must equal the second file's count ALONE (seed
-    and phase-1 state evicted by RocksDB TTL), not the cumulative sum."""
-    import subprocess
-    import sys
-
-    from etl_jetro_spark.streaming.stateful import ensure_protobuf
-
-    if not ensure_protobuf():
-        pytest.skip("no protobuf runtime (pip or vendored) on this host")
-
-    script = r"""
-import os, shutil, sys, time
-sys.path.insert(0, "/root/repo")
-from etl_jetro_spark.streaming.stateful import ensure_protobuf
-assert ensure_protobuf()
-os.environ["SPARK_GRAFT_CPUS"] = "4"
-from etl_jetro_spark.session import get_spark
-from pyspark.sql import functions as F
-spark = get_spark(app_name="tws-ttl-test", shuffle_partitions=4)
-tmp = sys.argv[1]
-src = os.path.join(tmp, "src"); os.makedirs(src, exist_ok=True)
-shutil.copy("/root/testdata/sf0.001/events.parquet", os.path.join(tmp, "b.parquet"))
-shutil.copy("/root/testdata/sf0.001/events.parquet", os.path.join(src, "a.parquet"))
-ev = spark.read.parquet(os.path.join(src, "a.parquet"))
-per_key = {r["user_id"]: r["n"] for r in ev.groupBy("user_id").agg(
-    F.count("value").alias("n")).collect()}
-SEED = 1000
-initial = spark.createDataFrame(
-    [(u, SEED) for u in per_key], ["user_id", "seed"])
-from etl_jetro_spark.streaming.stateful import run_seeded_expiring_counts
-TTL = 1500
-q = run_seeded_expiring_counts(spark, src, os.path.join(tmp, "ck"),
-                               initial, ttl_ms=TTL)
-def rows():
-    return spark.sql("SELECT user_id, pcnt FROM seeded_counts").collect()
-deadline = time.time() + 120
-phase1 = {}
-while time.time() < deadline:
-    phase1 = {r["user_id"]: r["pcnt"] for r in rows()}
-    if len(phase1) == len(per_key):
-        break
-    time.sleep(0.5)
-want1 = {u: SEED + n for u, n in per_key.items()}
-assert phase1 == want1, ("phase1", phase1, want1)
-time.sleep((TTL / 1000.0) + 2.0)   # let every key's value state expire
-os.rename(os.path.join(tmp, "b.parquet"), os.path.join(src, "b.parquet"))
-deadline = time.time() + 120
-got2 = {}
-while time.time() < deadline:
-    # update-mode memory sink appends; newest rows are phase 2
-    all_rows = rows()
-    got2 = {}
-    for r in all_rows:
-        got2[r["user_id"]] = r["pcnt"]  # later rows overwrite per insertion order
-    if all(got2.get(u) == per_key[u] for u in per_key):
-        break
-    time.sleep(0.5)
-q.stop()
-assert got2 == per_key, ("phase2", got2, per_key)
-print("TWS_TTL_OK", len(got2))
-spark.stop()
-"""
-    r = subprocess.run(
-        [sys.executable, "-c", script, str(tmp_path)],
-        capture_output=True,
-        text=True,
-        timeout=500,
-    )
-    assert r.returncode == 0, r.stdout[-2000:] + r.stderr[-2000:]
-    assert "TWS_TTL_OK" in r.stdout
