@@ -1,13 +1,22 @@
-"""Engine scalar-function library (SURVEY §2.8) — pure Column expressions.
+"""Engine scalar-function library (SURVEY §2.8) — Catalyst expressions only.
 
-``register_sql_functions(spark)`` additionally exposes the core set to SQL
-(``SELECT item7(col) ...``) so spark.sql users get the same surface.
+The text, NA and date helpers (``text``, ``na``, ``dates``) are each
+defined once, as a SQL-text renderer ``<name>_sql(x)`` over the SQL text
+of the argument; the Column form ``<name>(col)`` takes a column name and
+is one ``F.expr`` of that text, so building a plan costs one Py4J round
+trip per helper, not one per ``F.*`` call. ``register_sql_functions(spark)``
+exposes the core set to SQL (``SELECT item7(col) ...``) with bodies
+rendered by the same renderers, so the SQL and Column forms cannot
+disagree. ``hashing`` and ``money`` serve the query catalog and are
+Column compositions.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
+from etl_jetro_spark.functions import na as _na
+from etl_jetro_spark.functions import text as _text
 from etl_jetro_spark.functions.dates import (  # noqa: F401
     default_edd,
     epoch_seconds_ntz,
@@ -71,39 +80,26 @@ from etl_jetro_spark.functions.text import (  # noqa: F401
     strip_dot_zero,
     strip_hidden,
 )
+from etl_jetro_spark.sqltext import ident
 
 # Declarative SQL UDFs (Spark ≥3.5 `CREATE TEMPORARY FUNCTION ... RETURN expr`)
 # — these compile to Catalyst expressions, NOT Python UDFs, so spark.sql users
 # get the same zero-overhead surface as the Column builders above.
-_SQL_FUNC_DEFS = {
-    "strip_dot_zero": (
-        "(s STRING) RETURNS STRING RETURN regexp_replace(s, '\\\\.0{1,2}$', '')"
-    ),
-    "item7": (
-        "(s STRING) RETURNS STRING RETURN "
-        "CASE WHEN regexp_replace(regexp_replace(s, '\\\\.0{1,2}$', ''), '\\\\D', '') = '' "
-        "THEN NULL ELSE lpad(regexp_replace(regexp_replace(s, '\\\\.0{1,2}$', ''), '\\\\D', ''), 7, '0') END"
-    ),
-    "first_int": (
-        "(s STRING) RETURNS BIGINT RETURN "
-        "try_cast(nullif(regexp_extract(s, '(\\\\d+)', 1), '') AS BIGINT)"
-    ),
-    "normalize_na": (
-        "(s STRING) RETURNS STRING RETURN "
-        "CASE WHEN lower(trim(s)) IN ('', 'na', 'n/a', 'nan', 'none', 'null', 'nah') "
-        "THEN NULL ELSE s END"
-    ),
-    "norm_ws": (
-        "(s STRING) RETURNS STRING RETURN trim(regexp_replace(s, '\\\\s+', ' '))"
-    ),
-    "norm_key": (
-        "(s STRING) RETURNS STRING RETURN "
-        "regexp_replace(lower(trim(regexp_replace(s, '\\\\s+', ' '))), '[#\\\\s]', '')"
-    ),
+_SQL_FUNCS = {
+    "strip_dot_zero": (_text.strip_dot_zero_sql, "STRING"),
+    "item7": (_text.item7_sql, "STRING"),
+    "first_int": (_text.first_int_sql, "BIGINT"),
+    "normalize_na": (_na.normalize_na_sql, "STRING"),
+    "norm_ws": (_text.norm_ws_sql, "STRING"),
+    "norm_key": (_text.norm_key_sql, "STRING"),
 }
 
 
 def register_sql_functions(spark: SparkSession) -> None:
     """Expose the core scalar set to spark.sql() as expression-based SQL UDFs."""
-    for name, defn in _SQL_FUNC_DEFS.items():
-        spark.sql(f"CREATE OR REPLACE TEMPORARY FUNCTION {name}{defn}")
+    arg = ident("s")
+    for name, (render, returns) in _SQL_FUNCS.items():
+        spark.sql(
+            f"CREATE OR REPLACE TEMPORARY FUNCTION {ident(name)}({arg} STRING) "
+            f"RETURNS {returns} RETURN {render(arg)}"
+        )

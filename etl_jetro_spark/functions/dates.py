@@ -1,8 +1,13 @@
-"""Date scalar functions (SURVEY §2.8 F9–F12) as native Column exprs.
+"""Date scalar functions (SURVEY §2.8 F9–F12), each one SQL text.
 
 The reference stamps ``date.today()`` in ≥8 places; here every function takes
-an explicit base-date Column so pipelines are deterministic and testable
-(inject the clock — SURVEY §7 hard-part 4).
+an explicit base date so pipelines are deterministic and testable (inject the
+clock — SURVEY §7 hard-part 4): a renderer ``<name>_sql(x)`` over the SQL
+text of the base (``CAST('2026-01-06' AS DATE)`` for a run date, whose
+nullability the canonical schema keeps; a ``DATE'…'`` literal would declare
+it NOT NULL), and a Column form over a column name, as in
+``functions/text.py``. :func:`epoch_seconds_ntz`, a catalog helper whose
+callers pass timestamp expressions, stays a Column composition.
 
 Reference behaviors (cites into /root/reference/):
 - F9  default EDD = today+2, weekend rolls to Monday, ``m/d/YYYY`` no leading
@@ -19,79 +24,94 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from etl_jetro_spark.sqltext import ident, string_lit
+
 
 def _c(col) -> Column:
     return F.col(col) if isinstance(col, str) else col
 
 
-def default_edd(base: str | Column) -> Column:
+def _dow_case(dow: str, cases: dict[int, object], default: object) -> str:
+    whens = " ".join(f"WHEN {dow} = {k} THEN {v}" for k, v in cases.items())
+    return f"CASE {whens} ELSE {default} END"
+
+
+def default_edd_sql(base: str) -> str:
     """base+2 days; if that lands Sat/Sun, roll forward to Monday.
 
     Spark ``dayofweek``: 1=Sun..7=Sat.
     """
-    d = F.date_add(_c(base).cast("date"), 2)
-    dow = F.dayofweek(d)
-    return (
-        F.when(dow == 7, F.date_add(d, 2))   # Sat -> Mon
-        .when(dow == 1, F.date_add(d, 1))    # Sun -> Mon
-        .otherwise(d)
-    )
+    d = f"date_add(CAST({base} AS DATE), 2)"
+    # Sat -> Mon (+2), Sun -> Mon (+1)
+    return _dow_case(f"dayofweek({d})", {7: f"date_add({d}, 2)", 1: f"date_add({d}, 1)"}, d)
 
 
-def next_mwf(base: str | Column) -> Column:
+def next_mwf_sql(base: str) -> str:
     """Next strictly-later Mon/Wed/Fri after ``base``.
 
     Mon(2)->Wed(+2), Tue(3)->Wed(+1), Wed(4)->Fri(+2), Thu(5)->Fri(+1),
     Fri(6)->Mon(+3), Sat(7)->Mon(+2), Sun(1)->Mon(+1).
     """
-    d = _c(base).cast("date")
-    dow = F.dayofweek(d)
-    delta = (
-        F.when(dow == 2, 2)
-        .when(dow == 3, 1)
-        .when(dow == 4, 2)
-        .when(dow == 5, 1)
-        .when(dow == 6, 3)
-        .when(dow == 7, 2)
-        .otherwise(1)
-    )
-    return F.date_add(d, delta)
+    d = f"CAST({base} AS DATE)"
+    delta = _dow_case(f"dayofweek({d})", {2: 2, 3: 1, 4: 2, 5: 1, 6: 3, 7: 2}, 1)
+    return f"date_add({d}, {delta})"
 
 
-def fmt_mdy_no_pad(col: str | Column) -> Column:
+def fmt_mdy_no_pad_sql(x: str) -> str:
     """``m/d/yyyy`` with no leading zeros (reference EDD display format)."""
-    return F.date_format(_c(col).cast("date"), "M/d/yyyy")
+    return f"date_format(CAST({x} AS DATE), 'M/d/yyyy')"
 
 
-def fmt_mdy2(col: str | Column) -> Column:
+def fmt_mdy2_sql(x: str) -> str:
     """``MM/dd/yy`` (macro-sink date format)."""
-    return F.date_format(_c(col).cast("date"), "MM/dd/yy")
+    return f"date_format(CAST({x} AS DATE), 'MM/dd/yy')"
 
 
-def reformat_date_tolerant(col: str | Column) -> Column:
+def reformat_date_tolerant_sql(x: str) -> str:
     """Parse ``M/d/yyyy`` (or ISO) and re-emit ``MM/dd/yy``; unparseable
     values pass through unchanged (reference fallback behavior)."""
-    s = _c(col).cast("string")
-    parsed = F.coalesce(
-        F.try_to_timestamp(s, F.lit("M/d/yyyy")),
-        F.try_to_timestamp(s, F.lit("M-d-yy")),
-        F.try_to_timestamp(s, F.lit("yyyy-MM-dd")),
-    )
-    return F.when(parsed.isNotNull(), F.date_format(parsed, "MM/dd/yy")).otherwise(s)
+    s = f"CAST({x} AS STRING)"
+    parsed = "coalesce(" + ", ".join(
+        f"try_to_timestamp({s}, {string_lit(fmt)})" for fmt in ("M/d/yyyy", "M-d-yy", "yyyy-MM-dd")
+    ) + ")"
+    return f"CASE WHEN {parsed} IS NOT NULL THEN date_format({parsed}, 'MM/dd/yy') ELSE {s} END"
 
 
 # Weekday → worksheet-tab prefix table (sheet_bot/utils.py:29-35).
 WEEKDAY_PREFIX = {"Mon": "Mon", "Tue": "Tues", "Wed": "Wed", "Thu": "Thurs", "Fri": "Fri"}
 
 
-def weekday_prefix(col: str | Column) -> Column:
+def weekday_prefix_sql(x: str) -> str:
     """Mon/Tues/Wed/Thurs/Fri prefix for picking the day's worksheet tab."""
-    abbrev = F.date_format(_c(col).cast("date"), "E")
-    out = None
-    for k, v in WEEKDAY_PREFIX.items():
-        cond = abbrev == k
-        out = F.when(cond, v) if out is None else out.when(cond, v)
-    return out.otherwise(None)
+    abbrev = f"date_format(CAST({x} AS DATE), 'E')"
+    whens = " ".join(
+        f"WHEN {abbrev} = {string_lit(k)} THEN {string_lit(v)}" for k, v in WEEKDAY_PREFIX.items()
+    )
+    return f"CASE {whens} ELSE NULL END"
+
+
+def default_edd(base: str) -> Column:
+    return F.expr(default_edd_sql(ident(base)))
+
+
+def next_mwf(base: str) -> Column:
+    return F.expr(next_mwf_sql(ident(base)))
+
+
+def fmt_mdy_no_pad(col: str) -> Column:
+    return F.expr(fmt_mdy_no_pad_sql(ident(col)))
+
+
+def fmt_mdy2(col: str) -> Column:
+    return F.expr(fmt_mdy2_sql(ident(col)))
+
+
+def reformat_date_tolerant(col: str) -> Column:
+    return F.expr(reformat_date_tolerant_sql(ident(col)))
+
+
+def weekday_prefix(col: str) -> Column:
+    return F.expr(weekday_prefix_sql(ident(col)))
 
 
 def epoch_seconds_ntz(col: str | Column) -> Column:

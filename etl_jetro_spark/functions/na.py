@@ -4,6 +4,9 @@ The reference treats the string set {"", "na", "n/a", "nan", "none", "null",
 "nah"} as missing, case-insensitively after trim
 (/root/reference/Flips/tools/baby_flip_tool.py:37-41,
  /root/reference/247/tools/read_file_tool.py:175).
+
+Each helper is a SQL-text renderer plus a Column form over a column name,
+as in ``functions/text.py``.
 """
 
 from __future__ import annotations
@@ -17,25 +20,26 @@ NA_STRINGS = ("", "na", "n/a", "nan", "none", "null", "nah")
 _NA_IN = ", ".join(string_lit(s) for s in NA_STRINGS)
 
 
-def _c(col) -> Column:
-    return F.col(col) if isinstance(col, str) else col
+def _na_word_sql(x: str) -> str:
+    return f"lower(trim(CAST({x} AS STRING))) IN ({_NA_IN})"
 
 
-def normalize_na(col: str | Column) -> Column:
+def normalize_na_sql(x: str) -> str:
     """NULL out NA-like strings; other values pass through untouched."""
-    c = _c(col)
-    return F.when(F.lower(F.trim(c.cast("string"))).isin(*NA_STRINGS), None).otherwise(c)
+    return f"CASE WHEN {_na_word_sql(x)} THEN NULL ELSE {x} END"
 
 
-def is_na_like(col: str | Column) -> Column:
-    c = _c(col)
-    return c.isNull() | F.lower(F.trim(c.cast("string"))).isin(*NA_STRINGS)
+def is_na_like_sql(x: str) -> str:
+    """NULL or an NA word."""
+    return f"({x} IS NULL OR {_na_word_sql(x)})"
 
 
-def _normalize_na_sql(name: str) -> str:
-    """:func:`normalize_na` of column ``name`` as SQL text."""
-    c = ident(name)
-    return f"CASE WHEN lower(trim(CAST({c} AS STRING))) IN ({_NA_IN}) THEN NULL ELSE {c} END"
+def normalize_na(col: str) -> Column:
+    return F.expr(normalize_na_sql(ident(col)))
+
+
+def is_na_like(col: str) -> Column:
+    return F.expr(is_na_like_sql(ident(col)))
 
 
 def normalize_na_strings(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
@@ -52,7 +56,7 @@ def normalize_na_strings(df: DataFrame, columns: list[str] | None = None) -> Dat
     if missing:
         raise ValueError(f"normalize_na_strings: no such columns {sorted(missing)}")
     body = ", ".join(
-        f"{_normalize_na_sql(f.name) if f.name in targets else ident(f.name)} AS {ident(f.name)}"
+        f"{normalize_na_sql(ident(f.name)) if f.name in targets else ident(f.name)} AS {ident(f.name)}"
         for f in fields
     )
     return df.selectExpr(f"struct({body}) AS _na").select("_na.*")

@@ -1,7 +1,16 @@
-"""Text/string scalar functions (SURVEY §2.8 F1–F8) as native Column exprs.
+"""Text/string scalar functions (SURVEY §2.8 F1–F8), each one SQL text.
 
-Every helper here is a pure Catalyst expression — no Python UDFs — so the
-whole family stays inside whole-stage codegen and is vectorized JVM-side.
+Every helper is defined once, as a renderer ``<name>_sql(x)`` that takes
+the SQL text of its argument (``sqltext.ident(name)`` for a column) and
+returns the SQL text of the result, with every literal and regex quoted
+by ``sqltext.string_lit``. Its Column form, ``<name>(col)``, takes a
+column *name* and is one ``F.expr`` of that text: one Py4J call, where a
+chain of ``F.*`` calls costs one round trip per call, and the same
+Catalyst expression. A caller with an expression, not a column, projects
+it into a named column first or uses the renderer inside a
+``selectExpr``. ``functions.register_sql_functions`` builds its SQL
+function bodies from the same renderers. No Python UDFs: the whole
+family stays inside whole-stage codegen.
 
 Reference behaviors re-expressed (file:line cites into /root/reference/):
 - F1 whitespace/hidden-char normalization: Flips/tools/big_flip_tool.py:10-15,
@@ -22,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from etl_jetro_spark.sqltext import ident, string_lit
+
 # zero-width space, BOM, non-breaking space — the reference strips these from
 # headers and cells (big_flip_tool.py:12).
 HIDDEN_CHARS = "​﻿\xa0"
@@ -31,122 +42,195 @@ DASH_CLASS = "[-–—]"
 
 EMAIL_RE = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
 
+# Regex and character-set literals, quoted once for the SQL text.
+_HIDDEN = string_lit(HIDDEN_CHARS)
+_WS_RUN = string_lit(r"\s+")
+_KEY_JUNK = string_lit(r"[#\s]")
+_DOT_ZERO = string_lit(r"\.0{1,2}$")
+_MONEY_JUNK = string_lit(r"[$,()\s]|-$")
+_MONEY_SEP = string_lit("[$,]")
+_LEADING_DOLLAR = string_lit("^[$]")
+_LEADING_NUM = string_lit(r"^(-?\d*\.?\d+)")
+_ANY_NUM = string_lit(r"(-?\d*\.?\d+)")
+_PAREN_NEG = string_lit(r"^\(.*\)$")
+_TRAIL_NEG = string_lit(r"^[^()]*-\s*$")
+_PAREN_NUM = string_lit(r"\(\s*\d*\.?\d+\s*\)")
+_DIGIT_RUN = string_lit(r"(\d+)")
+_NON_DIGIT = string_lit(r"\D")
+_DASH = string_lit(DASH_CLASS)
+_PDF_STORE = string_lit(r"-(\d+)-\d+\.pdf$")
+_EMAIL_GROUP = string_lit("(" + EMAIL_RE + ")")
+_EMAIL_FULL = string_lit("^" + EMAIL_RE + "$")
 
-def _c(col: str | Column) -> Column:
-    return F.col(col) if isinstance(col, str) else col
+
+def _try_double(num: str) -> str:
+    """A regex-extracted number text as DOUBLE; no match ('') → NULL."""
+    return f"try_cast(nullif({num}, '') AS DOUBLE)"
 
 
 # --- F1: normalization -------------------------------------------------
 
-def strip_hidden(col: str | Column) -> Column:
+def strip_hidden_sql(x: str) -> str:
     """Remove zero-width/BOM/nbsp characters."""
-    return F.translate(_c(col), HIDDEN_CHARS, "")
+    return f"translate({x}, {_HIDDEN}, '')"
 
 
-def norm_ws(col: str | Column) -> Column:
-    """Trim + collapse internal whitespace runs to single spaces."""
-    return F.trim(F.regexp_replace(strip_hidden(col), r"\s+", " "))
+def norm_ws_sql(x: str) -> str:
+    """Hidden characters removed, then trim + collapse internal whitespace
+    runs to single spaces."""
+    return f"trim(regexp_replace({strip_hidden_sql(x)}, {_WS_RUN}, ' '))"
 
 
-def norm_key(col: str | Column) -> Column:
+def norm_key_sql(x: str) -> str:
     """Lowercased, ``#``-less, space-less join/lookup key.
 
     The reference normalizes header and dict keys this way before matching
     (big_flip_tool.py:29-30, utils.py:37-45).
     """
-    return F.regexp_replace(F.lower(norm_ws(col)), r"[#\s]", "")
+    return f"regexp_replace(lower({norm_ws_sql(x)}), {_KEY_JUNK}, '')"
 
 
 # --- F2: trailing .0 strip ---------------------------------------------
 
-def strip_dot_zero(col: str | Column) -> Column:
+def strip_dot_zero_sql(x: str) -> str:
     """``'14.0'``→``'14'``, ``'14.00'``→``'14'``, but ``'14.50'`` unchanged."""
-    return F.regexp_replace(_c(col).cast("string"), r"\.0{1,2}$", "")
+    return f"regexp_replace(CAST({x} AS STRING), {_DOT_ZERO}, '')"
 
 
 # --- F3: numbers hidden in text -----------------------------------------
 
-def parse_money(col: str | Column) -> Column:
+def parse_money_sql(x: str) -> str:
     """Leading numeric token with ``$``/commas; ``(123.4)`` and ``123-`` are
     negative; non-numeric → NULL.  (big_flip_tool.py:17-31)"""
-    s = norm_ws(col)
-    is_paren_neg = s.rlike(r"^\(.*\)$")
-    is_trail_neg = s.rlike(r"^[^()]*-\s*$")
-    cleaned = F.regexp_replace(s, r"[$,()\s]|-$", "")
-    num = F.regexp_extract(cleaned, r"^(-?\d*\.?\d+)", 1)
-    val = F.nullif(num, F.lit("")).try_cast("double")
-    return F.when(is_paren_neg | is_trail_neg, -F.abs(val)).otherwise(val)
+    s = norm_ws_sql(x)
+    cleaned = f"regexp_replace({s}, {_MONEY_JUNK}, '')"
+    val = _try_double(f"regexp_extract({cleaned}, {_LEADING_NUM}, 1)")
+    neg = f"{s} RLIKE {_PAREN_NEG} OR {s} RLIKE {_TRAIL_NEG}"
+    return f"CASE WHEN {neg} THEN -abs({val}) ELSE {val} END"
 
 
-def num_anywhere(col: str | Column) -> Column:
+def num_anywhere_sql(x: str) -> str:
     """First numeric token appearing anywhere in the text (``'ship 12.5 lbs'``
     → 12.5); paren-wrapped → negative. (big_flip_tool.py:32-43)"""
-    s = F.regexp_replace(norm_ws(col), r"[$,]", "")
-    num = F.regexp_extract(s, r"(-?\d*\.?\d+)", 1)
-    val = F.nullif(num, F.lit("")).try_cast("double")
-    return F.when(s.rlike(r"\(\s*\d*\.?\d+\s*\)"), -F.abs(val)).otherwise(val)
+    s = f"regexp_replace({norm_ws_sql(x)}, {_MONEY_SEP}, '')"
+    val = _try_double(f"regexp_extract({s}, {_ANY_NUM}, 1)")
+    neg = f"{s} RLIKE {_PAREN_NUM}"
+    return f"CASE WHEN {neg} THEN -abs({val}) ELSE {val} END"
 
 
-def first_int(col: str | Column) -> Column:
+def first_int_sql(x: str) -> str:
     """First integer chunk in the text, NULL if none. (big_flip_tool.py:44-51)"""
-    num = F.regexp_extract(_c(col).cast("string"), r"(\d+)", 1)
-    return F.nullif(num, F.lit("")).try_cast("long")
+    num = f"regexp_extract(CAST({x} AS STRING), {_DIGIT_RUN}, 1)"
+    return f"try_cast(nullif({num}, '') AS BIGINT)"
 
 
-def leading_num(col: str | Column) -> Column:
+def leading_num_sql(x: str) -> str:
     """Leading number only — text after it ignored; no leading junk allowed."""
-    s = F.regexp_replace(norm_ws(col), r"^[$]", "")
-    num = F.regexp_extract(s, r"^(-?\d*\.?\d+)", 1)
-    return F.nullif(num, F.lit("")).try_cast("double")
+    s = f"regexp_replace({norm_ws_sql(x)}, {_LEADING_DOLLAR}, '')"
+    return _try_double(f"regexp_extract({s}, {_LEADING_NUM}, 1)")
 
 
 # --- F4: item code ------------------------------------------------------
 
-def item7(col: str | Column) -> Column:
+def item7_sql(x: str) -> str:
     """Digits only, zero-padded to 7 (``'12345'``→``'0012345'``); NULL/empty
     → NULL. zfill semantics: 8+ digit codes pass through unchanged (Spark's
     lpad would TRUNCATE them). (247/tools/allocation_tool.py:209-218)"""
-    digits = F.regexp_replace(strip_dot_zero(col), r"\D", "")
-    padded = F.when(F.length(digits) >= 7, digits).otherwise(
-        F.lpad(digits, 7, "0")
-    )
-    return F.when(digits == "", None).otherwise(padded)
+    digits = f"regexp_replace({strip_dot_zero_sql(x)}, {_NON_DIGIT}, '')"
+    padded = f"CASE WHEN length({digits}) >= 7 THEN {digits} ELSE lpad({digits}, 7, '0') END"
+    return f"CASE WHEN {digits} = '' THEN NULL ELSE {padded} END"
 
 
 # --- F5: money formatting ----------------------------------------------
 
-def money2dp(col: str | Column) -> Column:
+def money2dp_sql(x: str) -> str:
     """Format as fixed 2-decimal string (Decimal semantics, no float drift)."""
-    return F.format_number(_c(col).cast("decimal(18,2)"), 2)
+    return f"format_number(CAST({x} AS DECIMAL(18,2)), 2)"
 
 
 # --- F6: split on first dash -------------------------------------------
 
-def split_first_dash(col: str | Column) -> Column:
+def split_first_dash_sql(x: str) -> str:
     """Split into [left, right] on the FIRST -, en-dash, or em-dash."""
-    return F.split(_c(col), DASH_CLASS, 2)
+    return f"split({x}, {_DASH}, 2)"
 
 
 # --- F7/F8: regex extraction -------------------------------------------
 
-def extract_store_from_pdf_name(col: str | Column) -> Column:
+def extract_store_from_pdf_name_sql(x: str) -> str:
     """``...-<store>-<po>.pdf`` → store. (sheet_bot/main.py:52-84)"""
-    return F.regexp_extract(_c(col), r"-(\d+)-\d+\.pdf$", 1)
+    return f"regexp_extract({x}, {_PDF_STORE}, 1)"
 
 
-def extract_emails(col: str | Column) -> Column:
+def extract_emails_sql(x: str) -> str:
     """All well-formed emails in free text, case-insensitively deduped,
     first-occurrence casing kept. (sheet_bot/import_vendor_email.py:10-26)"""
-    arr = F.regexp_extract_all(_c(col), F.lit("(" + EMAIL_RE + ")"), 1)
+    found = f"regexp_extract_all({x}, {_EMAIL_GROUP}, 1)"
     # dedupe by lowercase while keeping first-seen original casing
-    return F.aggregate(
-        arr,
-        F.expr("CAST(array() AS array<string>)"),
-        lambda acc, x: F.when(
-            F.exists(acc, lambda y: F.lower(y) == F.lower(x)), acc
-        ).otherwise(F.array_append(acc, x)),
+    step = (
+        "CASE WHEN exists(acc, y -> lower(y) = lower(e)) THEN acc "
+        "ELSE array_append(acc, e) END"
     )
+    return f"aggregate({found}, CAST(array() AS ARRAY<STRING>), (acc, e) -> {step})"
 
 
-def is_valid_email(col: str | Column) -> Column:
-    return _c(col).rlike(r"^" + EMAIL_RE + r"$")
+def is_valid_email_sql(x: str) -> str:
+    return f"({x} RLIKE {_EMAIL_FULL})"
+
+
+# --- Column forms: one F.expr over a column name -------------------------
+
+def strip_hidden(col: str) -> Column:
+    return F.expr(strip_hidden_sql(ident(col)))
+
+
+def norm_ws(col: str) -> Column:
+    return F.expr(norm_ws_sql(ident(col)))
+
+
+def norm_key(col: str) -> Column:
+    return F.expr(norm_key_sql(ident(col)))
+
+
+def strip_dot_zero(col: str) -> Column:
+    return F.expr(strip_dot_zero_sql(ident(col)))
+
+
+def parse_money(col: str) -> Column:
+    return F.expr(parse_money_sql(ident(col)))
+
+
+def num_anywhere(col: str) -> Column:
+    return F.expr(num_anywhere_sql(ident(col)))
+
+
+def first_int(col: str) -> Column:
+    return F.expr(first_int_sql(ident(col)))
+
+
+def leading_num(col: str) -> Column:
+    return F.expr(leading_num_sql(ident(col)))
+
+
+def item7(col: str) -> Column:
+    return F.expr(item7_sql(ident(col)))
+
+
+def money2dp(col: str) -> Column:
+    return F.expr(money2dp_sql(ident(col)))
+
+
+def split_first_dash(col: str) -> Column:
+    return F.expr(split_first_dash_sql(ident(col)))
+
+
+def extract_store_from_pdf_name(col: str) -> Column:
+    return F.expr(extract_store_from_pdf_name_sql(ident(col)))
+
+
+def extract_emails(col: str) -> Column:
+    return F.expr(extract_emails_sql(ident(col)))
+
+
+def is_valid_email(col: str) -> Column:
+    return F.expr(is_valid_email_sql(ident(col)))

@@ -50,6 +50,7 @@ from etl_jetro_spark.operators.sort import (  # noqa: F401
     lot_last4_key,
     numeric_first_key,
     numeric_first_order,
+    numeric_first_sort_keys,
     sort_numeric_first,
 )
 from etl_jetro_spark.operators.sampling import (  # noqa: F401

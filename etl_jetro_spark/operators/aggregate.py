@@ -10,36 +10,38 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from etl_jetro_spark.functions.text import parse_money
+from etl_jetro_spark.functions.text import parse_money_sql
+from etl_jetro_spark.sqltext import ident
 
 
 def sum_by(
     df: DataFrame,
     keys: list[str],
-    value: str | Column,
+    value: str,
     out: str = "sum_value",
     parse: bool = False,
     ceil: bool = False,
     drop_zero: bool = True,
 ) -> DataFrame:
-    """(keys) → sum(value) with the reference's trimmings:
+    """(keys) → sum(value column) with the reference's trimmings:
 
     - ``parse``: value cells are messy text → ``parse_money`` first
       (A2, big_flip_tool.py:203-207)
     - pre-coerce NULL→0 (A1's ``fillna(0)``, allocation_tool.py:87-91)
     - ``ceil``: ceil the sum to a long (A2)
     - ``drop_zero``: post-filter ``sum != 0`` (P8)
+
+    The aggregate and the filter are SQL text.
     """
-    v = parse_money(value) if parse else F.col(value) if isinstance(value, str) else value
+    v = parse_money_sql(ident(value)) if parse else ident(value)
     # try_cast: ANSI mode (Spark 4 default) would throw on messy cells;
     # the reference's fillna(0) semantics want junk -> 0 instead.
-    v = F.coalesce(v.try_cast("double"), F.lit(0.0))
-    agg = F.sum(v)
+    total = f"sum(coalesce(try_cast({v} AS DOUBLE), 0.0D))"
     if ceil:
-        agg = F.ceil(agg).cast("long")
-    res = df.groupBy(*keys).agg(agg.alias(out))
+        total = f"CAST(ceil({total}) AS BIGINT)"
+    res = df.groupBy(*keys).agg(F.expr(f"{total} AS {ident(out)}"))
     if drop_zero:
-        res = res.filter(F.col(out) != 0)
+        res = res.filter(f"{ident(out)} != 0")
     return res
 
 

@@ -14,6 +14,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from etl_jetro_spark.sqltext import ident, string_lit
+
 CANONICAL_COLS = [
     "Branch",
     "Item",
@@ -29,6 +31,9 @@ CANONICAL_COLS = [
     "POSTXDCK",
     "FOB",
 ]
+
+
+_TWO_DIGITS = string_lit(r"^\d{2}$")
 
 
 @dataclass(frozen=True)
@@ -69,18 +74,21 @@ PIPELINES: dict[str, PipelineConfig] = {
 }
 
 
-def branch_fix(col: str | Column) -> Column:
+def branch_fix_sql(x: str) -> str:
     """P15: 2-digit branch → prefix '1' (86→186), then int cast.
     (ACME/tools/acme_tool.py:88-98)"""
-    c = (F.col(col) if isinstance(col, str) else col).cast("string")
-    fixed = F.when(c.rlike(r"^\d{2}$"), F.concat(F.lit("1"), c)).otherwise(c)
-    return fixed.try_cast("int")
+    c = f"CAST({x} AS STRING)"
+    return f"try_cast(CASE WHEN {c} RLIKE {_TWO_DIGITS} THEN concat('1', {c}) ELSE {c} END AS INT)"
+
+
+def branch_fix(col: str) -> Column:
+    return F.expr(branch_fix_sql(ident(col)))
 
 
 def to_canonical(
     df: DataFrame,
     cfg: PipelineConfig,
-    edd: Column,
+    edd: str,
     branch: str = "Branch",
     item: str = "Item",
     qty: str = "Distro Size",
@@ -88,33 +96,33 @@ def to_canonical(
     """Project a long fact table (branch, item, qty[, extras]) onto the
     canonical 13(+)-column schema with the pipeline's constants (P13/P14).
 
-    Columns already present on ``df`` (e.g. a joined XDCK/FOB) win over the
-    default blank fills — mirroring the reference's reindex-then-assign.
-    The result is unordered: the ordered sinks sort the collected table on
-    the driver (``sinks.excel_sink.collect_ordered``).
+    ``edd`` is the SQL text of the Expected Delivery Date (e.g.
+    ``functions.dates.default_edd_sql(...)``). Columns already present on
+    ``df`` (e.g. a joined XDCK/FOB) win over the default blank fills —
+    mirroring the reference's reindex-then-assign. The projection is one
+    ``selectExpr`` of SQL texts. The result is unordered: the ordered sinks
+    sort the collected table on the driver
+    (``sinks.excel_sink.collect_ordered``).
     """
     existing = set(df.columns)
-    out = df.withColumns(
-        {
-            "Branch": branch_fix(branch),
-            "Item": F.col(item).try_cast("long"),
-            "Distro Size": F.col(qty).try_cast("long"),
-            "Supplier On Record": F.lit(cfg.supplier),
-            "Expected Delivery Date": edd.cast("date"),
-            "WW Buyer": F.lit(cfg.buyer),
-            "AmountCode": F.lit(cfg.amount_code),
-        }
-    )
-    fills: dict[str, Column] = {}
-    for c in ("Description", "AdditionalXDCK", "POSTXDCK"):
-        if c not in existing:
-            fills[c] = F.lit("")
-    if "Warehouse" not in existing:
-        fills["Warehouse"] = F.lit("")
-    for c in ("XDCK", "FOB"):
-        if c not in existing:
-            fills[c] = F.lit(None).cast("double")
-    if fills:
-        out = out.withColumns(fills)
-    cols = CANONICAL_COLS + [c for c in cfg.extra_cols if c in out.columns]
-    return out.select(*cols)
+
+    def kept(name: str, fill: str) -> str:
+        return ident(name) if name in existing else fill
+
+    exprs = {
+        "Branch": branch_fix_sql(ident(branch)),
+        "Item": f"try_cast({ident(item)} AS BIGINT)",
+        "Description": kept("Description", "''"),
+        "Distro Size": f"try_cast({ident(qty)} AS BIGINT)",
+        "Supplier On Record": str(int(cfg.supplier)),
+        "Expected Delivery Date": f"CAST({edd} AS DATE)",
+        "WW Buyer": string_lit(cfg.buyer),
+        "Warehouse": kept("Warehouse", "''"),
+        "AdditionalXDCK": kept("AdditionalXDCK", "''"),
+        "AmountCode": string_lit(cfg.amount_code),
+        "XDCK": kept("XDCK", "CAST(NULL AS DOUBLE)"),
+        "POSTXDCK": kept("POSTXDCK", "''"),
+        "FOB": kept("FOB", "CAST(NULL AS DOUBLE)"),
+    }
+    exprs.update({c: ident(c) for c in cfg.extra_cols if c in existing})
+    return df.selectExpr(*[f"{e} AS {ident(name)}" for name, e in exprs.items()])

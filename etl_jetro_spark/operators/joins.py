@@ -11,8 +11,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from etl_jetro_spark.plans.hints import bcast_sized
 
-from etl_jetro_spark.functions.text import norm_key
-from etl_jetro_spark.sqltext import string_lit
+from etl_jetro_spark.functions.text import norm_key, norm_key_sql
+from etl_jetro_spark.sqltext import ident, string_lit
 
 
 def broadcast_lookup(
@@ -58,19 +58,18 @@ def map_join(
     norm = (lambda s: "".join(str(s).strip().lower().split()).replace("#", "")) if normalize_keys else str
     # stringify values: a map literal unifies value types, which would
     # silently coerce mixed dicts (e.g. {"114": "8", "999": 0}) to a numeric
-    # map. The literal is one SQL text, however many keys the dict has.
+    # map. The whole lookup is one SQL text, however many keys the dict has.
     entries = ", ".join(
         f"{string_lit(norm(k))}, {'CAST(NULL AS STRING)' if v is None else string_lit(str(v))}"
         for k, v in mapping.items()
     )
-    m = F.expr(f"map({entries})")
-    k = norm_key(key) if normalize_keys else F.col(key).cast("string")
-    val = m[k]
+    k = norm_key_sql(ident(key)) if normalize_keys else f"CAST({ident(key)} AS STRING)"
+    val = f"map({entries})[{k}]"
     if zero_to_null:
-        val = F.when(val.try_cast("double") == 0, None).otherwise(val)
+        val = f"CASE WHEN try_cast({val} AS DOUBLE) = 0 THEN NULL ELSE {val} END"
     if default is not None:
-        val = F.coalesce(val, F.lit(default))
-    return fact.withColumn(out, val)
+        val = f"coalesce({val}, {string_lit(str(default))})"
+    return fact.withColumn(out, F.expr(val))
 
 
 def anti_join(left: DataFrame, right: DataFrame, on: str | list[str]) -> DataFrame:

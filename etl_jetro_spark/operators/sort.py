@@ -1,13 +1,15 @@
 """Sort operators (SURVEY §2.6 W1/W3).
 
 Row-ordered outputs are not Spark sorts. Their post-agg tables are small
-by construction, are collected once and are ordered on the driver: the
-canonical sheet and the baby-flip table by
-``sinks.excel_sink.collect_ordered`` (the baby-flip table by
-:func:`lot_last4_key`, computed in its plan), and the DLPM macro with
-:func:`numeric_first_order`, the driver-side twin of
-:func:`numeric_first_key`. :func:`sort_numeric_first` is W1 as a Spark
-sort; no runner calls it.
+by construction, are collected once and are ordered on the driver by
+``sinks.excel_sink.collect_ordered``: the canonical sheet by its columns,
+the baby-flip table by :func:`lot_last4_key` and the DLPM price rows by
+W1's keys, each key computed in the table's plan.
+:func:`numeric_first_order` is W1 as a Python sort key, the driver-side
+twin of :func:`numeric_first_key` that the ADPO,X renderer orders its
+branch groups with. :func:`sort_numeric_first` is W1 as a Spark sort; no
+runner calls it. The key helpers are SQL-text renderers with a Column
+form over a column name, as in ``functions/text.py``.
 """
 
 from __future__ import annotations
@@ -17,14 +19,28 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from etl_jetro_spark.sqltext import ident, string_lit
+
 NUMERIC_SENTINEL = 10**9  # reference's missing-lot sort sentinel (baby_flip_tool.py:330)
+_LAST_DIGIT_RUN = string_lit(r"(\d+)\D*$")
 
 
-def numeric_first_key(col: str | Column) -> Column:
+def numeric_first_key_sql(x: str) -> str:
     """W1: sort key that orders numeric-looking values numerically (NULLs
     last), mirroring the reference's ``to_numeric`` two-level sort."""
-    c = F.col(col) if isinstance(col, str) else col
-    return c.cast("string").try_cast("double")
+    return f"try_cast(CAST({x} AS STRING) AS DOUBLE)"
+
+
+def numeric_first_key(col: str) -> Column:
+    return F.expr(numeric_first_key_sql(ident(col)))
+
+
+def numeric_first_sort_keys(x: str) -> dict[str, str]:
+    """W1's leading sort keys as named SQL texts over ``x``: ascending
+    with NULLs first (``collect_ordered``), then ``x`` itself and any
+    tie-breakers, they order rows like ``numeric_first_order``."""
+    key = numeric_first_key_sql(x)
+    return {"key_null": f"{key} IS NULL", "key_nan": f"isnan({key})", "key": key}
 
 
 def numeric_first_order(key: float | None, text: str | None, item: str | None) -> tuple:
@@ -48,15 +64,14 @@ def sort_numeric_first(df: DataFrame, col: str, *extra: Column) -> DataFrame:
     )
 
 
-def lot_last4_key(lot: str | Column) -> Column:
+def lot_last4_key_sql(x: str) -> str:
     """W3: last 4 digits of the LAST numeric chunk of a lot number; missing
     → sentinel 10^9 (sorts last). ``'498-68594 39024'`` → 9024."""
-    c = F.col(lot) if isinstance(lot, str) else lot
     # '(\d+)\D*$' = last digit run; equivalent to a negative lookahead but
     # also valid in RE2 engines (DuckDB oracle parity)
-    last_chunk = F.regexp_extract(c.cast("string"), r"(\d+)\D*$", 1)
-    last4 = F.substring(last_chunk, -4, 4)
-    return F.coalesce(
-        F.nullif(last4, F.lit("")).try_cast("int"), F.lit(NUMERIC_SENTINEL)
-    )
+    last4 = f"substring(regexp_extract(CAST({x} AS STRING), {_LAST_DIGIT_RUN}, 1), -4, 4)"
+    return f"coalesce(try_cast(nullif({last4}, '') AS INT), {NUMERIC_SENTINEL})"
 
+
+def lot_last4_key(lot: str) -> Column:
+    return F.expr(lot_last4_key_sql(ident(lot)))

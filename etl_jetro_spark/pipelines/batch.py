@@ -12,19 +12,35 @@ operators.canonical.PIPELINES (code-observed, SURVEY §7 hard-part 6).
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from etl_jetro_spark.functions.dates import default_edd, next_mwf
-from etl_jetro_spark.functions.dates import fmt_mdy_no_pad as EF_fmt_mdy_no_pad
-from etl_jetro_spark.functions.text import parse_money as parse_money_col
+from etl_jetro_spark.functions.dates import default_edd_sql, fmt_mdy_no_pad_sql, next_mwf_sql
+from etl_jetro_spark.functions.text import parse_money, parse_money_sql
 from etl_jetro_spark.normalize import grid as G
 from etl_jetro_spark import operators as O
+from etl_jetro_spark.sqltext import date_lit, ident, string_lit
 
 
 def _to_spark(spark: SparkSession, pdf: pd.DataFrame) -> DataFrame:
-    """Headered wide pandas grid → all-string Spark DataFrame."""
+    """Headered wide pandas grid → all-string Spark DataFrame (a local
+    relation)."""
     return spark.createDataFrame(pdf.astype(object).where(pdf.notna(), None).astype(str).replace({"None": None}))
+
+
+def _sum_cells(long: DataFrame, keys: list[str], value: str, out: str, **kw) -> DataFrame:
+    """``O.sum_by`` over one sheet's melted cells, read as one partition.
+
+    A sheet is a local relation that Spark scans in several slices, so the
+    hash aggregate would need an Exchange to group a few thousand cells,
+    and AQE would run its map side as a job of its own. One partition
+    meets the aggregate's required distribution with no Exchange. The
+    coalesce sits where it removes that exchange, not on every sheet: a
+    sheet that is only filtered and projected (ACME) has none, and Catalyst
+    folds that plan into a local relation while optimizing, which a
+    Coalesce under it would stop (changing the nullability its schema
+    declares)."""
+    return O.sum_by(long.coalesce(1), keys, value, out=out, **kw)
 
 
 # --------------------------------------------------------------------------
@@ -47,27 +63,27 @@ def build_allocation(
     spark: SparkSession,
     wide: pd.DataFrame,
     pipeline: str = "247",
-    edd: Column | None = None,
+    edd: str | None = None,
     base_date: str | None = None,
 ) -> DataFrame:
     """Melt (U1) → sum per (Branch, Item) (A1) → ≠0 (P8) → canonical.
 
     The build of 247, Leavins and SouthernCross (whose clean step pins its
-    Item column first). ``edd`` defaults to the today+2-roll-Monday rule
-    (F9) from ``base_date`` — Leavins passes an explicit one (the reference
-    errors without it).
+    Item column first). ``edd`` (SQL text) defaults to the
+    today+2-roll-Monday rule (F9) from ``base_date`` — Leavins passes an
+    explicit one (the reference errors without it).
     """
     if edd is None:
         if base_date is None and pipeline == "leavins":
             raise ValueError("leavins requires an explicit EDD")  # :133-134
-        edd = default_edd(F.lit(base_date).cast("date"))
+        edd = default_edd_sql(date_lit(base_date))
     df = _to_spark(spark, wide)
     item_col = next(c for c in df.columns if G._norm_name(c) in ("item", "itemitem"))
     long = O.melt(
         df, [item_col], var_name="Branch", value_name="qty", numeric_vars_only=True
     ).withColumnRenamed(item_col, "Item")
-    agg = O.sum_by(long, ["Branch", "Item"], "qty", out="Distro Size")
-    agg = agg.withColumn("Distro Size", F.col("Distro Size").cast("long"))
+    agg = _sum_cells(long, ["Branch", "Item"], "qty", out="Distro Size")
+    agg = agg.withColumn("Distro Size", F.expr(f"CAST({ident('Distro Size')} AS BIGINT)"))
     return O.to_canonical(agg, O.PIPELINES[pipeline], edd=edd)
 
 
@@ -98,19 +114,20 @@ def build_pricesheet_long(spark: SparkSession, wide: pd.DataFrame) -> DataFrame:
     item_col = next(c for c in df.columns if G._norm_name(c) == "item")
     long = O.melt(df, [item_col], var_name="Store#", value_name="cost_raw",
                   numeric_vars_only=True)
-    store = F.col("Store#")
-    for src, dst in STORE_REMAP.items():
-        store = F.when(F.col("Store#") == src, dst).otherwise(store)
-    cost = parse_money_col(F.col("cost_raw"))
+    store, cost = ident("Store#"), ident("Cost")
+    remap = " ".join(
+        f"WHEN {store} = {string_lit(src)} THEN {string_lit(dst)}" for src, dst in STORE_REMAP.items()
+    )
+    excluded = ", ".join(string_lit(s) for s in STORE_EXCLUDE)
     return (
-        long.filter(~F.col("Store#").isin(*STORE_EXCLUDE))
-        .select(
-            store.alias("Store#"),
-            F.col(item_col).alias("Item#"),
-            F.lit(81214).alias("Vendor#"),
-            cost.alias("Cost"),
+        long.filter(f"NOT ({store} IN ({excluded}))")
+        .selectExpr(
+            f"CASE {remap} ELSE {store} END AS {store}",
+            f"{ident(item_col)} AS {ident('Item#')}",
+            f"81214 AS {ident('Vendor#')}",
+            f"{parse_money_sql(ident('cost_raw'))} AS {cost}",
         )
-        .filter(F.col("Cost").isNotNull() & (F.col("Cost") != 0))
+        .filter(f"{cost} IS NOT NULL AND {cost} != 0")
     )
 
 
@@ -155,16 +172,13 @@ def build_acme_like(
     # numeric — NaN compares True, so non-numeric Distro cells are KEPT
     # (acme_tool.py:53-55); only literal zeros drop.
     df = df.filter(
-        F.col("dock").try_cast("int").isin(*[int(d) for d in docks])
-    ).filter(
-        ~F.coalesce(F.col("Distro Size").try_cast("double") == 0, F.lit(False))
-    )
+        f"try_cast({ident('dock')} AS INT) IN ({', '.join(str(int(d)) for d in docks)})"
+    ).filter(f"NOT coalesce(try_cast({ident('Distro Size')} AS DOUBLE) = 0, false)")
     if cfg.warehouse_from_dock:
-        df = df.withColumn("Warehouse", F.col("dock")).withColumn(
-            "XdockCode", F.lit(None).cast("double")
+        df = df.withColumns(
+            {"Warehouse": F.expr(ident("dock")), "XdockCode": F.expr("CAST(NULL AS DOUBLE)")}
         )
-    out = O.to_canonical(df, cfg, edd=default_edd(F.lit(base_date).cast("date")))
-    return out
+    return O.to_canonical(df, cfg, edd=default_edd_sql(date_lit(base_date)))
 
 
 # --------------------------------------------------------------------------
@@ -274,19 +288,17 @@ def build_big_flip(
     lot = next(c for c in df.columns if G._norm_name(c) == "lot")
     long = O.melt(df, [item, lot], var_name="Branch", value_name="v",
                   numeric_vars_only=True)
-    agg = O.sum_by(long, ["Branch", item, lot], "v", out="Distro Size",
-                   parse=True, ceil=True)
+    agg = _sum_cells(long, ["Branch", item, lot], "v", out="Distro Size",
+                     parse=True, ceil=True)
     agg = (
         agg.withColumnRenamed(item, "Item")
         .withColumnRenamed(lot, "Lot #")
     )
     agg = O.map_join(agg, store_block["xdock"], "Branch", "XDCK")
     agg = O.map_join(agg, store_block["fob"], "Branch", "FOB")
-    agg = agg.withColumn("XDCK", parse_money_col("XDCK")).withColumn(
-        "FOB", parse_money_col("FOB")
-    )
+    agg = agg.withColumns({"XDCK": parse_money("XDCK"), "FOB": parse_money("FOB")})
     return O.to_canonical(
-        agg, O.PIPELINES["flips_big"], edd=next_mwf(F.lit(base_date).cast("date"))
+        agg, O.PIPELINES["flips_big"], edd=next_mwf_sql(date_lit(base_date))
     )
 
 
@@ -329,8 +341,7 @@ def build_baby_flip(
     ids = [item, "DESC", "pack size", lot]
     present = [c for c in ids if c in df.columns]
     df = df.filter(
-        (F.trim(F.coalesce(F.col(item), F.lit(""))) != "")
-        & (F.trim(F.coalesce(F.col(lot), F.lit(""))) != "")
+        f"trim(coalesce({ident(item)}, '')) != '' AND trim(coalesce({ident(lot)}, '')) != ''"
     )
     long = O.melt_between(
         df, present, after=("pack size" if "pack size" in df.columns else "DESC"),
@@ -339,34 +350,34 @@ def build_baby_flip(
     # baby flip ceils PER CELL before aggregating (reference
     # baby_flip_tool.py:104-107: clean ceils the between-columns to Int64,
     # the pivot then sums) — unlike big flip, which ceils the SUM (A2)
-    long = long.withColumn("v", F.ceil(parse_money_col("v")).cast("long"))
-    agg = O.sum_by(long, present + ["Store"], "v", out="Value", ceil=False)
-    agg = agg.withColumn("Value", F.col("Value").cast("long"))
+    long = long.withColumn("v", F.expr(f"CAST(ceil({parse_money_sql(ident('v'))}) AS BIGINT)"))
+    agg = _sum_cells(long, present + ["Store"], "v", out="Value", ceil=False)
+    agg = agg.withColumn("Value", F.expr(f"CAST({ident('Value')} AS BIGINT)"))
     agg = agg.withColumnRenamed(item, "Item").withColumnRenamed(lot, "LOT#")
     out = O.broadcast_lookup(agg, po_df, "Store")
     carrier = carrier_df.withColumnRenamed("carrier_code", "carrier code")
     out = O.broadcast_lookup(out, carrier, "Store")
     pack = (
-        F.col("pack size").try_cast("double")
+        f"try_cast({ident('pack size')} AS DOUBLE)"
         if "pack size" in present
-        else F.lit(None).cast("double")
+        else "CAST(NULL AS DOUBLE)"
     )
-    inv = (
-        EF_fmt_mdy_no_pad(F.lit(invoice_date).cast("date"))
-        if invoice_date
-        else F.lit(None).cast("string")
-    )
-    return out.select(
-        F.col("Store").try_cast("int").alias("Store"),
-        F.col("PO #"),
-        inv.alias("Invoice Date"),
-        F.col("DESC"),
-        F.col("Value"),
-        F.col("LOT#"),
-        (F.col("Value") * pack).try_cast("long").alias("weight"),
-        pack.alias("pack size"),
-        F.col("carrier code"),
-    )
+    inv = fmt_mdy_no_pad_sql(date_lit(invoice_date)) if invoice_date else "CAST(NULL AS STRING)"
+    value = ident("Value")
+    return out.selectExpr(*[
+        f"{e} AS {ident(name)}"
+        for name, e in (
+            ("Store", f"try_cast({ident('Store')} AS INT)"),
+            ("PO #", ident("PO #")),
+            ("Invoice Date", inv),
+            ("DESC", ident("DESC")),
+            ("Value", value),
+            ("LOT#", ident("LOT#")),
+            ("weight", f"try_cast({value} * {pack} AS BIGINT)"),
+            ("pack size", pack),
+            ("carrier code", ident("carrier code")),
+        )
+    ])
 
 
 def build_baby_audit_manifest(

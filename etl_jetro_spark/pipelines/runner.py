@@ -26,6 +26,7 @@ from etl_jetro_spark.sources.excel import (
     read_allocation_pricesheet,
     read_single_with_token,
 )
+from etl_jetro_spark.sqltext import date_lit
 
 
 def _write_text(out_dir: str, name: str, text: str) -> str:
@@ -108,14 +109,12 @@ def run_leavins(
 ) -> dict:
     """Leavins batch: same shape as 247 allocation, but the EDD is a
     REQUIRED input (reference Leavins/tools/allocation_tool.py:133-134)."""
-    from pyspark.sql import functions as F
-
     alloc_grid, _ = read_allocation_pricesheet(in_folder)
     if alloc_grid is None:
         return {}
     wide = B.clean_allocation(alloc_grid)
     canon = B.build_allocation(
-        spark, wide, "leavins", edd=F.lit(edd.isoformat()).cast("date")
+        spark, wide, "leavins", edd=date_lit(edd.isoformat())
     )
     return emit_order(canon, out_dir, run_date)
 

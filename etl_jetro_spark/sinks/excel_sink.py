@@ -10,8 +10,8 @@ executes its plan once: :func:`collect_ordered` collects it as one Arrow
 table and orders it on the driver, and every artifact is written from that
 table — the Parquet directory (pyarrow), the workbook (the engine's native
 OOXML writer, ``sources/xlsx.py``, no optional dependencies) and the
-keystroke macros (``sinks/macro.py``). The Flips baby table is ordered the
-same way, by its own key.
+keystroke macros (``sinks/macro.py``). The Flips baby table and the DLPM
+price table are ordered the same way, by their own keys.
 """
 
 from __future__ import annotations

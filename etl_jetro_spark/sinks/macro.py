@@ -10,10 +10,10 @@ Flips/tools/adpo_I_tool.py:7-288). The clock is an injected parameter
 These are *ordered sinks*: output depends on total row order. Their
 inputs are small by construction (stores × items, not fact volume), so
 each is executed once and ordered on the driver: ADPO,X and ADPO,I render
-from the run's collected canonical Arrow table
-(``sinks.excel_sink.collect_ordered``), and DLPM collects the price table
-once, unsorted, with its ``numeric_first_key`` column. Every renderer is
-one pass over its sorted rows.
+from the run's collected canonical Arrow table, and DLPM collects the
+price table, ordered by its W1 keys, through the same
+``sinks.excel_sink.collect_ordered``. Every renderer is one pass over its
+sorted rows.
 """
 
 from __future__ import annotations
@@ -26,10 +26,11 @@ from operator import itemgetter
 
 import pyarrow as pa
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from etl_jetro_spark.functions.text import item7
-from etl_jetro_spark.operators.sort import numeric_first_key, numeric_first_order
+from etl_jetro_spark.functions.text import item7_sql, money2dp_sql
+from etl_jetro_spark.operators.sort import numeric_first_order, numeric_first_sort_keys
+from etl_jetro_spark.sinks.excel_sink import collect_ordered
+from etl_jetro_spark.sqltext import ident
 
 FREIGHT_ITEM = "0990033"   # reference allocation_tool.py:304
 FAXSHARE_UNC = "\\\\10.1.12.12\\faxshare\\DailyPOCount\\POs"
@@ -87,28 +88,34 @@ def render_dlpm(
     Returns (filename 'MM-DD-YY 247DLPM.txt', text). Input schema:
     (Store#, Item#, Vendor#, Cost). Rows render in numeric-store order
     (W1) — the engine's deterministic ordering of the reference's
-    caller-supplied order.
+    caller-supplied order: the price table is collected once through
+    ``collect_ordered``, its W1 keys (``numeric_first_sort_keys`` of the
+    store, then store and item) computed in the same plan.
     """
-    from etl_jetro_spark.functions.text import money2dp
-
-    store = F.trim(F.col("Store#").cast("string"))
-    rows = price_long.select(
-        store.alias("store"),
-        item7(F.col("Item#")).alias("item"),
-        F.trim(F.col("Vendor#").cast("string")).alias("vendor"),
-        money2dp(F.col("Cost")).alias("cost"),
-        numeric_first_key(store).alias("key"),
-    ).collect()
-    rows.sort(key=lambda r: numeric_first_order(r["key"], r["store"], r["item"]))
+    store = f"trim(CAST({ident('Store#')} AS STRING))"
+    keys = numeric_first_sort_keys(store)
+    cols = {
+        "store": store,
+        "item": item7_sql(ident("Item#")),
+        "vendor": f"trim(CAST({ident('Vendor#')} AS STRING))",
+        "cost": money2dp_sql(ident("Cost")),
+        **keys,
+    }
+    table = collect_ordered(
+        price_long.selectExpr(*[f"{e} AS {ident(name)}" for name, e in cols.items()]),
+        *keys, "store", "item",
+    )
     date_text = _mdy2(run_date)
     out: list[str] = []
-    for r in rows:
-        cost = (r["cost"] or "0.00").replace(",", "")
+    for store, item, vendor, cost in zip(
+        *(table.column(c).to_pylist() for c in ("store", "item", "vendor", "cost"))
+    ):
+        cost = (cost or "0.00").replace(",", "")
         out += [
-            "Key Tab", f"Type {r['store']}-{r['item']}", "Key Tab", "Key Delete",
+            "Key Tab", f"Type {store}-{item}", "Key Tab", "Key Delete",
             "Type H", "Key Tab", "Type A", "Key Enter", f"Type {date_text}",
             *["Key Tab"] * 3, f"Type {initials}",
-            *["Key Tab"] * 4, f"Type {r['vendor']}",
+            *["Key Tab"] * 4, f"Type {vendor}",
             *["Key Tab"] * 5, f"Type {cost}",
             "Key Enter", "Type n", *["Key Enter"] * 6,
         ]

@@ -16,10 +16,12 @@ import glob
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from etl_jetro_spark.functions.na import is_na_like
-from etl_jetro_spark.functions.text import DASH_CLASS, split_first_dash
+from etl_jetro_spark.functions.na import is_na_like_sql
+from etl_jetro_spark.functions.text import DASH_CLASS, split_first_dash_sql
+from etl_jetro_spark.sqltext import ident, string_lit
+
+_BOM = string_lit("^\ufeff")
 
 
 def latest_csv(folder: str) -> str | None:
@@ -46,7 +48,8 @@ def read_po_lines(spark: SparkSession, path: str) -> DataFrame:
     UTF-8 (with or without BOM) reads distributed; UTF-16 (BOM-detected)
     is transcoded driver-side first — these are tiny control files. Other
     bytes decode with replacement (the reference's ignore-errors last
-    resort). Lines that are NA-like or dash-free are dropped (P9).
+    resort). Lines that are NA-like or dash-free are dropped (P9). The
+    projections and the filter are SQL text.
     """
     if _sniff_encoding(path) == "utf-16":
         text = open(path, "rb").read().decode("utf-16")
@@ -55,18 +58,15 @@ def read_po_lines(spark: SparkSession, path: str) -> DataFrame:
         )
     else:
         lines = spark.read.text(path)
-    lines = lines.select(
-        F.regexp_replace(F.col("value"), "^﻿", "").alias("po")
-    )
-    parts = split_first_dash(F.trim(F.col("po")))
+    po = ident("po")
+    parts = split_first_dash_sql(po)
     return (
-        lines.withColumn("po", F.trim("po"))
-        .filter(~is_na_like("po"))
-        .filter(F.col("po").rlike(DASH_CLASS))
-        .select(
-            F.col("po").alias("PO #"),
-            F.trim(parts[0]).alias("Store"),
-            F.trim(parts[1]).alias("Item"),
+        lines.selectExpr(f"trim(regexp_replace({ident('value')}, {_BOM}, '')) AS {po}")
+        .filter(f"NOT {is_na_like_sql(po)} AND {po} RLIKE {string_lit(DASH_CLASS)}")
+        .selectExpr(
+            f"{po} AS {ident('PO #')}",
+            f"trim({parts}[0]) AS {ident('Store')}",
+            f"trim({parts}[1]) AS {ident('Item')}",
         )
     )
 

@@ -10,7 +10,8 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from etl_jetro_spark.sqltext import ident
 
 CARRIER_TOKENS = ("salmon", "northern", "southern")
 
@@ -35,5 +36,6 @@ def read_carrier_json(
     dict — parsed as a MapType and exploded, all JVM-side."""
     path = pick_carrier_file(file_token, base_dir)
     raw = spark.read.text(path, wholetext=True)
-    m = F.from_json(F.col("value"), "map<string,string>")
-    return raw.select(F.explode(m).alias("Store", "carrier_code"))
+    return raw.selectExpr(
+        f"explode(from_json({ident('value')}, 'map<string,string>')) AS ({ident('Store')}, {ident('carrier_code')})"
+    )

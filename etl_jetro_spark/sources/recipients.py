@@ -33,8 +33,9 @@ def recipients_dim(spark: SparkSession, grid: pd.DataFrame) -> DataFrame:
     ]
     df = spark.createDataFrame(rows, "vendor_raw string, email_text string")
     return (
-        df.select(
-            strip_dot_zero(F.trim("vendor_raw")).alias("vendor_num"),
+        df.select(F.trim("vendor_raw").alias("vendor_raw"), "email_text")
+        .select(
+            strip_dot_zero("vendor_raw").alias("vendor_num"),
             extract_emails("email_text").alias("to_emails"),
         )
         .filter((F.col("vendor_num") != "") & (F.size("to_emails") > 0))

@@ -21,3 +21,12 @@ def string_lit(value: str) -> str:
     (``spark.sql.parser.escapedStringLiterals=false``): ``\\`` and ``'``
     are backslash-escaped, every other character is taken as is."""
     return "'" + value.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def date_lit(iso: str | None) -> str:
+    """A run date (ISO ``yyyy-mm-dd``, or ``None``) as a DATE expression.
+
+    ``CAST('…' AS DATE)`` rather than a ``DATE'…'`` literal: the cast is
+    nullable until Catalyst folds it, and a plan it folds into a local
+    relation (ACME's) keeps that nullability in its schema."""
+    return "CAST(NULL AS DATE)" if iso is None else f"CAST({string_lit(iso)} AS DATE)"

@@ -15,11 +15,13 @@ exempt by construction: their hint turns itself off past
 
 from __future__ import annotations
 
+import sys
+from pathlib import Path
+
 import pytest
 
-import sys
-
-sys.path.insert(0, "/root/repo/tools")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO / "tools"))
 
 from broadcastlint import (  # noqa: E402
     growth_violations,
@@ -194,7 +196,7 @@ def test_pragma_outside_allowlist_is_flagged(tmp_path, monkeypatch):
     out = bl.operator_violations()
     assert len(out) == 1 and "allowlist" in out[0]
     # the two real sites (nparts-bounded, allowlisted) stay clean
-    monkeypatch.chdir("/root/repo")
+    monkeypatch.chdir(REPO)
     assert bl.operator_violations() == []
 
 

@@ -2,7 +2,6 @@
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
 import pytest
 
 from etl_jetro_spark import functions as EF
@@ -88,14 +87,14 @@ def test_extract_emails(spark):
 
 def test_default_edd(spark):
     # 2026-08-13 is a Thursday -> +2 = Saturday -> roll to Monday 2026-08-17
-    got = one(spark, EF.default_edd(F.col("v").cast("date")), "2026-08-13", "2026-08-10")
+    got = one(spark, EF.default_edd("v"), "2026-08-13", "2026-08-10")
     assert [str(g) for g in got] == ["2026-08-17", "2026-08-12"]
 
 
 def test_next_mwf(spark):
     # Mon->Wed, Tue->Wed, Wed->Fri, Thu->Fri, Fri->Mon, Sat->Mon, Sun->Mon
     days = ["2026-08-10", "2026-08-11", "2026-08-12", "2026-08-13", "2026-08-14", "2026-08-15", "2026-08-16"]
-    got = one(spark, EF.next_mwf(F.col("v").cast("date")), *days)
+    got = one(spark, EF.next_mwf("v"), *days)
     assert [str(g) for g in got] == [
         "2026-08-12", "2026-08-12", "2026-08-14", "2026-08-14",
         "2026-08-17", "2026-08-17", "2026-08-17",
@@ -146,6 +145,16 @@ def test_sql_function_registration(spark):
     assert got["a"] == "0000012"
     assert got["b"] == 77
     assert got["c"] is None
+    # the SQL forms agree with the Column forms: item7 never truncates, and
+    # norm_ws/norm_key strip NBSP and zero-width characters
+    messy = "a\xa0\xa0b #1\u200b"
+    got = spark.sql(
+        "SELECT item7('12345678') AS a, norm_ws(v) AS w, norm_key(v) AS k FROM VALUES (:v) AS t(v)",
+        args={"v": messy},
+    ).collect()[0]
+    assert (got["a"], got["w"], got["k"]) == ("12345678", "ab #1", "ab1")
+    assert one(spark, EF.norm_ws("v"), messy) == ["ab #1"]
+    assert one(spark, EF.norm_key("v"), messy) == ["ab1"]
 
 
 def test_stopword_regex_escapes_metacharacters():

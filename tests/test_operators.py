@@ -7,7 +7,8 @@ import pytest
 
 from etl_jetro_spark import functions as EF
 from etl_jetro_spark import operators as O
-from tests.conftest import rows
+from etl_jetro_spark.sqltext import date_lit
+from tests.conftest import py4j_commands, rows
 
 
 @pytest.fixture()
@@ -68,6 +69,20 @@ def _store_map(spark, width: int):
     return fact, {f"{100 + i}": str(i) for i in range(width)}
 
 
+def _long_cells(spark, width: int):
+    """The store sheet melted to (Item, DESC, Lot #, Store, v) cells."""
+    return O.melt(_store_sheet(spark, width), ["Item", "DESC", "Lot #"],
+                  var_name="Store", value_name="v", numeric_vars_only=True)
+
+
+def _canonical_input(spark, width: int):
+    """A long fact frame carrying ``width`` extra columns."""
+    extra = [f"x{i}" for i in range(width)]
+    return spark.createDataFrame(
+        [tuple(["86", "12", "5"] + ["e"] * width)], ["Branch", "Item", "Distro Size"] + extra
+    )
+
+
 # builder -> (input made outside the count, the plan build that is counted)
 _WIDTH_BUILDERS = {
     "melt": (_store_sheet, lambda df: O.melt(
@@ -76,37 +91,26 @@ _WIDTH_BUILDERS = {
         df, ["Item", "DESC"], after="DESC", before="Lot #", var_name="Store")),
     "normalize_na_strings": (_store_sheet, EF.normalize_na_strings),
     "map_join": (_store_map, lambda fm: O.map_join(fm[0], fm[1], "Store", "carrier")),
+    "to_canonical": (_canonical_input, lambda df: O.to_canonical(
+        df, O.PIPELINES["flips_big"], edd=date_lit("2026-08-17"))),
+    "sum_by_parse": (_long_cells, lambda df: O.sum_by(
+        df, ["Item", "Store"], "v", out="s", parse=True, ceil=True)),
+    "parse_money": (_store_sheet, lambda df: df.withColumn("p", EF.parse_money("Item"))),
 }
 
 
 @pytest.mark.parametrize("builder", sorted(_WIDTH_BUILDERS))
 def test_plan_building_is_width_independent(spark, monkeypatch, builder):
-    """Building (no action) a melt, an NA normalization or a map join costs
-    the same number of Py4J round trips at 8 and at 64 store columns or map
-    keys: each sends its width-dependent expression as one SQL text. One
-    uncounted build first keeps first-call lookups out of the count, and
-    the JVM-object releases that Python's garbage collector sends at any
-    time are not counted."""
-    from py4j import protocol
-    from py4j.java_gateway import GatewayClient
-
+    """Building (no action) a melt, an NA normalization, a map join, the
+    canonical projection, a parsed sum or a parsed column costs the same
+    number of Py4J round trips at 8 and at 64 store columns or map keys:
+    each sends its expression as SQL text. One uncounted build first keeps
+    first-call lookups out of the count."""
     make_input, build = _WIDTH_BUILDERS[builder]
-    send = GatewayClient.send_command
-    calls = []
-
-    def counting(self, command, *args, **kwargs):
-        if not command.startswith(protocol.MEMORY_COMMAND_NAME):
-            calls.append(command)
-        return send(self, command, *args, **kwargs)
-
     counts = {}
     for width in (8, 8, 64):
         arg = make_input(spark, width)
-        calls.clear()
-        monkeypatch.setattr(GatewayClient, "send_command", counting)
-        build(arg)
-        monkeypatch.setattr(GatewayClient, "send_command", send)
-        counts[width] = len(calls)
+        counts[width] = py4j_commands(monkeypatch, lambda: build(arg))
     assert counts[8] == counts[64], counts
 
 
@@ -189,7 +193,7 @@ def test_to_canonical(spark):
     fact = spark.createDataFrame(
         [("86", "12", "5"), ("402", "34", "7")], ["Branch", "Item", "Distro Size"]
     )
-    out = O.to_canonical(fact, O.PIPELINES["247"], edd=F.lit("2026-08-17"))
+    out = O.to_canonical(fact, O.PIPELINES["247"], edd=date_lit("2026-08-17"))
     assert out.columns == O.CANONICAL_COLS
     r = out.collect()[0]
     assert r["Branch"] == 186 and r["Supplier On Record"] == 81214

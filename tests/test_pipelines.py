@@ -2,12 +2,12 @@
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
 import pytest
 
 from etl_jetro_spark.operators.canonical import CANONICAL_COLS
 from etl_jetro_spark.pipelines import batch as P
 from etl_jetro_spark.sources.excel import grid_from_rows
+from etl_jetro_spark.sqltext import date_lit
 
 
 @pytest.fixture()
@@ -47,7 +47,7 @@ def test_leavins_requires_edd(spark, allocation_grid):
     with pytest.raises(ValueError, match="leavins"):
         P.build_allocation(spark, wide, "leavins")
     out = P.build_allocation(
-        spark, wide, "leavins", edd=F.lit("2026-09-01").cast("date")
+        spark, wide, "leavins", edd=date_lit("2026-09-01")
     )
     assert out.collect()[0]["Supplier On Record"] == 79906
 

@@ -14,10 +14,11 @@ their global totals from scalar aggregates joined back broadcast.
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
 
 from planlint import _spine_verdict, lint_plan  # noqa: E402
 

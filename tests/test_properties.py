@@ -16,6 +16,7 @@ from hypothesis import strategies as st
 from etl_jetro_spark import functions as EF
 from etl_jetro_spark import operators as O
 from etl_jetro_spark.operators.unpivot import _is_numeric_name
+from etl_jetro_spark.sinks.excel_sink import collect_ordered
 
 slow_ok = settings(
     max_examples=12,
@@ -165,8 +166,9 @@ sort_values = st.one_of(
     min_size=1, max_size=15,
 ))
 def test_numeric_first_order_matches_spark_sort(spark, rows):
-    """The driver-side sort key orders rows exactly like Spark's
-    ``numeric_first_key(c).asc_nulls_last(), c, item``."""
+    """The driver-side sort key, and ``collect_ordered`` on
+    ``numeric_first_sort_keys`` (the DLPM order), order rows exactly like
+    Spark's ``numeric_first_key(c).asc_nulls_last(), c, item``."""
     df = spark.createDataFrame(
         [(None if c is None else str(c), item) for c, item in rows],
         "c string, item string",
@@ -178,6 +180,14 @@ def test_numeric_first_order_matches_spark_sort(spark, rows):
             assert r["k"] == float(c)
     got = sorted(keyed, key=lambda r: O.numeric_first_order(r["k"], r["c"], r["item"]))
     assert [(r["c"], r["item"]) for r in got] == [(r["c"], r["item"]) for r in want]
+    keys = O.numeric_first_sort_keys("c")
+    table = collect_ordered(
+        df.selectExpr("c", "item", *[f"{e} AS {name}" for name, e in keys.items()]),
+        *keys, "c", "item",
+    )
+    assert list(zip(*(table.column(n).to_pylist() for n in ("c", "item")))) == [
+        (r["c"], r["item"]) for r in want
+    ]
 
 
 grid_cells = st.one_of(

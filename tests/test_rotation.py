@@ -11,8 +11,9 @@ r07's 40 slots on q125-q155, signed in r04).
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 import __spark_entry__ as entry  # noqa: E402
 

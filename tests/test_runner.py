@@ -14,6 +14,7 @@ import pytest
 
 from etl_jetro_spark.pipelines import runner as R
 from etl_jetro_spark.pipelines.runner import run_247, run_acme
+from tests.conftest import py4j_commands
 
 RUN_DATE = date(2026, 1, 6)
 
@@ -335,24 +336,59 @@ def _jobs_fired(spark, fn) -> int:
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
+def _shuffle_exchanges(plan: str) -> list[str]:
+    """Lines of an executed plan that shuffle: every Exchange but a
+    broadcast."""
+    return [ln.strip() for ln in plan.splitlines() if "Exchange" in ln and "BroadcastExchange" not in ln]
+
+
 @pytest.mark.parametrize(
     "case,max_jobs",
     [
         ("runner_acme", 1),
-        ("runner_247", 3),
-        ("fx_southern_cross", 2),
-        ("fx_flips_baby", 4),
+        ("runner_247", 2),
+        ("fx_leavins", 1),
+        ("fx_southern_cross", 1),
+        ("fx_flips_big", 1),
+        ("fx_flips_baby", 3),
     ],
-    ids=["acme", "247", "southern_cross", "flips_baby"],
+    ids=["acme", "247", "leavins", "southern_cross", "flips_big", "flips_baby"],
 )
-def test_one_execution_per_artifact_table(spark, tmp_path, sf_dir, case, max_jobs):
-    """Each plan runs once (one Arrow collect, ordered on the driver):
-    ACME fires exactly one job; 247 at most three (the allocation's
-    aggregation adds a shuffle-map job under AQE, the price sheet one
-    more); SouthernCross, the allocation build, at most two; Flips baby
-    at most four (its PO and carrier reads add theirs). A first, uncounted
+def test_one_execution_per_artifact_table(spark, tmp_path, sf_dir, monkeypatch, case, max_jobs):
+    """Each plan runs once (one Arrow collect, ordered on the driver) and
+    shuffles nothing: a sheet's cells are summed as one partition, so no
+    executed plan holds an Exchange but the Flips baby broadcasts of its
+    PO and carrier dimensions. ACME, Leavins, SouthernCross and Flips big
+    fire one job; 247 two (allocation and price sheet); Flips baby at most
+    three (its PO and carrier reads add theirs). A first, uncounted run
+    keeps session warm-up out of the count."""
+    from etl_jetro_spark.sinks import excel_sink
+
+    fn, drop, extra = _golden_cases(tmp_path, sf_dir)[case]
+    _run_case(spark, fn, drop, extra, str(tmp_path / "warm"))
+    plans = []
+    collect = excel_sink.collect_arrow
+
+    def recording(df):
+        table = collect(df)
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return table
+
+    monkeypatch.setattr(excel_sink, "collect_arrow", recording)
+    jobs = _jobs_fired(spark, lambda: _run_case(spark, fn, drop, extra, str(tmp_path / "out")))
+    assert 1 <= jobs <= max_jobs
+    assert plans and all(_shuffle_exchanges(p) == [] for p in plans), plans
+
+
+@pytest.mark.parametrize(
+    "case", ["fx_247", "fx_leavins", "fx_acme", "fx_southern_cross", "fx_flips_big", "fx_flips_baby"]
+)
+def test_warm_run_py4j_budget(spark, tmp_path, sf_dir, monkeypatch, case):
+    """A warm run builds its plans from SQL text, so it sends a small,
+    data-independent number of Py4J commands: at most 250, where one
+    ``F.*`` call per expression node cost 474–1,222. A first, uncounted
     run keeps session warm-up out of the count."""
     fn, drop, extra = _golden_cases(tmp_path, sf_dir)[case]
     _run_case(spark, fn, drop, extra, str(tmp_path / "warm"))
-    jobs = _jobs_fired(spark, lambda: _run_case(spark, fn, drop, extra, str(tmp_path / "out")))
-    assert 1 <= jobs <= max_jobs
+    sent = py4j_commands(monkeypatch, lambda: _run_case(spark, fn, drop, extra, str(tmp_path / "out")))
+    assert sent <= 250

@@ -15,6 +15,7 @@ from etl_jetro_spark.sources.csv_po import read_latest_po_csv
 from etl_jetro_spark.sources.excel import grid_from_rows, grids_to_spark
 from etl_jetro_spark.sources.json_dim import read_carrier_json
 from etl_jetro_spark.sources.recipients import recipients_dim
+from etl_jetro_spark.sqltext import date_lit
 
 
 def test_read_latest_po_csv(spark, tmp_path):
@@ -106,7 +107,7 @@ def test_render_adpo_x_groups(spark):
         [("9", "12", "5"), ("9", "13", "2"), ("114", "12", "7")],
         ["Branch", "Item", "Distro Size"],
     )
-    canon = to_canonical(fact, PIPELINES["247"], edd=F.lit("2026-08-17").cast("date"))
+    canon = to_canonical(fact, PIPELINES["247"], edd=date_lit("2026-08-17"))
     name, text = render_adpo_x(canon.toArrow(), run_date=date(2026, 8, 13))
     assert name == "2026-08-13_ADPO_X_Vendor81214.txt"
     # two branch groups -> two headers, freight trailers, clipboard blocks
@@ -151,7 +152,7 @@ def test_render_adpo_i(spark):
         [("114", "12", "5")], ["Branch", "Item", "Distro Size"]
     ).withColumn("XDCK", F.lit(1.5)).withColumn("FOB", F.lit(10.0))
     canon = to_canonical(
-        fact, PIPELINES["flips_big"], edd=F.lit("2026-08-14").cast("date")
+        fact, PIPELINES["flips_big"], edd=date_lit("2026-08-14")
     )
     name, text = render_adpo_i(canon.toArrow(), run_date=date(2026, 8, 13))
     assert name == "2026-08-13_ADPO_I_output.txt"

@@ -33,8 +33,10 @@ from __future__ import annotations
 
 import re
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 SF_A = "/root/testdata/sf0.001"
 SF_B = "/root/testdata/sf0.01"

@@ -11,12 +11,14 @@ from __future__ import annotations
 import os
 import sys
 import time
+from pathlib import Path
 
 import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 SF_DIR = "/root/testdata/sf0.01"
 TABLES = (

@@ -20,8 +20,10 @@ from __future__ import annotations
 import os
 import shutil
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 import pyspark.sql.functions as F  # noqa: E402
 
@@ -32,7 +34,7 @@ BASE = "/root/testdata/sf0.1"
 
 def main() -> None:
     scale = int(sys.argv[1]) if len(sys.argv) > 1 else 10
-    out_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/.scratch/sf1"
+    out_dir = sys.argv[2] if len(sys.argv) > 2 else str(REPO / ".scratch" / "sf1")
     os.makedirs(out_dir, exist_ok=True)
     spark = get_spark(app_name="make-sf1")
 

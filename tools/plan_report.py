@@ -9,8 +9,10 @@ from __future__ import annotations
 
 import re
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 
 def _walk(node):
@@ -103,7 +105,7 @@ def main() -> None:
     import json
     import os
 
-    cache_path = "/root/repo/PLANS.cache.json"
+    cache_path = REPO / "PLANS.cache.json"
     cache: dict = {}
     if os.path.exists(cache_path):
         try:
@@ -220,7 +222,7 @@ def main() -> None:
         f"hash changed vs PLANS.cache.json{mode}).",
     )
     lines.insert(3, "")
-    with open("/root/repo/PLANS.md", "w") as fh:
+    with open(REPO / "PLANS.md", "w") as fh:
         fh.write("\n".join(lines) + "\n")
     with open(cache_path, "w") as fh:
         json.dump(new_cache, fh, indent=0, sort_keys=True)

@@ -29,8 +29,10 @@ from __future__ import annotations
 
 import re
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 # Wrapper nodes that pass their input through cardinality-unchanged (or
 # only reduced) without breaking the "same frame" spine.

@@ -9,7 +9,7 @@ size is constant while event volume grows; documents get per-copy text
 suffixes so dedup/LSH see near- but not exact-duplicates across copies).
 
 Run: python tools/scalecheck.py [SCALE]      (default 8)
-Writes scratch parquet under /root/repo/.scratch/ (gitignored).
+Writes scratch parquet under the checkout's .scratch/ (gitignored).
 """
 
 from __future__ import annotations
@@ -18,15 +18,17 @@ import json
 import shutil
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
 
 import pyspark.sql.functions as F  # noqa: E402
 
 from etl_jetro_spark.session import get_spark  # noqa: E402
 
 BASE = "/root/testdata/sf0.1"
-SCRATCH = "/root/repo/.scratch/scalecheck"
+SCRATCH = str(REPO / ".scratch" / "scalecheck")
 
 
 def scaled_events(spark, scale: int, out: str):

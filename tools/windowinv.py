@@ -18,9 +18,11 @@ the whole catalog at sf0.001 (plan construction only).
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
+sys.path.insert(0, str(REPO / "tools"))
 
 from planlint import _spine_verdict, _walk  # noqa: E402
 
