@@ -41,7 +41,7 @@ def main(argv: list[str] | None = None) -> int:
     qry.add_argument("--explain", action="store_true")
     args = p.parse_args(argv)
 
-    from etl_jetro_spark.session import get_spark
+    from etl_jetro_spark.session import CDS_CONF, get_spark
 
     if args.cmd == "query":
         from etl_jetro_spark.plans.queries import QUERIES
@@ -58,7 +58,9 @@ def main(argv: list[str] | None = None) -> int:
             df.explain("formatted")
         if args.out:
             df.write.mode("overwrite").parquet(args.out)
-            print(json.dumps({"query": args.name, "out": args.out}))
+            print(json.dumps(
+                {"query": args.name, "out": args.out, "cds": spark.conf.get(CDS_CONF)}
+            ))
         else:
             df.show(args.show, truncate=False)
         return 0
@@ -89,7 +91,7 @@ def main(argv: list[str] | None = None) -> int:
         m = R.run_flips_baby(
             spark, args.in_folder, args.po_folder, args.carrier_dir, args.out_dir
         )
-    print(json.dumps(m, default=str))
+    print(json.dumps({**m, "cds": spark.conf.get(CDS_CONF)}, default=str))
     return 0
 
 

@@ -188,12 +188,13 @@ def _sheet_xml(rows: list[list[object]]) -> str:
         '<?xml version="1.0" encoding="UTF-8" standalone="yes"?>',
         f'<worksheet xmlns="{_NS["m"]}"><sheetData>',
     ]
+    letters = [col_letters(ci) for ci in range(max(map(len, rows), default=0))]
     for ri, row in enumerate(rows):
         cells = []
         for ci, v in enumerate(row):
             if v is None or (isinstance(v, float) and v != v):
                 continue
-            ref = f"{col_letters(ci)}{ri + 1}"
+            ref = f"{letters[ci]}{ri + 1}"
             if isinstance(v, bool):
                 cells.append(f'<c r="{ref}" t="b"><v>{int(v)}</v></c>')
             elif isinstance(v, (int, float)):
