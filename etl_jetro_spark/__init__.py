@@ -3,9 +3,8 @@ data-processing capabilities of the ``yzysnake/ETL-Jetro`` reference suite.
 
 The reference is a pandas purchasing-automation toolkit (see SURVEY.md); this
 package re-expresses its relational semantics — scan → normalize → unpivot →
-filter → aggregate → join → derive → sort → ordered sink, plus a streaming
-state-machine layer — as idiomatic Spark SQL / DataFrame / Structured
-Streaming code designed for 100 TB scale.
+filter → aggregate → join → derive → sort → ordered sink — as Spark SQL and
+DataFrame code, plus a Spark-free PO poller and control tick.
 
 Layout
 ------
@@ -14,8 +13,17 @@ Layout
 - ``operators``  relational core: unpivot, agg, join, sort, dedup, similarity
 - ``sources``    ingest: excel/csv/json/sheet readers (§2.1 S1–S6)
 - ``sinks``      canonical excel, keystroke-macro, pdf sinks (§2.9 K1–K6)
-- ``streaming``  file-watch + PO state machine (§2.1 S7, §2.10 T1–T7)
+- ``streaming``  PO poller + control tick (§2.1 S7, §2.10 T1–T7)
 - ``pipelines``  the six supplier pipelines re-expressed on the engine
+- ``plans``      the query catalog behind ``__spark_entry__.py``
+
+The supplier system is ``pipelines``, ``streaming``, ``sources``,
+``sinks``, ``normalize``, ``functions.{text,na,dates}`` and
+``operators.{unpivot,aggregate,joins,sort,canonical}``; ``plans.queries``
+and the other operator and function modules serve the catalog.
+``operators`` and ``functions`` re-export nothing: callers import each
+module by name, so a supplier run loads none of the catalog's modules
+(``tests/test_reachability.py`` pins that set).
 """
 
 __version__ = "0.1.0"

@@ -8,9 +8,8 @@ column *name* and is one ``F.expr`` of that text: one Py4J call, where a
 chain of ``F.*`` calls costs one round trip per call, and the same
 Catalyst expression. A caller with an expression, not a column, projects
 it into a named column first or uses the renderer inside a
-``selectExpr``. ``functions.register_sql_functions`` builds its SQL
-function bodies from the same renderers. No Python UDFs: the whole
-family stays inside whole-stage codegen.
+``selectExpr``. No Python UDFs: the whole family stays inside
+whole-stage codegen.
 
 Reference behaviors re-expressed (file:line cites into /root/reference/):
 - F1 whitespace/hidden-char normalization: Flips/tools/big_flip_tool.py:10-15,

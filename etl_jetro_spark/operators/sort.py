@@ -7,8 +7,7 @@ the baby-flip table by :func:`lot_last4_key` and the DLPM price rows by
 W1's keys, each key computed in the table's plan.
 :func:`numeric_first_order` is W1 as a Python sort key, the driver-side
 twin of :func:`numeric_first_key` that the ADPO,X renderer orders its
-branch groups with. :func:`sort_numeric_first` is W1 as a Spark sort; no
-runner calls it. The key helpers are SQL-text renderers with a Column
+branch groups with. The key helpers are SQL-text renderers with a Column
 form over a column name, as in ``functions/text.py``.
 """
 
@@ -16,7 +15,7 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from etl_jetro_spark.sqltext import ident, string_lit
@@ -54,13 +53,6 @@ def numeric_first_order(key: float | None, text: str | None, item: str | None) -
         key is None, nan, 0.0 if key is None or nan else key,
         text is not None, text or "",
         item is not None, item or "",
-    )
-
-
-def sort_numeric_first(df: DataFrame, col: str, *extra: Column) -> DataFrame:
-    """Order by numeric value when parseable, then raw text (W1)."""
-    return df.orderBy(
-        numeric_first_key(col).asc_nulls_last(), F.col(col).asc(), *extra
     )
 
 

@@ -1,9 +1,9 @@
 """The six supplier batch pipelines re-expressed on the engine.
 
 Each pipeline is (a) a pandas *clean* step on the raw positional grid
-(ingest layer — sheets are small; scale = many files via
-sources.excel.grids_to_spark) and (b) a Spark *build* step: melt → aggregate
-→ join → derive → canonical columns (relational layer — scales).
+(ingest layer: one sheet, a few KB, cleaned on the driver) and (b) a Spark
+*build* step: melt → aggregate → join → derive → canonical columns
+(relational layer, from ``operators.{unpivot,aggregate,joins,canonical,sort}``).
 
 Reference cites per pipeline are in the docstrings; constants come from
 operators.canonical.PIPELINES (code-observed, SURVEY §7 hard-part 6).
@@ -18,7 +18,11 @@ from pyspark.sql import functions as F
 from etl_jetro_spark.functions.dates import default_edd_sql, fmt_mdy_no_pad_sql, next_mwf_sql
 from etl_jetro_spark.functions.text import parse_money, parse_money_sql
 from etl_jetro_spark.normalize import grid as G
-from etl_jetro_spark import operators as O
+from etl_jetro_spark.operators.aggregate import sum_by
+from etl_jetro_spark.operators.canonical import PIPELINES, to_canonical
+from etl_jetro_spark.operators.joins import broadcast_lookup, map_join
+from etl_jetro_spark.operators.sort import lot_last4_key
+from etl_jetro_spark.operators.unpivot import melt, melt_between
 from etl_jetro_spark.sqltext import date_lit, ident, string_lit
 
 
@@ -29,7 +33,7 @@ def _to_spark(spark: SparkSession, pdf: pd.DataFrame) -> DataFrame:
 
 
 def _sum_cells(long: DataFrame, keys: list[str], value: str, out: str, **kw) -> DataFrame:
-    """``O.sum_by`` over one sheet's melted cells, read as one partition.
+    """``sum_by`` over one sheet's melted cells, read as one partition.
 
     A sheet is a local relation that Spark scans in several slices, so the
     hash aggregate would need an Exchange to group a few thousand cells,
@@ -40,7 +44,7 @@ def _sum_cells(long: DataFrame, keys: list[str], value: str, out: str, **kw) -> 
     folds that plan into a local relation while optimizing, which a
     Coalesce under it would stop (changing the nullability its schema
     declares)."""
-    return O.sum_by(long.coalesce(1), keys, value, out=out, **kw)
+    return sum_by(long.coalesce(1), keys, value, out=out, **kw)
 
 
 # --------------------------------------------------------------------------
@@ -79,12 +83,12 @@ def build_allocation(
         edd = default_edd_sql(date_lit(base_date))
     df = _to_spark(spark, wide)
     item_col = next(c for c in df.columns if G._norm_name(c) in ("item", "itemitem"))
-    long = O.melt(
+    long = melt(
         df, [item_col], var_name="Branch", value_name="qty", numeric_vars_only=True
     ).withColumnRenamed(item_col, "Item")
     agg = _sum_cells(long, ["Branch", "Item"], "qty", out="Distro Size")
     agg = agg.withColumn("Distro Size", F.expr(f"CAST({ident('Distro Size')} AS BIGINT)"))
-    return O.to_canonical(agg, O.PIPELINES[pipeline], edd=edd)
+    return to_canonical(agg, PIPELINES[pipeline], edd=edd)
 
 
 # --------------------------------------------------------------------------
@@ -112,8 +116,8 @@ def build_pricesheet_long(spark: SparkSession, wide: pd.DataFrame) -> DataFrame:
     exclusion (P10) and zero-cost filter (P8)."""
     df = _to_spark(spark, wide)
     item_col = next(c for c in df.columns if G._norm_name(c) == "item")
-    long = O.melt(df, [item_col], var_name="Store#", value_name="cost_raw",
-                  numeric_vars_only=True)
+    long = melt(df, [item_col], var_name="Store#", value_name="cost_raw",
+                numeric_vars_only=True)
     store, cost = ident("Store#"), ident("Cost")
     remap = " ".join(
         f"WHEN {store} = {string_lit(src)} THEN {string_lit(dst)}" for src, dst in STORE_REMAP.items()
@@ -147,7 +151,7 @@ def clean_acme_like(raw: pd.DataFrame, leading_junk_cols: int) -> pd.DataFrame:
 def docks_from_token(pipeline: str, token: str) -> tuple[int, ...]:
     """P7: resolve the dock filter from the cleaned filename token;
     ambiguity or no match is an error (reference acme_tool.py:25-41)."""
-    cfg = O.PIPELINES[pipeline]
+    cfg = PIPELINES[pipeline]
     hits = [d for key, d in cfg.docks_by_token.items() if key in token]
     if len(hits) != 1:
         raise ValueError(
@@ -165,7 +169,7 @@ def build_acme_like(
 ) -> DataFrame:
     """Dock predicate (P7) → ≠0 distro (P8) → constants + branch fix →
     canonical. Phillips keeps dock as Warehouse and appends XdockCode."""
-    cfg = O.PIPELINES[pipeline]
+    cfg = PIPELINES[pipeline]
     docks = docks_from_token(pipeline, file_token)
     df = _to_spark(spark, wide)
     # NB: the reference's zero filter is pandas ``ne(0)`` on a coerced
@@ -178,7 +182,7 @@ def build_acme_like(
         df = df.withColumns(
             {"Warehouse": F.expr(ident("dock")), "XdockCode": F.expr("CAST(NULL AS DOUBLE)")}
         )
-    return O.to_canonical(df, cfg, edd=default_edd_sql(date_lit(base_date)))
+    return to_canonical(df, cfg, edd=default_edd_sql(date_lit(base_date)))
 
 
 # --------------------------------------------------------------------------
@@ -286,19 +290,19 @@ def build_big_flip(
     df = _to_spark(spark, wide)
     item = next(c for c in df.columns if G._norm_name(c) == "item")
     lot = next(c for c in df.columns if G._norm_name(c) == "lot")
-    long = O.melt(df, [item, lot], var_name="Branch", value_name="v",
-                  numeric_vars_only=True)
+    long = melt(df, [item, lot], var_name="Branch", value_name="v",
+                numeric_vars_only=True)
     agg = _sum_cells(long, ["Branch", item, lot], "v", out="Distro Size",
                      parse=True, ceil=True)
     agg = (
         agg.withColumnRenamed(item, "Item")
         .withColumnRenamed(lot, "Lot #")
     )
-    agg = O.map_join(agg, store_block["xdock"], "Branch", "XDCK")
-    agg = O.map_join(agg, store_block["fob"], "Branch", "FOB")
+    agg = map_join(agg, store_block["xdock"], "Branch", "XDCK")
+    agg = map_join(agg, store_block["fob"], "Branch", "FOB")
     agg = agg.withColumns({"XDCK": parse_money("XDCK"), "FOB": parse_money("FOB")})
-    return O.to_canonical(
-        agg, O.PIPELINES["flips_big"], edd=next_mwf_sql(date_lit(base_date))
+    return to_canonical(
+        agg, PIPELINES["flips_big"], edd=next_mwf_sql(date_lit(base_date))
     )
 
 
@@ -343,7 +347,7 @@ def build_baby_flip(
     df = df.filter(
         f"trim(coalesce({ident(item)}, '')) != '' AND trim(coalesce({ident(lot)}, '')) != ''"
     )
-    long = O.melt_between(
+    long = melt_between(
         df, present, after=("pack size" if "pack size" in df.columns else "DESC"),
         before=lot, var_name="Store", value_name="v", numeric_vars_only=True,
     )
@@ -354,9 +358,9 @@ def build_baby_flip(
     agg = _sum_cells(long, present + ["Store"], "v", out="Value", ceil=False)
     agg = agg.withColumn("Value", F.expr(f"CAST({ident('Value')} AS BIGINT)"))
     agg = agg.withColumnRenamed(item, "Item").withColumnRenamed(lot, "LOT#")
-    out = O.broadcast_lookup(agg, po_df, "Store")
+    out = broadcast_lookup(agg, po_df, "Store")
     carrier = carrier_df.withColumnRenamed("carrier_code", "carrier code")
-    out = O.broadcast_lookup(out, carrier, "Store")
+    out = broadcast_lookup(out, carrier, "Store")
     pack = (
         f"try_cast({ident('pack size')} AS DOUBLE)"
         if "pack size" in present
@@ -404,7 +408,7 @@ def build_baby_audit_manifest(
     from etl_jetro_spark.functions.na import normalize_na_strings
 
     rd_master = _to_spark(spark, wide)
-    output = output.orderBy(F.col("Store").asc(), O.lot_last4_key("LOT#"))
+    output = output.orderBy(F.col("Store").asc(), lot_last4_key("LOT#"))
     return {
         "Araho Sheet": output.withColumnRenamed("Store", "Column"),
         "RD master": rd_master,

@@ -13,7 +13,7 @@ from datetime import date
 
 from pyspark.sql import DataFrame, SparkSession
 
-from etl_jetro_spark import operators as O
+from etl_jetro_spark.operators.sort import lot_last4_key
 from etl_jetro_spark.pipelines import batch as B
 from etl_jetro_spark.sinks.excel_sink import (
     CANONICAL_ORDER,
@@ -151,7 +151,7 @@ def run_flips_baby(
     po = read_latest_po_csv(spark, po_folder).select("PO #", "Store")
     carrier = read_carrier_json(spark, token, carrier_dir)
     table = collect_ordered(
-        B.build_baby_flip(spark, wide, po, carrier), "Store", O.lot_last4_key("LOT#")
+        B.build_baby_flip(spark, wide, po, carrier), "Store", lot_last4_key("LOT#")
     )
     pq = os.path.join(out_dir, "baby_flip_araho.parquet")
     write_parquet_dir(table, pq)

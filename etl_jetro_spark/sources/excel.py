@@ -5,14 +5,13 @@ of positional columns (0..N), exactly what ``read_excel(header=None)`` gives
 — order is meaningful until the normalize layer promotes headers and the data
 goes relational.
 
-Excel parsing uses the engine's own OOXML codec (``sources/xlsx.py`` —
-zip + sheet XML, a public format) so the xlsx paths run with no optional
-dependencies: lock-file skip, hidden/veryHidden sheet skip, active-visible
-selection and named-sheet reads all behave like the reference. openpyxl is
-preferred when present (richer format support). For *many files* (the
-100 TB shape: thousands of small sheets), ``grids_to_spark`` runs the
-per-file normalize inside ``mapInPandas`` over a binaryFile scan — one task
-per file group, no driver bottleneck.
+Excel parsing always uses the engine's own OOXML codec (``sources/xlsx.py``
+— zip + sheet XML, a public format), so a workbook reads to the same grid
+whatever packages are installed: lock-file skip, hidden/veryHidden sheet
+skip, active-visible selection and named-sheet reads all behave like the
+reference. A run reads one or two sheets of a few KB on the driver; the
+relational work starts when ``pipelines.batch`` hands the cleaned grid to
+Spark.
 
 Reference cites: 247/tools/read_file_tool.py:13-121 (pair scan, keyword
 pick, lock-file skip), ACME/tools/read_file_tool.py:12-52 (single scan +
@@ -26,14 +25,8 @@ import re
 from collections.abc import Callable
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
 
-try:  # pragma: no cover - not present in this container
-    import openpyxl  # noqa: F401
-
-    HAVE_OPENPYXL = True
-except ImportError:
-    HAVE_OPENPYXL = False
+from etl_jetro_spark.sources.xlsx import read_xlsx_grid
 
 EXCEL_EXTS = (".xlsx", ".xlsm", ".xls")
 
@@ -71,13 +64,6 @@ def grid_from_excel(path: str, sheet: str | int | None = None) -> pd.DataFrame:
     named sheet (error if absent) when given — reference
     247/tools/read_file_tool.py:83-101, SouthernCross read_file_tool.py:55-60.
     """
-    if HAVE_OPENPYXL:  # pragma: no cover - openpyxl absent in this container
-        return pd.read_excel(
-            path, sheet_name=sheet if sheet is not None else 0,
-            header=None, dtype=object,
-        )
-    from etl_jetro_spark.sources.xlsx import read_xlsx_grid
-
     return read_xlsx_grid(path, sheet=sheet)
 
 
@@ -118,31 +104,3 @@ def read_single_with_token(
     if sheet is not None and reader is grid_from_excel:
         return grid_from_excel(files[0], sheet=sheet), token
     return reader(files[0]), token
-
-
-def grids_to_spark(
-    spark: SparkSession,
-    paths: list[str],
-    normalize: Callable[[pd.DataFrame, str], pd.DataFrame],
-    schema: str,
-    reader: Callable[[str], pd.DataFrame] = grid_from_csv,
-) -> DataFrame:
-    """Distributed many-file ingest: normalize each raw grid per task and
-    union into one clean relational DataFrame.
-
-    Each file is small (sheets are KB–MB); scale comes from file count, so
-    we parallelize the *file list* and run the pandas normalizer inside the
-    tasks — the SURVEY §1.3 two-layer design.
-    """
-    from pyspark.sql import functions as F  # noqa: F401
-
-    def run_one(it):
-        for row in it:
-            pdf = normalize(reader(row.path), row.path)
-            for rec in pdf.itertuples(index=False):
-                yield tuple(rec)
-
-    files = spark.createDataFrame([(p,) for p in paths], "path string")
-    return files.repartition(min(len(paths), 64)).rdd.mapPartitions(
-        lambda it: run_one(it)
-    ).toDF(schema)

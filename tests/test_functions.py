@@ -4,7 +4,27 @@ from __future__ import annotations
 
 import pytest
 
-from etl_jetro_spark import functions as EF
+from etl_jetro_spark.functions.dates import default_edd, next_mwf, reformat_date_tolerant
+from etl_jetro_spark.functions.hashing import (
+    char_shingles,
+    doc_fingerprint,
+    minhash_signature,
+    simhash_bits,
+    word_shingles,
+)
+from etl_jetro_spark.functions.na import normalize_na
+from etl_jetro_spark.functions.text import (
+    extract_emails,
+    first_int,
+    item7,
+    money2dp,
+    norm_key,
+    norm_ws,
+    num_anywhere,
+    parse_money,
+    split_first_dash,
+    strip_dot_zero,
+)
 
 
 def one(spark, col_expr, *rows_in, schema="v string"):
@@ -13,21 +33,25 @@ def one(spark, col_expr, *rows_in, schema="v string"):
 
 
 def test_strip_dot_zero(spark):
-    got = one(spark, EF.strip_dot_zero("v"), "14.0", "14.00", "14.50", "14", "x.0")
+    got = one(spark, strip_dot_zero("v"), "14.0", "14.00", "14.50", "14", "x.0")
     assert got == ["14", "14", "14.50", "14", "x"]
 
 
 def test_norm_ws_and_key(spark):
-    got = one(spark, EF.norm_ws("v"), "  a \t b​  c ")
+    got = one(spark, norm_ws("v"), "  a \t b​  c ")
     assert got == ["a b c"]
-    got = one(spark, EF.norm_key("v"), " Lot #  7 ")
+    got = one(spark, norm_key("v"), " Lot #  7 ")
     assert got == ["lot7"]
+    # NBSP and zero-width characters are stripped, not kept as spaces
+    messy = "a\xa0\xa0b #1\u200b"
+    assert one(spark, norm_ws("v"), messy) == ["ab #1"]
+    assert one(spark, norm_key("v"), messy) == ["ab1"]
 
 
 def test_parse_money(spark):
     got = one(
         spark,
-        EF.parse_money("v"),
+        parse_money("v"),
         "$1,234.50",
         "(123.4)",
         "123-",
@@ -39,47 +63,47 @@ def test_parse_money(spark):
 
 
 def test_num_anywhere(spark):
-    got = one(spark, EF.num_anywhere("v"), "ship 12.5 lbs", "(3)", "none here", "$1,000")
+    got = one(spark, num_anywhere("v"), "ship 12.5 lbs", "(3)", "none here", "$1,000")
     assert got == [12.5, -3.0, None, 1000.0]
 
 
 def test_first_int(spark):
-    got = one(spark, EF.first_int("v"), "498-68594 39024", "no digits", "77x88")
+    got = one(spark, first_int("v"), "498-68594 39024", "no digits", "77x88")
     assert got == [498, None, 77]
 
 
 def test_item7(spark):
-    got = one(spark, EF.item7("v"), "12345", "990033.0", "ab-1-2", "", None)
+    got = one(spark, item7("v"), "12345", "990033.0", "ab-1-2", "", None)
     assert got == ["0012345", "0990033", "0000012", None, None]
 
 
 def test_item7_never_truncates(spark):
     # zfill semantics: 8+ digit codes pass through whole (Spark's bare
     # lpad would truncate '12345678' to '1234567')
-    got = one(spark, EF.item7("v"), "12345678", "123456789012", "1234567")
+    got = one(spark, item7("v"), "12345678", "123456789012", "1234567")
     assert got == ["12345678", "123456789012", "1234567"]
 
 
 def test_split_first_dash(spark):
-    got = one(spark, EF.split_first_dash("v"), "114-28937", "402–20721", "458—41774-x")
+    got = one(spark, split_first_dash("v"), "114-28937", "402–20721", "458—41774-x")
     assert got == [["114", "28937"], ["402", "20721"], ["458", "41774-x"]]
 
 
 def test_normalize_na(spark):
-    got = one(spark, EF.normalize_na("v"), "NA", " n/a ", "nah", "value", "", "0")
+    got = one(spark, normalize_na("v"), "NA", " n/a ", "nah", "value", "", "0")
     assert got == [None, None, None, "value", None, "0"]
 
 
 def test_money2dp(spark):
     df = spark.createDataFrame([(1234.5,), (0.125,)], "v double")
-    got = [r[0] for r in df.select(EF.money2dp("v").alias("o")).collect()]
+    got = [r[0] for r in df.select(money2dp("v").alias("o")).collect()]
     assert got == ["1,234.50", "0.13"]
 
 
 def test_extract_emails(spark):
     got = one(
         spark,
-        EF.extract_emails("v"),
+        extract_emails("v"),
         "mail A@x.com; b@y.org, a@X.COM not-an-email@ c@z.io",
     )
     assert got == [["A@x.com", "b@y.org", "c@z.io"]]
@@ -87,14 +111,14 @@ def test_extract_emails(spark):
 
 def test_default_edd(spark):
     # 2026-08-13 is a Thursday -> +2 = Saturday -> roll to Monday 2026-08-17
-    got = one(spark, EF.default_edd("v"), "2026-08-13", "2026-08-10")
+    got = one(spark, default_edd("v"), "2026-08-13", "2026-08-10")
     assert [str(g) for g in got] == ["2026-08-17", "2026-08-12"]
 
 
 def test_next_mwf(spark):
     # Mon->Wed, Tue->Wed, Wed->Fri, Thu->Fri, Fri->Mon, Sat->Mon, Sun->Mon
     days = ["2026-08-10", "2026-08-11", "2026-08-12", "2026-08-13", "2026-08-14", "2026-08-15", "2026-08-16"]
-    got = one(spark, EF.next_mwf("v"), *days)
+    got = one(spark, next_mwf("v"), *days)
     assert [str(g) for g in got] == [
         "2026-08-12", "2026-08-12", "2026-08-14", "2026-08-14",
         "2026-08-17", "2026-08-17", "2026-08-17",
@@ -102,20 +126,20 @@ def test_next_mwf(spark):
 
 
 def test_reformat_date_tolerant(spark):
-    got = one(spark, EF.reformat_date_tolerant("v"), "9/5/2025", "2025-09-05", "soon")
+    got = one(spark, reformat_date_tolerant("v"), "9/5/2025", "2025-09-05", "soon")
     assert got == ["09/05/25", "09/05/25", "soon"]
 
 
 def test_char_shingles_and_fingerprint(spark):
-    got = one(spark, EF.char_shingles("v", 4), "Ab cd!", "ab")
+    got = one(spark, char_shingles("v", 4), "Ab cd!", "ab")
     assert got[0] == ["ab c", "b cd"]
     assert got[1] == []
-    fp = one(spark, EF.doc_fingerprint("v"), "Hello,  World", "hello world")
+    fp = one(spark, doc_fingerprint("v"), "Hello,  World", "hello world")
     assert fp[0] == fp[1]
 
 
 def test_minhash_identical_docs_match(spark):
-    sig = EF.minhash_signature(EF.word_shingles("v", 2), num_hashes=8)
+    sig = minhash_signature(word_shingles("v", 2), num_hashes=8)
     got = one(spark, sig, "the quick brown fox jumps", "the quick brown fox jumps", "totally different text here")
     assert got[0] == got[1] != got[2]
     assert len(got[0]) == 8
@@ -130,31 +154,11 @@ def test_simhash_near_dup_closer_than_random(spark):
         ],
         "id string, v string",
     )
-    sh = df.select("id", EF.simhash_bits(EF.word_shingles("v", 2)).alias("s"))
+    sh = df.select("id", simhash_bits(word_shingles("v", 2)).alias("s"))
     vals = {r["id"]: r["s"] for r in sh.collect()}
     assert all(len(v) == 64 for v in vals.values())
     d = lambda x, y: sum(1 for a, b in zip(vals[x], vals[y]) if a != b)
     assert d("a", "b") < d("a", "c")
-
-
-def test_sql_function_registration(spark):
-    EF.register_sql_functions(spark)
-    got = spark.sql(
-        "SELECT item7('12.0') AS a, first_int('x77y') AS b, normalize_na('nah') AS c"
-    ).collect()[0]
-    assert got["a"] == "0000012"
-    assert got["b"] == 77
-    assert got["c"] is None
-    # the SQL forms agree with the Column forms: item7 never truncates, and
-    # norm_ws/norm_key strip NBSP and zero-width characters
-    messy = "a\xa0\xa0b #1\u200b"
-    got = spark.sql(
-        "SELECT item7('12345678') AS a, norm_ws(v) AS w, norm_key(v) AS k FROM VALUES (:v) AS t(v)",
-        args={"v": messy},
-    ).collect()[0]
-    assert (got["a"], got["w"], got["k"]) == ("12345678", "ab #1", "ab1")
-    assert one(spark, EF.norm_ws("v"), messy) == ["ab #1"]
-    assert one(spark, EF.norm_key("v"), messy) == ["ab1"]
 
 
 def test_stopword_regex_escapes_metacharacters():

@@ -5,8 +5,36 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 import pytest
 
-from etl_jetro_spark import functions as EF
-from etl_jetro_spark import operators as O
+from etl_jetro_spark.functions.na import normalize_na_strings
+from etl_jetro_spark.functions.text import parse_money
+from etl_jetro_spark.operators.aggregate import (
+    first_per_group,
+    latest_by,
+    merge_partials,
+    partial_sums,
+    sum_by,
+)
+from etl_jetro_spark.operators.canonical import CANONICAL_COLS, PIPELINES, branch_fix, to_canonical
+from etl_jetro_spark.operators.dedup import (
+    exact_dedup,
+    minhash_lsh_candidates,
+    ngram_jaccard_pairs,
+    simhash_candidates,
+)
+from etl_jetro_spark.operators.graph import connected_components, dedup_keep_canonical
+from etl_jetro_spark.operators.joins import anti_join, broadcast_lookup, map_join, semi_join
+from etl_jetro_spark.operators.rangejoin import interval_overlap_join
+from etl_jetro_spark.operators.sampling import hash_sample, split_assign
+from etl_jetro_spark.operators.similarity import (
+    ann_quality,
+    cosine_topk,
+    embedding_near_dup,
+    knn_join,
+    lsh_bucket_knn,
+)
+from etl_jetro_spark.operators.sort import lot_last4_key
+from etl_jetro_spark.operators.textstats import bpe_ish_token_count, lang_id, quality_score
+from etl_jetro_spark.operators.unpivot import melt, melt_between
 from etl_jetro_spark.sqltext import date_lit
 from tests.conftest import py4j_commands, rows
 
@@ -25,7 +53,7 @@ def wide(spark):
 
 
 def test_melt_u1(spark, wide):
-    long = O.melt(
+    long = melt(
         wide.drop("Item Description"),
         ids=["Item#"],
         var_name="Branch",
@@ -39,7 +67,7 @@ def test_melt_u1(spark, wide):
 
 
 def test_melt_numeric_vars_only(spark, wide):
-    long = O.melt(wide, ids=["Item#"], numeric_vars_only=True, var_name="Store")
+    long = melt(wide, ids=["Item#"], numeric_vars_only=True, var_name="Store")
     assert set(r["Store"] for r in long.select("Store").distinct().collect()) == {
         "114", "449", "86",
     }
@@ -50,7 +78,7 @@ def test_melt_between(spark):
         [("a", "d", "1", "2", "lot1", "junk")],
         ["Item", "DESC", "114", "86.0", "Lot #", "trail"],
     )
-    long = O.melt_between(df, ["Item", "DESC"], after="DESC", before="Lot #", var_name="Store")
+    long = melt_between(df, ["Item", "DESC"], after="DESC", before="Lot #", var_name="Store")
     assert rows(long.select("Store")) == [("114",), ("86",)]
 
 
@@ -71,7 +99,7 @@ def _store_map(spark, width: int):
 
 def _long_cells(spark, width: int):
     """The store sheet melted to (Item, DESC, Lot #, Store, v) cells."""
-    return O.melt(_store_sheet(spark, width), ["Item", "DESC", "Lot #"],
+    return melt(_store_sheet(spark, width), ["Item", "DESC", "Lot #"],
                   var_name="Store", value_name="v", numeric_vars_only=True)
 
 
@@ -85,17 +113,17 @@ def _canonical_input(spark, width: int):
 
 # builder -> (input made outside the count, the plan build that is counted)
 _WIDTH_BUILDERS = {
-    "melt": (_store_sheet, lambda df: O.melt(
+    "melt": (_store_sheet, lambda df: melt(
         df, ["Item"], var_name="Branch", value_name="v", numeric_vars_only=True)),
-    "melt_between": (_store_sheet, lambda df: O.melt_between(
+    "melt_between": (_store_sheet, lambda df: melt_between(
         df, ["Item", "DESC"], after="DESC", before="Lot #", var_name="Store")),
-    "normalize_na_strings": (_store_sheet, EF.normalize_na_strings),
-    "map_join": (_store_map, lambda fm: O.map_join(fm[0], fm[1], "Store", "carrier")),
-    "to_canonical": (_canonical_input, lambda df: O.to_canonical(
-        df, O.PIPELINES["flips_big"], edd=date_lit("2026-08-17"))),
-    "sum_by_parse": (_long_cells, lambda df: O.sum_by(
+    "normalize_na_strings": (_store_sheet, normalize_na_strings),
+    "map_join": (_store_map, lambda fm: map_join(fm[0], fm[1], "Store", "carrier")),
+    "to_canonical": (_canonical_input, lambda df: to_canonical(
+        df, PIPELINES["flips_big"], edd=date_lit("2026-08-17"))),
+    "sum_by_parse": (_long_cells, lambda df: sum_by(
         df, ["Item", "Store"], "v", out="s", parse=True, ceil=True)),
-    "parse_money": (_store_sheet, lambda df: df.withColumn("p", EF.parse_money("Item"))),
+    "parse_money": (_store_sheet, lambda df: df.withColumn("p", parse_money("Item"))),
 }
 
 
@@ -115,8 +143,8 @@ def test_plan_building_is_width_independent(spark, monkeypatch, builder):
 
 
 def test_sum_by_a1(spark, wide):
-    long = O.melt(wide, ids=["Item#"], numeric_vars_only=True, var_name="Branch", value_name="v")
-    agg = O.sum_by(long, ["Branch", "Item#"], "v", out="Distro Size")
+    long = melt(wide, ids=["Item#"], numeric_vars_only=True, var_name="Branch", value_name="v")
+    agg = sum_by(long, ["Branch", "Item#"], "v", out="Distro Size")
     got = {(r["Branch"], r["Item#"]): r["Distro Size"] for r in agg.collect()}
     # 'x' and '' and NULL coerce to 0; zero groups dropped
     assert got[("114", "12345")] == 4.0
@@ -130,7 +158,7 @@ def test_sum_by_ceil_parse(spark):
         [("b1", "i1", "$1.2"), ("b1", "i1", "(0.5)"), ("b2", "i2", "junk")],
         ["b", "i", "v"],
     )
-    agg = O.sum_by(df, ["b", "i"], "v", out="s", parse=True, ceil=True)
+    agg = sum_by(df, ["b", "i"], "v", out="s", parse=True, ceil=True)
     got = {(r["b"], r["i"]): r["s"] for r in agg.collect()}
     assert got == {("b1", "i1"): 1}  # ceil(0.7)=1; junk->0 dropped
 
@@ -139,7 +167,7 @@ def test_first_per_group(spark):
     df = spark.createDataFrame(
         [("b1", 3, "x3"), ("b1", 1, "x1"), ("b2", 5, "x5")], ["b", "o", "v"]
     )
-    got = rows(O.first_per_group(df, ["b"], [F.col("o")], ["v"]))
+    got = rows(first_per_group(df, ["b"], [F.col("o")], ["v"]))
     assert got == [("b1", "x1"), ("b2", "x5")]
 
 
@@ -147,17 +175,17 @@ def test_latest_by(spark):
     df = spark.createDataFrame(
         [("f1", 10.0), ("f2", 30.0), ("f3", 20.0)], ["path", "mtime"]
     )
-    assert O.latest_by(df, "mtime").collect()[0]["path"] == "f2"
+    assert latest_by(df, "mtime").collect()[0]["path"] == "f2"
 
 
 def test_broadcast_lookup_and_map_join(spark):
     fact = spark.createDataFrame([("114",), (" Lot 7 ",), ("999",)], ["Store"])
     dim = spark.createDataFrame([("114", "8"), ("lot7", "3")], ["Store", "carrier"])
-    j = O.broadcast_lookup(fact, dim, "Store", normalize=True)
+    j = broadcast_lookup(fact, dim, "Store", normalize=True)
     got = dict(rows(j.select("Store", "carrier")))
     assert got["114"] == "8" and got[" Lot 7 "] == "3" and got["999"] is None
 
-    m = O.map_join(fact, {"114": "8", "999": 0}, "Store", "carrier")
+    m = map_join(fact, {"114": "8", "999": 0}, "Store", "carrier")
     got = dict(rows(m.select("Store", "carrier")))
     assert got["114"] == "8" and got["999"] is None  # zero→blank rule
 
@@ -165,27 +193,21 @@ def test_broadcast_lookup_and_map_join(spark):
 def test_anti_semi(spark):
     left = spark.createDataFrame([(1,), (2,), (3,)], ["k"])
     right = spark.createDataFrame([(2,), (3,)], ["k"])
-    assert rows(O.anti_join(left, right, "k")) == [(1,)]
-    assert rows(O.semi_join(left, right, "k")) == [(2,), (3,)]
-
-
-def test_sort_numeric_first(spark):
-    df = spark.createDataFrame([("10",), ("9",), ("abc",), ("100",)], ["Branch"])
-    got = [r["Branch"] for r in O.sort_numeric_first(df, "Branch").collect()]
-    assert got == ["9", "10", "100", "abc"]
+    assert rows(anti_join(left, right, "k")) == [(1,)]
+    assert rows(semi_join(left, right, "k")) == [(2,), (3,)]
 
 
 def test_lot_last4_key(spark):
     df = spark.createDataFrame(
         [("498-68594 39024",), ("no digits",), ("x 12",)], ["lot"]
     )
-    got = [r[0] for r in df.select(O.lot_last4_key("lot")).collect()]
+    got = [r[0] for r in df.select(lot_last4_key("lot")).collect()]
     assert got == [9024, 10**9, 12]
 
 
 def test_branch_fix(spark):
     df = spark.createDataFrame([("86",), ("186",), ("7",), ("abc",)], ["b"])
-    got = [r[0] for r in df.select(O.branch_fix("b")).collect()]
+    got = [r[0] for r in df.select(branch_fix("b")).collect()]
     assert got == [186, 186, 7, None]
 
 
@@ -193,8 +215,8 @@ def test_to_canonical(spark):
     fact = spark.createDataFrame(
         [("86", "12", "5"), ("402", "34", "7")], ["Branch", "Item", "Distro Size"]
     )
-    out = O.to_canonical(fact, O.PIPELINES["247"], edd=date_lit("2026-08-17"))
-    assert out.columns == O.CANONICAL_COLS
+    out = to_canonical(fact, PIPELINES["247"], edd=date_lit("2026-08-17"))
+    assert out.columns == CANONICAL_COLS
     r = out.collect()[0]
     assert r["Branch"] == 186 and r["Supplier On Record"] == 81214
     assert r["WW Buyer"] == "P2E" and str(r["Expected Delivery Date"]) == "2026-08-17"
@@ -202,7 +224,7 @@ def test_to_canonical(spark):
 
 def test_exact_dedup_real_docs(spark, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    d = O.exact_dedup(docs, "doc_id", "text")
+    d = exact_dedup(docs, "doc_id", "text")
     assert d.count() <= docs.count()
     assert d.agg(F.sum("dup_count")).collect()[0][0] == docs.count()
 
@@ -213,7 +235,7 @@ def test_minhash_lsh_finds_planted_dup(spark):
         [(1, base), (2, base + " extra"), (3, "completely different words about query engines and shuffles everywhere")],
         ["doc_id", "text"],
     )
-    pairs = O.minhash_lsh_candidates(df, "doc_id", "text", num_hashes=16, bands=8)
+    pairs = minhash_lsh_candidates(df, "doc_id", "text", num_hashes=16, bands=8)
     got = {(r["id_a"], r["id_b"]) for r in pairs.collect()}
     assert (1, 2) in got and (1, 3) not in got
 
@@ -224,7 +246,7 @@ def test_simhash_candidates(spark):
         [(1, base), (2, base.replace("kappa", "lambda", 1)), (3, "unrelated short doc")],
         ["doc_id", "text"],
     )
-    got = {(r["id_a"], r["id_b"]) for r in O.simhash_candidates(df, "doc_id", "text", max_hamming=8).collect()}
+    got = {(r["id_a"], r["id_b"]) for r in simhash_candidates(df, "doc_id", "text", max_hamming=8).collect()}
     assert (1, 2) in got and (1, 3) not in got
 
 
@@ -233,7 +255,7 @@ def test_ngram_jaccard_exact(spark):
         [(1, "a b c d e f"), (2, "a b c d e g"), (3, "x y z w v u")],
         ["doc_id", "text"],
     )
-    pairs = O.ngram_jaccard_pairs(df, "doc_id", "text", n=2, threshold=0.5)
+    pairs = ngram_jaccard_pairs(df, "doc_id", "text", n=2, threshold=0.5)
     got = {(r["id_a"], r["id_b"]): r["jaccard"] for r in pairs.collect()}
     # shingles(1): {ab,bc,cd,de,ef}; shingles(2): {ab,bc,cd,de,eg} → 4/6
     assert abs(got[(1, 2)] - 4 / 6) < 1e-9 and (1, 3) not in got
@@ -248,8 +270,8 @@ def test_ngram_jaccard_doc_freq_cap(spark):
     docs += [(100, "alpha beta gamma delta"), (101, "alpha beta gamma delta")]
     df = spark.createDataFrame(docs, ["doc_id", "text"])
 
-    uncapped = O.ngram_jaccard_pairs(df, "doc_id", "text", n=3, threshold=0.01)
-    capped = O.ngram_jaccard_pairs(
+    uncapped = ngram_jaccard_pairs(df, "doc_id", "text", n=3, threshold=0.01)
+    capped = ngram_jaccard_pairs(
         df, "doc_id", "text", n=3, threshold=0.01, max_doc_freq=4
     )
     got_un = {(r["id_a"], r["id_b"]) for r in uncapped.collect()}
@@ -274,7 +296,7 @@ def test_embedding_near_dup_banded(spark, sf_dir):
         ).alias("embedding"),
     )
     u = emb.select("vec_id", "embedding").unionByName(pert)
-    got = O.embedding_near_dup(
+    got = embedding_near_dup(
         u, "vec_id", "embedding", dims=64, threshold=0.9, bits=32, band_bits=8
     ).collect()
     pairs = {(r["id_a"], r["id_b"]) for r in got}
@@ -286,7 +308,7 @@ def test_embedding_near_dup_banded(spark, sf_dir):
 def test_cosine_topk_real_embeddings(spark, sf_dir):
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     q = emb.filter(F.col("vec_id") == 0).collect()[0]["embedding"]
-    top = O.cosine_topk(emb, "vec_id", "embedding", [float(x) for x in q], k=5).collect()
+    top = cosine_topk(emb, "vec_id", "embedding", [float(x) for x in q], k=5).collect()
     assert top[0]["vec_id"] == 0 and abs(top[0]["score"] - 1.0) < 1e-6
     scores = [r["score"] for r in top]
     assert scores == sorted(scores, reverse=True)
@@ -295,8 +317,8 @@ def test_cosine_topk_real_embeddings(spark, sf_dir):
 def test_knn_and_lsh_recall(spark, sf_dir):
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").limit(200).cache()
     probes = emb.filter(F.col("vec_id") < 3)
-    exact = O.knn_join(probes, emb, "vec_id", "embedding", k=3)
-    approx = O.lsh_bucket_knn(probes, emb, "vec_id", "embedding", dims=64, k=3, bits=8, band_bits=2)
+    exact = knn_join(probes, emb, "vec_id", "embedding", k=3)
+    approx = lsh_bucket_knn(probes, emb, "vec_id", "embedding", dims=64, k=3, bits=8, band_bits=2)
     e = {(r["probe_id"], r["neighbor_id"]) for r in exact.collect()}
     a = {(r["probe_id"], r["neighbor_id"]) for r in approx.collect()}
     assert len(e) == 9
@@ -318,7 +340,7 @@ def test_ann_multiprobe_recall_sf01(spark):
         pytest.skip("sf0.1 testdata absent")
     emb = spark.read.parquet(f"{sf}/embeddings.parquet")
     probes = emb.filter(F.col("vec_id") < 10)
-    q = O.ann_quality(
+    q = ann_quality(
         probes, emb, "vec_id", "embedding", dims=64, k=3,
         bits=12, band_bits=3, multiprobe=True,
     ).collect()
@@ -333,13 +355,13 @@ def test_textstats(spark):
         [(1, "The quick brown fox, it jumps over the lazy dog!"), (2, "el la de que y en un 123")],
         ["doc_id", "text"],
     )
-    out = O.quality_score(df, "text")
+    out = quality_score(df, "text")
     r = {x["doc_id"]: x for x in out.collect()}
     assert r[1]["q_n_tokens"] == 10
     assert 0 <= r[1]["quality_score"] <= 1
-    langs = {x["doc_id"]: x["l"] for x in df.select("doc_id", O.lang_id("text").alias("l")).collect()}
+    langs = {x["doc_id"]: x["l"] for x in df.select("doc_id", lang_id("text").alias("l")).collect()}
     assert langs[1] == "en" and langs[2] == "es"
-    assert df.select(O.bpe_ish_token_count("text").alias("n")).collect()[0]["n"] == 12
+    assert df.select(bpe_ish_token_count("text").alias("n")).collect()[0]["n"] == 12
 
 
 def test_multimodal_plumbing(spark):
@@ -419,7 +441,7 @@ def test_connected_components_chain(spark):
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11)], ["id_a", "id_b"]
     )
-    got = {r["id"]: r["component"] for r in O.connected_components(edges).collect()}
+    got = {r["id"]: r["component"] for r in connected_components(edges).collect()}
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 1, 10: 10, 11: 10}
 
 
@@ -438,13 +460,13 @@ def test_connected_components_layered_matches_per_layer(spark):
     )
     got = {
         (r["layer"], r["id"]): r["component"]
-        for r in O.connected_components(tagged, layer="layer").collect()
+        for r in connected_components(tagged, layer="layer").collect()
     }
     for ly, es in per_layer.items():
         edges = spark.createDataFrame(es, ["id_a", "id_b"])
         ref = {
             (ly, r["id"]): r["component"]
-            for r in O.connected_components(edges).collect()
+            for r in connected_components(edges).collect()
         }
         assert {k: v for k, v in got.items() if k[0] == ly} == ref
 
@@ -456,7 +478,7 @@ def test_dedup_keep_canonical(spark):
         [(1, "a"), (2, "a'"), (3, "a''"), (7, "unique")], ["doc_id", "text"]
     )
     pairs = spark.createDataFrame([(1, 2), (2, 3)], ["id_a", "id_b"])
-    kept = sorted(r["doc_id"] for r in O.dedup_keep_canonical(docs, pairs, "doc_id").collect())
+    kept = sorted(r["doc_id"] for r in dedup_keep_canonical(docs, pairs, "doc_id").collect())
     assert kept == [1, 7]
 
 
@@ -466,19 +488,19 @@ def test_split_assign_and_hash_sample(spark, sf_dir):
     (the reproducibility contract seed-based sample() can't give)."""
     d = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
     n = d.count()
-    s1 = O.split_assign(d, "doc_id", {"train": 0.8, "val": 0.1, "test": 0.1})
+    s1 = split_assign(d, "doc_id", {"train": 0.8, "val": 0.1, "test": 0.1})
     counts = {r["split"]: r["n"] for r in s1.groupBy("split").agg(F.count(F.lit(1)).alias("n")).collect()}
     assert sum(counts.values()) == n
     assert 0.6 * n < counts["train"] < 0.95 * n
-    s2 = O.split_assign(d, "doc_id", {"train": 0.8, "val": 0.1, "test": 0.1})
+    s2 = split_assign(d, "doc_id", {"train": 0.8, "val": 0.1, "test": 0.1})
     assert sorted(map(tuple, s1.collect())) == sorted(map(tuple, s2.collect()))
 
-    samp = O.hash_sample(d, "doc_id", 0.2)
+    samp = hash_sample(d, "doc_id", 0.2)
     m = samp.count()
     assert 0.05 * n < m < 0.4 * n
     assert samp.exceptAll(d).count() == 0  # strict subset
     # different salt -> different (decorrelated) sample
-    samp2 = O.hash_sample(d, "doc_id", 0.2, salt="other")
+    samp2 = hash_sample(d, "doc_id", 0.2, salt="other")
     assert sorted(r["doc_id"] for r in samp.collect()) != sorted(
         r["doc_id"] for r in samp2.collect()
     )
@@ -486,7 +508,7 @@ def test_split_assign_and_hash_sample(spark, sf_dir):
     import pytest as _pytest
 
     with _pytest.raises(ValueError, match="sum to 1"):
-        O.split_assign(d, "doc_id", {"a": 0.5, "b": 0.4})
+        split_assign(d, "doc_id", {"a": 0.5, "b": 0.4})
 
 
 def test_chunk_tokens_windows(spark):
@@ -652,7 +674,7 @@ def test_top_ngrams_tiebreak(spark):
 
 
 def test_incremental_dedup(spark):
-    from etl_jetro_spark.operators.dedup import exact_dedup, incremental_dedup
+    from etl_jetro_spark.operators.dedup import incremental_dedup
 
     old = spark.createDataFrame(
         [(1, "seen text one"), (2, "seen text two")], "doc_id long, text string"
@@ -702,7 +724,7 @@ def test_interval_overlap_join_matches_brute_force(spark):
     df = spark.createDataFrame(data, ["k", "id", "s", "e"])
     got = {
         (r["k"], r["id_a"], r["id_b"])
-        for r in O.interval_overlap_join(
+        for r in interval_overlap_join(
             df, df, ["k"], "s", "e", bucket_width=100
         )
         .filter(F.col("id_a") < F.col("id_b"))
@@ -724,7 +746,7 @@ def test_interval_overlap_join_no_duplicate_pairs(spark):
     df = spark.createDataFrame(
         [("k", 1, 0, 1000), ("k", 2, 50, 900)], ["k", "id", "s", "e"]
     )
-    out = O.interval_overlap_join(df, df, ["k"], "s", "e", bucket_width=10)
+    out = interval_overlap_join(df, df, ["k"], "s", "e", bucket_width=10)
     assert (
         out.filter((F.col("id_a") == 1) & (F.col("id_b") == 2)).count() == 1
     )
@@ -737,12 +759,12 @@ def test_partial_sums_merge_is_exact(spark):
     df = spark.createDataFrame(rows_in, ["k", "v"]).select(
         "k", F.col("v").cast("decimal(18,2)").alias("v")
     )
-    whole = O.partial_sums(df, ["k"], "v")
+    whole = partial_sums(df, ["k"], "v")
     parts = [
-        O.partial_sums(df.filter(F.col("v") < 100), ["k"], "v"),
-        O.partial_sums(df.filter(F.col("v") >= 100), ["k"], "v"),
+        partial_sums(df.filter(F.col("v") < 100), ["k"], "v"),
+        partial_sums(df.filter(F.col("v") >= 100), ["k"], "v"),
     ]
-    merged = O.merge_partials(parts, ["k"])
+    merged = merge_partials(parts, ["k"])
     assert rows(merged.select("k", "psum", "pcnt")) == rows(
         whole.select("k", "psum", "pcnt")
     )
@@ -827,11 +849,7 @@ def test_weighted_hash_sample_extremes_and_determinism(spark):
 def test_ivf_ann_recall_vs_exact(spark):
     """IVF-flat with nprobe=8 of 16 lists must recover most of the exact
     cosine top-10 (same bar as the sign-LSH path); nprobe=16 IS exact."""
-    from etl_jetro_spark.operators.similarity import (
-        cosine_topk,
-        ivf_assign,
-        ivf_topk,
-    )
+    from etl_jetro_spark.operators.similarity import ivf_assign, ivf_topk
 
     emb = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
     cents = emb.filter(F.col("vec_id") < 16).select(
@@ -861,7 +879,7 @@ def test_interval_overlap_join_drops_inverted_intervals(spark):
     df = spark.createDataFrame(
         [("k", 1, 0, 100), ("k", 2, 500, 50)], ["k", "id", "s", "e"]
     )
-    out = O.interval_overlap_join(df, df, ["k"], "s", "e", bucket_width=60)
+    out = interval_overlap_join(df, df, ["k"], "s", "e", bucket_width=60)
     pairs = {
         (r["id_a"], r["id_b"])
         for r in out.filter(F.col("id_a") != F.col("id_b")).collect()
@@ -1002,7 +1020,7 @@ def test_ivf_topk_multi_row_probe_guard_and_batch_mode(spark):
 
 
 def test_range_join_rejects_reserved_and_key_collisions(spark):
-    from etl_jetro_spark.operators.rangejoin import interval_overlap_join, range_join
+    from etl_jetro_spark.operators.rangejoin import range_join
 
     df = spark.createDataFrame([("k", 1, 10)], ["k", "ts", "_bucket"])
     with pytest.raises(ValueError, match="reserved"):
@@ -1032,8 +1050,6 @@ def test_star_cc_path_graph_converges_sublinearly(spark):
     """10^4-node path graph: diameter 9999 would need ~10^4 min-propagation
     rounds; large-star/small-star must finish within 40 (O(log^2 n)) and
     label every node with the global min."""
-    from etl_jetro_spark.operators.graph import connected_components
-
     n = 10_000
     edges = spark.range(n - 1).select(
         F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
@@ -1052,8 +1068,6 @@ def test_star_cc_path_graph_converges_sublinearly(spark):
 def test_star_cc_matches_min_propagation(spark):
     """Both methods must produce identical labels on an assorted graph
     (two chains, a triangle, an isolated self-loop node)."""
-    from etl_jetro_spark.operators.graph import connected_components
-
     pairs = (
         [(i, i + 1) for i in range(10, 15)]        # chain A
         + [(30, 31), (31, 32), (32, 30)]           # triangle
@@ -1095,7 +1109,7 @@ def test_cms_one_sided_guarantee_and_unseen_zero(spark):
 
 
 def test_containment_catches_subset_that_jaccard_misses(spark):
-    from etl_jetro_spark.operators.dedup import containment_pairs, ngram_jaccard_pairs
+    from etl_jetro_spark.operators.dedup import containment_pairs
 
     short = "alpha beta gamma delta epsilon zeta"
     long_doc = short + " " + " ".join(f"filler{i} pad{i} extra{i}" for i in range(20))
@@ -1301,10 +1315,7 @@ def test_mad_outliers_flags_injected_spike(spark):
 
 
 def test_prefix_filter_jaccard_lossless_vs_full_index(spark):
-    from etl_jetro_spark.operators.dedup import (
-        ngram_jaccard_pairs,
-        prefix_filter_jaccard_pairs,
-    )
+    from etl_jetro_spark.operators.dedup import prefix_filter_jaccard_pairs
 
     docs = [
         (1, "alpha beta gamma delta epsilon zeta eta theta"),
@@ -1430,10 +1441,7 @@ def test_prefix_filter_lossless_at_inexact_threshold(spark):
     # t=0.7 is not binary-representable: 0.7*|S| can float just above an
     # integer and an unguarded ceil() would shorten the prefix, losing
     # pairs. The guarded bound must stay lossless vs the full index.
-    from etl_jetro_spark.operators.dedup import (
-        ngram_jaccard_pairs,
-        prefix_filter_jaccard_pairs,
-    )
+    from etl_jetro_spark.operators.dedup import prefix_filter_jaccard_pairs
 
     # docs engineered so distinct 3-gram set sizes hit n=10 and n=20,
     # where 0.7*n lands exactly on an integer (the rounding hazard)
@@ -1675,8 +1683,6 @@ def test_embedding_near_dup_bucket_cap_bounds_degenerate_block(spark):
     # in a different region keeps all its (small) buckets and survives
     import math
 
-    from etl_jetro_spark.operators.similarity import embedding_near_dup
-
     dims = 16
     boiler = [1.0] + [0.0] * (dims - 1)
     rows = [(i, boiler) for i in range(60)]
@@ -1817,7 +1823,6 @@ def test_plan_shapes_round4_fixes(spark):
     fetch joins after pair dedup."""
     from etl_jetro_spark.operators.chunking import chunk_tokens
     from etl_jetro_spark.operators.dedup import winnow_overlap_pairs
-    from etl_jetro_spark.operators.similarity import embedding_near_dup
 
     docs = spark.createDataFrame(
         [(i, f"some repeated text body number {i} with enough characters")
@@ -1957,7 +1962,7 @@ def test_clustering_coefficients_known_graph(spark):
 def test_knn_join_blocked_equals_broadcast_form(spark):
     import math
 
-    from etl_jetro_spark.operators.similarity import knn_join, knn_join_blocked
+    from etl_jetro_spark.operators.similarity import knn_join_blocked
 
     dims = 8
     rows = [

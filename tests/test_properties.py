@@ -10,12 +10,22 @@ import re
 
 import pyspark.sql.functions as F
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
-from etl_jetro_spark import functions as EF
-from etl_jetro_spark import operators as O
-from etl_jetro_spark.operators.unpivot import _is_numeric_name
+from etl_jetro_spark.functions.hashing import word_shingles
+from etl_jetro_spark.functions.na import normalize_na
+from etl_jetro_spark.functions.text import parse_money
+from etl_jetro_spark.operators.aggregate import sum_by
+from etl_jetro_spark.operators.canonical import branch_fix
+from etl_jetro_spark.operators.graph import connected_components
+from etl_jetro_spark.operators.joins import map_join
+from etl_jetro_spark.operators.sort import (
+    numeric_first_key,
+    numeric_first_order,
+    numeric_first_sort_keys,
+)
+from etl_jetro_spark.operators.unpivot import _is_numeric_name, melt
 from etl_jetro_spark.sinks.excel_sink import collect_ordered
 
 slow_ok = settings(
@@ -37,8 +47,8 @@ cells = st.one_of(
 def test_sum_invariant_under_row_shuffle(spark, rows):
     """groupBy-sum is row-order independent and equals the pandas oracle."""
     df = spark.createDataFrame(rows, "k string, g string, v string")
-    fwd = O.sum_by(df, ["k", "g"], "v", out="s", drop_zero=False)
-    rev = O.sum_by(
+    fwd = sum_by(df, ["k", "g"], "v", out="s", drop_zero=False)
+    rev = sum_by(
         spark.createDataFrame(list(reversed(rows)), "k string, g string, v string"),
         ["k", "g"], "v", out="s", drop_zero=False,
     )
@@ -51,8 +61,8 @@ def test_sum_invariant_under_row_shuffle(spark, rows):
 @given(st.lists(st.text(alphabet=" aA1-.$n/", max_size=12), min_size=1, max_size=8))
 def test_normalize_na_idempotent(spark, vals):
     df = spark.createDataFrame([(v,) for v in vals], "v string")
-    once = df.select(EF.normalize_na("v").alias("o"))
-    twice = once.select(EF.normalize_na("o").alias("o"))
+    once = df.select(normalize_na("v").alias("o"))
+    twice = once.select(normalize_na("o").alias("o"))
     assert [r["o"] for r in once.collect()] == [r["o"] for r in twice.collect()]
 
 
@@ -60,7 +70,7 @@ def test_normalize_na_idempotent(spark, vals):
 @given(st.lists(st.integers(0, 9999).map(str), min_size=1, max_size=10))
 def test_branch_fix_only_touches_two_digit(spark, vals):
     df = spark.createDataFrame([(v,) for v in vals], "v string")
-    got = [r[0] for r in df.select(O.branch_fix("v")).collect()]
+    got = [r[0] for r in df.select(branch_fix("v")).collect()]
     for v, g in zip(vals, got):
         if re.fullmatch(r"\d{2}", v):
             assert g == int("1" + v)
@@ -105,7 +115,7 @@ def test_melt_groupby_roundtrip(spark, data):
         max_size=10,
     ))
     wide = spark.createDataFrame(rows, ["item", *headers])
-    long = O.melt(wide, ["item"], var_name="store", value_name="v")
+    long = melt(wide, ["item"], var_name="store", value_name="v")
     assert long.columns == ["item", "store", "v"]
     want_long = sorted(
         (r[0], lab, str(v)) for r in rows for lab, v in zip(labels, r[1:])
@@ -126,7 +136,7 @@ def test_melt_groupby_roundtrip(spark, data):
     assert got == want
 
     mapping = {lab: f"{h}'\\`\"" for lab, h in zip(labels, headers)}
-    mapped = O.map_join(long, mapping, "store", "m", normalize_keys=False, zero_to_null=False)
+    mapped = map_join(long, mapping, "store", "m", normalize_keys=False, zero_to_null=False)
     assert {(r["store"], r["m"]) for r in mapped.collect()} == set(mapping.items())
 
 
@@ -134,7 +144,7 @@ def test_melt_groupby_roundtrip(spark, data):
 @given(st.text(alphabet=" abc123.$()-", max_size=20))
 def test_parse_money_never_errors_and_sign_rule(spark, s):
     df = spark.createDataFrame([(s,)], "v string")
-    out = df.select(EF.parse_money("v").alias("o")).collect()[0]["o"]
+    out = df.select(parse_money("v").alias("o")).collect()[0]["o"]
     if out is not None:
         stripped = s.strip()
         if stripped.startswith("(") and stripped.endswith(")"):
@@ -165,6 +175,7 @@ sort_values = st.one_of(
     st.tuples(sort_values, st.one_of(st.none(), st.text(alphabet="019a", max_size=3))),
     min_size=1, max_size=15,
 ))
+@example([("10", None), ("9", None), ("abc", None), ("100", None)])
 def test_numeric_first_order_matches_spark_sort(spark, rows):
     """The driver-side sort key, and ``collect_ordered`` on
     ``numeric_first_sort_keys`` (the DLPM order), order rows exactly like
@@ -173,14 +184,16 @@ def test_numeric_first_order_matches_spark_sort(spark, rows):
         [(None if c is None else str(c), item) for c, item in rows],
         "c string, item string",
     )
-    want = df.orderBy(O.numeric_first_key("c").asc_nulls_last(), "c", "item").collect()
-    keyed = df.select("c", "item", O.numeric_first_key("c").alias("k")).collect()
+    want = df.orderBy(numeric_first_key("c").asc_nulls_last(), "c", "item").collect()
+    if [c for c, _ in rows] == ["10", "9", "abc", "100"]:  # W1: numbers first, by value
+        assert [r["c"] for r in want] == ["9", "10", "100", "abc"]
+    keyed = df.select("c", "item", numeric_first_key("c").alias("k")).collect()
     for (c, _), r in zip(rows, keyed):
         if isinstance(c, int):  # ADPO,X takes an int branch's key as float(branch)
             assert r["k"] == float(c)
-    got = sorted(keyed, key=lambda r: O.numeric_first_order(r["k"], r["c"], r["item"]))
+    got = sorted(keyed, key=lambda r: numeric_first_order(r["k"], r["c"], r["item"]))
     assert [(r["c"], r["item"]) for r in got] == [(r["c"], r["item"]) for r in want]
-    keys = O.numeric_first_sort_keys("c")
+    keys = numeric_first_sort_keys("c")
     table = collect_ordered(
         df.selectExpr("c", "item", *[f"{e} AS {name}" for name, e in keys.items()]),
         *keys, "c", "item",
@@ -270,7 +283,7 @@ def test_connected_components_matches_union_find(spark, edges):
     """Min-propagation components equal a Python union-find oracle on
     arbitrary small graphs (self-loops and duplicates included)."""
     df = spark.createDataFrame(edges, "id_a long, id_b long")
-    got = {r["id"]: r["component"] for r in O.connected_components(df).collect()}
+    got = {r["id"]: r["component"] for r in connected_components(df).collect()}
 
     parent: dict[int, int] = {}
 
@@ -613,7 +626,7 @@ def test_shingle_rows_matches_word_shingles_multiset(spark, texts, n):
     fast = shingle_rows(df, "doc_id", "text", n, distinct=False)
     a = sorted((r["_id"], r["_sh"]) for r in fast.collect())
     hof = df.select(
-        "doc_id", F.explode(EF.word_shingles("text", n)).alias("sh")
+        "doc_id", F.explode(word_shingles("text", n)).alias("sh")
     )
     b = sorted((r["doc_id"], r["sh"]) for r in hof.collect())
     assert a == b
@@ -974,11 +987,7 @@ def test_word_shingles_normed_matches_hof(spark, texts):
     """word_shingles_normed on a materialized norm column yields the
     SAME shingle arrays as the self-normalizing word_shingles — the
     array-form fast path is a pure projection refactor."""
-    from etl_jetro_spark.functions.hashing import (
-        norm_text,
-        word_shingles,
-        word_shingles_normed,
-    )
+    from etl_jetro_spark.functions.hashing import norm_text, word_shingles_normed
 
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "i long, text string"

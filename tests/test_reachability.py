@@ -1,4 +1,5 @@
-"""Every package module is imported, at some depth, from an entry point.
+"""Every package module is imported, at some depth, from an entry point,
+and the supplier path imports none of the query catalog.
 
 A module that only its own tests import is code nothing runs. The walk is
 static (stdlib ``ast``, no Spark): it follows ``import`` and
@@ -50,7 +51,56 @@ def _imported_names(path: Path, package: str):
             yield from (f"{base}.{a.name}" for a in node.names)
 
 
-def _reached(mods: dict[str, Path]) -> set[str]:
+# the modules ``python -m etl_jetro_spark run`` and the PO control tick import
+SUPPLIER_ROOTS = [
+    "pipelines.runner",
+    "streaming.orchestrator",
+    "streaming.snapshot",
+    "sinks.notify",
+    "sinks.pdf",
+    "session",
+]
+
+# everything the supplier roots may reach, besides the package itself;
+# ``plans.hints`` is here because ``joins.broadcast_lookup`` sizes its hint
+SUPPLIER_MODULES = {
+    "functions",
+    "functions.dates",
+    "functions.na",
+    "functions.text",
+    "normalize",
+    "normalize.grid",
+    "operators",
+    "operators.aggregate",
+    "operators.canonical",
+    "operators.joins",
+    "operators.sort",
+    "operators.unpivot",
+    "pipelines",
+    "pipelines.batch",
+    "pipelines.runner",
+    "plans",
+    "plans.hints",
+    "session",
+    "sinks",
+    "sinks.excel_sink",
+    "sinks.macro",
+    "sinks.notify",
+    "sinks.pdf",
+    "sources",
+    "sources.csv_po",
+    "sources.excel",
+    "sources.json_dim",
+    "sources.sheet",
+    "sources.xlsx",
+    "sqltext",
+    "streaming",
+    "streaming.orchestrator",
+    "streaming.snapshot",
+}
+
+
+def _walk(mods: dict[str, Path], roots: list[str]) -> set[str]:
     seen: set[str] = set()
 
     def visit(name: str) -> None:
@@ -65,11 +115,16 @@ def _reached(mods: dict[str, Path]) -> set[str]:
                 for imported in _imported_names(path, package):
                     visit(imported)
 
-    visit(f"{PKG}.__main__")  # python -m etl_jetro_spark
-    for path in ENTRY_POINTS:
-        for name in _imported_names(path, ""):
-            visit(name)
+    for name in roots:
+        visit(name)
     return seen
+
+
+def _reached(mods: dict[str, Path]) -> set[str]:
+    roots = [f"{PKG}.__main__"]  # python -m etl_jetro_spark
+    for path in ENTRY_POINTS:
+        roots += _imported_names(path, "")
+    return _walk(mods, roots)
 
 
 def test_every_package_module_is_reached():
@@ -79,3 +134,13 @@ def test_every_package_module_is_reached():
     assert not unreached, f"no entry point imports these modules: {unreached}"
     # an exemption that no longer applies is dropped, not kept
     assert set(EXEMPT) <= set(mods) - reached
+
+
+def test_supplier_path_reaches_only_its_modules():
+    reached = _walk(_package_modules(), [f"{PKG}.{m}" for m in SUPPLIER_ROOTS])
+    reached = {m.removeprefix(f"{PKG}.") for m in reached - {PKG}}
+    assert "plans.queries" not in reached, "the supplier path imports the query catalog"
+    extra = sorted(reached - SUPPLIER_MODULES)
+    assert not extra, f"the supplier path imports modules outside its set: {extra}"
+    # a module the path no longer reaches is dropped from the set, not kept
+    assert SUPPLIER_MODULES <= reached, sorted(SUPPLIER_MODULES - reached)

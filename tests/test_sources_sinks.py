@@ -12,7 +12,7 @@ from etl_jetro_spark.sinks import notify
 from etl_jetro_spark.sinks.macro import render_adpo_x, render_dlpm
 from etl_jetro_spark.sinks.pdf import merged_name
 from etl_jetro_spark.sources.csv_po import read_latest_po_csv
-from etl_jetro_spark.sources.excel import grid_from_rows, grids_to_spark
+from etl_jetro_spark.sources.excel import grid_from_rows
 from etl_jetro_spark.sources.json_dim import read_carrier_json
 from etl_jetro_spark.sources.recipients import recipients_dim
 from etl_jetro_spark.sqltext import date_lit
@@ -60,29 +60,6 @@ def test_recipients_dim(spark):
     }
 
 
-def test_grids_to_spark_distributed(spark, tmp_path):
-    import pandas as pd
-
-    for i, rows in enumerate([[["h", "v"], ["a", "1"]], [["h", "v"], ["b", "2"]]]):
-        pd.DataFrame(rows).to_csv(tmp_path / f"f{i}.csv", index=False, header=False)
-
-    from etl_jetro_spark.normalize.grid import promote_header
-
-    def norm(grid, path):
-        pdf = promote_header(grid, 0)
-        pdf["src"] = os.path.basename(path)
-        return pdf
-
-    out = grids_to_spark(
-        spark,
-        [str(tmp_path / "f0.csv"), str(tmp_path / "f1.csv")],
-        norm,
-        "h string, v string, src string",
-    )
-    got = sorted(tuple(r) for r in out.collect())
-    assert got == [("a", "1", "f0.csv"), ("b", "2", "f1.csv")]
-
-
 def test_render_dlpm_deterministic(spark):
     price = spark.createDataFrame(
         [("10", "12345", 81214, 2.5), ("9", "99", 81214, 1234.5)],
@@ -101,7 +78,7 @@ def test_render_dlpm_deterministic(spark):
 
 
 def test_render_adpo_x_groups(spark):
-    from etl_jetro_spark.operators import PIPELINES, to_canonical
+    from etl_jetro_spark.operators.canonical import PIPELINES, to_canonical
 
     fact = spark.createDataFrame(
         [("9", "12", "5"), ("9", "13", "2"), ("114", "12", "7")],
@@ -146,7 +123,7 @@ def test_merged_pdf_name():
 
 def test_render_adpo_i(spark):
     from etl_jetro_spark.sinks.macro import render_adpo_i
-    from etl_jetro_spark.operators import PIPELINES, to_canonical
+    from etl_jetro_spark.operators.canonical import PIPELINES, to_canonical
 
     fact = spark.createDataFrame(
         [("114", "12", "5")], ["Branch", "Item", "Distro Size"]

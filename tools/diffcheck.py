@@ -131,8 +131,8 @@ def main() -> int:
     )
     con = duckdb.connect()
     for t in TABLES:
-        # driver testdata ships flat files; make_sf1.py scratch dirs are
-        # Spark-written directories — glob the parts for DuckDB there
+        # driver testdata ships flat files; a table Spark wrote is a
+        # directory of parts — glob the parts for DuckDB there
         p = f"{sf}/{t}.parquet"
         if os.path.isdir(p):
             p = f"{p}/*.parquet"
