@@ -29,17 +29,8 @@ def normalize_na_sql(x: str) -> str:
     return f"CASE WHEN {_na_word_sql(x)} THEN NULL ELSE {x} END"
 
 
-def is_na_like_sql(x: str) -> str:
-    """NULL or an NA word."""
-    return f"({x} IS NULL OR {_na_word_sql(x)})"
-
-
 def normalize_na(col: str) -> Column:
     return F.expr(normalize_na_sql(ident(col)))
-
-
-def is_na_like(col: str) -> Column:
-    return F.expr(is_na_like_sql(ident(col)))
 
 
 def normalize_na_strings(df: DataFrame, columns: list[str] | None = None) -> DataFrame:

@@ -1,43 +1,17 @@
 """Join operators (SURVEY §2.5 J1–J5, §2.7 D3).
 
 Every dimension in the reference is KB-sized (carrier maps ≤33 rows, PO
-lists, recipient books), so the engine broadcast-joins them explicitly —
-at 100 TB the fact side never shuffles for these lookups.
+lists), so a lookup travels inside the plan as a map literal
+(:func:`map_join`) rather than as a relation of its own.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from etl_jetro_spark.plans.hints import bcast_sized
 
-from etl_jetro_spark.functions.text import norm_key, norm_key_sql
+from etl_jetro_spark.functions.text import norm_key_sql
 from etl_jetro_spark.sqltext import ident, string_lit
-
-
-def broadcast_lookup(
-    fact: DataFrame,
-    dim: DataFrame,
-    key: str,
-    dim_key: str | None = None,
-    normalize: bool = False,
-    how: str = "left",
-) -> DataFrame:
-    """Left-join a small dimension onto the fact table, broadcast-hinted.
-
-    ``normalize=True`` joins on the reference's normalized key (lowercased,
-    space/# stripped — J3's dict-lookup fallback, big_flip_tool.py:238-245)
-    without altering either side's visible columns.
-    """
-    dim_key = dim_key or key
-    if normalize:
-        fk, dk = "_nk_fact", "_nk_dim"
-        f2 = fact.withColumn(fk, norm_key(key))
-        d2 = dim.withColumn(dk, norm_key(dim_key)).drop(dim_key)
-        out = f2.join(bcast_sized(d2), f2[fk] == d2[dk], how).drop(fk, dk)  # bound: operator contract: caller passes a small dim
-        return out
-    d2 = dim.withColumnRenamed(dim_key, key) if dim_key != key else dim
-    return fact.join(bcast_sized(d2), key, how)  # bound: operator contract: caller passes a small dim
 
 
 def map_join(
@@ -64,7 +38,9 @@ def map_join(
         for k, v in mapping.items()
     )
     k = norm_key_sql(ident(key)) if normalize_keys else f"CAST({ident(key)} AS STRING)"
-    val = f"map({entries})[{k}]"
+    # an empty map() literal is map<void,void>, which no key can index
+    lookup = f"map({entries})" if entries else "CAST(map() AS MAP<STRING, STRING>)"
+    val = f"{lookup}[{k}]"
     if zero_to_null:
         val = f"CASE WHEN try_cast({val} AS DOUBLE) = 0 THEN NULL ELSE {val} END"
     if default is not None:

@@ -3,7 +3,7 @@
 Each pipeline is (a) a pandas *clean* step on the raw positional grid
 (ingest layer: one sheet, a few KB, cleaned on the driver) and (b) a Spark
 *build* step: melt → aggregate → join → derive → canonical columns
-(relational layer, from ``operators.{unpivot,aggregate,joins,canonical,sort}``).
+(relational layer, from ``operators.{unpivot,aggregate,joins,canonical}``).
 
 Reference cites per pipeline are in the docstrings; constants come from
 operators.canonical.PIPELINES (code-observed, SURVEY §7 hard-part 6).
@@ -20,8 +20,7 @@ from etl_jetro_spark.functions.text import parse_money, parse_money_sql
 from etl_jetro_spark.normalize import grid as G
 from etl_jetro_spark.operators.aggregate import sum_by
 from etl_jetro_spark.operators.canonical import PIPELINES, to_canonical
-from etl_jetro_spark.operators.joins import broadcast_lookup, map_join
-from etl_jetro_spark.operators.sort import lot_last4_key
+from etl_jetro_spark.operators.joins import map_join
 from etl_jetro_spark.operators.unpivot import melt, melt_between
 from etl_jetro_spark.sqltext import date_lit, ident, string_lit
 
@@ -322,11 +321,25 @@ def clean_baby_flip(baby: pd.DataFrame) -> pd.DataFrame:
     return wide
 
 
+def _po_by_store_sql(po_rows: list[tuple[str, str, str]]) -> str:
+    """The ``(PO #, Store, Item)`` rows as one ``map(Store → array(PO #…))``
+    SQL literal, PO numbers in file order."""
+    by_store: dict[str, list[str]] = {}
+    for po, store, _item in po_rows:
+        by_store.setdefault(store, []).append(po)
+    if not by_store:
+        return "CAST(map() AS MAP<STRING, ARRAY<STRING>>)"
+    return "map({})".format(", ".join(
+        f"{string_lit(store)}, array({', '.join(string_lit(po) for po in pos)})"
+        for store, pos in by_store.items()
+    ))
+
+
 def build_baby_flip(
     spark: SparkSession,
     wide: pd.DataFrame,
-    po_df: DataFrame,
-    carrier_df: DataFrame,
+    po_rows: list[tuple[str, str, str]],
+    carrier: dict[str, object],
     invoice_date: str | None = None,
 ) -> DataFrame:
     """4-id positional melt (U4) → NA-normalize (P6) → per-cell-ceil 5-key
@@ -334,9 +347,14 @@ def build_baby_flip(
     output schema [Store, PO #, Invoice Date, DESC, Value, LOT#, weight,
     pack size, carrier code] with Store int, weight = Value×pack (long),
     Invoice Date M/d/yyyy (reference baby_flip_tool.py:213-338).
-    ``invoice_date`` is the injected clock (ISO string). The rows are
-    unordered: ``runner.run_flips_baby`` orders the collected table by
-    Store then LOT#-last4 (W3), and the K2 manifest orders its sheets."""
+
+    Both dimensions are driver-side values (``sources.csv_po`` rows and
+    the ``sources.json_dim`` dict) that ride in the plan as map literals.
+    The PO join keeps a left join's multiplicity: a store with k PO lines
+    gives k rows, a store with none one row with a NULL PO #. The carrier
+    lookup is on the exact Store key. ``invoice_date`` is the injected
+    clock (ISO string). The rows are unordered: ``runner.run_flips_baby``
+    orders the collected table by Store then LOT#-last4 (W3)."""
     from etl_jetro_spark.functions.na import normalize_na_strings
 
     df = normalize_na_strings(_to_spark(spark, wide))
@@ -358,9 +376,10 @@ def build_baby_flip(
     agg = _sum_cells(long, present + ["Store"], "v", out="Value", ceil=False)
     agg = agg.withColumn("Value", F.expr(f"CAST({ident('Value')} AS BIGINT)"))
     agg = agg.withColumnRenamed(item, "Item").withColumnRenamed(lot, "LOT#")
-    out = broadcast_lookup(agg, po_df, "Store")
-    carrier = carrier_df.withColumnRenamed("carrier_code", "carrier code")
-    out = broadcast_lookup(out, carrier, "Store")
+    out = agg.selectExpr(
+        "*", f"explode_outer({_po_by_store_sql(po_rows)}[{ident('Store')}]) AS {ident('PO #')}"
+    )
+    out = map_join(out, carrier, "Store", "carrier code", normalize_keys=False, zero_to_null=False)
     pack = (
         f"try_cast({ident('pack size')} AS DOUBLE)"
         if "pack size" in present
@@ -382,44 +401,3 @@ def build_baby_flip(
             ("carrier code", ident("carrier code")),
         )
     ])
-
-
-def build_baby_audit_manifest(
-    spark: SparkSession,
-    wide: pd.DataFrame,
-    output: DataFrame,
-    po_df: DataFrame,
-    carrier_df: DataFrame,
-) -> dict[str, DataFrame]:
-    """K2: the six audit-workbook tables (reference
-    Flips/tools/baby_flip_tool.py:384-512) as a name→DataFrame manifest for
-    sinks.excel_sink.write_audit_workbook (or per-table parquet when no
-    Excel engine is present).
-
-    'Araho Sheet' and 'Last Level Master' are in (Store, LOT# last-4)
-    order (W3).
-
-    - 'Araho Sheet': the output with Store renamed Column (P16)
-    - 'RD master' / 'RD clean': the cleaned wide input, raw and
-      NA-normalized
-    - 'Last Level Master': the aggregated long pivot
-    - 'PO#' / 'carriers': the headerless reference lists
-    """
-    from etl_jetro_spark.functions.na import normalize_na_strings
-
-    rd_master = _to_spark(spark, wide)
-    output = output.orderBy(F.col("Store").asc(), lot_last4_key("LOT#"))
-    return {
-        "Araho Sheet": output.withColumnRenamed("Store", "Column"),
-        "RD master": rd_master,
-        "RD clean": normalize_na_strings(rd_master),
-        "Last Level Master": output.select(
-            *[
-                c
-                for c in output.columns
-                if c not in ("PO #", "carrier code", "weight", "Invoice Date")
-            ]
-        ),
-        "PO#": po_df,
-        "carriers": carrier_df,
-    }

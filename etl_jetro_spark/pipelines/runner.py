@@ -148,8 +148,8 @@ def run_flips_baby(
     grid, token = read_single_with_token(in_folder)
     _big, baby = B.split_big_and_baby(grid)
     wide = B.clean_baby_flip(baby)
-    po = read_latest_po_csv(spark, po_folder).select("PO #", "Store")
-    carrier = read_carrier_json(spark, token, carrier_dir)
+    po = read_latest_po_csv(po_folder)
+    carrier = read_carrier_json(token, carrier_dir)
     table = collect_ordered(
         B.build_baby_flip(spark, wide, po, carrier), "Store", lot_last4_key("LOT#")
     )

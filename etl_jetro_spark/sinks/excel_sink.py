@@ -1,9 +1,10 @@
-"""Canonical order-sheet sinks (SURVEY §2.9 K1/K2).
+"""Canonical order-sheet sinks (SURVEY §2.9 K1).
 
 K1 writes the canonical 13-col table to an Excel workbook with sheets
 ``Scripting`` + empty ``ANOMALY``/``STORE CLUSTER`` and an m/d/yyyy date
-format (reference 247/tools/allocation_tool.py:168-207, dup ×5); K2 is the
-6-sheet audit workbook (baby_flip_tool.py:384-512).
+format (reference 247/tools/allocation_tool.py:168-207, dup ×5). The
+reference's K2, the Flips baby 6-sheet audit workbook
+(baby_flip_tool.py:384-512), is not built: nothing receives it.
 
 The canonical table is small by construction (stores × items), so a run
 executes its plan once: :func:`collect_ordered` collects it as one Arrow
@@ -94,13 +95,3 @@ def write_canonical(table: pa.Table, out_dir: str, name: str = "order_sheet") ->
         sheets[s] = []
     write_xlsx(xlsx_path, sheets)
     return {"parquet": pq_path, "xlsx": xlsx_path, "rows": table.num_rows}
-
-
-def write_audit_workbook(sheets: dict[str, DataFrame], out_path: str) -> dict:
-    """K2: multi-sheet audit workbook from a name→DataFrame manifest
-    (baby_flip_tool.py:384-512; sheet names capped at Excel's 31 chars)."""
-    write_xlsx(
-        out_path,
-        {name[:31]: _sheet_rows(df.columns, df.collect()) for name, df in sheets.items()},
-    )
-    return {"xlsx": out_path, "sheets": list(sheets)}

@@ -5,23 +5,24 @@ line with an encoding-fallback chain, keeps NA-like-free lines containing a
 dash, and splits ``Store-Item`` on the first dash of any unicode width
 (reference 247/tools/read_file_tool.py:123-196, duplicated ×6).
 
-Spark shape: the *latest-file* choice is control-plane (driver glob +
-argmax mtime — tiny); the line parsing is a distributed ``spark.read.text``
-→ filter → split plan, so a 100 GB PO dump would stream through unchanged.
+A PO drop holds at most a few hundred lines, so the file is parsed on the
+driver into plain ``(PO #, Store, Item)`` tuples; the Flips baby plan
+carries them as a literal (``pipelines.batch.build_baby_flip``).
 """
 
 from __future__ import annotations
 
 import glob
 import os
+import re
 
-from pyspark.sql import DataFrame, SparkSession
+from etl_jetro_spark.functions.na import NA_STRINGS
+from etl_jetro_spark.functions.text import DASH_CLASS
 
-from etl_jetro_spark.functions.na import is_na_like_sql
-from etl_jetro_spark.functions.text import DASH_CLASS, split_first_dash_sql
-from etl_jetro_spark.sqltext import ident, string_lit
-
-_BOM = string_lit("^\ufeff")
+# Spark's text reader breaks lines on \n, \r\n and a lone \r — not on the
+# other separators ``str.splitlines`` knows (\x0b, \x0c, \x85, U+2028, …).
+_LINE_BREAK = re.compile(r"\r\n|\r|\n")
+_DASH = re.compile(DASH_CLASS)
 
 
 def latest_csv(folder: str) -> str | None:
@@ -30,49 +31,35 @@ def latest_csv(folder: str) -> str | None:
     return max(files, key=os.path.getmtime) if files else None
 
 
-def _sniff_encoding(path: str) -> str | None:
-    """Reference encoding-fallback chain (utf-8-sig → utf-16 → latin1,
-    247/tools/read_file_tool.py:157-167): detect UTF-16 by BOM so the
-    distributed text read stays UTF-8; UTF-16 files are transcoded (they
-    are KB-sized control-plane drops)."""
+def _decode(raw: bytes) -> str:
+    """Reference encoding-fallback chain (utf-8-sig → utf-16 → latin1 →
+    ignore-errors, 247/tools/read_file_tool.py:157-167): UTF-16 when the
+    file starts with its BOM, otherwise UTF-8 with invalid bytes replaced
+    by U+FFFD."""
+    if raw.startswith((b"\xff\xfe", b"\xfe\xff")):
+        return raw.decode("utf-16")
+    return raw.decode("utf-8", errors="replace")
+
+
+def read_po_lines(path: str) -> list[tuple[str, str, str]]:
+    """Parse a PO-per-line file into ``(PO #, Store, Item)`` rows, in file
+    order. A line loses one leading U+FEFF and its surrounding ASCII
+    spaces (tabs stay, as with Spark's ``trim``); NA-like and dash-free
+    lines are dropped (P9); the rest split on the first dash."""
     with open(path, "rb") as fh:
-        head = fh.read(4)
-    if head.startswith(b"\xff\xfe") or head.startswith(b"\xfe\xff"):
-        return "utf-16"
-    return None
+        text = _decode(fh.read())
+    rows = []
+    for line in _LINE_BREAK.split(text):
+        po = line.removeprefix("\ufeff").strip(" ")
+        if po.lower() in NA_STRINGS or not _DASH.search(po):
+            continue
+        store, item = _DASH.split(po, maxsplit=1)
+        rows.append((po, store.strip(" "), item.strip(" ")))
+    return rows
 
 
-def read_po_lines(spark: SparkSession, path: str) -> DataFrame:
-    """Parse a PO-per-line file into [PO #, Store, Item].
-
-    UTF-8 (with or without BOM) reads distributed; UTF-16 (BOM-detected)
-    is transcoded driver-side first — these are tiny control files. Other
-    bytes decode with replacement (the reference's ignore-errors last
-    resort). Lines that are NA-like or dash-free are dropped (P9). The
-    projections and the filter are SQL text.
-    """
-    if _sniff_encoding(path) == "utf-16":
-        text = open(path, "rb").read().decode("utf-16")
-        lines = spark.createDataFrame(
-            [(ln,) for ln in text.splitlines()], "value string"
-        )
-    else:
-        lines = spark.read.text(path)
-    po = ident("po")
-    parts = split_first_dash_sql(po)
-    return (
-        lines.selectExpr(f"trim(regexp_replace({ident('value')}, {_BOM}, '')) AS {po}")
-        .filter(f"NOT {is_na_like_sql(po)} AND {po} RLIKE {string_lit(DASH_CLASS)}")
-        .selectExpr(
-            f"{po} AS {ident('PO #')}",
-            f"trim({parts}[0]) AS {ident('Store')}",
-            f"trim({parts}[1]) AS {ident('Item')}",
-        )
-    )
-
-
-def read_latest_po_csv(spark: SparkSession, folder: str) -> DataFrame:
+def read_latest_po_csv(folder: str) -> list[tuple[str, str, str]]:
     path = latest_csv(folder)
     if path is None:
         raise FileNotFoundError(f"no .csv files in {folder}")
-    return read_po_lines(spark, path)
+    return read_po_lines(path)

@@ -1,4 +1,4 @@
-"""Sheet-grid sources (SURVEY §2.1 S1/S2/S5).
+"""Sheet-grid sources (SURVEY §2.1 S1/S2).
 
 A *grid* is the engine's raw-sheet abstraction: a headerless pandas DataFrame
 of positional columns (0..N), exactly what ``read_excel(header=None)`` gives
@@ -15,7 +15,7 @@ Spark.
 
 Reference cites: 247/tools/read_file_tool.py:13-121 (pair scan, keyword
 pick, lock-file skip), ACME/tools/read_file_tool.py:12-52 (single scan +
-filename token), sheet_bot/import_vendor_email.py:37-80 (recipients).
+filename token).
 """
 
 from __future__ import annotations

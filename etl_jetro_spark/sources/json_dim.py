@@ -1,17 +1,14 @@
 """Carrier-map JSON dimension source (SURVEY §2.1 S4).
 
 ``{store: carrier_code}`` JSON files keyed by a filename token
-(salmon/northern/southern) → a 2-col string dimension table, broadcast-
-joined downstream (reference Flips/tools/read_file_tool.py:129-180).
+(salmon/northern/southern) → the dict itself, which the Flips baby plan
+applies as a map literal (reference Flips/tools/read_file_tool.py:129-180).
 """
 
 from __future__ import annotations
 
+import json
 import os
-
-from pyspark.sql import DataFrame, SparkSession
-
-from etl_jetro_spark.sqltext import ident
 
 CARRIER_TOKENS = ("salmon", "northern", "southern")
 
@@ -29,13 +26,11 @@ def pick_carrier_file(file_token: str, base_dir: str) -> str:
     )
 
 
-def read_carrier_json(
-    spark: SparkSession, file_token: str, base_dir: str
-) -> DataFrame:
-    """Dimension table (Store string, carrier_code string) from the JSON
-    dict — parsed as a MapType and exploded, all JVM-side."""
+def read_carrier_json(file_token: str, base_dir: str) -> dict:
+    """The carrier file's ``{store: carrier_code}`` dict."""
     path = pick_carrier_file(file_token, base_dir)
-    raw = spark.read.text(path, wholetext=True)
-    return raw.selectExpr(
-        f"explode(from_json({ident('value')}, 'map<string,string>')) AS ({ident('Store')}, {ident('carrier_code')})"
-    )
+    with open(path, encoding="utf-8") as fh:
+        carrier = json.load(fh)
+    if not isinstance(carrier, dict):
+        raise ValueError(f"{path}: expected a JSON object of store → carrier code")
+    return carrier

@@ -17,10 +17,6 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
-# Weekday → tab-name prefix (reference sheet_bot/utils.py:29-35)
-WEEKDAY_TAB_PREFIX = {0: "Mon", 1: "Tues", 2: "Wed", 3: "Thurs", 4: "Fri"}
-
-
 def strip_dot_zero(s: str) -> str:
     return re.sub(r"\.0{1,2}$", "", s.strip())
 
@@ -114,14 +110,3 @@ def parse_sections(grid: list[list[str]]) -> list[VendorRow]:
                 )
             )
     return out
-
-
-def pick_today_tab(names: list[str], weekday: int) -> str | None:
-    """Choose the worksheet whose name starts with today's prefix."""
-    prefix = WEEKDAY_TAB_PREFIX.get(weekday)
-    if prefix is None:
-        return None
-    for n in names:
-        if n.startswith(prefix):
-            return n
-    return None

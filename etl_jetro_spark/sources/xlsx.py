@@ -1,4 +1,4 @@
-"""Minimal native .xlsx codec (SURVEY §2.1 S1/S2, §2.9 K1/K2 un-gating).
+"""Minimal native .xlsx codec (SURVEY §2.1 S1/S2, §2.9 K1 un-gating).
 
 The container has no openpyxl, but .xlsx is a public format — a zip of
 OOXML parts — so the engine carries its own small codec and the Excel
@@ -13,7 +13,10 @@ ingest/sink paths run for real:
   sheet 'IBT FORMAT' is absent).
 - **writer**: inline-string worksheets, optional hidden/veryHidden sheet
   states and activeTab — enough to exercise every reader behavior in
-  tests and to emit the reference's K1/K2 workbooks.
+  tests and to emit the reference's K1 workbook.
+
+Only OOXML workbooks (.xlsx/.xlsm) are read: a legacy binary .xls or a
+truncated file is a ``ValueError`` naming the path.
 
 Cell typing mirrors openpyxl: integral numerics → int, others → float,
 shared/inline strings → str, booleans → bool. Dates are out of scope
@@ -142,6 +145,16 @@ def _sheet_grid(zf: zipfile.ZipFile, part: str, shared: list[str]) -> pd.DataFra
     return pd.DataFrame(data, dtype=object)
 
 
+def _open_workbook(path: str) -> zipfile.ZipFile:
+    try:
+        return zipfile.ZipFile(path)
+    except zipfile.BadZipFile as e:
+        raise ValueError(
+            f"cannot read workbook {path}: {e}; only OOXML workbooks "
+            "(.xlsx/.xlsm) are read, so save a legacy .xls as .xlsx"
+        ) from e
+
+
 def read_xlsx_grid(path: str, sheet: str | int | None = None) -> pd.DataFrame:
     """Raw positional grid from a worksheet.
 
@@ -150,7 +163,7 @@ def read_xlsx_grid(path: str, sheet: str | int | None = None) -> pd.DataFrame:
     like ``read_excel(sheet_name=N)``). Unnamed → the ACTIVE sheet if
     visible, else the first visible sheet; hidden/veryHidden sheets are
     never picked (reference read_file_tool.py:83-101)."""
-    with zipfile.ZipFile(path) as zf:
+    with _open_workbook(path) as zf:
         info = _workbook_info(zf)
         shared = _shared_strings(zf)
         if isinstance(sheet, int):
@@ -175,7 +188,7 @@ def read_xlsx_grid(path: str, sheet: str | int | None = None) -> pd.DataFrame:
 
 def sheet_names(path: str) -> list[tuple[str, str]]:
     """[(name, state)] for every worksheet."""
-    with zipfile.ZipFile(path) as zf:
+    with _open_workbook(path) as zf:
         return [(n, s) for n, s, _p in _workbook_info(zf).sheets]
 
 

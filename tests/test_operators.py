@@ -22,7 +22,7 @@ from etl_jetro_spark.operators.dedup import (
     simhash_candidates,
 )
 from etl_jetro_spark.operators.graph import connected_components, dedup_keep_canonical
-from etl_jetro_spark.operators.joins import anti_join, broadcast_lookup, map_join, semi_join
+from etl_jetro_spark.operators.joins import anti_join, map_join, semi_join
 from etl_jetro_spark.operators.rangejoin import interval_overlap_join
 from etl_jetro_spark.operators.sampling import hash_sample, split_assign
 from etl_jetro_spark.operators.similarity import (
@@ -178,13 +178,8 @@ def test_latest_by(spark):
     assert latest_by(df, "mtime").collect()[0]["path"] == "f2"
 
 
-def test_broadcast_lookup_and_map_join(spark):
+def test_map_join(spark):
     fact = spark.createDataFrame([("114",), (" Lot 7 ",), ("999",)], ["Store"])
-    dim = spark.createDataFrame([("114", "8"), ("lot7", "3")], ["Store", "carrier"])
-    j = broadcast_lookup(fact, dim, "Store", normalize=True)
-    got = dict(rows(j.select("Store", "carrier")))
-    assert got["114"] == "8" and got[" Lot 7 "] == "3" and got["999"] is None
-
     m = map_join(fact, {"114": "8", "999": 0}, "Store", "carrier")
     got = dict(rows(m.select("Store", "carrier")))
     assert got["114"] == "8" and got["999"] is None  # zero→blank rule

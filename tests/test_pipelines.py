@@ -176,10 +176,9 @@ def test_baby_flip_e2e(spark):
     _, baby = P.split_big_and_baby(grid_from_rows(FLIPS_GRID))
     wide = P.clean_baby_flip(baby)
     assert "DESC" in wide.columns and "Wgt" not in wide.columns
-    po = spark.createDataFrame(
-        [("78-2001", "114", "2001")], ["PO #", "Store", "Item#_po"]
-    ).select("PO #", "Store")
-    carrier = spark.createDataFrame([("114", "8"), ("86", "3")], ["Store", "carrier_code"])
+    po = [("78-2001", "114", "2001")]
+    # a JSON number is rendered as the string a JSON reader would give
+    carrier = {"114": 8, "86": "3"}
     out = P.build_baby_flip(spark, wide, po, carrier, invoice_date="2026-08-13")
     # the reference's exact output schema
     assert out.columns == [
@@ -197,49 +196,18 @@ def test_baby_flip_e2e(spark):
     r2 = rows[(86, "db")]
     assert r2["PO #"] is None and r2["carrier code"] == "3"
 
-
-def test_baby_audit_manifest(spark):
-    _, baby = P.split_big_and_baby(grid_from_rows(FLIPS_GRID))
-    wide = P.clean_baby_flip(baby)
-    po = spark.createDataFrame([("78-2001", "114")], ["PO #", "Store"])
-    carrier = spark.createDataFrame([("114", "8")], ["Store", "carrier_code"])
-    out = P.build_baby_flip(spark, wide, po, carrier)
-    manifest = P.build_baby_audit_manifest(spark, wide, out, po, carrier)
-    assert set(manifest) == {
-        "Araho Sheet", "RD master", "RD clean", "Last Level Master", "PO#", "carriers",
-    }
-    assert "Column" in manifest["Araho Sheet"].columns
-    # the audit sheets keep the reference's (Store, LOT# last-4) order (W3)
-    araho = manifest["Araho Sheet"].collect()
-    assert [(r["Column"], r["LOT#"][-4:]) for r in araho] == [(86, "8999"), (114, "9024")]
-    assert "PO #" not in manifest["Last Level Master"].columns
-    # RD clean nulls the 'na' cell that RD master keeps
-    raw = manifest["RD master"].collect()
-    clean = manifest["RD clean"].collect()
-    assert any("na" in [v for v in r if isinstance(v, str)] for r in raw)
-    assert not any("na" == v for r in clean for v in r)
-
-
-def test_baby_audit_workbook_written(spark, tmp_path):
-    """K2 un-gated: the six-sheet audit workbook is a real .xlsx the codec
-    reads back (reference baby_flip_tool.py:384-512)."""
-    import os
-
-    from etl_jetro_spark.sinks.excel_sink import write_audit_workbook
-    from etl_jetro_spark.sources.xlsx import sheet_names
-
-    _, baby = P.split_big_and_baby(grid_from_rows(FLIPS_GRID))
-    wide = P.clean_baby_flip(baby)
-    po = spark.createDataFrame([("78-2001", "114")], ["PO #", "Store"])
-    carrier = spark.createDataFrame([("114", "8")], ["Store", "carrier_code"])
-    out = P.build_baby_flip(spark, wide, po, carrier)
-    manifest = P.build_baby_audit_manifest(spark, wide, out, po, carrier)
-    path = str(tmp_path / "audit.xlsx")
-    res = write_audit_workbook(manifest, path)
-    assert os.path.exists(res["xlsx"])
-    assert {n for n, _ in sheet_names(path)} == {
-        "Araho Sheet", "RD master", "RD clean", "Last Level Master", "PO#", "carriers",
-    }
+    # the PO join keeps a left join's multiplicity: two PO lines for 114
+    # give two rows, 86 has none and keeps one row with a NULL PO #; a PO
+    # for a store the sheet lacks adds nothing. The carrier lookup is on
+    # the exact key, and a "0" code stays "0".
+    po = [("78-2001", "114", "2001"), ("78-2002", "114", "2002"), ("78-9", "999", "9")]
+    out = P.build_baby_flip(spark, wide, po, {"86": "0", "114 ": "5"})
+    got = sorted((r["Store"], r["PO #"] or "", r["carrier code"]) for r in out.collect())
+    assert got == [(86, "", "0"), (114, "78-2001", None), (114, "78-2002", None)]
+    # an empty PO file: every row is kept with a NULL PO #
+    out = P.build_baby_flip(spark, wide, [], {})
+    got = sorted((r["Store"], r["PO #"], r["carrier code"]) for r in out.collect())
+    assert got == [(86, None, None), (114, None, None)]
 
 
 def test_pipeline_fixture_queries_smoke(spark, sf_dir):

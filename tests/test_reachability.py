@@ -21,8 +21,6 @@ ENTRY_POINTS = [ROOT / "__spark_entry__.py", *sorted((ROOT / "perfbench").glob("
 EXEMPT = {
     f"{PKG}.sources.sheets_client": "the reference's Sheets REST transport; "
     "wiring it into the tick is an open decision",
-    f"{PKG}.sources.recipients": "the reference's vendor-recipients dim; "
-    "wiring it into the send flow is an open decision",
 }
 
 
@@ -62,7 +60,8 @@ SUPPLIER_ROOTS = [
 ]
 
 # everything the supplier roots may reach, besides the package itself;
-# ``plans.hints`` is here because ``joins.broadcast_lookup`` sizes its hint
+# ``plans.hints`` is here because ``aggregate.mad_outliers`` (a catalog
+# operator beside the supplier's ``sum_by``) sizes its broadcast hint
 SUPPLIER_MODULES = {
     "functions",
     "functions.dates",

@@ -336,10 +336,10 @@ def _jobs_fired(spark, fn) -> int:
     return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
-def _shuffle_exchanges(plan: str) -> list[str]:
-    """Lines of an executed plan that shuffle: every Exchange but a
-    broadcast."""
-    return [ln.strip() for ln in plan.splitlines() if "Exchange" in ln and "BroadcastExchange" not in ln]
+def _exchanges(plan: str) -> list[str]:
+    """Lines of an executed plan that hold an Exchange (a shuffle or a
+    broadcast)."""
+    return [ln.strip() for ln in plan.splitlines() if "Exchange" in ln]
 
 
 @pytest.mark.parametrize(
@@ -350,18 +350,17 @@ def _shuffle_exchanges(plan: str) -> list[str]:
         ("fx_leavins", 1),
         ("fx_southern_cross", 1),
         ("fx_flips_big", 1),
-        ("fx_flips_baby", 3),
+        ("fx_flips_baby", 1),
     ],
     ids=["acme", "247", "leavins", "southern_cross", "flips_big", "flips_baby"],
 )
 def test_one_execution_per_artifact_table(spark, tmp_path, sf_dir, monkeypatch, case, max_jobs):
     """Each plan runs once (one Arrow collect, ordered on the driver) and
-    shuffles nothing: a sheet's cells are summed as one partition, so no
-    executed plan holds an Exchange but the Flips baby broadcasts of its
-    PO and carrier dimensions. ACME, Leavins, SouthernCross and Flips big
-    fire one job; 247 two (allocation and price sheet); Flips baby at most
-    three (its PO and carrier reads add theirs). A first, uncounted run
-    keeps session warm-up out of the count."""
+    holds no Exchange: a sheet's cells are summed as one partition, and
+    Flips baby's PO and carrier dimensions ride in its plan as map
+    literals, so nothing shuffles or broadcasts. Every run fires one job
+    but 247, which fires two (allocation and price sheet). A first,
+    uncounted run keeps session warm-up out of the count."""
     from etl_jetro_spark.sinks import excel_sink
 
     fn, drop, extra = _golden_cases(tmp_path, sf_dir)[case]
@@ -377,7 +376,7 @@ def test_one_execution_per_artifact_table(spark, tmp_path, sf_dir, monkeypatch, 
     monkeypatch.setattr(excel_sink, "collect_arrow", recording)
     jobs = _jobs_fired(spark, lambda: _run_case(spark, fn, drop, extra, str(tmp_path / "out")))
     assert 1 <= jobs <= max_jobs
-    assert plans and all(_shuffle_exchanges(p) == [] for p in plans), plans
+    assert plans and all(_exchanges(p) == [] for p in plans), plans
 
 
 @pytest.mark.parametrize(

@@ -12,21 +12,18 @@ from etl_jetro_spark.sinks import notify
 from etl_jetro_spark.sinks.macro import render_adpo_x, render_dlpm
 from etl_jetro_spark.sinks.pdf import merged_name
 from etl_jetro_spark.sources.csv_po import read_latest_po_csv
-from etl_jetro_spark.sources.excel import grid_from_rows
 from etl_jetro_spark.sources.json_dim import read_carrier_json
-from etl_jetro_spark.sources.recipients import recipients_dim
 from etl_jetro_spark.sqltext import date_lit
 
 
-def test_read_latest_po_csv(spark, tmp_path):
+def test_read_latest_po_csv(tmp_path):
     old = tmp_path / "old.csv"
     old.write_text("999-1\n")
     os.utime(old, (1000, 1000))
     new = tmp_path / "new.csv"
     # dash variants, NA lines, dash-less junk, utf-8 BOM
     new.write_bytes("\ufeff114-28937\n402–20721\n458—41774\n\nn/a\nnah\nnodash\n".encode())
-    df = read_latest_po_csv(spark, str(tmp_path))
-    got = sorted((r["PO #"], r["Store"], r["Item"]) for r in df.collect())
+    got = sorted(read_latest_po_csv(str(tmp_path)))
     assert got == [
         ("114-28937", "114", "28937"),
         ("402–20721", "402", "20721"),
@@ -34,30 +31,17 @@ def test_read_latest_po_csv(spark, tmp_path):
     ]
 
 
-def test_read_carrier_json(spark, tmp_path):
+def test_read_carrier_json(tmp_path):
     (tmp_path / "northern_carrier.json").write_text('{"114": 8, "123": 3}')
-    dim = read_carrier_json(spark, "baby flips northern 0813", str(tmp_path))
-    got = dict((r["Store"], r["carrier_code"]) for r in dim.collect())
-    assert got == {"114": "8", "123": "3"}
+    dim = read_carrier_json("baby flips northern 0813", str(tmp_path))
+    # the JSON's own values; the Flips baby plan renders them as strings
+    # (test_pipelines.py::test_baby_flip_e2e)
+    assert dim == {"114": 8, "123": 3}
     with pytest.raises(ValueError):
-        read_carrier_json(spark, "no token here", str(tmp_path))
-
-
-def test_recipients_dim(spark):
-    grid = grid_from_rows(
-        [
-            ["79906.0", "Leavins", "Contact A@x.com; b@y.org", "a@X.COM dup"],
-            ["", "blank vendor", "z@z.io", ""],
-            ["44602", "ACME", "not-an-email", None],
-            ["81214", "247", "only c@z.io here", ""],
-        ]
-    )
-    dim = recipients_dim(spark, grid)
-    got = {r["vendor_num"]: r["to_emails"] for r in dim.collect()}
-    assert got == {
-        "79906": ["A@x.com", "b@y.org"],
-        "81214": ["c@z.io"],
-    }
+        read_carrier_json("no token here", str(tmp_path))
+    (tmp_path / "salmon_carrier.json").write_text('["114", 8]')
+    with pytest.raises(ValueError, match="salmon_carrier.json: expected a JSON object"):
+        read_carrier_json("flips salmon 0813", str(tmp_path))
 
 
 def test_render_dlpm_deterministic(spark):
@@ -156,13 +140,79 @@ def test_pair_scan_too_many_files(tmp_path):
         read_allocation_pricesheet(str(tmp_path))
 
 
-def test_read_po_csv_utf16(spark, tmp_path):
+def test_read_po_csv_utf16(tmp_path):
     f = tmp_path / "pos.csv"
     f.write_bytes("114-28937\n402–20721\n".encode("utf-16"))
     from etl_jetro_spark.sources.csv_po import read_po_lines
 
-    got = sorted((r["Store"], r["Item"]) for r in read_po_lines(spark, str(f)).collect())
+    got = sorted((store, item) for _po, store, item in read_po_lines(str(f)))
     assert got == [("114", "28937"), ("402", "20721")]
+
+
+# Each file's rows are what the PO reader returned when it parsed UTF-8
+# files with Spark's text reader (and transcoded UTF-16 ones first): lines
+# break on \n, \r\n and a lone \r but not \x0b, one leading U+FEFF goes,
+# trim strips ASCII spaces only, invalid UTF-8 bytes become U+FFFD.
+PO_FILES = {
+    "utf8_bom": (
+        "\ufeff114-28937\n402-20721\n".encode(),
+        [("114-28937", "114", "28937"), ("402-20721", "402", "20721")],
+    ),
+    "bom_each_line": (
+        "114-1\n\ufeff402-2\n \ufeff458-3\n".encode(),
+        [("114-1", "114", "1"), ("402-2", "402", "2"), ("\ufeff458-3", "\ufeff458", "3")],
+    ),
+    "utf16_le": (
+        b"\xff\xfe" + "114-28937\r\n402–20721\r\n".encode("utf-16-le"),
+        [("114-28937", "114", "28937"), ("402\u201320721", "402", "20721")],
+    ),
+    "utf16_be": (
+        b"\xfe\xff" + "114-1\n458—3\n".encode("utf-16-be"),
+        [("114-1", "114", "1"), ("458\u20143", "458", "3")],
+    ),
+    "crlf": (b"114-1\r\n402-2\r\n", [("114-1", "114", "1"), ("402-2", "402", "2")]),
+    "lone_cr": (
+        b"114-1\r402-2\r458-3",
+        [("114-1", "114", "1"), ("402-2", "402", "2"), ("458-3", "458", "3")],
+    ),
+    "vtab": (
+        b"114-1\x0b402-2\n458-3\n",
+        [("114-1\x0b402-2", "114", "1\x0b402-2"), ("458-3", "458", "3")],
+    ),
+    "tabs_spaces": (
+        b"  114-1  \n\t402-2\t\n 458 - 3 \n",
+        [("114-1", "114", "1"), ("\t402-2\t", "\t402", "2\t"), ("458 - 3", "458", "3")],
+    ),
+    "dashes": (
+        "402–20721\n458—41774-x\n86-\n-5\n".encode(),
+        [
+            ("402\u201320721", "402", "20721"),
+            ("458\u201441774-x", "458", "41774-x"),
+            ("86-", "86", ""),
+            ("-5", "", "5"),
+        ],
+    ),
+    "na_words": (b"na\n n/a \nN/A\nNone-1\nnah\n\n   \nnodash\n", [("None-1", "None", "1")]),
+    "invalid_utf8": (
+        b"114-1\x80\n\xc3(402-2\n458-\xe2\x80\n\xff\xfe-9\n",
+        [
+            ("114-1\ufffd", "114", "1\ufffd"),
+            ("\ufffd(402-2", "\ufffd(402", "2"),
+            ("458-\ufffd", "458", "\ufffd"),
+            ("\ufffd\ufffd-9", "\ufffd\ufffd", "9"),
+        ],
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(PO_FILES))
+def test_read_po_lines_rules(tmp_path, case):
+    from etl_jetro_spark.sources.csv_po import read_po_lines
+
+    data, want = PO_FILES[case]
+    f = tmp_path / "pos.csv"
+    f.write_bytes(data)
+    assert read_po_lines(str(f)) == want
 
 
 # --------------------------------------------------------------------------
@@ -429,6 +479,27 @@ def test_xlsx_int_sheet_index_and_quoted_names(tmp_path):
     assert read_xlsx_grid(p, sheet='He said "hi"').iat[0, 0] == "A"
     with pytest.raises(ValueError, match="out of range"):
         read_xlsx_grid(p, sheet=5)
+
+
+@pytest.mark.parametrize("name", ["alloc.xls", "alloc.xlsx"])
+def test_unreadable_workbook_is_an_explicit_error(tmp_path, name):
+    """A legacy binary .xls (an OLE2 file, not a zip) and a truncated
+    .xlsx each fail with a ValueError that names the file and says which
+    workbooks are read."""
+    from etl_jetro_spark.sources.excel import grid_from_excel, read_single_with_token
+    from etl_jetro_spark.sources.xlsx import write_xlsx
+
+    drop = tmp_path / "drop"
+    drop.mkdir()
+    path = drop / name
+    if name.endswith(".xls"):
+        path.write_bytes(b"\xd0\xcf\x11\xe0\xa1\xb1\x1a\xe1" + b"\x00" * 504)
+    else:
+        write_xlsx(str(tmp_path / "whole.xlsx"), {"S": [["a", 1]]})
+        path.write_bytes((tmp_path / "whole.xlsx").read_bytes()[:200])
+    with pytest.raises(ValueError, match="only OOXML workbooks") as err:
+        read_single_with_token(str(drop), reader=grid_from_excel)
+    assert str(path) in str(err.value)
 
 
 def test_graph_auth_slow_down_backoff_and_expiry():
