@@ -7,6 +7,8 @@
         [--show N] [--explain]
 
 Pipelines: 247, acme, leavins, southern_cross, flips_big, flips_baby.
+A drop folder's sheets may be .csv, .xlsx or .xlsm, each read by its
+extension.
 The run date defaults to today; pass --date for reproducible outputs.
 `query list` prints the declared query names; `--out` writes parquet,
 otherwise the first `--show` rows print to stdout.

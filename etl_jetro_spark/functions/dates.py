@@ -62,11 +62,6 @@ def fmt_mdy_no_pad_sql(x: str) -> str:
     return f"date_format(CAST({x} AS DATE), 'M/d/yyyy')"
 
 
-def fmt_mdy2_sql(x: str) -> str:
-    """``MM/dd/yy`` (macro-sink date format)."""
-    return f"date_format(CAST({x} AS DATE), 'MM/dd/yy')"
-
-
 def reformat_date_tolerant_sql(x: str) -> str:
     """Parse ``M/d/yyyy`` (or ISO) and re-emit ``MM/dd/yy``; unparseable
     values pass through unchanged (reference fallback behavior)."""
@@ -100,10 +95,6 @@ def next_mwf(base: str) -> Column:
 
 def fmt_mdy_no_pad(col: str) -> Column:
     return F.expr(fmt_mdy_no_pad_sql(ident(col)))
-
-
-def fmt_mdy2(col: str) -> Column:
-    return F.expr(fmt_mdy2_sql(ident(col)))
 
 
 def reformat_date_tolerant(col: str) -> Column:

@@ -48,7 +48,6 @@ _KEY_JUNK = string_lit(r"[#\s]")
 _DOT_ZERO = string_lit(r"\.0{1,2}$")
 _MONEY_JUNK = string_lit(r"[$,()\s]|-$")
 _MONEY_SEP = string_lit("[$,]")
-_LEADING_DOLLAR = string_lit("^[$]")
 _LEADING_NUM = string_lit(r"^(-?\d*\.?\d+)")
 _ANY_NUM = string_lit(r"(-?\d*\.?\d+)")
 _PAREN_NEG = string_lit(r"^\(.*\)$")
@@ -59,7 +58,6 @@ _NON_DIGIT = string_lit(r"\D")
 _DASH = string_lit(DASH_CLASS)
 _PDF_STORE = string_lit(r"-(\d+)-\d+\.pdf$")
 _EMAIL_GROUP = string_lit("(" + EMAIL_RE + ")")
-_EMAIL_FULL = string_lit("^" + EMAIL_RE + "$")
 
 
 def _try_double(num: str) -> str:
@@ -123,12 +121,6 @@ def first_int_sql(x: str) -> str:
     return f"try_cast(nullif({num}, '') AS BIGINT)"
 
 
-def leading_num_sql(x: str) -> str:
-    """Leading number only — text after it ignored; no leading junk allowed."""
-    s = f"regexp_replace({norm_ws_sql(x)}, {_LEADING_DOLLAR}, '')"
-    return _try_double(f"regexp_extract({s}, {_LEADING_NUM}, 1)")
-
-
 # --- F4: item code ------------------------------------------------------
 
 def item7_sql(x: str) -> str:
@@ -173,15 +165,7 @@ def extract_emails_sql(x: str) -> str:
     return f"aggregate({found}, CAST(array() AS ARRAY<STRING>), (acc, e) -> {step})"
 
 
-def is_valid_email_sql(x: str) -> str:
-    return f"({x} RLIKE {_EMAIL_FULL})"
-
-
 # --- Column forms: one F.expr over a column name -------------------------
-
-def strip_hidden(col: str) -> Column:
-    return F.expr(strip_hidden_sql(ident(col)))
-
 
 def norm_ws(col: str) -> Column:
     return F.expr(norm_ws_sql(ident(col)))
@@ -207,10 +191,6 @@ def first_int(col: str) -> Column:
     return F.expr(first_int_sql(ident(col)))
 
 
-def leading_num(col: str) -> Column:
-    return F.expr(leading_num_sql(ident(col)))
-
-
 def item7(col: str) -> Column:
     return F.expr(item7_sql(ident(col)))
 
@@ -229,7 +209,3 @@ def extract_store_from_pdf_name(col: str) -> Column:
 
 def extract_emails(col: str) -> Column:
     return F.expr(extract_emails_sql(ident(col)))
-
-
-def is_valid_email(col: str) -> Column:
-    return F.expr(is_valid_email_sql(ident(col)))

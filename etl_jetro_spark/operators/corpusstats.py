@@ -129,10 +129,3 @@ def sql_ols_select(p: str = "") -> str:
         f"CASE WHEN round({vx}, 9) > 0 AND round({vy}, 9) > 0 "
         f"THEN {cov} * {cov} / ({vx} * {vy}) END AS {p}r2"
     )
-
-
-def plogq_sum(c: Column, q_ln: Column) -> Column:
-    """Aggregate ``sum(c * q_ln)`` with c an exact count column — the
-    shared accumulator shape of the entropy/cross-entropy family.
-    Output-only (double fold)."""
-    return F.sum(c.cast("double") * q_ln)

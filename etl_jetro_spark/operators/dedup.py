@@ -172,20 +172,6 @@ def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
-def exact_dup_groups(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """Fingerprint groups with >1 member — the duplicate clusters."""
-    return (
-        spread(df)
-        .select(F.col(id_col), doc_fingerprint(text_col).alias("fingerprint"))
-        .groupBy("fingerprint")
-        .agg(
-            F.count(F.lit(1)).alias("dup_count"),
-            F.sort_array(F.collect_list(id_col)).alias("ids"),
-        )
-        .filter(F.col("dup_count") > 1)
-    )
-
-
 def minhash_lsh_candidates(
     df: DataFrame,
     id_col: str,

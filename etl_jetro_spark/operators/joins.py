@@ -19,7 +19,6 @@ def map_join(
     mapping: dict[str, object],
     key: str,
     out: str,
-    default: object = None,
     normalize_keys: bool = True,
     zero_to_null: bool = True,
 ) -> DataFrame:
@@ -43,8 +42,6 @@ def map_join(
     val = f"{lookup}[{k}]"
     if zero_to_null:
         val = f"CASE WHEN try_cast({val} AS DOUBLE) = 0 THEN NULL ELSE {val} END"
-    if default is not None:
-        val = f"coalesce({val}, {string_lit(str(default))})"
     return fact.withColumn(out, F.expr(val))
 
 

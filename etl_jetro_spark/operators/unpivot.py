@@ -39,7 +39,6 @@ def melt(
     var_name: str = "variable",
     value_name: str = "value",
     numeric_vars_only: bool = False,
-    clean_var_label: bool = True,
 ) -> DataFrame:
     """Wide→long unpivot: the ``ids`` columns, then ``var_name`` (the
     header label) and ``value_name`` (the cell cast to string; the
@@ -48,8 +47,8 @@ def melt(
     - ``value_cols`` defaults to every non-id column.
     - ``numeric_vars_only``: keep only columns whose *name* is numeric-ish
       (store/branch headers like ``114`` / ``449.0``) — U4 semantics.
-    - ``clean_var_label``: strip trailing ``.0`` from the label column
-      (``'449.0'`` → ``'449'``) — U1 header normalization.
+    - The label drops a trailing ``.0``/``.00`` (``'449.0'`` → ``'449'``)
+      — U1 header normalization.
 
     The plan node is a Generate, ``stack(n, '<label>', CAST(<col> AS
     STRING), …)``, still partition-local with no shuffle; the cleaned
@@ -62,7 +61,7 @@ def melt(
         raise ValueError("melt: no value columns to unpivot")
 
     def label(c: str) -> str:
-        return re.sub(r"\.0{1,2}$", "", c.strip()) if clean_var_label else c
+        return re.sub(r"\.0{1,2}$", "", c.strip())
 
     terms = ", ".join(f"{string_lit(label(c))}, CAST({ident(c)} AS STRING)" for c in vals)
     return df.selectExpr(

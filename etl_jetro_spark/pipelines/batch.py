@@ -240,14 +240,14 @@ def split_big_and_baby(raw: pd.DataFrame) -> tuple[pd.DataFrame, pd.DataFrame]:
     return big, baby
 
 
-def build_flips_store_block(big: pd.DataFrame, header_row: int = 4) -> dict[str, dict[str, str]]:
+def build_flips_store_block(big: pd.DataFrame) -> dict[str, dict[str, str]]:
     """P12: the per-store Fob/Xdock block right of column E, stopping at
-    Lot #/Total; rows labeled Fob and Xdock (reference :84-129)."""
+    Lot #/Total: store codes on row 4, Fob on row 1 and Xdock on row 3
+    (reference :84-129)."""
     block = G.extract_block(
-        big, row_range=(0, header_row + 1), col_start=4,
-        stop_markers=["Lot #", "Total"], marker_row=header_row,
+        big, row_range=(0, 5), col_start=4, stop_markers=["Lot #", "Total"], marker_row=4
     )
-    stores = [G._clean_header(v) for v in block.iloc[header_row]]
+    stores = [G._clean_header(v) for v in block.iloc[4]]
     fob = {s: str(block.iat[1, j]) for j, s in enumerate(stores) if s}
     xdock = {s: str(block.iat[3, j]) for j, s in enumerate(stores) if s}
     return {"fob": fob, "xdock": xdock}

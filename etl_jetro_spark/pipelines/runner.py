@@ -9,6 +9,7 @@ keystroke macro files. The clock is an explicit parameter everywhere.
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 from datetime import date
 
 from pyspark.sql import DataFrame, SparkSession
@@ -21,7 +22,7 @@ from etl_jetro_spark.sinks.excel_sink import (
     write_canonical,
     write_parquet_dir,
 )
-from etl_jetro_spark.sinks.macro import render_adpo_x, render_dlpm
+from etl_jetro_spark.sinks.macro import render_adpo_i, render_adpo_x, render_dlpm
 from etl_jetro_spark.sources.excel import (
     read_allocation_pricesheet,
     read_single_with_token,
@@ -40,16 +41,17 @@ def _write_text(out_dir: str, name: str, text: str) -> str:
 def emit_order(
     canon: DataFrame,
     out_dir: str,
-    run_date: date | None = None,
+    run_date: date,
+    macros: dict[str, Callable[..., tuple[str, str]]],
     name: str = "order_sheet",
 ) -> dict:
     """A run's ordered sinks: execute the canonical plan once (one Arrow
-    collect, sorted on the driver), then write the order sheet and, given
-    ``run_date``, the ADPO,X macro from that one table."""
+    collect, sorted on the driver), then write the order sheet and each
+    macro in ``macros`` (manifest key → renderer) from that one table."""
     table = collect_ordered(canon, *CANONICAL_ORDER)
     manifest = {"order_sheet": write_canonical(table, out_dir, name=name)}
-    if run_date is not None:
-        manifest["adpo_x"] = _write_text(out_dir, *render_adpo_x(table, run_date=run_date))
+    for key, render in macros.items():
+        manifest[key] = _write_text(out_dir, *render(table, run_date))
     return manifest
 
 
@@ -69,7 +71,7 @@ def run_247(
         canon = B.build_allocation(
             spark, wide, "247", base_date=run_date.isoformat()
         )
-        manifest = emit_order(canon, out_dir, run_date)
+        manifest = emit_order(canon, out_dir, run_date, {"adpo_x": render_adpo_x})
     if price_grid is not None:
         wide = B.clean_pricesheet(price_grid)
         long = B.build_pricesheet_long(spark, wide)
@@ -84,20 +86,23 @@ def run_acme(
     grid, token = read_single_with_token(in_folder)
     wide = B.clean_acme_like(grid, leading_junk_cols=2)
     canon = B.build_acme_like(spark, wide, "acme", token, run_date.isoformat())
-    return emit_order(canon, out_dir, run_date)
+    return emit_order(canon, out_dir, run_date, {"adpo_x": render_adpo_x})
 
 
 def run_flips_big(
     spark: SparkSession, in_folder: str, out_dir: str, run_date: date
 ) -> dict:
     """Flips big sub-pipeline: split → store block → canonical with
-    XDCK/FOB + next-MWF EDD."""
+    XDCK/FOB + next-MWF EDD → order sheet + ADPO,I macro (reference
+    Flips/Flips.ipynb big branch)."""
     grid, token = read_single_with_token(in_folder)
     big, _baby = B.split_big_and_baby(grid)
     block = B.build_flips_store_block(big)
     wide = B.clean_big_flip(big)
     canon = B.build_big_flip(spark, wide, block, base_date=run_date.isoformat())
-    return {"token": token, **emit_order(canon, out_dir, name="big_flip_order")}
+    return {"token": token, **emit_order(
+        canon, out_dir, run_date, {"adpo_i": render_adpo_i}, name="big_flip_order"
+    )}
 
 
 def run_leavins(
@@ -116,19 +121,19 @@ def run_leavins(
     canon = B.build_allocation(
         spark, wide, "leavins", edd=date_lit(edd.isoformat())
     )
-    return emit_order(canon, out_dir, run_date)
+    return emit_order(canon, out_dir, run_date, {"adpo_x": render_adpo_x})
 
 
 def run_southern_cross(
     spark: SparkSession, in_folder: str, out_dir: str, run_date: date
 ) -> dict:
     """SouthernCross IBT batch: coercion matrix + alphabetical reorder."""
-    grid, _token = read_single_with_token(in_folder)
+    grid, _token = read_single_with_token(in_folder, sheet="IBT FORMAT")
     wide = B.clean_southern_cross(grid)
     canon = B.build_allocation(
         spark, wide, "southern_cross", base_date=run_date.isoformat()
     )
-    return emit_order(canon, out_dir, run_date)
+    return emit_order(canon, out_dir, run_date, {"adpo_x": render_adpo_x})
 
 
 def run_flips_baby(

@@ -205,20 +205,15 @@ def _group_trailer(branch: str, edd: str | None) -> list[str]:
 # K5: ADPO,I macro (Flips big)
 # --------------------------------------------------------------------------
 
-def render_adpo_i(
-    canonical: pa.Table,
-    run_date: date,
-    xdck_letter: str = "M",
-    warehouse: str = "498",
-    freight_type: str = "W",
-    buyer_code: str = "P20",
-    file_token: str = "output",
-) -> tuple[str, str]:
+def render_adpo_i(canonical: pa.Table, run_date: date) -> tuple[str, str]:
     """K5: per-branch blocks with warehouse-addressed items, a freight
     trailer whose terminal choreography varies with FOB presence, and
     per-branch XDCK/FOB value injection. Groups iterate in string-sorted
     Branch order (reference groupby sort=True on the string column);
-    ``canonical`` is the run's collected canonical table."""
+    ``canonical`` is the run's collected canonical table. The warehouse
+    (498), buyer (P20), freight type (W) and XDCK letter (M) are the
+    reference's fixed values. Returns (filename
+    '{iso}_ADPO_I_output.txt', text)."""
     cols = ("Branch", "Item", "Distro Size", "Expected Delivery Date", "XDCK", "FOB")
     rows = sorted(
         (
@@ -235,38 +230,38 @@ def render_adpo_i(
         branch, _item, _qty, edd, xdck, fob = group[0]
         edd, xdck, fob = edd or "", _clean_num_str(xdck), _clean_num_str(fob)
         # outer cycle start, then one block per item
-        lines += ["", "Key tab", f"Type {buyer_code}", f"Type {branch}", "Type 20000", "Key Enter"]
+        lines += ["", "Key tab", "Type P20", f"Type {branch}", "Type 20000", "Key Enter"]
         for _b, item, qty, *_ in group:
             lines += [
-                "", f"Type {warehouse}-{item}", "Key enter", "Key tab", *["Key delete"] * 4,
+                "", f"Type 498-{item}", "Key enter", "Key tab", *["Key delete"] * 4,
                 f"Type {qty}", "Key Enter", "Key PF24",
             ]
         # trailer: shared head, FOB-dependent middle, XDCK tail + clipboard
         lines += [
-            "", f"Type {warehouse}-{FREIGHT_ITEM}", "Key enter", "Key tab", *["Key delete"] * 4,
+            "", f"Type 498-{FREIGHT_ITEM}", "Key enter", "Key tab", *["Key delete"] * 4,
             "Type 0", "Key Enter", "Key PF13", "Key Enter", "wait 500", "wait 500",
-            f"Type {edd}", "Key PF2", "wait 500", f"Type {xdck_letter}", "key pf2", "wait 1500",
+            f"Type {edd}", "Key PF2", "wait 500", "Type M", "key pf2", "wait 1500",
             "key cursorup", "key cursorup", "wait 500", "key cursorup", "key cursorup",
             "key tab", "wait 500", "key cursordown", f"Type {edd}", "Key Tab",
         ]
         if fob:
             lines += [
                 *["key delete"] * 4, f"type {fob}", "wait 500", "key tab",
-                f"type {freight_type}", "Key cursordown", "Key tab", "key tab",
+                "type W", "Key cursordown", "Key tab", "key tab",
             ]
         else:
             lines += ["key tab", "key tab", "wait 500", "key tab", "Key cursordown", "Key tab"]
         lines += [
             "", "key delete", "wait 500", *["key delete"] * 3, f"Type {xdck}", "wait 500",
-            "key tab", f"type {freight_type}", "Key tab", "key tab", "wait 500", "key tab",
+            "key tab", "type W", "Key tab", "key tab", "wait 500", "key tab",
             "wait 500", "Key cursordown", "wait 500", "Key cursordown", "key tab",
             "", "key Enter", "wait 500", "key Enter",
             "wait 3000", "EditSelect 13,39,13,47", "key EditCopy", "wait 1000",
-            f"FileSpec clipboard,C:\\POs\\{iso}_114544_{buyer_code}.csv,append",
+            f"FileSpec clipboard,C:\\POs\\{iso}_114544_P20.csv,append",
             "key EditSaveClipboard", "wait 1000",
-            f"FileSpec clipboard,{FAXSHARE_UNC}\\{iso}_{buyer_code}.csv,append",
+            f"FileSpec clipboard,{FAXSHARE_UNC}\\{iso}_P20.csv,append",
             "key EditSaveClipboard",
         ]
 
-    name = f"{iso}_ADPO_I_{file_token}.txt"
+    name = f"{iso}_ADPO_I_output.txt"
     return name, "\n".join(ln.rstrip() for ln in lines) + "\n"

@@ -9,10 +9,9 @@ sheet_bot/email_sender.py:30-175). The transport is an injectable callable
 transport; no network is ever touched unless the caller wires one in.
 
 K8: Google Sheet status write-back — the reference batches A1-addressed
-updates (sheets.py:182-189). The *planning* of updates is pure
-((status_a1, new_status) pairs → [{range, values}] payload); applying it
-goes through the ``sources.sheets_client.SheetsClient`` adapter (same
-injectable-transport design).
+updates (sheets.py:182-189). The engine plans the update, (status_a1,
+new_status) pairs → the [{range, values}] payload; the PO control tick
+returns it, and the caller applies it to the sheet.
 
 Both are designed as foreachBatch sinks: idempotent per (key, status), so
 micro-batch replays are safe.
@@ -270,12 +269,3 @@ def status_update_payload(updates: Iterable[tuple[str, str]]) -> list[dict]:
     """K8: (status_a1, new_status) pairs → the Sheets batch_update payload.
     Sorted for determinism; safe to re-send (last-write-wins upsert)."""
     return [{"range": a1, "values": [[status]]} for a1, status in sorted(updates)]
-
-
-def write_status_updates(updates: Iterable[tuple[str, str]], client=None) -> list[dict]:
-    """Apply the payload through a ``SheetsClient`` (or any object with
-    ``batch_update``) when one is wired; always returns the payload."""
-    payload = status_update_payload(updates)
-    if client is not None:
-        client.batch_update(payload)
-    return payload

@@ -186,12 +186,6 @@ def read_xlsx_grid(path: str, sheet: str | int | None = None) -> pd.DataFrame:
         return _sheet_grid(zf, visible[0][1], shared)
 
 
-def sheet_names(path: str) -> list[tuple[str, str]]:
-    """[(name, state)] for every worksheet."""
-    with _open_workbook(path) as zf:
-        return [(n, s) for n, s, _p in _workbook_info(zf).sheets]
-
-
 # --------------------------------------------------------------------------
 # writer
 # --------------------------------------------------------------------------

@@ -21,7 +21,6 @@ import errno
 import os
 import re
 import shutil
-import time
 from dataclasses import dataclass, field
 
 PO_FROM_NAME = re.compile(r"-(\d+)\.pdf$", re.IGNORECASE)
@@ -79,13 +78,15 @@ def _stage_and_commit(src: str, dest: str, tmp: str) -> None:
     os.unlink(src)
 
 
-def move_file_idempotent(
-    src: str, dest_dir: str, retries: int = 5, retry_sleep: float = 0.0
-) -> str | None:
-    """T5/T6/T7: move with pre-check (already-delivered wins), bounded
-    retries, and skip-if-same-name — safe to repeat on a re-run tick.
+MOVE_ATTEMPTS = 5  # reference open_retry=5 (sheet_bot/utils.py:273-285)
 
-    Reference parity: ``open_retry=5`` / ``open_retry_sleep`` move loop
+
+def move_file_idempotent(src: str, dest_dir: str) -> str | None:
+    """T5/T6/T7: move with pre-check (already-delivered wins),
+    ``MOVE_ATTEMPTS`` back-to-back attempts, and skip-if-same-name — safe
+    to repeat on a re-run tick.
+
+    Reference parity: the ``open_retry`` move loop
     (sheet_bot/utils.py:273-285). Delivery goes through
     :func:`_stage_and_commit`, so ``dest`` appears atomically: the
     pre-check below never sees a partial file, even after a hard crash
@@ -103,7 +104,7 @@ def move_file_idempotent(
             os.remove(tmp)  # stale staging file from a prior hard crash
         except OSError:
             pass
-    for attempt in range(retries):
+    for _ in range(MOVE_ATTEMPTS):
         try:
             _stage_and_commit(src, dest, tmp)
             return dest
@@ -113,9 +114,6 @@ def move_file_idempotent(
                     os.remove(tmp)  # half-staged copy: source not consumed
                 except OSError:
                     pass
-            if attempt == retries - 1:
-                return None
-            time.sleep(retry_sleep)
     return None
 
 
@@ -131,10 +129,7 @@ def precheck_dest(state: WatchState, dest_dir: str) -> WatchState:
 
 
 def poll_step(
-    state: WatchState,
-    listing: list[tuple[str, int]],
-    dest_dir: str,
-    move: bool = True,
+    state: WatchState, listing: list[tuple[str, int]], dest_dir: str
 ) -> list[tuple[str, str]]:
     """One poll tick over a (path, size) listing. Mutates ``state`` and
     returns this tick's transitions [(po, new_status)]."""
@@ -156,10 +151,7 @@ def poll_step(
         else:
             s.polls_stable += 1
             # settle: unchanged across one full poll interval
-            dest = (
-                move_file_idempotent(path, dest_dir) if move
-                else os.path.join(dest_dir, os.path.basename(path))
-            )
+            dest = move_file_idempotent(path, dest_dir)
             if dest is not None:
                 state.status[po] = "done"
                 state.moved_to[po] = dest

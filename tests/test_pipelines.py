@@ -150,14 +150,14 @@ FLIPS_GRID = [
 def test_flips_split_and_store_block():
     big, baby = P.split_big_and_baby(grid_from_rows(FLIPS_GRID))
     assert len(big) == 7 and str(baby.iat[0, 0]) == "Item"
-    block = P.build_flips_store_block(big, header_row=4)
+    block = P.build_flips_store_block(big)
     assert block["fob"]["114"] == "$10.00" and block["xdock"]["114"] == "1.50"
     assert block["xdock"]["86"] == "0"
 
 
 def test_big_flip_e2e(spark):
     big, _ = P.split_big_and_baby(grid_from_rows(FLIPS_GRID))
-    block = P.build_flips_store_block(big, header_row=4)
+    block = P.build_flips_store_block(big)
     wide = P.clean_big_flip(big)
     out = P.build_big_flip(spark, wide, block, base_date="2026-08-13")  # Thu
     rows = {(r["Branch"], r["Item"]): r for r in out.collect()}

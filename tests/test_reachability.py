@@ -18,12 +18,6 @@ PKG = "etl_jetro_spark"
 # besides ``etl_jetro_spark/__main__.py``
 ENTRY_POINTS = [ROOT / "__spark_entry__.py", *sorted((ROOT / "perfbench").glob("*.py"))]
 
-EXEMPT = {
-    f"{PKG}.sources.sheets_client": "the reference's Sheets REST transport; "
-    "wiring it into the tick is an open decision",
-}
-
-
 def _package_modules() -> dict[str, Path]:
     mods = {}
     for path in (ROOT / PKG).rglob("*.py"):
@@ -129,10 +123,8 @@ def _reached(mods: dict[str, Path]) -> set[str]:
 def test_every_package_module_is_reached():
     mods = _package_modules()
     reached = _reached(mods)
-    unreached = sorted(set(mods) - reached - set(EXEMPT))
+    unreached = sorted(set(mods) - reached)
     assert not unreached, f"no entry point imports these modules: {unreached}"
-    # an exemption that no longer applies is dropped, not kept
-    assert set(EXEMPT) <= set(mods) - reached
 
 
 def test_supplier_path_reaches_only_its_modules():

@@ -184,7 +184,7 @@ def _artifact_digests(manifest: dict) -> dict[str, str]:
     from etl_jetro_spark.sources.xlsx import read_xlsx_grid
 
     out = {}
-    for key in ("adpo_x", "dlpm"):
+    for key in ("adpo_x", "adpo_i", "dlpm"):
         if key in manifest:
             with open(manifest[key], "rb") as fh:
                 out[key] = _sha(os.path.basename(manifest[key]).encode() + fh.read())
@@ -200,15 +200,6 @@ def _artifact_digests(manifest: dict) -> dict[str, str]:
     if sheet:
         out["xlsx"] = _sha(read_xlsx_grid(sheet["xlsx"], sheet="Scripting").values.tolist())
     return out
-
-
-def _adpo_i_digest(parquet: str) -> str:
-    import pyarrow.parquet as pq
-
-    from etl_jetro_spark.sinks.macro import render_adpo_i
-
-    name, text = render_adpo_i(pq.read_table(parquet), RUN_DATE)
-    return _sha(name.encode() + text.encode())
 
 
 def _golden_cases(root, sf_dir: str) -> dict[str, tuple]:
@@ -238,8 +229,6 @@ def run_golden_cases(spark, root, sf_dir: str) -> dict[str, dict[str, str]]:
     for case, (fn, drop, extra) in _golden_cases(root, sf_dir).items():
         manifest = _run_case(spark, fn, drop, extra, str(root / "out" / case))
         got[case] = _artifact_digests(manifest)
-        if fn == "run_flips_big":  # no runner emits ADPO,I; render it from the sheet
-            got[case]["adpo_i"] = _adpo_i_digest(manifest["order_sheet"]["parquet"])
     return got
 
 
@@ -306,6 +295,43 @@ GOLDEN = {
 
 def test_golden_artifacts_unchanged(spark, tmp_path, sf_dir):
     assert run_golden_cases(spark, tmp_path, sf_dir) == GOLDEN
+
+
+def _typed_cell(s: str) -> int | str:
+    """A CSV cell as a workbook cell: a number where the text is a plain
+    integer, else the text."""
+    try:
+        return int(s) if str(int(s)) == s else s
+    except ValueError:
+        return s
+
+
+def _xlsx_drop(drop, xdrop, sheet: str | None) -> None:
+    """``drop``'s CSV sheets rewritten as workbooks in ``xdrop``, each with
+    an Excel ``~$`` lock file beside it. Given ``sheet``, the grid goes on
+    that tab behind an active cover sheet."""
+    from etl_jetro_spark.sources.excel import grid_from_csv
+    from etl_jetro_spark.sources.xlsx import write_xlsx
+
+    xdrop.mkdir()
+    for path in sorted(drop.glob("*.csv")):
+        rows = [[_typed_cell(v) for v in r] for r in grid_from_csv(str(path)).values.tolist()]
+        sheets = {"Sheet1": rows} if sheet is None else {"Cover": [["see next tab"]], sheet: rows}
+        name = f"{path.stem}.xlsx"
+        write_xlsx(str(xdrop / name), sheets, active=0)
+        (xdrop / f"~${name}").write_bytes(b"lock")
+
+
+@pytest.mark.parametrize("case", list(GOLDEN))
+def test_xlsx_drop_gives_golden_artifacts(spark, tmp_path, sf_dir, case):
+    """A drop of ``.xlsx`` workbooks, typed cells and lock files included,
+    gives the same artifacts as its CSV drop; Southern Cross reads its
+    ``IBT FORMAT`` tab, not the active cover sheet."""
+    fn, drop, extra = _golden_cases(tmp_path / "csv", sf_dir)[case]
+    xdrop = tmp_path / "xlsx"
+    _xlsx_drop(drop, xdrop, "IBT FORMAT" if fn == "run_southern_cross" else None)
+    manifest = _run_case(spark, fn, xdrop, extra, str(tmp_path / "out"))
+    assert _artifact_digests(manifest) == GOLDEN[case]
 
 
 def test_runners_compile_without_codegen_fallback(spark, tmp_path, sf_dir):

@@ -94,7 +94,7 @@ def test_notify_body_and_status_payload():
     assert 'style="height:24px;"' in combined
 
     updates = [("G2", "SENDING"), ("E7", "Sent")]
-    payload = notify.write_status_updates(updates)
+    payload = notify.status_update_payload(updates)
     assert payload == [
         {"range": "E7", "values": [["Sent"]]},
         {"range": "G2", "values": [["SENDING"]]},
@@ -232,11 +232,22 @@ def test_xlsx_roundtrip_types(tmp_path):
     assert g.iat[2, 1] is True and g.iat[2, 2] is None
 
 
+def _sheet_states(path: str) -> list[tuple[str, str]]:
+    """[(name, state)] of every worksheet, read from ``xl/workbook.xml``."""
+    import zipfile
+    from xml.etree import ElementTree as ET
+
+    with zipfile.ZipFile(path) as zf:
+        root = ET.fromstring(zf.read("xl/workbook.xml"))
+    tag = "{http://schemas.openxmlformats.org/spreadsheetml/2006/main}sheet"
+    return [(sh.get("name"), sh.get("state", "visible")) for sh in root.iter(tag)]
+
+
 def test_xlsx_hidden_sheet_and_active_selection(tmp_path):
     """Reference behaviors (247/tools/read_file_tool.py:83-101): hidden and
     veryHidden sheets are never picked; active tab wins when visible, else
     the first visible sheet."""
-    from etl_jetro_spark.sources.xlsx import read_xlsx_grid, sheet_names, write_xlsx
+    from etl_jetro_spark.sources.xlsx import read_xlsx_grid, write_xlsx
 
     p = str(tmp_path / "wb.xlsx")
     write_xlsx(
@@ -246,7 +257,7 @@ def test_xlsx_hidden_sheet_and_active_selection(tmp_path):
         active=2,  # 'back' is active and visible -> picked
     )
     assert read_xlsx_grid(p).iat[0, 0] == "B"
-    assert ("ghost", "veryHidden") in sheet_names(p)
+    assert ("ghost", "veryHidden") in _sheet_states(p)
 
     p2 = str(tmp_path / "wb2.xlsx")
     write_xlsx(
@@ -261,22 +272,20 @@ def test_xlsx_hidden_sheet_and_active_selection(tmp_path):
 def test_xlsx_named_sheet_ibt_format(tmp_path):
     """SouthernCross reads the fixed tab 'IBT FORMAT' and errors when it is
     absent (reference SouthernCross/tools/read_file_tool.py:55-60)."""
-    from etl_jetro_spark.sources.excel import grid_from_excel, read_single_with_token
-    from etl_jetro_spark.sources.xlsx import write_xlsx
+    from etl_jetro_spark.sources.excel import read_single_with_token
+    from etl_jetro_spark.sources.xlsx import read_xlsx_grid, write_xlsx
 
     folder = tmp_path / "sc"
     folder.mkdir()
     p = str(folder / "Southern Cross IBT.xlsx")
     write_xlsx(p, {"cover": [["junk"]], "IBT FORMAT": [["Item", "449"], ["12", "3"]]})
-    grid, token = read_single_with_token(
-        str(folder), reader=grid_from_excel, sheet="IBT FORMAT"
-    )
+    grid, token = read_single_with_token(str(folder), sheet="IBT FORMAT")
     assert token == "southern cross ibt"
     assert list(grid.iloc[0]) == ["Item", "449"]
     missing = str(folder / "missing.xlsx")
     write_xlsx(missing, {"only": [["x"]]})
     with pytest.raises(ValueError, match="IBT FORMAT"):
-        grid_from_excel(missing, sheet="IBT FORMAT")
+        read_xlsx_grid(missing, sheet="IBT FORMAT")
 
 
 def test_247_pipeline_through_real_xlsx(spark, tmp_path, sf_dir):
@@ -285,10 +294,7 @@ def test_247_pipeline_through_real_xlsx(spark, tmp_path, sf_dir):
     the way) → S1 pair scan → clean → build → equals the direct path."""
     from etl_jetro_spark.pipelines import batch as B
     from etl_jetro_spark.plans import fixtures as FX
-    from etl_jetro_spark.sources.excel import (
-        grid_from_excel,
-        read_allocation_pricesheet,
-    )
+    from etl_jetro_spark.sources.excel import read_allocation_pricesheet
     from etl_jetro_spark.sources.xlsx import write_xlsx
 
     grid = FX.allocation_grid(sf_dir)
@@ -303,7 +309,7 @@ def test_247_pipeline_through_real_xlsx(spark, tmp_path, sf_dir):
     )
     (folder / "~$Weekly Allocation.xlsx").write_bytes(b"lock")
 
-    alloc, price = read_allocation_pricesheet(str(folder), reader=grid_from_excel)
+    alloc, price = read_allocation_pricesheet(str(folder))
     assert price is None and alloc is not None
     via_xlsx = B.build_allocation(
         spark, B.clean_allocation(alloc), "247", base_date="2026-01-05"
@@ -327,7 +333,7 @@ def test_write_canonical_emits_real_workbook(spark, tmp_path, sf_dir):
         collect_ordered,
         write_canonical,
     )
-    from etl_jetro_spark.sources.xlsx import read_xlsx_grid, sheet_names
+    from etl_jetro_spark.sources.xlsx import read_xlsx_grid
 
     canon = B.build_allocation(
         spark, B.clean_allocation(FX.allocation_grid(sf_dir)), "247",
@@ -335,7 +341,7 @@ def test_write_canonical_emits_real_workbook(spark, tmp_path, sf_dir):
     )
     man = write_canonical(collect_ordered(canon, *CANONICAL_ORDER), str(tmp_path))
     assert man["xlsx"] and os.path.exists(man["xlsx"])
-    assert [n for n, _ in sheet_names(man["xlsx"])] == [
+    assert [n for n, _ in _sheet_states(man["xlsx"])] == [
         "Scripting", "ANOMALY", "STORE CLUSTER"
     ]
     g = read_xlsx_grid(man["xlsx"], sheet="Scripting")
@@ -435,47 +441,12 @@ def test_graph_device_code_and_send():
     assert len([c for c in http.calls if "devicecode" in c["url"]]) == 1
 
 
-def test_sheets_client_fetch_and_writeback():
-    """S6 fetch + F12 tab pick + K8 batch write through the adapter."""
-    from etl_jetro_spark.sinks.notify import write_status_updates
-    from etl_jetro_spark.sources.sheets_client import SheetsClient
-
-    http = FakeHttp([
-        (200, {"sheets": [{"properties": {"title": "Mon Orders"}},
-                          {"properties": {"title": "Tues Orders"}}]}),
-        (200, {"values": [["Note", "Vendor #", "Status"],
-                          ["", "79906", "Ready"]]}),
-        (200, {"sheets": [{"properties": {"title": "Tues Orders"}}]}),
-        (200, {"totalUpdatedCells": 2}),
-    ])
-    c = SheetsClient("sheet-1", http, token="tok")
-    assert c.list_tabs() == ["Mon Orders", "Tues Orders"]
-    grid = c.get_all_values("Tues Orders")
-    assert grid[1] == ["", "79906", "Ready"]
-    assert http.calls[1]["headers"]["Authorization"] == "Bearer tok"
-
-    from datetime import date as _d
-
-    assert c.pick_today_tab(_d(2026, 1, 6)) == "Tues Orders"  # a Tuesday
-
-    updates = [("C2", "SENDING"), ("C5", "Sent")]
-    payload = write_status_updates(updates, client=c)
-    assert payload == [
-        {"range": "C2", "values": [["SENDING"]]},
-        {"range": "C5", "values": [["Sent"]]},
-    ]
-    assert http.calls[-1]["json"]["data"] == payload
-    assert http.calls[-1]["json"]["valueInputOption"] == "RAW"
-
-
 def test_xlsx_int_sheet_index_and_quoted_names(tmp_path):
-    from etl_jetro_spark.sources.excel import grid_from_excel
     from etl_jetro_spark.sources.xlsx import read_xlsx_grid, write_xlsx
 
     p = str(tmp_path / "t.xlsx")
     write_xlsx(p, {'He said "hi"': [["A"]], "second": [["B"]]})
     assert read_xlsx_grid(p, sheet=1).iat[0, 0] == "B"
-    assert grid_from_excel(p, sheet=1).iat[0, 0] == "B"
     assert read_xlsx_grid(p, sheet='He said "hi"').iat[0, 0] == "A"
     with pytest.raises(ValueError, match="out of range"):
         read_xlsx_grid(p, sheet=5)
@@ -486,7 +457,7 @@ def test_unreadable_workbook_is_an_explicit_error(tmp_path, name):
     """A legacy binary .xls (an OLE2 file, not a zip) and a truncated
     .xlsx each fail with a ValueError that names the file and says which
     workbooks are read."""
-    from etl_jetro_spark.sources.excel import grid_from_excel, read_single_with_token
+    from etl_jetro_spark.sources.excel import read_single_with_token
     from etl_jetro_spark.sources.xlsx import write_xlsx
 
     drop = tmp_path / "drop"
@@ -498,7 +469,7 @@ def test_unreadable_workbook_is_an_explicit_error(tmp_path, name):
         write_xlsx(str(tmp_path / "whole.xlsx"), {"S": [["a", 1]]})
         path.write_bytes((tmp_path / "whole.xlsx").read_bytes()[:200])
     with pytest.raises(ValueError, match="only OOXML workbooks") as err:
-        read_single_with_token(str(drop), reader=grid_from_excel)
+        read_single_with_token(str(drop))
     assert str(path) in str(err.value)
 
 
@@ -527,11 +498,3 @@ def test_graph_auth_slow_down_backoff_and_expiry():
         (200, {"access_token": "tok-b", "expires_in": 3600}),
     ]
     assert auth.token() == "tok-b"
-
-
-def test_sheets_client_url_encodes_tab():
-    from etl_jetro_spark.sources.sheets_client import SheetsClient
-
-    http = FakeHttp([(200, {"values": [["x"]]})])
-    SheetsClient("s", http).get_all_values("Tues 8/12")
-    assert http.calls[0]["url"].endswith("/values/Tues%208%2F12")

@@ -74,7 +74,7 @@ def test_move_retries_exhausted_cleans_partial_copy(tmp_path, monkeypatch):
         raise OSError("injected: device gone mid-copy")
 
     monkeypatch.setattr(S, "_stage_and_commit", failing_commit)
-    got = S.move_file_idempotent(str(src), str(dest_dir), retries=5)
+    got = S.move_file_idempotent(str(src), str(dest_dir))
     assert got is None
     assert len(attempts) == 5
     assert os.listdir(dest_dir) == []  # no dest, no orphan .partial
@@ -93,7 +93,7 @@ def test_move_retries_exhausted_cleans_partial_copy(tmp_path, monkeypatch):
     assert os.listdir(dest_dir) == []
     # recovery: once moves work again, the same call delivers normally
     monkeypatch.undo()
-    got2 = S.move_file_idempotent(str(src), str(dest_dir), retries=5)
+    got2 = S.move_file_idempotent(str(src), str(dest_dir))
     assert got2 and open(got2, "rb").read() == b"full-pdf-payload"
 
 
@@ -124,7 +124,7 @@ def test_hard_crash_mid_copy_never_exposes_partial_dest(tmp_path, monkeypatch):
     monkeypatch.setattr(os, "rename", exdev_rename)
     monkeypatch.setattr(shutil, "copy2", crashing_copy2)
     try:
-        S.move_file_idempotent(str(src), str(dest_dir), retries=5)
+        S.move_file_idempotent(str(src), str(dest_dir))
     except KeyboardInterrupt:
         pass
     dest = dest_dir / src.name
@@ -132,7 +132,7 @@ def test_hard_crash_mid_copy_never_exposes_partial_dest(tmp_path, monkeypatch):
     assert src.read_bytes() == b"full-pdf-payload"
     # replay after recovery: pre-check misses (dest absent), delivery runs
     monkeypatch.undo()
-    got = S.move_file_idempotent(str(src), str(dest_dir), retries=5)
+    got = S.move_file_idempotent(str(src), str(dest_dir))
     assert got and open(got, "rb").read() == b"full-pdf-payload"
     assert os.listdir(dest_dir) == [src.name]  # stale .partial replaced/gone
 
@@ -261,28 +261,11 @@ def test_expected_pos_order_preserving_distinct():
     assert orch.expected_pos_for_vendor(stores) == ["88101", "88102"]
 
 
-def test_orchestrate_tick_through_sheets_transport(tmp_path):
-    """The whole control loop against the REST adapter: fetch today's tab
-    grid through the (fake) transport, run the tick, write both payloads
-    back through batch_update — the reference main() shape end-to-end."""
-    from datetime import date
-
-    from etl_jetro_spark.sources.sheets_client import SheetsClient
-
-    class Http:
-        def __init__(self):
-            self.calls = []
-
-        def __call__(self, method, url, headers=None, form=None, json_body=None):
-            self.calls.append({"method": method, "url": url, "json": json_body})
-            if url.endswith("fields=sheets.properties.title"):
-                return 200, {"sheets": [{"properties": {"title": "Tues Orders"}}]}
-            if "/values/" in url:
-                return 200, {"values": CONTROL_GRID}
-            return 200, {"totalUpdatedCells": 1}
-
-    http = Http()
-    client = SheetsClient("cp-1", http, token="t")
+def test_orchestrate_tick_all_pos_delivered(tmp_path):
+    """Both Ready rows end Sent when every expected PO is found: vendor
+    79906's two PDFs settle in the watch folder and 44602's was delivered
+    before the tick. The lock and final write-backs are one A1 update per
+    row, sorted by range."""
     watch = tmp_path / "w"
     dest = tmp_path / "d"
     watch.mkdir()
@@ -291,16 +274,19 @@ def test_orchestrate_tick_through_sheets_transport(tmp_path):
     (watch / "79906-114-88102.pdf").write_bytes(b"y")
     (dest / "44602-86-88104.pdf").write_bytes(b"z")
 
-    tab = client.pick_today_tab(date(2026, 1, 6))  # a Tuesday
-    grid = client.get_all_values(tab)
-    m = orch.orchestrate_tick(None, grid, [str(watch)], str(dest), deadline_polls=3)
-    client.batch_update(m["lock"])
-    client.batch_update(m["final"])
-    finals = {p["range"]: p["values"][0][0] for p in m["final"]}
-    assert finals == {"G2": "Sent", "E7": "Sent"}
-    posted = [c for c in http.calls if c["url"].endswith("values:batchUpdate")]
-    assert posted[0]["json"]["data"] == m["lock"]
-    assert posted[1]["json"]["data"] == m["final"]
+    m = orch.orchestrate_tick(None, CONTROL_GRID, [str(watch)], str(dest), deadline_polls=3)
+    assert m["lock"] == [
+        {"range": "E7", "values": [["SENDING"]]},
+        {"range": "G2", "values": [["SENDING"]]},
+    ]
+    assert m["final"] == [
+        {"range": "E7", "values": [["Sent"]]},
+        {"range": "G2", "values": [["Sent"]]},
+    ]
+    assert m["errors"] == {}
+    assert sorted(os.listdir(dest)) == [
+        "44602-86-88104.pdf", "79906-114-88101.pdf", "79906-114-88102.pdf"
+    ]
 
 
 def test_orchestrate_tick_full_loop(tmp_path):
