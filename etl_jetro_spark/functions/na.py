@@ -11,7 +11,7 @@ as in ``functions/text.py``.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from etl_jetro_spark.sqltext import ident, string_lit
@@ -31,23 +31,3 @@ def normalize_na_sql(x: str) -> str:
 
 def normalize_na(col: str) -> Column:
     return F.expr(normalize_na_sql(ident(col)))
-
-
-def normalize_na_strings(df: DataFrame, columns: list[str] | None = None) -> DataFrame:
-    """Apply :func:`normalize_na` to every (or the given) string column.
-
-    Every column, normalized or passed through, is a field of one
-    ``struct(…)`` SQL text that ``.*`` expands back in place, so a sheet
-    of any width costs the same few Py4J round trips. (A ``selectExpr``
-    of one text per column would not: Py4J sends each list element to
-    the JVM separately.) Column names, order and types are unchanged."""
-    fields = df.schema.fields
-    targets = set(columns or [f.name for f in fields if f.dataType.simpleString() == "string"])
-    missing = targets - {f.name for f in fields}
-    if missing:
-        raise ValueError(f"normalize_na_strings: no such columns {sorted(missing)}")
-    body = ", ".join(
-        f"{normalize_na_sql(ident(f.name)) if f.name in targets else ident(f.name)} AS {ident(f.name)}"
-        for f in fields
-    )
-    return df.selectExpr(f"struct({body}) AS _na").select("_na.*")

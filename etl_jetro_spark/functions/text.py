@@ -16,7 +16,7 @@ Reference behaviors re-expressed (file:line cites into /root/reference/):
   Flips/tools/baby_flip_tool.py:357-366, sheet_bot/utils.py:37-45
 - F2 trailing ``.0``/``.00`` strip: sheet_bot/utils.py:47-52,
   247/tools/pricesheet_tool.py:222-231
-- F3 numeric extraction (leading/anywhere/first-int, paren & trailing-minus
+- F3 numeric extraction (leading/first-int, paren & trailing-minus
   negatives): Flips/tools/big_flip_tool.py:17-51, baby_flip_tool.py:52-58
 - F4 item code zfill(7): 247/tools/allocation_tool.py:209-218
 - F5 money 2dp: 247/tools/pricesheet_tool.py:147-155
@@ -47,12 +47,9 @@ _WS_RUN = string_lit(r"\s+")
 _KEY_JUNK = string_lit(r"[#\s]")
 _DOT_ZERO = string_lit(r"\.0{1,2}$")
 _MONEY_JUNK = string_lit(r"[$,()\s]|-$")
-_MONEY_SEP = string_lit("[$,]")
 _LEADING_NUM = string_lit(r"^(-?\d*\.?\d+)")
-_ANY_NUM = string_lit(r"(-?\d*\.?\d+)")
 _PAREN_NEG = string_lit(r"^\(.*\)$")
 _TRAIL_NEG = string_lit(r"^[^()]*-\s*$")
-_PAREN_NUM = string_lit(r"\(\s*\d*\.?\d+\s*\)")
 _DIGIT_RUN = string_lit(r"(\d+)")
 _NON_DIGIT = string_lit(r"\D")
 _DASH = string_lit(DASH_CLASS)
@@ -103,15 +100,6 @@ def parse_money_sql(x: str) -> str:
     cleaned = f"regexp_replace({s}, {_MONEY_JUNK}, '')"
     val = _try_double(f"regexp_extract({cleaned}, {_LEADING_NUM}, 1)")
     neg = f"{s} RLIKE {_PAREN_NEG} OR {s} RLIKE {_TRAIL_NEG}"
-    return f"CASE WHEN {neg} THEN -abs({val}) ELSE {val} END"
-
-
-def num_anywhere_sql(x: str) -> str:
-    """First numeric token appearing anywhere in the text (``'ship 12.5 lbs'``
-    → 12.5); paren-wrapped → negative. (big_flip_tool.py:32-43)"""
-    s = f"regexp_replace({norm_ws_sql(x)}, {_MONEY_SEP}, '')"
-    val = _try_double(f"regexp_extract({s}, {_ANY_NUM}, 1)")
-    neg = f"{s} RLIKE {_PAREN_NUM}"
     return f"CASE WHEN {neg} THEN -abs({val}) ELSE {val} END"
 
 
@@ -183,20 +171,12 @@ def parse_money(col: str) -> Column:
     return F.expr(parse_money_sql(ident(col)))
 
 
-def num_anywhere(col: str) -> Column:
-    return F.expr(num_anywhere_sql(ident(col)))
-
-
 def first_int(col: str) -> Column:
     return F.expr(first_int_sql(ident(col)))
 
 
 def item7(col: str) -> Column:
     return F.expr(item7_sql(ident(col)))
-
-
-def money2dp(col: str) -> Column:
-    return F.expr(money2dp_sql(ident(col)))
 
 
 def split_first_dash(col: str) -> Column:

@@ -11,7 +11,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from etl_jetro_spark.sqltext import ident, string_lit
@@ -85,44 +85,33 @@ def branch_fix(col: str) -> Column:
     return F.expr(branch_fix_sql(ident(col)))
 
 
-def to_canonical(
-    df: DataFrame,
-    cfg: PipelineConfig,
-    edd: str,
-    branch: str = "Branch",
-    item: str = "Item",
-    qty: str = "Distro Size",
-) -> DataFrame:
-    """Project a long fact table (branch, item, qty[, extras]) onto the
-    canonical 13(+)-column schema with the pipeline's constants (P13/P14).
+def canonical_sql(cfg: PipelineConfig, edd: str, columns: dict[str, str]) -> str:
+    """The canonical 13(+)-column select list (P13/P14) over a long fact
+    relation, with the pipeline's constants, as one SQL text.
 
-    ``edd`` is the SQL text of the Expected Delivery Date (e.g.
-    ``functions.dates.default_edd_sql(...)``). Columns already present on
-    ``df`` (e.g. a joined XDCK/FOB) win over the default blank fills —
-    mirroring the reference's reindex-then-assign. The projection is one
-    ``selectExpr`` of SQL texts. The result is unordered: the ordered sinks
-    sort the collected table on the driver
+    ``columns`` maps each column the relation offers to its SQL text
+    (``ident(name)`` for a plain column); it must give ``Branch``,
+    ``Item`` and ``Distro Size``. Other given columns (e.g. a looked-up
+    XDCK/FOB) win over the default blank fills — mirroring the reference's
+    reindex-then-assign. ``edd`` is the SQL text of the Expected Delivery
+    Date (e.g. ``functions.dates.default_edd_sql(...)``). The rows are
+    unordered: the ordered sinks sort the collected table on the driver
     (``sinks.excel_sink.collect_ordered``).
     """
-    existing = set(df.columns)
-
-    def kept(name: str, fill: str) -> str:
-        return ident(name) if name in existing else fill
-
     exprs = {
-        "Branch": branch_fix_sql(ident(branch)),
-        "Item": f"try_cast({ident(item)} AS BIGINT)",
-        "Description": kept("Description", "''"),
-        "Distro Size": f"try_cast({ident(qty)} AS BIGINT)",
+        "Branch": branch_fix_sql(columns["Branch"]),
+        "Item": f"try_cast({columns['Item']} AS BIGINT)",
+        "Description": columns.get("Description", "''"),
+        "Distro Size": f"try_cast({columns['Distro Size']} AS BIGINT)",
         "Supplier On Record": str(int(cfg.supplier)),
         "Expected Delivery Date": f"CAST({edd} AS DATE)",
         "WW Buyer": string_lit(cfg.buyer),
-        "Warehouse": kept("Warehouse", "''"),
-        "AdditionalXDCK": kept("AdditionalXDCK", "''"),
+        "Warehouse": columns.get("Warehouse", "''"),
+        "AdditionalXDCK": columns.get("AdditionalXDCK", "''"),
         "AmountCode": string_lit(cfg.amount_code),
-        "XDCK": kept("XDCK", "CAST(NULL AS DOUBLE)"),
-        "POSTXDCK": kept("POSTXDCK", "''"),
-        "FOB": kept("FOB", "CAST(NULL AS DOUBLE)"),
+        "XDCK": columns.get("XDCK", "CAST(NULL AS DOUBLE)"),
+        "POSTXDCK": columns.get("POSTXDCK", "''"),
+        "FOB": columns.get("FOB", "CAST(NULL AS DOUBLE)"),
     }
-    exprs.update({c: ident(c) for c in cfg.extra_cols if c in existing})
-    return df.selectExpr(*[f"{e} AS {ident(name)}" for name, e in exprs.items()])
+    exprs.update({c: columns[c] for c in cfg.extra_cols if c in columns})
+    return ", ".join(f"{e} AS {ident(name)}" for name, e in exprs.items())

@@ -27,7 +27,6 @@ from etl_jetro_spark.plans.hints import bcast_small
 
 from etl_jetro_spark.operators.util import spread
 from etl_jetro_spark.functions.hashing import (
-    char_shingles,
     doc_fingerprint,
     hamming_distance_bits,
     lsh_band_keys,

@@ -2,28 +2,26 @@
 
 Every dimension in the reference is KB-sized (carrier maps ≤33 rows, PO
 lists), so a lookup travels inside the plan as a map literal
-(:func:`map_join`) rather than as a relation of its own.
+(:func:`map_lookup_sql`) rather than as a relation of its own.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from etl_jetro_spark.functions.text import norm_key_sql
-from etl_jetro_spark.sqltext import ident, string_lit
+from etl_jetro_spark.sqltext import string_lit
 
 
-def map_join(
-    fact: DataFrame,
+def map_lookup_sql(
     mapping: dict[str, object],
     key: str,
-    out: str,
     normalize_keys: bool = True,
     zero_to_null: bool = True,
-) -> DataFrame:
-    """J3: apply a small dict as a lookup column via a MapType literal —
-    zero shuffle, zero broadcast exchange; the map rides in the task binary.
+) -> str:
+    """J3: a small dict applied to the SQL text ``key`` as a MapType
+    literal lookup — zero shuffle, zero broadcast exchange; the map rides
+    in the task binary. The result is a string, NULL for a missing key.
 
     ``zero_to_null`` reproduces the reference's zero→blank rule
     (big_flip_tool.py:238-245).
@@ -36,13 +34,13 @@ def map_join(
         f"{string_lit(norm(k))}, {'CAST(NULL AS STRING)' if v is None else string_lit(str(v))}"
         for k, v in mapping.items()
     )
-    k = norm_key_sql(ident(key)) if normalize_keys else f"CAST({ident(key)} AS STRING)"
+    k = norm_key_sql(key) if normalize_keys else f"CAST({key} AS STRING)"
     # an empty map() literal is map<void,void>, which no key can index
     lookup = f"map({entries})" if entries else "CAST(map() AS MAP<STRING, STRING>)"
     val = f"{lookup}[{k}]"
     if zero_to_null:
         val = f"CASE WHEN try_cast({val} AS DOUBLE) = 0 THEN NULL ELSE {val} END"
-    return fact.withColumn(out, F.expr(val))
+    return val
 
 
 def anti_join(left: DataFrame, right: DataFrame, on: str | list[str]) -> DataFrame:

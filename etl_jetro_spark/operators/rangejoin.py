@@ -10,7 +10,7 @@ into a hash join with 3× row amplification on one side.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from etl_jetro_spark.sqltext import ident

@@ -6,9 +6,10 @@ by construction, are collected once and are ordered on the driver by
 the baby-flip table by :func:`lot_last4_key` and the DLPM price rows by
 W1's keys, each key computed in the table's plan.
 :func:`numeric_first_order` is W1 as a Python sort key, the driver-side
-twin of :func:`numeric_first_key` that the ADPO,X renderer orders its
-branch groups with. The key helpers are SQL-text renderers with a Column
-form over a column name, as in ``functions/text.py``.
+twin of :func:`numeric_first_key_sql` that the ADPO,X renderer orders its
+branch groups with. The key helpers are SQL-text renderers; the runner's
+``lot_last4_key`` also has a Column form over a column name, as in
+``functions/text.py``.
 """
 
 from __future__ import annotations
@@ -30,10 +31,6 @@ def numeric_first_key_sql(x: str) -> str:
     return f"try_cast(CAST({x} AS STRING) AS DOUBLE)"
 
 
-def numeric_first_key(col: str) -> Column:
-    return F.expr(numeric_first_key_sql(ident(col)))
-
-
 def numeric_first_sort_keys(x: str) -> dict[str, str]:
     """W1's leading sort keys as named SQL texts over ``x``: ascending
     with NULLs first (``collect_ordered``), then ``x`` itself and any
@@ -44,8 +41,8 @@ def numeric_first_sort_keys(x: str) -> dict[str, str]:
 
 def numeric_first_order(key: float | None, text: str | None, item: str | None) -> tuple:
     """W1 on the driver: a Python sort key that orders rows exactly like
-    Spark's ``orderBy(numeric_first_key(c).asc_nulls_last(), c, item)``,
-    given each row's ``numeric_first_key`` value ``key``. NULL keys sort
+    Spark's ``orderBy(numeric_first_key_sql(c) ASC NULLS LAST, c, item)``,
+    given each row's ``numeric_first_key_sql`` value ``key``. NULL keys sort
     last and NaN above every number; NULL ``c``/``item`` sort first (Spark's
     ascending default)."""
     nan = key is not None and math.isnan(key)

@@ -2,8 +2,10 @@
 
 Each pipeline is (a) a pandas *clean* step on the raw positional grid
 (ingest layer: one sheet, a few KB, cleaned on the driver) and (b) a Spark
-*build* step: melt → aggregate → join → derive → canonical columns
-(relational layer, from ``operators.{unpivot,aggregate,joins,canonical}``).
+*build* step: one SQL statement over the sheet — melt → sum → map lookups
+→ derive → canonical columns, as CTEs composed from the renderers of
+``operators.{unpivot,joins,canonical}`` and ``functions`` — analyzed
+once, as a whole (``sqltext.sql_over``).
 
 Reference cites per pipeline are in the docstrings; constants come from
 operators.canonical.PIPELINES (code-observed, SURVEY §7 hard-part 6).
@@ -13,16 +15,15 @@ from __future__ import annotations
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from etl_jetro_spark.functions.dates import default_edd_sql, fmt_mdy_no_pad_sql, next_mwf_sql
-from etl_jetro_spark.functions.text import parse_money, parse_money_sql
+from etl_jetro_spark.functions.na import normalize_na_sql
+from etl_jetro_spark.functions.text import parse_money_sql
 from etl_jetro_spark.normalize import grid as G
-from etl_jetro_spark.operators.aggregate import sum_by
-from etl_jetro_spark.operators.canonical import PIPELINES, to_canonical
-from etl_jetro_spark.operators.joins import map_join
-from etl_jetro_spark.operators.unpivot import melt, melt_between
-from etl_jetro_spark.sqltext import date_lit, ident, string_lit
+from etl_jetro_spark.operators.canonical import PIPELINES, canonical_sql
+from etl_jetro_spark.operators.joins import map_lookup_sql
+from etl_jetro_spark.operators.unpivot import numeric_columns, stack_sql
+from etl_jetro_spark.sqltext import date_lit, ident, sql_over, string_lit
 
 
 def _to_spark(spark: SparkSession, pdf: pd.DataFrame) -> DataFrame:
@@ -31,19 +32,27 @@ def _to_spark(spark: SparkSession, pdf: pd.DataFrame) -> DataFrame:
     return spark.createDataFrame(pdf.astype(object).where(pdf.notna(), None).astype(str).replace({"None": None}))
 
 
-def _sum_cells(long: DataFrame, keys: list[str], value: str, out: str, **kw) -> DataFrame:
-    """``sum_by`` over one sheet's melted cells, read as one partition.
+def _sql(spark: SparkSession, wide: pd.DataFrame, select: str, **steps: str) -> DataFrame:
+    """A build's one statement over the sheet, which its text reads as
+    ``sheet``: ``select`` after the CTEs ``steps``.
 
-    A sheet is a local relation that Spark scans in several slices, so the
-    hash aggregate would need an Exchange to group a few thousand cells,
-    and AQE would run its map side as a job of its own. One partition
-    meets the aggregate's required distribution with no Exchange. The
-    coalesce sits where it removes that exchange, not on every sheet: a
-    sheet that is only filtered and projected (ACME) has none, and Catalyst
-    folds that plan into a local relation while optimizing, which a
-    Coalesce under it would stop (changing the nullability its schema
-    declares)."""
-    return sum_by(long.coalesce(1), keys, value, out=out, **kw)
+    A sheet is a local relation that Spark scans in several slices, so a
+    hash aggregate over its cells would need an Exchange to group a few
+    thousand of them, and AQE would run its map side as a job of its own.
+    A build that sums therefore reads the sheet with ``/*+ COALESCE(1) */``
+    in the step that reads it, below the aggregate: one partition meets the
+    aggregate's required distribution with no Exchange. A sheet that is
+    only filtered and projected (ACME) gets no hint: Catalyst folds that
+    plan into a local relation while optimizing, which a Coalesce under it
+    would stop (changing the nullability its schema declares)."""
+    return sql_over(spark, {"sheet": _to_spark(spark, wide)}, select, **steps)
+
+
+def _sum_sql(v: str) -> str:
+    """Sum of a group's cells, junk and NULL read as 0 (A1's ``fillna(0)``,
+    allocation_tool.py:87-91); ``try_cast``, as ANSI mode would throw on a
+    messy cell."""
+    return f"sum(coalesce(try_cast({v} AS DOUBLE), 0.0D))"
 
 
 # --------------------------------------------------------------------------
@@ -80,14 +89,17 @@ def build_allocation(
         if base_date is None and pipeline == "leavins":
             raise ValueError("leavins requires an explicit EDD")  # :133-134
         edd = default_edd_sql(date_lit(base_date))
-    df = _to_spark(spark, wide)
-    item_col = next(c for c in df.columns if G._norm_name(c) in ("item", "itemitem"))
-    long = melt(
-        df, [item_col], var_name="Branch", value_name="qty", numeric_vars_only=True
-    ).withColumnRenamed(item_col, "Item")
-    agg = _sum_cells(long, ["Branch", "Item"], "qty", out="Distro Size")
-    agg = agg.withColumn("Distro Size", F.expr(f"CAST({ident('Distro Size')} AS BIGINT)"))
-    return to_canonical(agg, PIPELINES[pipeline], edd=edd)
+    cols = [str(c) for c in wide.columns]
+    item = ident(next(c for c in cols if G._norm_name(c) in ("item", "itemitem")))
+    canon = canonical_sql(PIPELINES[pipeline], edd, {
+        "Branch": "Branch", "Item": "Item", "Distro Size": "CAST(qty AS BIGINT)",
+    })
+    return _sql(
+        spark, wide,
+        cells=f"SELECT /*+ COALESCE(1) */ {item}, {stack_sql(numeric_columns(cols), 'Branch', 'v')} FROM sheet",
+        sums=f"SELECT Branch, {item} AS Item, {_sum_sql('v')} AS qty FROM cells GROUP BY Branch, {item}",
+        select=f"SELECT {canon} FROM sums WHERE qty != 0",
+    )
 
 
 # --------------------------------------------------------------------------
@@ -113,24 +125,20 @@ STORE_EXCLUDE = ("457", "453")
 def build_pricesheet_long(spark: SparkSession, wide: pd.DataFrame) -> DataFrame:
     """Melt to (Store#, Item#, Vendor#=81214, Cost) (U2) with store remap /
     exclusion (P10) and zero-cost filter (P8)."""
-    df = _to_spark(spark, wide)
-    item_col = next(c for c in df.columns if G._norm_name(c) == "item")
-    long = melt(df, [item_col], var_name="Store#", value_name="cost_raw",
-                numeric_vars_only=True)
-    store, cost = ident("Store#"), ident("Cost")
+    cols = [str(c) for c in wide.columns]
+    item = ident(next(c for c in cols if G._norm_name(c) == "item"))
+    store = ident("Store#")
     remap = " ".join(
         f"WHEN {store} = {string_lit(src)} THEN {string_lit(dst)}" for src, dst in STORE_REMAP.items()
     )
     excluded = ", ".join(string_lit(s) for s in STORE_EXCLUDE)
-    return (
-        long.filter(f"NOT ({store} IN ({excluded}))")
-        .selectExpr(
-            f"CASE {remap} ELSE {store} END AS {store}",
-            f"{ident(item_col)} AS {ident('Item#')}",
-            f"81214 AS {ident('Vendor#')}",
-            f"{parse_money_sql(ident('cost_raw'))} AS {cost}",
-        )
-        .filter(f"{cost} IS NOT NULL AND {cost} != 0")
+    return _sql(
+        spark, wide,
+        cells=f"SELECT {item}, {stack_sql(numeric_columns(cols), 'Store#', 'v')} FROM sheet",
+        priced=f"""SELECT CASE {remap} ELSE {store} END AS {store}, {item} AS {ident('Item#')},
+            81214 AS {ident('Vendor#')}, {parse_money_sql('v')} AS Cost
+            FROM cells WHERE NOT ({store} IN ({excluded}))""",
+        select="SELECT * FROM priced WHERE Cost IS NOT NULL AND Cost != 0",
     )
 
 
@@ -170,18 +178,19 @@ def build_acme_like(
     canonical. Phillips keeps dock as Warehouse and appends XdockCode."""
     cfg = PIPELINES[pipeline]
     docks = docks_from_token(pipeline, file_token)
-    df = _to_spark(spark, wide)
+    columns = {str(c): ident(str(c)) for c in wide.columns}
+    if cfg.warehouse_from_dock:
+        columns.update(Warehouse="dock", XdockCode="CAST(NULL AS DOUBLE)")
+    canon = canonical_sql(cfg, default_edd_sql(date_lit(base_date)), columns)
     # NB: the reference's zero filter is pandas ``ne(0)`` on a coerced
     # numeric — NaN compares True, so non-numeric Distro cells are KEPT
     # (acme_tool.py:53-55); only literal zeros drop.
-    df = df.filter(
-        f"try_cast({ident('dock')} AS INT) IN ({', '.join(str(int(d)) for d in docks)})"
-    ).filter(f"NOT coalesce(try_cast({ident('Distro Size')} AS DOUBLE) = 0, false)")
-    if cfg.warehouse_from_dock:
-        df = df.withColumns(
-            {"Warehouse": F.expr(ident("dock")), "XdockCode": F.expr("CAST(NULL AS DOUBLE)")}
-        )
-    return to_canonical(df, cfg, edd=default_edd_sql(date_lit(base_date)))
+    return _sql(
+        spark, wide,
+        select=f"""SELECT {canon} FROM sheet
+            WHERE try_cast(dock AS INT) IN ({', '.join(str(int(d)) for d in docks)})
+            AND NOT coalesce(try_cast({ident('Distro Size')} AS DOUBLE) = 0, false)""",
+    )
 
 
 # --------------------------------------------------------------------------
@@ -284,24 +293,25 @@ def build_big_flip(
     store_block: dict[str, dict[str, str]],
     base_date: str,
 ) -> DataFrame:
-    """Melt 2-id (U3, values parsed num-anywhere) → ceil-sum (A2) → XDCK/FOB
-    map-join (J3, zero→blank) → next-MWF EDD (F10) → canonical."""
-    df = _to_spark(spark, wide)
-    item = next(c for c in df.columns if G._norm_name(c) == "item")
-    lot = next(c for c in df.columns if G._norm_name(c) == "lot")
-    long = melt(df, [item, lot], var_name="Branch", value_name="v",
-                numeric_vars_only=True)
-    agg = _sum_cells(long, ["Branch", item, lot], "v", out="Distro Size",
-                     parse=True, ceil=True)
-    agg = (
-        agg.withColumnRenamed(item, "Item")
-        .withColumnRenamed(lot, "Lot #")
-    )
-    agg = map_join(agg, store_block["xdock"], "Branch", "XDCK")
-    agg = map_join(agg, store_block["fob"], "Branch", "FOB")
-    agg = agg.withColumns({"XDCK": parse_money("XDCK"), "FOB": parse_money("FOB")})
-    return to_canonical(
-        agg, PIPELINES["flips_big"], edd=next_mwf_sql(date_lit(base_date))
+    """Melt 2-id (U3, values parsed as money) → ceil-sum (A2) → XDCK/FOB
+    map lookups (J3, zero→blank) → next-MWF EDD (F10) → canonical."""
+    cols = [str(c) for c in wide.columns]
+    item = ident(next(c for c in cols if G._norm_name(c) == "item"))
+    lot = ident(next(c for c in cols if G._norm_name(c) == "lot"))
+    canon = canonical_sql(PIPELINES["flips_big"], next_mwf_sql(date_lit(base_date)), {
+        "Branch": "Branch", "Item": "Item", "Distro Size": ident("Distro Size"),
+        "XDCK": parse_money_sql("XDCK"), "FOB": parse_money_sql("FOB"),
+    })
+    return _sql(
+        spark, wide,
+        cells=f"SELECT /*+ COALESCE(1) */ {item}, {lot}, {stack_sql(numeric_columns(cols), 'Branch', 'v')} FROM sheet",
+        sums=f"""SELECT Branch, {item} AS Item,
+            CAST(ceil({_sum_sql(parse_money_sql('v'))}) AS BIGINT) AS {ident('Distro Size')}
+            FROM cells GROUP BY Branch, {item}, {lot}""",
+        lookups=f"""SELECT *, {map_lookup_sql(store_block['xdock'], 'Branch')} AS XDCK,
+            {map_lookup_sql(store_block['fob'], 'Branch')} AS FOB
+            FROM sums WHERE {ident('Distro Size')} != 0""",
+        select=f"SELECT {canon} FROM lookups",
     )
 
 
@@ -355,49 +365,48 @@ def build_baby_flip(
     lookup is on the exact Store key. ``invoice_date`` is the injected
     clock (ISO string). The rows are unordered: ``runner.run_flips_baby``
     orders the collected table by Store then LOT#-last4 (W3)."""
-    from etl_jetro_spark.functions.na import normalize_na_strings
-
-    df = normalize_na_strings(_to_spark(spark, wide))
-    item = next(c for c in df.columns if G._norm_name(c) == "item")
-    lot = next(c for c in df.columns if G._norm_name(c) == "lot")
-    ids = [item, "DESC", "pack size", lot]
-    present = [c for c in ids if c in df.columns]
-    df = df.filter(
-        f"trim(coalesce({ident(item)}, '')) != '' AND trim(coalesce({ident(lot)}, '')) != ''"
-    )
-    long = melt_between(
-        df, present, after=("pack size" if "pack size" in df.columns else "DESC"),
-        before=lot, var_name="Store", value_name="v", numeric_vars_only=True,
-    )
-    # baby flip ceils PER CELL before aggregating (reference
-    # baby_flip_tool.py:104-107: clean ceils the between-columns to Int64,
-    # the pivot then sums) — unlike big flip, which ceils the SUM (A2)
-    long = long.withColumn("v", F.expr(f"CAST(ceil({parse_money_sql(ident('v'))}) AS BIGINT)"))
-    agg = _sum_cells(long, present + ["Store"], "v", out="Value", ceil=False)
-    agg = agg.withColumn("Value", F.expr(f"CAST({ident('Value')} AS BIGINT)"))
-    agg = agg.withColumnRenamed(item, "Item").withColumnRenamed(lot, "LOT#")
-    out = agg.selectExpr(
-        "*", f"explode_outer({_po_by_store_sql(po_rows)}[{ident('Store')}]) AS {ident('PO #')}"
-    )
-    out = map_join(out, carrier, "Store", "carrier code", normalize_keys=False, zero_to_null=False)
+    cols = [str(c) for c in wide.columns]
+    item = next(c for c in cols if G._norm_name(c) == "item")
+    lot = next(c for c in cols if G._norm_name(c) == "lot")
+    keys = ", ".join(ident(c) for c in [item, "DESC", "pack size", lot] if c in cols)
+    # U4: the store columns are the ones strictly between pack size (or
+    # DESC) and Lot #, by position
+    after = "pack size" if "pack size" in cols else "DESC"
+    try:
+        stores = cols[cols.index(after) + 1 : cols.index(lot)]
+    except ValueError as e:
+        raise ValueError(f"build_baby_flip: boundary column missing: {e}") from e
     pack = (
         f"try_cast({ident('pack size')} AS DOUBLE)"
-        if "pack size" in present
+        if "pack size" in cols
         else "CAST(NULL AS DOUBLE)"
     )
     inv = fmt_mdy_no_pad_sql(date_lit(invoice_date)) if invoice_date else "CAST(NULL AS STRING)"
-    value = ident("Value")
-    return out.selectExpr(*[
-        f"{e} AS {ident(name)}"
-        for name, e in (
-            ("Store", f"try_cast({ident('Store')} AS INT)"),
-            ("PO #", ident("PO #")),
-            ("Invoice Date", inv),
-            ("DESC", ident("DESC")),
-            ("Value", value),
-            ("LOT#", ident("LOT#")),
-            ("weight", f"try_cast({value} * {pack} AS BIGINT)"),
-            ("pack size", pack),
-            ("carrier code", ident("carrier code")),
-        )
-    ])
+    # baby flip ceils PER CELL before aggregating (reference
+    # baby_flip_tool.py:104-107: clean ceils the between-columns to Int64,
+    # the pivot then sums) — unlike big flip, which ceils the SUM (A2)
+    cell = f"CAST(ceil({parse_money_sql('v')}) AS BIGINT)"
+    final = {
+        "Store": "try_cast(Store AS INT)",
+        "PO #": ident("PO #"),
+        "Invoice Date": inv,
+        "DESC": ident("DESC"),
+        "Value": "Value",
+        "LOT#": ident(lot),
+        "weight": f"try_cast(Value * {pack} AS BIGINT)",
+        "pack size": pack,
+        "carrier code": map_lookup_sql(carrier, "Store", normalize_keys=False, zero_to_null=False),
+    }
+    return _sql(
+        spark, wide,
+        na="SELECT /*+ COALESCE(1) */ {} FROM sheet".format(
+            ", ".join(f"{normalize_na_sql(ident(c))} AS {ident(c)}" for c in cols)
+        ),
+        cells=f"""SELECT {keys}, {stack_sql(numeric_columns(stores), 'Store', 'v')} FROM na
+            WHERE trim(coalesce({ident(item)}, '')) != '' AND trim(coalesce({ident(lot)}, '')) != ''""",
+        sums=f"SELECT {keys}, Store, {_sum_sql(cell)} AS total FROM cells GROUP BY {keys}, Store",
+        orders=f"""SELECT *, CAST(total AS BIGINT) AS Value,
+            explode_outer({_po_by_store_sql(po_rows)}[Store]) AS {ident('PO #')}
+            FROM sums WHERE total != 0""",
+        select="SELECT {} FROM orders".format(", ".join(f"{e} AS {ident(n)}" for n, e in final.items())),
+    )

@@ -154,12 +154,6 @@ def merge_pdfs_bytes(inputs: list[bytes]) -> bytes:
     return bytes(out)
 
 
-def pdf_page_count(data: bytes) -> int:
-    objs = _parse_objects(data)
-    _root, _pages, kids = _root_pages_and_kids(data, objs)
-    return len(kids)
-
-
 def combine_pdfs(folder: str, out_dir: str, run_date: date) -> str:
     """Merge all .pdf files in ``folder`` (sorted) into the counted output
     name — pypdf when installed, else the native classic-xref merger."""

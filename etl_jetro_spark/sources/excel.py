@@ -48,13 +48,6 @@ def list_sheet_files(folder: str) -> list[str]:
     )
 
 
-def grid_from_rows(rows: list[list]) -> pd.DataFrame:
-    """Build a positional grid from in-memory rows (test/fixture path)."""
-    width = max((len(r) for r in rows), default=0)
-    padded = [list(r) + [None] * (width - len(r)) for r in rows]
-    return pd.DataFrame(padded)
-
-
 def grid_from_csv(path: str) -> pd.DataFrame:
     """CSV as a raw positional grid (header row is data, like the sheets)."""
     return pd.read_csv(path, header=None, dtype=object, keep_default_na=False)

@@ -155,21 +155,16 @@ def _open_workbook(path: str) -> zipfile.ZipFile:
         ) from e
 
 
-def read_xlsx_grid(path: str, sheet: str | int | None = None) -> pd.DataFrame:
+def read_xlsx_grid(path: str, sheet: str | None = None) -> pd.DataFrame:
     """Raw positional grid from a worksheet.
 
     ``sheet`` named → that sheet, error when absent (SouthernCross
-    'IBT FORMAT' behavior); integer → that position (visibility ignored,
-    like ``read_excel(sheet_name=N)``). Unnamed → the ACTIVE sheet if
-    visible, else the first visible sheet; hidden/veryHidden sheets are
-    never picked (reference read_file_tool.py:83-101)."""
+    'IBT FORMAT' behavior). Unnamed → the ACTIVE sheet if visible, else
+    the first visible sheet; hidden/veryHidden sheets are never picked
+    (reference read_file_tool.py:83-101)."""
     with _open_workbook(path) as zf:
         info = _workbook_info(zf)
         shared = _shared_strings(zf)
-        if isinstance(sheet, int):
-            if sheet >= len(info.sheets):
-                raise ValueError(f"worksheet index {sheet} out of range in {path}")
-            return _sheet_grid(zf, info.sheets[sheet][2], shared)
         if sheet is not None:
             for name, _state, part in info.sheets:
                 if name == sheet:

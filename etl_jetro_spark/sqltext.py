@@ -3,11 +3,17 @@
 Every ``F.*`` call costs at least one Py4J round trip while the plan is
 built, so a builder whose expression grows with the data's width (one
 term per store column or per map key) renders that expression as SQL text
-and sends it in a single ``selectExpr`` / ``F.expr`` call instead. Every
-name and value interpolated into such text goes through these helpers.
+and sends it in a single call instead: a supplier build sends its whole
+plan as one statement (:func:`sql_over`). Every name and value
+interpolated into such text goes through these helpers.
 """
 
 from __future__ import annotations
+
+from typing import TYPE_CHECKING
+
+if TYPE_CHECKING:
+    from pyspark.sql import DataFrame, SparkSession
 
 
 def ident(name: str) -> str:
@@ -30,3 +36,18 @@ def date_lit(iso: str | None) -> str:
     nullable until Catalyst folds it, and a plan it folds into a local
     relation (ACME's) keeps that nullability in its schema."""
     return "CAST(NULL AS DATE)" if iso is None else f"CAST({string_lit(iso)} AS DATE)"
+
+
+def sql_over(spark: SparkSession, frames: dict[str, DataFrame], select: str, **steps: str) -> DataFrame:
+    """One ``spark.sql`` plan: the query ``select`` after the CTEs
+    ``steps`` (name → query text, in order), where each DataFrame of
+    ``frames`` reads as a table of its own name.
+
+    ``spark.sql`` formats its text with ``str.format`` to name each
+    frame's temporary view, which it drops once the plan is analyzed. So
+    every brace in the composed text — a regex quantifier, or a header or
+    cell taken from a drop — is doubled, once, before the frames' CTEs
+    are put in front."""
+    bind = ", ".join(f"{name} AS (SELECT * FROM {{{name}}})" for name in frames)
+    query = "".join(f", {name} AS ({q})" for name, q in steps.items()) + f" {select}"
+    return spark.sql(f"WITH {bind}" + query.replace("{", "{{").replace("}", "}}"), **frames)

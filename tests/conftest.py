@@ -52,3 +52,35 @@ def py4j_commands(monkeypatch, fn) -> int:
     finally:
         monkeypatch.setattr(GatewayClient, "send_command", send)
     return calls
+
+
+def melt(spark, df, ids, var, value, numeric_only=False):
+    """``df`` unpivoted on every non-id column (``numeric_only``: every
+    numeric-named one) by ``operators.unpivot.stack_sql``: the ``ids``
+    columns, then ``var`` and ``value``."""
+    from etl_jetro_spark.operators.unpivot import numeric_columns, stack_sql
+    from etl_jetro_spark.sqltext import ident, sql_over
+
+    cols = [c for c in df.columns if c not in ids]
+    if numeric_only:
+        cols = numeric_columns(cols)
+    keep = "".join(f"{ident(c)}, " for c in ids)
+    return sql_over(spark, {"t": df}, f"SELECT {keep}{stack_sql(cols, var, value)} FROM t")
+
+
+def canonical(spark, fact, pipeline, edd_iso):
+    """``fact``'s columns projected by ``operators.canonical.canonical_sql``
+    for ``pipeline``, with the Expected Delivery Date ``edd_iso``."""
+    from etl_jetro_spark.operators.canonical import PIPELINES, canonical_sql
+    from etl_jetro_spark.sqltext import date_lit, ident, sql_over
+
+    select = canonical_sql(PIPELINES[pipeline], date_lit(edd_iso), {c: ident(c) for c in fact.columns})
+    return sql_over(spark, {"fact": fact}, f"SELECT {select} FROM fact")
+
+
+def pdf_page_count(data: bytes) -> int:
+    """Pages in a PDF written by ``sinks.pdf``: the kids of its page tree."""
+    from etl_jetro_spark.sinks.pdf import _parse_objects, _root_pages_and_kids
+
+    _root, _pages, kids = _root_pages_and_kids(data, _parse_objects(data))
+    return len(kids)

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
 from etl_jetro_spark.functions.dates import default_edd, next_mwf, reformat_date_tolerant
 from etl_jetro_spark.functions.hashing import (
@@ -17,10 +18,9 @@ from etl_jetro_spark.functions.text import (
     extract_emails,
     first_int,
     item7,
-    money2dp,
+    money2dp_sql,
     norm_key,
     norm_ws,
-    num_anywhere,
     parse_money,
     split_first_dash,
     strip_dot_zero,
@@ -62,11 +62,6 @@ def test_parse_money(spark):
     assert got == [1234.50, -123.4, -123.0, 12.5, None, -7.0]
 
 
-def test_num_anywhere(spark):
-    got = one(spark, num_anywhere("v"), "ship 12.5 lbs", "(3)", "none here", "$1,000")
-    assert got == [12.5, -3.0, None, 1000.0]
-
-
 def test_first_int(spark):
     got = one(spark, first_int("v"), "498-68594 39024", "no digits", "77x88")
     assert got == [498, None, 77]
@@ -96,7 +91,7 @@ def test_normalize_na(spark):
 
 def test_money2dp(spark):
     df = spark.createDataFrame([(1234.5,), (0.125,)], "v double")
-    got = [r[0] for r in df.select(money2dp("v").alias("o")).collect()]
+    got = [r[0] for r in df.select(F.expr(money2dp_sql("v")).alias("o")).collect()]
     assert got == ["1,234.50", "0.13"]
 
 

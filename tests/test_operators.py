@@ -2,11 +2,10 @@
 
 from __future__ import annotations
 
+import pandas as pd
 import pyspark.sql.functions as F
 import pytest
 
-from etl_jetro_spark.functions.na import normalize_na_strings
-from etl_jetro_spark.functions.text import parse_money
 from etl_jetro_spark.operators.aggregate import (
     first_per_group,
     latest_by,
@@ -14,7 +13,7 @@ from etl_jetro_spark.operators.aggregate import (
     partial_sums,
     sum_by,
 )
-from etl_jetro_spark.operators.canonical import CANONICAL_COLS, PIPELINES, branch_fix, to_canonical
+from etl_jetro_spark.operators.canonical import CANONICAL_COLS, branch_fix
 from etl_jetro_spark.operators.dedup import (
     exact_dedup,
     minhash_lsh_candidates,
@@ -22,7 +21,7 @@ from etl_jetro_spark.operators.dedup import (
     simhash_candidates,
 )
 from etl_jetro_spark.operators.graph import connected_components, dedup_keep_canonical
-from etl_jetro_spark.operators.joins import anti_join, map_join, semi_join
+from etl_jetro_spark.operators.joins import anti_join, map_lookup_sql, semi_join
 from etl_jetro_spark.operators.rangejoin import interval_overlap_join
 from etl_jetro_spark.operators.sampling import hash_sample, split_assign
 from etl_jetro_spark.operators.similarity import (
@@ -34,9 +33,9 @@ from etl_jetro_spark.operators.similarity import (
 )
 from etl_jetro_spark.operators.sort import lot_last4_key
 from etl_jetro_spark.operators.textstats import bpe_ish_token_count, lang_id, quality_score
-from etl_jetro_spark.operators.unpivot import melt, melt_between
-from etl_jetro_spark.sqltext import date_lit
-from tests.conftest import py4j_commands, rows
+from etl_jetro_spark.pipelines import batch as B
+from etl_jetro_spark.sqltext import sql_over
+from tests.conftest import canonical, melt, py4j_commands, rows
 
 
 @pytest.fixture()
@@ -53,12 +52,7 @@ def wide(spark):
 
 
 def test_melt_u1(spark, wide):
-    long = melt(
-        wide.drop("Item Description"),
-        ids=["Item#"],
-        var_name="Branch",
-        value_name="Distro Size",
-    )
+    long = melt(spark, wide.drop("Item Description"), ["Item#"], "Branch", "Distro Size")
     assert long.columns == ["Item#", "Branch", "Distro Size"]
     got = rows(long)
     # '449.0' header cleaned to '449'
@@ -67,83 +61,92 @@ def test_melt_u1(spark, wide):
 
 
 def test_melt_numeric_vars_only(spark, wide):
-    long = melt(wide, ids=["Item#"], numeric_vars_only=True, var_name="Store")
+    long = melt(spark, wide, ["Item#"], "Store", "value", numeric_only=True)
     assert set(r["Store"] for r in long.select("Store").distinct().collect()) == {
         "114", "449", "86",
     }
 
 
 def test_melt_between(spark):
-    df = spark.createDataFrame(
+    """U4: Flips baby melts only the store columns strictly between DESC
+    (or pack size) and Lot #."""
+    wide = pd.DataFrame(
         [("a", "d", "1", "2", "lot1", "junk")],
-        ["Item", "DESC", "114", "86.0", "Lot #", "trail"],
+        columns=["Item", "DESC", "114", "86.0", "Lot #", "trail"],
     )
-    long = melt_between(df, ["Item", "DESC"], after="DESC", before="Lot #", var_name="Store")
-    assert rows(long.select("Store")) == [("114",), ("86",)]
+    long = B.build_baby_flip(spark, wide, [], {})
+    assert rows(long.select("Store")) == [(86,), (114,)]
 
 
-def _store_sheet(spark, width: int):
-    """One-row baby-flip-shaped sheet with ``width`` store columns."""
-    stores = [f"{100 + i}.0" for i in range(width)]
-    return spark.createDataFrame(
-        [tuple(["i1", "d"] + [str(i) for i in range(width)] + ["L1"])],
-        ["Item", "DESC"] + stores + ["Lot #"],
-    )
+def _stores(width: int) -> list[str]:
+    return [f"{100 + i}.0" for i in range(width)]
 
 
-def _store_map(spark, width: int):
-    """A one-column fact frame and a ``width``-key store → carrier dict."""
-    fact = spark.createDataFrame([("114",)], ["Store"])
-    return fact, {f"{100 + i}": str(i) for i in range(width)}
+def _allocation(spark, width):
+    wide = pd.DataFrame([["i1"] + [str(i + 1) for i in range(width)]], columns=["Item#"] + _stores(width))
+    return lambda: B.build_allocation(spark, wide, base_date="2026-08-17")
 
 
-def _long_cells(spark, width: int):
-    """The store sheet melted to (Item, DESC, Lot #, Store, v) cells."""
-    return melt(_store_sheet(spark, width), ["Item", "DESC", "Lot #"],
-                  var_name="Store", value_name="v", numeric_vars_only=True)
+def _pricesheet(spark, width):
+    wide = pd.DataFrame([["i1"] + ["$1.50"] * width], columns=["Item#"] + _stores(width))
+    return lambda: B.build_pricesheet_long(spark, wide)
 
 
-def _canonical_input(spark, width: int):
-    """A long fact frame carrying ``width`` extra columns."""
-    extra = [f"x{i}" for i in range(width)]
-    return spark.createDataFrame(
-        [tuple(["86", "12", "5"] + ["e"] * width)], ["Branch", "Item", "Distro Size"] + extra
-    )
+def _acme(spark, width):
+    """An ACME sheet carrying ``width`` extra columns."""
+    cols = ["dock", "Branch", "Item", "Description", "Distro Size"] + [f"x{i}" for i in range(width)]
+    wide = pd.DataFrame([["189", "86", "12", "d", "5"] + ["e"] * width], columns=cols)
+    return lambda: B.build_acme_like(spark, wide, "acme", "il", "2026-08-17")
 
 
-# builder -> (input made outside the count, the plan build that is counted)
-_WIDTH_BUILDERS = {
-    "melt": (_store_sheet, lambda df: melt(
-        df, ["Item"], var_name="Branch", value_name="v", numeric_vars_only=True)),
-    "melt_between": (_store_sheet, lambda df: melt_between(
-        df, ["Item", "DESC"], after="DESC", before="Lot #", var_name="Store")),
-    "normalize_na_strings": (_store_sheet, normalize_na_strings),
-    "map_join": (_store_map, lambda fm: map_join(fm[0], fm[1], "Store", "carrier")),
-    "to_canonical": (_canonical_input, lambda df: to_canonical(
-        df, PIPELINES["flips_big"], edd=date_lit("2026-08-17"))),
-    "sum_by_parse": (_long_cells, lambda df: sum_by(
-        df, ["Item", "Store"], "v", out="s", parse=True, ceil=True)),
-    "parse_money": (_store_sheet, lambda df: df.withColumn("p", parse_money("Item"))),
+def _big_flip(spark, stores, keys):
+    """A Flips big sheet with ``stores`` store columns and a Fob/Xdock
+    store block of ``keys`` stores."""
+    wide = pd.DataFrame([["i1", "L1"] + ["2"] * stores], columns=["Item", "Lot #"] + _stores(stores))
+    block = {s: "1.5" for s in _stores(keys)}
+    return lambda: B.build_big_flip(spark, wide, {"xdock": block, "fob": block}, "2026-08-17")
+
+
+def _baby_flip(spark, stores, trail):
+    """A Flips baby sheet with ``stores`` store columns and ``trail``
+    columns right of Lot #, with PO and carrier maps of 8 stores."""
+    cols = ["Item", "DESC", "pack size"] + _stores(stores) + ["Lot #"] + [f"t{i}" for i in range(trail)]
+    wide = pd.DataFrame([["i1", "d", "4", "na"] + ["2"] * (stores - 1) + ["L1"] + ["n/a"] * trail], columns=cols)
+    po = [(f"PO-{i}", str(100 + i), "") for i in range(8)]
+    return lambda: B.build_baby_flip(spark, wide, po, {str(100 + i): f"C{i}" for i in range(8)}, "2026-08-17")
+
+
+# the operator a build carries → the build over an input ``width`` wide
+# there (made outside the count)
+_WIDTH_BUILDS = {
+    "melt": _allocation,
+    "parse_money": _pricesheet,
+    "to_canonical": _acme,
+    "sum_by_parse": lambda spark, width: _big_flip(spark, width, keys=8),
+    "map_join": lambda spark, width: _big_flip(spark, 8, keys=width),
+    "melt_between": lambda spark, width: _baby_flip(spark, width, trail=0),
+    "normalize_na_strings": lambda spark, width: _baby_flip(spark, 8, trail=width),
 }
 
 
-@pytest.mark.parametrize("builder", sorted(_WIDTH_BUILDERS))
+@pytest.mark.parametrize("builder", sorted(_WIDTH_BUILDS))
 def test_plan_building_is_width_independent(spark, monkeypatch, builder):
-    """Building (no action) a melt, an NA normalization, a map join, the
-    canonical projection, a parsed sum or a parsed column costs the same
-    number of Py4J round trips at 8 and at 64 store columns or map keys:
-    each sends its expression as SQL text. One uncounted build first keeps
-    first-call lookups out of the count."""
-    make_input, build = _WIDTH_BUILDERS[builder]
+    """Building (no action) a supplier plan costs the same number of Py4J
+    round trips at 8 and at 64 store columns, sheet columns or map keys:
+    each build is one SQL text. Each case widens the part of one build
+    that an operator it carries grows with (the melt's columns, the
+    canonical projection's input, the map lookups' keys, the NA
+    normalization's columns). One uncounted build first keeps first-call
+    lookups out of the count."""
     counts = {}
     for width in (8, 8, 64):
-        arg = make_input(spark, width)
-        counts[width] = py4j_commands(monkeypatch, lambda: build(arg))
+        build = _WIDTH_BUILDS[builder](spark, width)
+        counts[width] = py4j_commands(monkeypatch, build)
     assert counts[8] == counts[64], counts
 
 
 def test_sum_by_a1(spark, wide):
-    long = melt(wide, ids=["Item#"], numeric_vars_only=True, var_name="Branch", value_name="v")
+    long = melt(spark, wide, ["Item#"], "Branch", "v", numeric_only=True)
     agg = sum_by(long, ["Branch", "Item#"], "v", out="Distro Size")
     got = {(r["Branch"], r["Item#"]): r["Distro Size"] for r in agg.collect()}
     # 'x' and '' and NULL coerce to 0; zero groups dropped
@@ -180,7 +183,8 @@ def test_latest_by(spark):
 
 def test_map_join(spark):
     fact = spark.createDataFrame([("114",), (" Lot 7 ",), ("999",)], ["Store"])
-    m = map_join(fact, {"114": "8", "999": 0}, "Store", "carrier")
+    lookup = map_lookup_sql({"114": "8", "999": 0}, "Store")
+    m = sql_over(spark, {"fact": fact}, f"SELECT Store, {lookup} AS carrier FROM fact")
     got = dict(rows(m.select("Store", "carrier")))
     assert got["114"] == "8" and got["999"] is None  # zero→blank rule
 
@@ -210,7 +214,7 @@ def test_to_canonical(spark):
     fact = spark.createDataFrame(
         [("86", "12", "5"), ("402", "34", "7")], ["Branch", "Item", "Distro Size"]
     )
-    out = to_canonical(fact, PIPELINES["247"], edd=date_lit("2026-08-17"))
+    out = canonical(spark, fact, "247", "2026-08-17")
     assert out.columns == CANONICAL_COLS
     r = out.collect()[0]
     assert r["Branch"] == 186 and r["Supplier On Record"] == 81214

@@ -2,12 +2,18 @@
 
 from __future__ import annotations
 
+import pandas as pd
 import pytest
 
 from etl_jetro_spark.operators.canonical import CANONICAL_COLS
 from etl_jetro_spark.pipelines import batch as P
-from etl_jetro_spark.sources.excel import grid_from_rows
 from etl_jetro_spark.sqltext import date_lit
+
+
+def grid_from_rows(rows: list[list]) -> pd.DataFrame:
+    """A positional grid from in-memory rows, short rows padded with None."""
+    width = max((len(r) for r in rows), default=0)
+    return pd.DataFrame([list(r) + [None] * (width - len(r)) for r in rows])
 
 
 @pytest.fixture()

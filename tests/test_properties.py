@@ -19,14 +19,16 @@ from etl_jetro_spark.functions.text import parse_money
 from etl_jetro_spark.operators.aggregate import sum_by
 from etl_jetro_spark.operators.canonical import branch_fix
 from etl_jetro_spark.operators.graph import connected_components
-from etl_jetro_spark.operators.joins import map_join
+from etl_jetro_spark.operators.joins import map_lookup_sql
 from etl_jetro_spark.operators.sort import (
-    numeric_first_key,
+    numeric_first_key_sql,
     numeric_first_order,
     numeric_first_sort_keys,
 )
-from etl_jetro_spark.operators.unpivot import _is_numeric_name, melt
+from etl_jetro_spark.operators.unpivot import _is_numeric_name
 from etl_jetro_spark.sinks.excel_sink import collect_ordered
+from etl_jetro_spark.sqltext import sql_over
+from tests.conftest import melt
 
 slow_ok = settings(
     max_examples=12,
@@ -84,11 +86,12 @@ def _melt_label(header: str) -> str:
 
 
 # Headers that need SQL quoting: quotes, backslashes, backticks, spaces,
-# non-ASCII text and the .0/.00 suffixes the melt strips from labels.
+# braces (which ``spark.sql``'s formatter reads), non-ASCII text and the
+# .0/.00 suffixes the melt strips from labels.
 # Distinct labels (case-insensitively) keep the pivot's columns distinct.
 quoting_headers = st.lists(
     st.tuples(
-        st.text(alphabet="a1 '\\`\".éß中", min_size=1, max_size=6).filter(str.strip),
+        st.text(alphabet="a1 '\\`\".éß中{}", min_size=1, max_size=6).filter(str.strip),
         st.sampled_from(["", ".0", ".00"]),
     ).map("".join),
     min_size=1,
@@ -102,7 +105,7 @@ quoting_headers = st.lists(
 def test_melt_groupby_roundtrip(spark, data):
     """melt ∘ (groupBy.pivot) round-trips the wide table's cell sums, and
     melt's labels and values equal a plain-Python melt, for store headers
-    that need quoting. A map_join keyed on those labels, with values that
+    that need quoting. A map lookup keyed on those labels, with values that
     carry the same characters, returns each label's value."""
     headers = data.draw(quoting_headers)
     labels = [_melt_label(h) for h in headers]
@@ -115,7 +118,7 @@ def test_melt_groupby_roundtrip(spark, data):
         max_size=10,
     ))
     wide = spark.createDataFrame(rows, ["item", *headers])
-    long = melt(wide, ["item"], var_name="store", value_name="v")
+    long = melt(spark, wide, ["item"], "store", "v")
     assert long.columns == ["item", "store", "v"]
     want_long = sorted(
         (r[0], lab, str(v)) for r in rows for lab, v in zip(labels, r[1:])
@@ -136,7 +139,8 @@ def test_melt_groupby_roundtrip(spark, data):
     assert got == want
 
     mapping = {lab: f"{h}'\\`\"" for lab, h in zip(labels, headers)}
-    mapped = map_join(long, mapping, "store", "m", normalize_keys=False, zero_to_null=False)
+    lookup = map_lookup_sql(mapping, "store", normalize_keys=False, zero_to_null=False)
+    mapped = sql_over(spark, {"long": long}, f"SELECT store, {lookup} AS m FROM long")
     assert {(r["store"], r["m"]) for r in mapped.collect()} == set(mapping.items())
 
 
@@ -179,15 +183,17 @@ sort_values = st.one_of(
 def test_numeric_first_order_matches_spark_sort(spark, rows):
     """The driver-side sort key, and ``collect_ordered`` on
     ``numeric_first_sort_keys`` (the DLPM order), order rows exactly like
-    Spark's ``numeric_first_key(c).asc_nulls_last(), c, item``."""
+    Spark's ``numeric_first_key_sql(c)`` ascending with NULLs last, then
+    ``c``, ``item``."""
     df = spark.createDataFrame(
         [(None if c is None else str(c), item) for c, item in rows],
         "c string, item string",
     )
-    want = df.orderBy(numeric_first_key("c").asc_nulls_last(), "c", "item").collect()
+    key = F.expr(numeric_first_key_sql("c"))
+    want = df.orderBy(key.asc_nulls_last(), "c", "item").collect()
     if [c for c, _ in rows] == ["10", "9", "abc", "100"]:  # W1: numbers first, by value
         assert [r["c"] for r in want] == ["9", "10", "100", "abc"]
-    keyed = df.select("c", "item", numeric_first_key("c").alias("k")).collect()
+    keyed = df.select("c", "item", key.alias("k")).collect()
     for (c, _), r in zip(rows, keyed):
         if isinstance(c, int):  # ADPO,X takes an int branch's key as float(branch)
             assert r["k"] == float(c)
@@ -242,11 +248,8 @@ def test_xlsx_roundtrip_property(tmp_path_factory, rows):
 def test_pdf_merge_page_count_property(docs):
     """Merging any set of generated PDFs yields exactly the sum of their
     page counts, in input order."""
-    from etl_jetro_spark.sinks.pdf import (
-        merge_pdfs_bytes,
-        pdf_page_count,
-        write_simple_pdf_bytes,
-    )
+    from etl_jetro_spark.sinks.pdf import merge_pdfs_bytes, write_simple_pdf_bytes
+    from tests.conftest import pdf_page_count
 
     blobs = [write_simple_pdf_bytes(pages) for pages in docs]
     merged = merge_pdfs_bytes(blobs)

@@ -53,9 +53,7 @@ SUPPLIER_ROOTS = [
     "session",
 ]
 
-# everything the supplier roots may reach, besides the package itself;
-# ``plans.hints`` is here because ``aggregate.mad_outliers`` (a catalog
-# operator beside the supplier's ``sum_by``) sizes its broadcast hint
+# everything the supplier roots may reach, besides the package itself
 SUPPLIER_MODULES = {
     "functions",
     "functions.dates",
@@ -64,7 +62,6 @@ SUPPLIER_MODULES = {
     "normalize",
     "normalize.grid",
     "operators",
-    "operators.aggregate",
     "operators.canonical",
     "operators.joins",
     "operators.sort",
@@ -72,8 +69,6 @@ SUPPLIER_MODULES = {
     "pipelines",
     "pipelines.batch",
     "pipelines.runner",
-    "plans",
-    "plans.hints",
     "session",
     "sinks",
     "sinks.excel_sink",
