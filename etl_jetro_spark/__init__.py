@@ -8,7 +8,8 @@ DataFrame code, plus a Spark-free PO poller and control tick.
 
 Layout
 ------
-- ``functions``  scalar Column expressions (SURVEY §2.8, F1–F15)
+- ``functions``  scalar helpers as SQL-text renderers, plus the catalog's
+                 hashing and money Column builders (SURVEY §2.8, F1–F15)
 - ``normalize``  positional grid ops: header promotion, slicing (§2.2 P1–P12)
 - ``operators``  relational core: unpivot, agg, join, sort, dedup, similarity
 - ``sources``    ingest: excel/csv/json/sheet readers (§2.1 S1–S6)
@@ -19,7 +20,7 @@ Layout
 
 The supplier system is ``pipelines``, ``streaming``, ``sources``,
 ``sinks``, ``normalize``, ``functions.{text,na,dates}`` and
-``operators.{unpivot,aggregate,joins,sort,canonical}``; ``plans.queries``
+``operators.{unpivot,joins,sort,canonical}``; ``plans.queries``
 and the other operator and function modules serve the catalog.
 ``operators`` and ``functions`` re-export nothing: callers import each
 module by name, so a supplier run loads none of the catalog's modules

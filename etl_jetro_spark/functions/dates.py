@@ -5,9 +5,9 @@ an explicit base date so pipelines are deterministic and testable (inject the
 clock — SURVEY §7 hard-part 4): a renderer ``<name>_sql(x)`` over the SQL
 text of the base (``CAST('2026-01-06' AS DATE)`` for a run date, whose
 nullability the canonical schema keeps; a ``DATE'…'`` literal would declare
-it NOT NULL), and a Column form over a column name, as in
-``functions/text.py``. :func:`epoch_seconds_ntz`, a catalog helper whose
-callers pass timestamp expressions, stays a Column composition.
+it NOT NULL), as in ``functions/text.py``. :func:`epoch_seconds_ntz`, a
+catalog helper whose callers pass timestamp expressions, is a Column
+composition.
 
 Reference behaviors (cites into /root/reference/):
 - F9  default EDD = today+2, weekend rolls to Monday, ``m/d/YYYY`` no leading
@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from etl_jetro_spark.sqltext import ident, string_lit
+from etl_jetro_spark.sqltext import string_lit
 
 
 def _c(col) -> Column:
@@ -83,26 +83,6 @@ def weekday_prefix_sql(x: str) -> str:
         f"WHEN {abbrev} = {string_lit(k)} THEN {string_lit(v)}" for k, v in WEEKDAY_PREFIX.items()
     )
     return f"CASE {whens} ELSE NULL END"
-
-
-def default_edd(base: str) -> Column:
-    return F.expr(default_edd_sql(ident(base)))
-
-
-def next_mwf(base: str) -> Column:
-    return F.expr(next_mwf_sql(ident(base)))
-
-
-def fmt_mdy_no_pad(col: str) -> Column:
-    return F.expr(fmt_mdy_no_pad_sql(ident(col)))
-
-
-def reformat_date_tolerant(col: str) -> Column:
-    return F.expr(reformat_date_tolerant_sql(ident(col)))
-
-
-def weekday_prefix(col: str) -> Column:
-    return F.expr(weekday_prefix_sql(ident(col)))
 
 
 def epoch_seconds_ntz(col: str | Column) -> Column:

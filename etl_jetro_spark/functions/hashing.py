@@ -12,9 +12,9 @@ the one hash both engines share, so:
   digit-by-digit (4 bits each) — emitted as a 64-char '0'/'1' string to stay
   integer-overflow-free and engine-portable.
 
-All pure Column expressions (higher-order functions) — no Python UDFs, so
-shingling + hashing stays in the JVM and scales linearly with input splits
-(no shuffle until the LSH band group-by).
+All pure Column expressions — no Python UDFs, so hashing stays in the JVM
+and scales linearly with input splits (no shuffle until the LSH band
+group-by).
 """
 
 from __future__ import annotations
@@ -40,96 +40,6 @@ def doc_fingerprint(col: str | Column) -> Column:
     return F.md5(norm_text(col))
 
 
-def char_shingles(col: str | Column, n: int = 8) -> Column:
-    """Array of character n-grams of the normalized text (empty array if the
-    text is shorter than n). Expression-only — no explode, no shuffle.
-
-    PERF: the normalization expression is embedded in the transform
-    lambda, so it re-evaluates PER ELEMENT (two regex passes × every
-    k-gram position — measured 38× overhead on the winnowing path at
-    sf0.1). Callers on a hot path should project ``norm_text`` into a
-    real column first and use :func:`char_shingles_normed` on the
-    attribute instead."""
-    return char_shingles_normed(norm_text(col), n)
-
-
-def char_shingles_normed(s: Column, n: int = 8) -> Column:
-    """:func:`char_shingles` over an ALREADY-MATERIALIZED normalized
-    string column (an attribute, not an expression tree): the lambda then
-    reads a computed value per element instead of recomputing its input.
-    CollapseProject won't re-inline the normalization (regexp_replace is
-    not a cheap expression), so a plain ``.select`` boundary is enough."""
-    # NB: F.sequence(1, 0) yields a DESCENDING [1, 0], not [], so short texts
-    # need an explicit empty-array branch.
-    return F.when(
-        F.length(s) < n, F.expr("CAST(array() AS array<string>)")
-    ).otherwise(
-        F.transform(
-            F.sequence(F.lit(1), F.length(s) - (n - 1)),
-            lambda i: F.substring(s, i, n),
-        )
-    )
-
-
-def word_shingles(col: str | Column, n: int = 3) -> Column:
-    """Array of word n-grams (space-joined) of the normalized text.
-
-    PERF: the normalization + split + filter expression is embedded in
-    the transform lambda, so it re-evaluates PER SHINGLE POSITION (the
-    q259/q262 defect class — judge-measured ~10× on the repetition/
-    novelty queries). On any hot path use
-    :func:`etl_jetro_spark.operators.dedup.shingle_rows` (exploded row
-    form — whole-stage codegen, zero shuffle, identical shingle sets)
-    or, when the ARRAY form is required, project ``norm_text`` into a
-    real column first and call :func:`word_shingles_normed` on the
-    attribute."""
-    return word_shingles_normed(norm_text(col), n)
-
-
-def word_shingles_normed(s: Column, n: int = 3) -> Column:
-    """:func:`word_shingles` over an ALREADY-MATERIALIZED normalized
-    string column (an attribute behind a select boundary, not an
-    expression tree): the per-element lambda then re-reads a computed
-    value instead of re-running two regex passes per shingle position —
-    the word mirror of :func:`char_shingles_normed`. Shingle sets are
-    identical to :func:`word_shingles` and to
-    ``operators.dedup.shingle_rows`` (which remains the fast path when
-    exploded rows are acceptable)."""
-    words = F.filter(F.split(s, " "), lambda w: w != "")
-    cnt = F.size(words)
-    return F.when(cnt < n, F.expr("CAST(array() AS array<string>)")).otherwise(
-        F.transform(
-            F.sequence(F.lit(0), cnt - n),
-            lambda i: F.concat_ws(" ", F.slice(words, i + 1, n)),
-        )
-    )
-
-
-def minhash_signature(shingles: Column, num_hashes: int = 16) -> Column:
-    """Array<string> of ``num_hashes`` minhash values over a shingle array.
-
-    Permutation ``i`` is ``min(md5(i || ':' || shingle))``; an empty shingle
-    set yields md5 of the seed alone (stable sentinel, still groupable).
-
-    Measured alternatives that LOST (don't redo): (a) slicing one md5 into
-    four 8-hex permutation values — Catalyst doesn't share the transform
-    subtree across the per-permutation branches, so hashing work is
-    unchanged and substring costs add ~20%; (b) explode + groupBy columnar
-    minhash — the exploded-hash shuffle costs more than the saved md5s.
-    """
-
-    def perm(i: int) -> Column:
-        # NB: single-arg lambda only — pyspark passes the array index to any
-        # second lambda parameter, which would clobber an i=i default.
-        seed = f"{i}:"
-        hashed = F.transform(shingles, lambda s: F.md5(F.concat(F.lit(seed), s)))
-        return F.array_min(
-            F.when(F.size(shingles) == 0, F.array(F.md5(F.lit(seed)))).otherwise(hashed)
-        )
-
-    return F.array(*[perm(i) for i in range(num_hashes)])
-
-
 def lsh_band_keys(signature: Column, bands: int, rows_per_band: int) -> Column:
     """Array<string> of ``bands`` LSH bucket keys: md5 of each contiguous
     band slice of the signature. Two docs are candidates iff any key matches."""
@@ -144,50 +54,3 @@ def lsh_band_keys(signature: Column, bands: int, rows_per_band: int) -> Column:
         for b in range(bands)
     ]
     return F.array(*keys)
-
-
-# hex digit -> value via position in this alphabet (portable: strpos/instr)
-_HEX = "0123456789abcdef"
-
-
-def simhash_bits(shingles: Column) -> Column:
-    """64-char '0'/'1' simhash string over a shingle array.
-
-    For each shingle take md5's first 16 hex digits (64 bits). For each bit
-    position sum (2*bit-1) over shingles; fingerprint bit = 1 iff sum > 0.
-    Pure expressions: an aggregate over the shingle array builds a 64-long
-    vote vector, then a transform renders it.
-    """
-    zeros = F.expr("array_repeat(0L, 64)")
-
-    # hex digit -> its 4 vote values (+1/-1 per bit, MSB first), as a
-    # constant lookup array — far cheaper than per-bit floor/pow arithmetic
-    vote_rows = [
-        F.array(*[F.lit(1 if (d >> b) & 1 else -1).cast("long") for b in (3, 2, 1, 0)])
-        for d in range(16)
-    ]
-    vote_lut = F.array(*vote_rows)
-
-    def add_shingle(acc: Column, s: Column) -> Column:
-        h = F.substring(F.md5(s), 1, 16)
-        votes_for_shingle = F.flatten(
-            F.transform(
-                F.split(h, ""),  # 16 hex chars
-                lambda ch: F.element_at(vote_lut, F.instr(F.lit(_HEX), ch)),
-            )
-        )
-        return F.zip_with(acc, votes_for_shingle, lambda a, b: a + b)
-
-    votes = F.aggregate(shingles, zeros, add_shingle)
-    return F.concat_ws(
-        "", F.transform(votes, lambda v: F.when(v > 0, "1").otherwise("0"))
-    )
-
-
-def hamming_distance_bits(a: Column, b: Column) -> Column:
-    """Hamming distance between two equal-length '0'/'1' strings."""
-    return F.aggregate(
-        F.zip_with(F.split(a, ""), F.split(b, ""), lambda x, y: (x != y).cast("int")),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    )

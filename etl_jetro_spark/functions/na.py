@@ -5,16 +5,12 @@ The reference treats the string set {"", "na", "n/a", "nan", "none", "null",
 (/root/reference/Flips/tools/baby_flip_tool.py:37-41,
  /root/reference/247/tools/read_file_tool.py:175).
 
-Each helper is a SQL-text renderer plus a Column form over a column name,
-as in ``functions/text.py``.
+The rule is one SQL-text renderer, as in ``functions/text.py``.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
-from etl_jetro_spark.sqltext import ident, string_lit
+from etl_jetro_spark.sqltext import string_lit
 
 NA_STRINGS = ("", "na", "n/a", "nan", "none", "null", "nah")
 _NA_IN = ", ".join(string_lit(s) for s in NA_STRINGS)
@@ -27,7 +23,3 @@ def _na_word_sql(x: str) -> str:
 def normalize_na_sql(x: str) -> str:
     """NULL out NA-like strings; other values pass through untouched."""
     return f"CASE WHEN {_na_word_sql(x)} THEN NULL ELSE {x} END"
-
-
-def normalize_na(col: str) -> Column:
-    return F.expr(normalize_na_sql(ident(col)))

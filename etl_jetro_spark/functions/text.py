@@ -3,13 +3,14 @@
 Every helper is defined once, as a renderer ``<name>_sql(x)`` that takes
 the SQL text of its argument (``sqltext.ident(name)`` for a column) and
 returns the SQL text of the result, with every literal and regex quoted
-by ``sqltext.string_lit``. Its Column form, ``<name>(col)``, takes a
-column *name* and is one ``F.expr`` of that text: one Py4J call, where a
-chain of ``F.*`` calls costs one round trip per call, and the same
-Catalyst expression. A caller with an expression, not a column, projects
-it into a named column first or uses the renderer inside a
-``selectExpr``. No Python UDFs: the whole family stays inside
-whole-stage codegen.
+by ``sqltext.string_lit``. A DataFrame caller passes it to ``F.expr`` or
+``selectExpr``: one Py4J call, where a chain of ``F.*`` calls costs one
+round trip per call, and the same Catalyst expression. No Python UDFs:
+the whole family stays inside whole-stage codegen.
+
+The rules the driver applies to Python strings (sheet headers, store
+labels, control-sheet cells, map keys) sit beside their renderers as
+``<name>_text(s)``, each defined once.
 
 Reference behaviors re-expressed (file:line cites into /root/reference/):
 - F1 whitespace/hidden-char normalization: Flips/tools/big_flip_tool.py:10-15,
@@ -27,14 +28,14 @@ Reference behaviors re-expressed (file:line cites into /root/reference/):
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+import re
 
-from etl_jetro_spark.sqltext import ident, string_lit
+from etl_jetro_spark.sqltext import string_lit
 
 # zero-width space, BOM, non-breaking space — the reference strips these from
 # headers and cells (big_flip_tool.py:12).
-HIDDEN_CHARS = "​﻿\xa0"
+HIDDEN_CHARS = "\u200b\ufeff\xa0"
+_HIDDEN_TABLE = dict.fromkeys(map(ord, HIDDEN_CHARS), None)
 
 # Unicode dash family the reference splits PO lines on (read_file_tool.py:181).
 DASH_CLASS = "[-–—]"
@@ -44,8 +45,10 @@ EMAIL_RE = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
 # Regex and character-set literals, quoted once for the SQL text.
 _HIDDEN = string_lit(HIDDEN_CHARS)
 _WS_RUN = string_lit(r"\s+")
-_KEY_JUNK = string_lit(r"[#\s]")
-_DOT_ZERO = string_lit(r"\.0{1,2}$")
+_KEY_JUNK_RE = r"[#\s]"
+_DOT_ZERO_RE = r"\.0{1,2}$"
+_KEY_JUNK = string_lit(_KEY_JUNK_RE)
+_DOT_ZERO = string_lit(_DOT_ZERO_RE)
 _MONEY_JUNK = string_lit(r"[$,()\s]|-$")
 _LEADING_NUM = string_lit(r"^(-?\d*\.?\d+)")
 _PAREN_NEG = string_lit(r"^\(.*\)$")
@@ -69,6 +72,11 @@ def strip_hidden_sql(x: str) -> str:
     return f"translate({x}, {_HIDDEN}, '')"
 
 
+def strip_hidden_text(s: str) -> str:
+    """:func:`strip_hidden_sql` on a Python string."""
+    return s.translate(_HIDDEN_TABLE)
+
+
 def norm_ws_sql(x: str) -> str:
     """Hidden characters removed, then trim + collapse internal whitespace
     runs to single spaces."""
@@ -84,11 +92,26 @@ def norm_key_sql(x: str) -> str:
     return f"regexp_replace(lower({norm_ws_sql(x)}), {_KEY_JUNK}, '')"
 
 
+def norm_key_text(s: object) -> str:
+    """The driver's header/marker/map-key match key: ``str(s)`` trimmed,
+    lowercased, with every ``#`` and whitespace character (``str.isspace``)
+    removed. Unlike :func:`norm_key_sql` it keeps the zero-width space
+    and the BOM, and it removes non-ASCII whitespace such as U+2003, which
+    Java's ``\\s`` does not match."""
+    return re.sub(_KEY_JUNK_RE, "", str(s).strip().lower())
+
+
 # --- F2: trailing .0 strip ---------------------------------------------
 
 def strip_dot_zero_sql(x: str) -> str:
     """``'14.0'``→``'14'``, ``'14.00'``→``'14'``, but ``'14.50'`` unchanged."""
     return f"regexp_replace(CAST({x} AS STRING), {_DOT_ZERO}, '')"
+
+
+def strip_dot_zero_text(s: str) -> str:
+    """``s`` trimmed, then :func:`strip_dot_zero_sql`'s rule
+    (``' 449.0 '`` → ``'449'``)."""
+    return re.sub(_DOT_ZERO_RE, "", s.strip())
 
 
 # --- F3: numbers hidden in text -----------------------------------------
@@ -151,41 +174,3 @@ def extract_emails_sql(x: str) -> str:
         "ELSE array_append(acc, e) END"
     )
     return f"aggregate({found}, CAST(array() AS ARRAY<STRING>), (acc, e) -> {step})"
-
-
-# --- Column forms: one F.expr over a column name -------------------------
-
-def norm_ws(col: str) -> Column:
-    return F.expr(norm_ws_sql(ident(col)))
-
-
-def norm_key(col: str) -> Column:
-    return F.expr(norm_key_sql(ident(col)))
-
-
-def strip_dot_zero(col: str) -> Column:
-    return F.expr(strip_dot_zero_sql(ident(col)))
-
-
-def parse_money(col: str) -> Column:
-    return F.expr(parse_money_sql(ident(col)))
-
-
-def first_int(col: str) -> Column:
-    return F.expr(first_int_sql(ident(col)))
-
-
-def item7(col: str) -> Column:
-    return F.expr(item7_sql(ident(col)))
-
-
-def split_first_dash(col: str) -> Column:
-    return F.expr(split_first_dash_sql(ident(col)))
-
-
-def extract_store_from_pdf_name(col: str) -> Column:
-    return F.expr(extract_store_from_pdf_name_sql(ident(col)))
-
-
-def extract_emails(col: str) -> Column:
-    return F.expr(extract_emails_sql(ident(col)))

@@ -4,11 +4,9 @@ The reference's inputs are messy wide sheets where *headers are data*: junk
 rows precede the header row, marker columns bound the payload, and one
 physical sheet can hold several logical tables. These are inherently
 row-POSITIONAL semantics, which Spark DataFrames don't have — so the engine
-normalizes each raw sheet **per file** in pandas (sheets are KB–MB; at 100 TB
-the unit of scale is *many files*, not one huge sheet), then hands clean,
-order-free relational tables to Spark. The pandas helpers below are the
-single implementation used both driver-side (one file) and distributed
-(`mapInPandas` over a binaryFile scan — see sources/).
+normalizes each raw sheet **per file** in pandas on the driver (sheets are
+KB–MB; the unit of scale is *many files*, not one huge sheet), then hands
+clean, order-free relational tables to Spark.
 
 Reference cites (into /root/reference/):
 - P1 header promotion: ACME/tools/acme_tool.py:20-23,
@@ -23,18 +21,16 @@ Reference cites (into /root/reference/):
 
 from __future__ import annotations
 
-import re
-
 import pandas as pd
 
-_HIDDEN = dict.fromkeys(map(ord, "​﻿\xa0"), None)
+from etl_jetro_spark.functions.text import norm_key_text, strip_dot_zero_text, strip_hidden_text
 
 
-def _clean_header(v: object) -> str:
+def clean_header(v: object) -> str:
+    """A header cell as text: NULL/NaN → ``''``, hidden characters removed,
+    trimmed, trailing ``.0``/``.00`` dropped."""
     s = "" if v is None or (isinstance(v, float) and v != v) else str(v)
-    s = s.translate(_HIDDEN).strip()
-    s = re.sub(r"\.0{1,2}$", "", s)
-    return s
+    return strip_dot_zero_text(strip_hidden_text(s))
 
 
 def clean_headers(cols: list[object]) -> list[str]:
@@ -43,7 +39,7 @@ def clean_headers(cols: list[object]) -> list[str]:
     seen: dict[str, int] = {}
     out = []
     for c in cols:
-        name = _clean_header(c)
+        name = clean_header(c)
         if name in seen:
             seen[name] += 1
             out.append(f"{name}.{seen[name]}")
@@ -53,9 +49,7 @@ def clean_headers(cols: list[object]) -> list[str]:
     return out
 
 
-def promote_header(
-    raw: pd.DataFrame, header_row: int = 0, drop_rows_before: bool = True
-) -> pd.DataFrame:
+def promote_header(raw: pd.DataFrame, header_row: int = 0) -> pd.DataFrame:
     """Row ``header_row`` becomes the schema; rows above and including it are
     dropped (P1/P2). ``raw`` is a headerless positional grid."""
     header = clean_headers(list(raw.iloc[header_row]))
@@ -69,16 +63,12 @@ def drop_last_row(df: pd.DataFrame) -> pd.DataFrame:
     return df.iloc[:-1].reset_index(drop=True)
 
 
-def _norm_name(c: object) -> str:
-    return re.sub(r"[#\s]", "", str(c).strip().lower())
-
-
 def find_column(df: pd.DataFrame, marker: str) -> int | None:
     """Index of the first column whose cleaned name matches ``marker``
     (case/space/# insensitive)."""
-    target = _norm_name(marker)
+    target = norm_key_text(marker)
     for i, c in enumerate(df.columns):
-        if _norm_name(c) == target:
+        if norm_key_text(c) == target:
             return i
     return None
 
@@ -101,14 +91,14 @@ def slice_at_marker(
 
 def drop_columns_ci(df: pd.DataFrame, names: list[str]) -> pd.DataFrame:
     """Drop named columns, case/space/#-insensitively (P4)."""
-    targets = {_norm_name(n) for n in names}
-    keep = [c for c in df.columns if _norm_name(c) not in targets]
+    targets = {norm_key_text(n) for n in names}
+    keep = [c for c in df.columns if norm_key_text(c) not in targets]
     return df[keep]
 
 
 def drop_bad_header_columns(df: pd.DataFrame) -> pd.DataFrame:
     """Drop columns whose header is empty/NaN-ish (P5)."""
-    keep = [c for c in df.columns if _clean_header(c) not in ("", "nan", "none")]
+    keep = [c for c in df.columns if clean_header(c) not in ("", "nan", "none")]
     return df[keep]
 
 
@@ -124,7 +114,7 @@ def split_at_sentinel(
     matches = [
         i
         for i, v in enumerate(raw.iloc[:, col])
-        if _norm_name(v) == _norm_name(sentinel)
+        if norm_key_text(v) == norm_key_text(sentinel)
     ]
     if len(matches) < occurrence:
         return raw, raw.iloc[0:0]
@@ -145,9 +135,9 @@ def extract_block(
     stop-marker found in ``marker_row``, rows ``row_range`` (inclusive
     start, exclusive end)."""
     stop = raw.shape[1]
-    targets = {_norm_name(m) for m in stop_markers}
+    targets = {norm_key_text(m) for m in stop_markers}
     for j in range(col_start, raw.shape[1]):
-        if _norm_name(raw.iat[marker_row, j]) in targets:
+        if norm_key_text(raw.iat[marker_row, j]) in targets:
             stop = j
             break
     return raw.iloc[row_range[0] : row_range[1], col_start:stop].reset_index(drop=True)

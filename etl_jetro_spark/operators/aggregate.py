@@ -10,46 +10,24 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from etl_jetro_spark.functions.text import parse_money_sql
 from etl_jetro_spark.sqltext import ident
 
 
-def sum_by(
-    df: DataFrame,
-    keys: list[str],
-    value: str,
-    out: str = "sum_value",
-    parse: bool = False,
-    ceil: bool = False,
-    drop_zero: bool = True,
-) -> DataFrame:
-    """(keys) → sum(value column) with the reference's trimmings:
-
-    - ``parse``: value cells are messy text → ``parse_money`` first
-      (A2, big_flip_tool.py:203-207)
-    - pre-coerce NULL→0 (A1's ``fillna(0)``, allocation_tool.py:87-91)
-    - ``ceil``: ceil the sum to a long (A2)
-    - ``drop_zero``: post-filter ``sum != 0`` (P8)
-
-    The aggregate and the filter are SQL text.
-    """
-    v = parse_money_sql(ident(value)) if parse else ident(value)
+def sum_by(df: DataFrame, keys: list[str], value: str, out: str = "sum_value") -> DataFrame:
+    """(keys) → sum(value column), NULL and junk cells counted as 0 (A1's
+    ``fillna(0)``, allocation_tool.py:87-91), groups summing to 0 dropped
+    (P8). The aggregate and the filter are SQL text."""
     # try_cast: ANSI mode (Spark 4 default) would throw on messy cells;
     # the reference's fillna(0) semantics want junk -> 0 instead.
-    total = f"sum(coalesce(try_cast({v} AS DOUBLE), 0.0D))"
-    if ceil:
-        total = f"CAST(ceil({total}) AS BIGINT)"
-    res = df.groupBy(*keys).agg(F.expr(f"{total} AS {ident(out)}"))
-    if drop_zero:
-        res = res.filter(f"{ident(out)} != 0")
-    return res
+    total = f"sum(coalesce(try_cast({ident(value)} AS DOUBLE), 0.0D))"
+    return df.groupBy(*keys).agg(F.expr(f"{total} AS {ident(out)}")).filter(f"{ident(out)} != 0")
 
 
 def first_per_group(
     df: DataFrame, keys: list[str], order_by: list[Column], cols: list[str]
 ) -> DataFrame:
-    """A6: deterministic first row per group (min_by semantics) — used for
-    per-Branch header values in the macro sinks. Single shuffle, no window."""
+    """A6: deterministic first row per group (min_by semantics), as q8's
+    first order per customer. Single shuffle, no window."""
     # order fields get positional aliases so an output col may also be a key
     # of the ordering without creating duplicate struct fields
     strct = F.struct(
@@ -95,17 +73,6 @@ def merge_partials(
     return merged.groupBy(*keys).agg(
         F.sum(sum_col).alias(sum_col), F.sum(cnt_col).alias(cnt_col)
     )
-
-
-def latest_by(df: DataFrame, order_col: str, cols: list[str] | None = None) -> DataFrame:
-    """A5: global argmax — the row with the greatest ``order_col`` (newest
-    file by mtime). ``max_by`` aggregates without a sort."""
-    cols = cols or [c for c in df.columns if c != order_col]
-    agg = df.agg(
-        *[F.max_by(F.col(c), F.col(order_col)).alias(c) for c in cols],
-        F.max(order_col).alias(order_col),
-    )
-    return agg.select(*df.columns)
 
 
 def exact_group_percentiles(

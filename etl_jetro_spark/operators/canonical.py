@@ -11,9 +11,6 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
 from etl_jetro_spark.sqltext import ident, string_lit
 
 CANONICAL_COLS = [
@@ -79,10 +76,6 @@ def branch_fix_sql(x: str) -> str:
     (ACME/tools/acme_tool.py:88-98)"""
     c = f"CAST({x} AS STRING)"
     return f"try_cast(CASE WHEN {c} RLIKE {_TWO_DIGITS} THEN concat('1', {c}) ELSE {c} END AS INT)"
-
-
-def branch_fix(col: str) -> Column:
-    return F.expr(branch_fix_sql(ident(col)))
 
 
 def canonical_sql(cfg: PipelineConfig, edd: str, columns: dict[str, str]) -> str:

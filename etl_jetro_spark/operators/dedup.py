@@ -28,7 +28,6 @@ from etl_jetro_spark.plans.hints import bcast_small
 from etl_jetro_spark.operators.util import spread
 from etl_jetro_spark.functions.hashing import (
     doc_fingerprint,
-    hamming_distance_bits,
     lsh_band_keys,
 )
 
@@ -48,8 +47,8 @@ def shingle_rows(
     measured 7× slower; the previous window-lead shape was codegen but
     shuffled every word of the corpus by doc id — this form measured
     0.27 s vs its 0.93 s at sf0.1 and removes that shuffle entirely,
-    which is the difference that matters at 100 TB.) Shingle SETS are
-    identical to functions.hashing.word_shingles.
+    which is the difference that matters at 100 TB.) The shingle multiset
+    is that of the word n-gram array of ``norm_text``.
     """
     from etl_jetro_spark.functions.hashing import norm_text
 
@@ -94,7 +93,7 @@ def char_gram_rows(
     normalized text — the char mirror of :func:`shingle_rows`, generated
     PARTITION-LOCALLY in whole-stage codegen: explode the POSITION
     sequence, then one plain ``substring(_t, _i, n)`` per emitted row.
-    The array form (``char_shingles_normed`` + explode) walks an
+    An array form (a ``transform`` over the positions + explode) walks an
     interpreted HOF lambda (``transform`` is CodegenFallback) and
     allocates the full gram-string array per document before the
     Generate; here the only per-document allocation is an int sequence
@@ -110,8 +109,7 @@ def char_gram_rows(
     # short/NULL-text guard INSIDE the generator (not a Filter): a pushed
     # filter on length(_t) would re-evaluate the two-regex normalization
     # at the scan. NB: F.sequence(1, 0) yields a DESCENDING [1, 0], not
-    # [] — the empty-array branch is load-bearing (same guard as
-    # char_shingles_normed).
+    # [] — the empty-array branch is load-bearing.
     pos = F.when(
         F.length("_t") >= n,
         F.sequence(F.lit(1), F.length("_t") - (n - 1)),
@@ -215,7 +213,7 @@ def minhash_lsh_candidates(
         ]
     )
     # empty shingle sets fall out of the explode; restore with the stable
-    # seed-hash sentinel (same value minhash_signature produces)
+    # seed-hash sentinel (md5 of the seed alone)
     sig = (
         df.select(F.col(id_col).alias("_id"))
         .join(mins, "_id", "left")
@@ -255,58 +253,12 @@ def minhash_lsh_candidates(
     return pairs.select("id_a", "id_b", est.alias("est_jaccard"))
 
 
-def simhash_candidates(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    shingle_words: int = 2,
-    max_hamming: int = 3,
-    chunks: int = 4,
-) -> DataFrame:
-    """Near-duplicate pairs by SimHash: candidates share ≥1 of ``chunks``
-    equal fingerprint chunks (pigeonhole: catches all pairs with Hamming <
-    chunks), then verified ``hamming <= max_hamming``.
-
-    Returns (id_a, id_b, hamming).
-    """
-    width = 64 // chunks
-    fp = simhash_fingerprints(df, id_col, text_col, shingle_words).select(
-        F.col(id_col).alias("_id"), F.col("simhash").alias("_fp")
-    )
-    chunked = fp.select(
-        "_id",
-        "_fp",
-        F.explode(
-            F.array(
-                *[
-                    F.concat(F.lit(f"{i}:"), F.substring("_fp", i * width + 1, width))
-                    for i in range(chunks)
-                ]
-            )
-        ).alias("_chunk"),
-    )
-    a = chunked.select(F.col("_id").alias("id_a"), F.col("_fp").alias("_fp_a"), "_chunk")
-    b = chunked.select(F.col("_id").alias("id_b"), F.col("_fp").alias("_fp_b"), "_chunk")
-    return (
-        a.join(b, "_chunk")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-        .select(
-            "id_a",
-            "id_b",
-            hamming_distance_bits(F.col("_fp_a"), F.col("_fp_b")).alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-    )
-
-
 def ngram_jaccard_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
     n: int = 3,
     threshold: float = 0.8,
-    use_chars: bool = False,
     max_doc_freq: int | None = None,
 ) -> DataFrame:
     """EXACT Jaccard similarity over distinct n-gram shingle sets, via an
@@ -319,31 +271,10 @@ def ngram_jaccard_pairs(
     # barrier: the shingle index feeds THREE consumers (per-doc sizes and
     # both sides of the self-join) — without it the shingling recomputes
     # per consumer. localCheckpoint instead of persist so the blocks are
-    # GC-reclaimed (no cache accumulation across calls). Word shingles use
-    # the codegen'd exploded path; char shingles keep the array form.
-    if use_chars:
-        from etl_jetro_spark.functions.hashing import (
-            char_shingles_normed,
-            norm_text,
-        )
-
-        # norm materialized BEFORE the k-gram lambda (else it re-runs per
-        # position — see winnow_fingerprints)
-        sh = (
-            spread(df)
-            .select(F.col(id_col).alias("_id"), norm_text(text_col).alias("_t"))
-            .select(
-                "_id",
-                F.explode(
-                    F.array_distinct(char_shingles_normed(F.col("_t"), n))
-                ).alias("_sh"),
-            )
-            .localCheckpoint(eager=False)
-        )
-    else:
-        sh = shingle_rows(df, id_col, text_col, n, distinct=True).localCheckpoint(
-            eager=False
-        )
+    # GC-reclaimed (no cache accumulation across calls).
+    sh = shingle_rows(df, id_col, text_col, n, distinct=True).localCheckpoint(
+        eager=False
+    )
     # sizes feeds BOTH the na and nb joins below; it is a per-doc count
     # (tiny next to the index) — checkpoint so the partial-agg pass over
     # the full index runs once, not once per alias
@@ -424,18 +355,21 @@ def containment_pairs(
     )
 
 
+# hex digit -> value via its position in this alphabet (portable: instr/strpos)
+_HEX = "0123456789abcdef"
+
+
 def simhash_fingerprints(
     df: DataFrame, id_col: str, text_col: str, shingle_words: int = 2
 ) -> DataFrame:
     """(id, simhash) 64-char bit strings, computed columnar over exploded
-    shingle rows (64 sum-aggregates, whole-stage codegen) — equal to
-    functions.hashing.simhash_bits but ~2x faster (HOFs are interpreted).
+    shingle rows (64 sum-aggregates, whole-stage codegen): for each bit
+    position, the sum over shingles of (2*bit-1) of md5's first 16 hex
+    digits; the fingerprint bit is 1 iff the sum is positive. Measured ~2x
+    faster than the same fold as array HOFs (interpreted).
 
-    Votes sum over the shingle MULTISET (duplicates vote repeatedly),
-    matching the array-level definition.
+    Votes sum over the shingle MULTISET (duplicates vote repeatedly).
     """
-    from etl_jetro_spark.functions.hashing import _HEX
-
     sh = shingle_rows(df, id_col, text_col, shingle_words, distinct=False)
     # precompute the 16 nibbles ONCE per row (16 substring+instr), then
     # each of the 64 bit-vote aggregates is two integer ops on a nibble

@@ -11,15 +11,7 @@ node id), converging in O(graph diameter) rounds — near-dup graphs are
 shallow (dup clusters are dense, diameters of 2-4), so a handful of
 rounds suffices at any corpus size. Lineage is truncated per round with
 ``localCheckpoint`` (an iterative loop would otherwise stack analysis
-cost and replay risk). For adversarial long-chain graphs at extreme
-scale, ``method="star"`` switches to the alternating
-large-star/small-star algorithm (Kiveris et al., "Connected Components
-in MapReduce and Beyond", 2014): the same join/agg primitives, but each
-round grafts whole subtrees onto neighborhood minima, converging in
-O(log^2 n) rounds on ANY topology (measured ~25 rounds on a 10^4-node
-path whose diameter is 10^4) instead of O(diameter). Min-propagation
-stays the default for dedup-shaped graphs, whose diameters are 2-4:
-fewer shuffles per round wins there.
+cost and replay risk).
 """
 
 from __future__ import annotations
@@ -33,21 +25,17 @@ def connected_components(
     src: str = "id_a",
     dst: str = "id_b",
     max_iter: int = 50,
-    method: str = "min",
     layer: str | None = None,
     pre_barrier: bool = False,
 ) -> DataFrame:
     """(id, component) for every node in ``edges``; ``component`` is the
     minimum node id reachable from it (a canonical cluster label).
 
-    ``method="min"`` (default): label propagation, one join+agg per
-    round, O(diameter) rounds — right for shallow dedup clusters.
-    ``method="star"``: alternating large-star/small-star grafting,
-    O(log^2 n) rounds on any topology — right for adversarial chains.
-    Both converge to identical labels; raises if ``max_iter`` rounds
+    Label propagation, one join+agg per round, O(diameter) rounds —
+    right for shallow dedup clusters; raises if ``max_iter`` rounds
     aren't enough.
 
-    ``layer`` (min method only) names a column of ``edges`` that keys
+    ``layer`` names a column of ``edges`` that keys
     INDEPENDENT graph layers — e.g. a dedup-threshold sweep where each
     threshold induces its own edge set (r11). All layers propagate in
     ONE driver loop keyed by (layer, node): total rounds = the DEEPEST
@@ -68,12 +56,6 @@ def connected_components(
         edges = edges.select(
             *ly, F.col(src), F.col(dst)
         ).localCheckpoint(eager=False)
-    if method == "star":
-        if layer is not None:
-            raise ValueError("layer sweeps are min-method only")
-        return _connected_components_star(edges, src, dst, max_iter)
-    if method != "min":
-        raise ValueError(f"method must be 'min' or 'star', got {method!r}")
     und = (
         edges.select(*ly, F.col(src).alias("a"), F.col(dst).alias("b"))
         .unionByName(
@@ -124,91 +106,6 @@ def connected_components(
         if changed == 0:
             return comp.select(*ly, "id", F.col("comp").alias("component"))
     raise RuntimeError(f"connected_components: no convergence in {max_iter} rounds")
-
-
-def _star_round(adj: DataFrame, large: bool) -> DataFrame:
-    """One large-star (graft neighbors > u onto the neighborhood min) or
-    small-star (graft neighbors <= u) step. ``adj`` carries BOTH
-    directions of every edge; output is the new directed parent-edge set
-    (child > parent always, since the parent is a neighborhood min)."""
-    mins = (
-        adj.groupBy("u")
-        .agg(F.min("v").alias("_mv"))
-        .select("u", F.least(F.col("_mv"), F.col("u")).alias("m"))
-    )
-    j = adj.join(mins, "u")
-    side = F.col("v") > F.col("u") if large else F.col("v") <= F.col("u")
-    grafted = j.filter(side).select(F.col("v").alias("u"), F.col("m").alias("v"))
-    kept = mins.select(F.col("u"), F.col("m").alias("v"))
-    return (
-        grafted.unionByName(kept)
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
-
-
-def _connected_components_star(
-    edges: DataFrame, src: str, dst: str, max_iter: int
-) -> DataFrame:
-    """Alternating large-star/small-star (Kiveris et al. 2014). Each
-    round is two groupBy-min + join + distinct passes over the edge set;
-    the edge set contracts toward a star forest (every node pointing at
-    its component minimum) in O(log^2 n) rounds regardless of diameter.
-    Convergence = the (count, checksum) signature of the edge set is
-    stable across a full round — computed in ONE aggregate job per
-    round."""
-    ids = edges.select(F.col(src).alias("id")).unionByName(
-        edges.select(F.col(dst).alias("id"))
-    ).distinct().localCheckpoint(eager=False)
-
-    e = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    prev_sig = None
-    for _ in range(max_iter):
-        adj = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        e = _star_round(adj, large=True)
-        adj = e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        e = _star_round(adj, large=False).localCheckpoint(eager=False)
-        row = e.agg(
-            F.count(F.lit(1)).alias("n"),
-            # bit_xor: order-insensitive set signature that cannot overflow
-            F.expr("bit_xor(xxhash64(u, v))").alias("chk"),
-        ).head()
-        sig = (row["n"], row["chk"])
-        if sig == prev_sig:
-            # star forest reached: every edge is (node, component-min)
-            comp = e.select(F.col("u").alias("id"), F.col("v").alias("comp"))
-            roots = ids.join(
-                comp.select(F.col("id")), "id", "left_anti"
-            ).select("id", F.col("id").alias("comp"))
-            return (
-                comp.unionByName(roots)
-                .groupBy("id")
-                .agg(F.min("comp").alias("component"))
-            )
-        prev_sig = sig
-    raise RuntimeError(
-        f"connected_components(star): no convergence in {max_iter} rounds"
-    )
-
-
-def dedup_keep_canonical(
-    df: DataFrame, pairs: DataFrame, id_col: str
-) -> DataFrame:
-    """Cluster the near-dup ``pairs`` and keep one row per cluster: the
-    minimum id (the component label) survives; isolated rows (no pair)
-    pass through untouched."""
-    comp = connected_components(pairs)
-    drop = comp.filter(F.col("id") != F.col("component")).select(
-        F.col("id").alias(id_col)
-    )
-    # no broadcast hint: the drop set scales with dup volume — AQE picks
-    # the strategy from runtime size
-    return df.join(drop, id_col, "left_anti")
 
 
 def triangle_count(edges: DataFrame, src: str = "id_a", dst: str = "id_b") -> DataFrame:

@@ -9,7 +9,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from etl_jetro_spark.functions.text import norm_key_sql
+from etl_jetro_spark.functions.text import norm_key_sql, norm_key_text
 from etl_jetro_spark.sqltext import string_lit
 
 
@@ -26,7 +26,7 @@ def map_lookup_sql(
     ``zero_to_null`` reproduces the reference's zero→blank rule
     (big_flip_tool.py:238-245).
     """
-    norm = (lambda s: "".join(str(s).strip().lower().split()).replace("#", "")) if normalize_keys else str
+    norm = norm_key_text if normalize_keys else str
     # stringify values: a map literal unifies value types, which would
     # silently coerce mixed dicts (e.g. {"114": "8", "999": 0}) to a numeric
     # map. The whole lookup is one SQL text, however many keys the dict has.

@@ -1,22 +1,19 @@
-"""Data-layout management: Z-order (Morton) clustering for multi-column
-data skipping.
+"""Data-layout management: the Z-order (Morton) key and small-file
+compaction plans.
 
-A 100 TB table filtered on TWO dimensions (e.g. customer AND date) cannot
-be sorted to serve both: a single-column sort gives perfect min/max
-pruning on that column and none on the other. Interleaving the bits of
-both keys (Morton code) and range-partitioning + sorting by the code
-gives every output file a tight bounding box in BOTH dimensions, so
-parquet footer min/max statistics (and row-group stats inside each file)
-skip most files for any 2-D range predicate.
-
-This is the same mechanism lakehouse formats call ``OPTIMIZE ZORDER BY``;
-here it is plain Spark: a codegen'd bit-interleave expression +
-``repartitionByRange`` + ``sortWithinPartitions`` — no private APIs.
+A table filtered on TWO dimensions (e.g. customer AND date) cannot be
+sorted to serve both: a single-column sort gives perfect min/max pruning
+on that column and none on the other. The Morton code of both keys
+(:func:`morton_sql`, their interleaved bits) is the sort key under which
+range-partitioned files each cover a tight bounding box in BOTH
+dimensions, so parquet footer min/max statistics skip most files for any
+2-D range predicate — what lakehouse formats call ``OPTIMIZE ZORDER BY``.
+The key is one SQL text that Spark and DuckDB evaluate identically (q96).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -33,33 +30,6 @@ def morton_sql(x: str, y: str, bits: int = 10) -> str:
         terms.append(f"(((({x}) >> {i}) & 1) << {2 * i})")
         terms.append(f"(((({y}) >> {i}) & 1) << {2 * i + 1})")
     return "(" + " | ".join(terms) + ")"
-
-
-def morton_key(x: str, y: str, bits: int = 10) -> Column:
-    """Morton (Z-order) code of two non-negative BIGINT columns."""
-    return F.expr(morton_sql(x, y, bits))
-
-
-def zorder_repartition(
-    df: DataFrame,
-    x: str,
-    y: str,
-    num_files: int,
-    bits: int = 10,
-) -> DataFrame:
-    """Cluster ``df`` for a 2-D-filterable layout: range-partition by the
-    Morton code of (x, y) into ``num_files`` partitions and sort within
-    each. Write the result with ``.write.parquet`` — every file's (x, y)
-    bounding box is a compact Z-curve segment, so min/max footer stats
-    prune on either or both dimensions. The range partitioner samples the
-    code distribution, so skewed keys still split evenly."""
-    key = morton_key(x, y, bits).alias("_zkey")
-    return (
-        df.withColumn("_z", key)
-        .repartitionByRange(num_files, "_z")
-        .sortWithinPartitions("_z")
-        .drop("_z")
-    )
 
 
 def compaction_plan(

@@ -78,26 +78,3 @@ def diff_summary(
     return d.groupBy("diff_status").agg(
         F.count(F.lit(1)).cast("bigint").alias("n")
     )
-
-
-def schema_diff(a: DataFrame, b: DataFrame) -> list[dict]:
-    """Column-level drift of ``b`` against base ``a``: added / removed /
-    type_changed entries (driver-side — schemas are metadata, not data).
-    """
-    ta = {f.name: f.dataType.simpleString() for f in a.schema.fields}
-    tb = {f.name: f.dataType.simpleString() for f in b.schema.fields}
-    out: list[dict] = []
-    for name in sorted(set(ta) | set(tb)):
-        if name not in ta:
-            out.append({"column": name, "drift": "added", "type": tb[name]})
-        elif name not in tb:
-            out.append({"column": name, "drift": "removed", "type": ta[name]})
-        elif ta[name] != tb[name]:
-            out.append(
-                {
-                    "column": name,
-                    "drift": "type_changed",
-                    "type": f"{ta[name]}->{tb[name]}",
-                }
-            )
-    return out

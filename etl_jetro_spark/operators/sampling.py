@@ -25,15 +25,6 @@ def hash_bucket(col: str | Column, buckets: int = 10_000, salt: str = "") -> Col
     return F.conv(F.substring(h, 1, 8), 16, 10).cast("long") % buckets
 
 
-def hash_sample(
-    df: DataFrame, id_col: str, fraction: float, salt: str = ""
-) -> DataFrame:
-    """Deterministic ~``fraction`` sample: keeps rows whose hash bucket
-    falls under the rate. Same input → same sample, always."""
-    buckets = 10_000
-    return df.filter(hash_bucket(id_col, buckets, salt) < int(fraction * buckets))
-
-
 def stratified_sample(
     df: DataFrame,
     id_col: str,
@@ -43,14 +34,15 @@ def stratified_sample(
 ) -> DataFrame:
     """Exact per-stratum quota sample: within each stratum, rank rows by
     (md5(salt||id), id) and keep the first ceil(fraction·|stratum|). Unlike
-    ``hash_sample`` (expected fraction), every stratum contributes its exact
-    quota — the per-language / per-source rebalancing step of corpus
-    curation. Deterministic and engine-portable (md5 ranking).
+    a hash-bucket filter (:func:`weighted_hash_sample`, an expected
+    fraction), every stratum contributes its exact quota — the
+    per-language / per-source rebalancing step of corpus curation. Deterministic and engine-portable (md5 ranking).
 
     One shuffle on the stratum key. Skew note: a window over a stratum puts
     that stratum in one task; strata here are coarse dataset shards
     (languages, sources), whose count is small and sizes are bounded by
-    design — for per-key quotas over millions of keys use hash_sample.
+    design — for per-key rates over millions of keys use
+    :func:`weighted_hash_sample`.
     """
     if not (0.0 < fraction <= 1.0):
         raise ValueError(f"fraction must be in (0, 1], got {fraction}")

@@ -57,25 +57,6 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
-def cosine_topk(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    query: list[float],
-    k: int = 10,
-) -> DataFrame:
-    """Exact top-k by cosine similarity against a constant query vector.
-
-    Returns (id, score) — score rounded to 12 dp before the ordering so
-    exact ties break by id, not fold noise (module docstring).
-    """
-    q = F.array(*[F.lit(float(x)) for x in query])
-    scored = df.select(
-        F.col(id_col), F.round(cosine(_vec(vec_col), q), 12).alias("score")
-    )
-    return scored.orderBy(F.col("score").desc(), F.col(id_col).asc()).limit(k)
-
-
 def knn_join(
     probes: DataFrame,
     corpus: DataFrame,
@@ -196,7 +177,7 @@ def embedding_near_dup(
     # _v materialized behind a select boundary BEFORE the signature:
     # inlined, the cast-transform re-evaluates inside every one of the
     # ``bits`` hyperplane dots (33x per row, CodegenFallback each —
-    # r11, the char_shingles_normed contract applied here). The
+    # r11: a lambda reads a materialized attribute, never an expression). The
     # per-vector norm is hoisted the same way: score below is
     # dot/(na*nb), the BIT-IDENTICAL float expression to cosine(a, b),
     # with the two norm folds computed once per vector instead of once

@@ -3,12 +3,11 @@
 Row-ordered outputs are not Spark sorts. Their post-agg tables are small
 by construction, are collected once and are ordered on the driver by
 ``sinks.excel_sink.collect_ordered``: the canonical sheet by its columns,
-the baby-flip table by :func:`lot_last4_key` and the DLPM price rows by
+the baby-flip table by :func:`lot_last4_key_sql` and the DLPM price rows by
 W1's keys, each key computed in the table's plan.
 :func:`numeric_first_order` is W1 as a Python sort key, the driver-side
 twin of :func:`numeric_first_key_sql` that the ADPO,X renderer orders its
-branch groups with. The key helpers are SQL-text renderers; the runner's
-``lot_last4_key`` also has a Column form over a column name, as in
+branch groups with. The key helpers are SQL-text renderers, as in
 ``functions/text.py``.
 """
 
@@ -16,10 +15,7 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
-
-from etl_jetro_spark.sqltext import ident, string_lit
+from etl_jetro_spark.sqltext import string_lit
 
 NUMERIC_SENTINEL = 10**9  # reference's missing-lot sort sentinel (baby_flip_tool.py:330)
 _LAST_DIGIT_RUN = string_lit(r"(\d+)\D*$")
@@ -60,7 +56,3 @@ def lot_last4_key_sql(x: str) -> str:
     # also valid in RE2 engines (DuckDB oracle parity)
     last4 = f"substring(regexp_extract(CAST({x} AS STRING), {_LAST_DIGIT_RUN}, 1), -4, 4)"
     return f"coalesce(try_cast(nullif({last4}, '') AS INT), {NUMERIC_SENTINEL})"
-
-
-def lot_last4_key(lot: str) -> Column:
-    return F.expr(lot_last4_key_sql(ident(lot)))

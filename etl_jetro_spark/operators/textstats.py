@@ -11,7 +11,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from etl_jetro_spark.plans.hints import bcast_small, bcast_sized
 
-from etl_jetro_spark.functions.hashing import doc_fingerprint, norm_text
+from etl_jetro_spark.functions.hashing import norm_text
 
 
 def _c(col) -> Column:
@@ -61,7 +61,7 @@ def stopword_hits(col: str | Column, lang: str = "en") -> Column:
     Counted via ``regexp_extract_all`` over the normalized text — fully
     whole-stage-codegen. (The previous ``F.filter`` lambda HOF was
     CodegenFallback and duplicated the norm_text subtree per language —
-    the q259/q262 word_shingles defect class; measured on q261 at sf1:
+    the q259/q262 word n-gram HOF defect class; measured on q261 at sf1:
     18.9 s -> see SCALE.md round-7 table.) Token-equality semantics are
     identical: a hit is a whole normalized token equal to a stopword."""
     return F.size(
@@ -128,11 +128,6 @@ def quality_score(df: DataFrame, text_col: str) -> DataFrame:
     stop_score = F.least(F.col("q_stopword_ratio") * 4, F.lit(1.0))
     score = (len_score * 0.4 + (1 - noise_penalty) * 0.3 + stop_score * 0.3)
     return feat.withColumn("quality_score", F.round(score, 6))
-
-
-def fingerprint(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
-    """(id, fingerprint) — md5 of normalized text (exact-dedup key)."""
-    return df.select(_c(id_col), doc_fingerprint(text_col).alias("fingerprint"))
 
 
 def ngram_repetition(

@@ -187,49 +187,6 @@ def cohort_retention(
     )
 
 
-def funnel(
-    events: DataFrame,
-    user_col: str,
-    ts_col: str,
-    type_col: str,
-    steps: list[str],
-) -> DataFrame:
-    """Ordered funnel: for each step i, the number of users who performed
-    steps[0..i] in strict timestamp order (each step strictly after the
-    previous one's earliest qualifying time).
-
-    Each stage filters the event stream by type BEFORE shuffling, so
-    stage i shuffles only step-i events plus the (small) per-user
-    frontier from stage i-1 — never the whole stream. Joins on the user
-    key chain the same partitioning, so AQE collapses the exchanges.
-    """
-    if not steps:
-        raise ValueError("funnel needs at least one step")
-    u, t = F.col(user_col), F.col(ts_col)
-    frontier = (
-        events.filter(F.col(type_col) == steps[0])
-        .groupBy(u.alias("_u"))
-        .agg(F.min(t).alias("_t"))
-    )
-    counts = [frontier.count()]
-    for step in steps[1:]:
-        nxt = (
-            events.filter(F.col(type_col) == step)
-            .select(u.alias("_u"), t.alias("_ts"))
-            .join(frontier, "_u")
-            .filter(F.col("_ts") > F.col("_t"))
-            .groupBy("_u")
-            .agg(F.min("_ts").alias("_t"))
-        )
-        counts.append(nxt.count())
-        frontier = nxt
-    spark = events.sparkSession
-    return spark.createDataFrame(
-        [(i + 1, s, int(n)) for i, (s, n) in enumerate(zip(steps, counts))],
-        "step INT, event_type STRING, n_users BIGINT",
-    )
-
-
 def funnel_df(
     events: DataFrame,
     user_col: str,
@@ -237,9 +194,10 @@ def funnel_df(
     type_col: str,
     steps: list[str],
 ) -> DataFrame:
-    """Single-plan funnel (no driver-side counts), equivalent to
-    :func:`funnel`: each step's reach time is the earliest event of that
-    type strictly after the previous step's reach time.
+    """Ordered funnel in one plan (no driver-side counts): for each step
+    i, the number of users who performed steps[0..i] in strict timestamp
+    order — each step's reach time is the earliest event of that type
+    strictly after the previous step's reach time.
 
     One shuffle on the user key: funnel-typed events are collected per
     user as a time-sorted list and the step chain is resolved with a
@@ -247,8 +205,7 @@ def funnel_df(
     in time order, step i's slot is filled by the first type-i event
     seen after slot i-1 is filled. Scale note: per-user state is the
     user's funnel-typed events only (the stream is filtered by type
-    before the shuffle); for users with pathologically many events use
-    :func:`funnel`, whose per-stage frontier is one row per user.
+    before the shuffle).
     """
     if not steps:
         raise ValueError("funnel needs at least one step")

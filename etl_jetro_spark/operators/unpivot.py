@@ -17,8 +17,7 @@ Reference cites (into /root/reference/):
 
 from __future__ import annotations
 
-import re
-
+from etl_jetro_spark.functions.text import strip_dot_zero_text
 from etl_jetro_spark.sqltext import ident, string_lit
 
 
@@ -47,8 +46,5 @@ def stack_sql(cols: list[str], var: str, value: str) -> str:
     if not cols:
         raise ValueError("stack_sql: no value columns to unpivot")
 
-    def label(c: str) -> str:
-        return re.sub(r"\.0{1,2}$", "", c.strip())
-
-    terms = ", ".join(f"{string_lit(label(c))}, CAST({ident(c)} AS STRING)" for c in cols)
+    terms = ", ".join(f"{string_lit(strip_dot_zero_text(c))}, CAST({ident(c)} AS STRING)" for c in cols)
     return f"stack({len(cols)}, {terms}) AS ({ident(var)}, {ident(value)})"

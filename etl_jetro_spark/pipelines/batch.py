@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from etl_jetro_spark.functions.dates import default_edd_sql, fmt_mdy_no_pad_sql, next_mwf_sql
 from etl_jetro_spark.functions.na import normalize_na_sql
-from etl_jetro_spark.functions.text import parse_money_sql
+from etl_jetro_spark.functions.text import norm_key_text, parse_money_sql, strip_dot_zero_text
 from etl_jetro_spark.normalize import grid as G
 from etl_jetro_spark.operators.canonical import PIPELINES, canonical_sql
 from etl_jetro_spark.operators.joins import map_lookup_sql
@@ -90,7 +90,7 @@ def build_allocation(
             raise ValueError("leavins requires an explicit EDD")  # :133-134
         edd = default_edd_sql(date_lit(base_date))
     cols = [str(c) for c in wide.columns]
-    item = ident(next(c for c in cols if G._norm_name(c) in ("item", "itemitem")))
+    item = ident(next(c for c in cols if norm_key_text(c) in ("item", "itemitem")))
     canon = canonical_sql(PIPELINES[pipeline], edd, {
         "Branch": "Branch", "Item": "Item", "Distro Size": "CAST(qty AS BIGINT)",
     })
@@ -126,7 +126,7 @@ def build_pricesheet_long(spark: SparkSession, wide: pd.DataFrame) -> DataFrame:
     """Melt to (Store#, Item#, Vendor#=81214, Cost) (U2) with store remap /
     exclusion (P10) and zero-cost filter (P8)."""
     cols = [str(c) for c in wide.columns]
-    item = ident(next(c for c in cols if G._norm_name(c) == "item"))
+    item = ident(next(c for c in cols if norm_key_text(c) == "item"))
     store = ident("Store#")
     remap = " ".join(
         f"WHEN {store} = {string_lit(src)} THEN {string_lit(dst)}" for src, dst in STORE_REMAP.items()
@@ -202,12 +202,10 @@ def _coerce_cell(v: object) -> object:
     blanks/NA-words → 0; trailing '.0'/'.00' stripped; numeric → int if
     integral else float; non-numeric text kept as the stripped string
     (commas NOT treated as thousands separators)."""
-    import re as _re
-
     s = str(v).strip() if v is not None else ""
     if s == "" or s.lower() in ("nan", "na", "none"):
         return 0
-    s2 = _re.sub(r"(?:\.0{1,2})$", "", s)
+    s2 = strip_dot_zero_text(s)
     try:
         f = float(s2)
         return int(f) if f.is_integer() else f
@@ -239,7 +237,7 @@ def split_big_and_baby(raw: pd.DataFrame) -> tuple[pd.DataFrame, pd.DataFrame]:
     baby region = rows from the SECOND 'Item' in col 0."""
     big, _ = G.split_at_sentinel(raw, col=3, sentinel="Total Weight", occurrence=1)
     matches = [
-        i for i, v in enumerate(raw.iloc[:, 0]) if G._norm_name(v) == "item"
+        i for i, v in enumerate(raw.iloc[:, 0]) if norm_key_text(v) == "item"
     ]
     baby = (
         raw.iloc[matches[1]:].reset_index(drop=True)
@@ -256,7 +254,7 @@ def build_flips_store_block(big: pd.DataFrame) -> dict[str, dict[str, str]]:
     block = G.extract_block(
         big, row_range=(0, 5), col_start=4, stop_markers=["Lot #", "Total"], marker_row=4
     )
-    stores = [G._clean_header(v) for v in block.iloc[4]]
+    stores = [G.clean_header(v) for v in block.iloc[4]]
     fob = {s: str(block.iat[1, j]) for j, s in enumerate(stores) if s}
     xdock = {s: str(block.iat[3, j]) for j, s in enumerate(stores) if s}
     return {"fob": fob, "xdock": xdock}
@@ -296,8 +294,8 @@ def build_big_flip(
     """Melt 2-id (U3, values parsed as money) → ceil-sum (A2) → XDCK/FOB
     map lookups (J3, zero→blank) → next-MWF EDD (F10) → canonical."""
     cols = [str(c) for c in wide.columns]
-    item = ident(next(c for c in cols if G._norm_name(c) == "item"))
-    lot = ident(next(c for c in cols if G._norm_name(c) == "lot"))
+    item = ident(next(c for c in cols if norm_key_text(c) == "item"))
+    lot = ident(next(c for c in cols if norm_key_text(c) == "lot"))
     canon = canonical_sql(PIPELINES["flips_big"], next_mwf_sql(date_lit(base_date)), {
         "Branch": "Branch", "Item": "Item", "Distro Size": ident("Distro Size"),
         "XDCK": parse_money_sql("XDCK"), "FOB": parse_money_sql("FOB"),
@@ -366,8 +364,8 @@ def build_baby_flip(
     clock (ISO string). The rows are unordered: ``runner.run_flips_baby``
     orders the collected table by Store then LOT#-last4 (W3)."""
     cols = [str(c) for c in wide.columns]
-    item = next(c for c in cols if G._norm_name(c) == "item")
-    lot = next(c for c in cols if G._norm_name(c) == "lot")
+    item = next(c for c in cols if norm_key_text(c) == "item")
+    lot = next(c for c in cols if norm_key_text(c) == "lot")
     keys = ", ".join(ident(c) for c in [item, "DESC", "pack size", lot] if c in cols)
     # U4: the store columns are the ones strictly between pack size (or
     # DESC) and Lot #, by position

@@ -13,8 +13,9 @@ from collections.abc import Callable
 from datetime import date
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
-from etl_jetro_spark.operators.sort import lot_last4_key
+from etl_jetro_spark.operators.sort import lot_last4_key_sql
 from etl_jetro_spark.pipelines import batch as B
 from etl_jetro_spark.sinks.excel_sink import (
     CANONICAL_ORDER,
@@ -27,7 +28,7 @@ from etl_jetro_spark.sources.excel import (
     read_allocation_pricesheet,
     read_single_with_token,
 )
-from etl_jetro_spark.sqltext import date_lit
+from etl_jetro_spark.sqltext import date_lit, ident
 
 
 def _write_text(out_dir: str, name: str, text: str) -> str:
@@ -155,9 +156,8 @@ def run_flips_baby(
     wide = B.clean_baby_flip(baby)
     po = read_latest_po_csv(po_folder)
     carrier = read_carrier_json(token, carrier_dir)
-    table = collect_ordered(
-        B.build_baby_flip(spark, wide, po, carrier), "Store", lot_last4_key("LOT#")
-    )
+    lot_key = F.expr(lot_last4_key_sql(ident("LOT#")))
+    table = collect_ordered(B.build_baby_flip(spark, wide, po, carrier), "Store", lot_key)
     pq = os.path.join(out_dir, "baby_flip_araho.parquet")
     write_parquet_dir(table, pq)
     return {"token": token, "araho": pq, "rows": table.num_rows}

@@ -96,22 +96,19 @@ def _default_driver_mem() -> str:
 
 def get_spark(
     app_name: str = "etl-jetro-spark",
-    master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) the engine SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` locally; on a real
-    cluster the caller passes nothing and spark-submit supplies the master.
+    The master is ``$SPARK_MASTER``, else ``local[$SPARK_GRAFT_CPUS]``;
+    ``shuffle_partitions`` defaults to ``$SPARK_GRAFT_CPUS``.
     A new driver JVM starts with the class-data archive when it can (see
     the module doc); the session's ``etl_jetro.cds`` conf says how it went.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
-    shuffle_partitions = shuffle_partitions or int(
-        os.environ.get("SPARK_SHUFFLE_PARTITIONS", cpus)
-    )
+    master = os.environ.get("SPARK_MASTER", f"local[{cpus}]")
+    shuffle_partitions = shuffle_partitions or int(cpus)
 
     conf = {
         "spark.sql.shuffle.partitions": str(shuffle_partitions),

@@ -17,8 +17,7 @@ from __future__ import annotations
 import re
 from dataclasses import dataclass, field
 
-def strip_dot_zero(s: str) -> str:
-    return re.sub(r"\.0{1,2}$", "", s.strip())
+from etl_jetro_spark.functions.text import strip_dot_zero_text
 
 
 def to_a1(row: int, col: int) -> str:
@@ -68,7 +67,7 @@ def discover_schema(header: list[str]) -> dict[str, object]:
         elif low in ("note", "po count", ""):
             continue
         elif re.fullmatch(r"\d+(\.0)?(\s*/\s*\d+(\.0)?)*", name):
-            pos["stores"][j] = [strip_dot_zero(t) for t in re.split(r"\s*/\s*", name)]
+            pos["stores"][j] = [strip_dot_zero_text(t) for t in re.split(r"\s*/\s*", name)]
     return pos
 
 
@@ -89,12 +88,12 @@ def parse_sections(grid: list[list[str]]) -> list[VendorRow]:
             def cell(j: int | None) -> str:
                 return row[j].strip() if j is not None and j < len(row) else ""
 
-            vendor = strip_dot_zero(cell(schema.get("vendor_num")))
+            vendor = strip_dot_zero_text(cell(schema.get("vendor_num")))
             if not vendor:
                 continue
             stores: dict[str, str] = {}
             for j, store_keys in schema["stores"].items():
-                v = strip_dot_zero(cell(j))
+                v = strip_dot_zero_text(cell(j))
                 if v and v.lower() != "x":
                     for sk in store_keys:
                         stores[sk] = v

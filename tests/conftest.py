@@ -54,6 +54,25 @@ def py4j_commands(monkeypatch, fn) -> int:
     return calls
 
 
+def union_find_components(edges) -> dict:
+    """node → the minimum node id connected to it, by a Python union-find
+    over ``(a, b)`` pairs: the oracle for ``connected_components``."""
+    parent: dict = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in edges:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {n: find(n) for n in parent}
+
+
 def melt(spark, df, ids, var, value, numeric_only=False):
     """``df`` unpivoted on every non-id column (``numeric_only``: every
     numeric-named one) by ``operators.unpivot.stack_sql``: the ``ids``

@@ -5,25 +5,23 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from etl_jetro_spark.functions.dates import default_edd, next_mwf, reformat_date_tolerant
-from etl_jetro_spark.functions.hashing import (
-    char_shingles,
-    doc_fingerprint,
-    minhash_signature,
-    simhash_bits,
-    word_shingles,
-)
-from etl_jetro_spark.functions.na import normalize_na
+from etl_jetro_spark.functions.dates import default_edd_sql, next_mwf_sql, reformat_date_tolerant_sql
+from etl_jetro_spark.functions.hashing import doc_fingerprint
+from etl_jetro_spark.functions.na import normalize_na_sql
 from etl_jetro_spark.functions.text import (
-    extract_emails,
-    first_int,
-    item7,
+    extract_emails_sql,
+    first_int_sql,
+    item7_sql,
     money2dp_sql,
-    norm_key,
-    norm_ws,
-    parse_money,
-    split_first_dash,
-    strip_dot_zero,
+    norm_key_sql,
+    norm_key_text,
+    norm_ws_sql,
+    parse_money_sql,
+    split_first_dash_sql,
+    strip_dot_zero_sql,
+    strip_dot_zero_text,
+    strip_hidden_sql,
+    strip_hidden_text,
 )
 
 
@@ -33,25 +31,35 @@ def one(spark, col_expr, *rows_in, schema="v string"):
 
 
 def test_strip_dot_zero(spark):
-    got = one(spark, strip_dot_zero("v"), "14.0", "14.00", "14.50", "14", "x.0")
+    got = one(spark, F.expr(strip_dot_zero_sql("v")), "14.0", "14.00", "14.50", "14", "x.0")
     assert got == ["14", "14", "14.50", "14", "x"]
 
 
 def test_norm_ws_and_key(spark):
-    got = one(spark, norm_ws("v"), "  a \t b​  c ")
+    got = one(spark, F.expr(norm_ws_sql("v")), "  a \t b​  c ")
     assert got == ["a b c"]
-    got = one(spark, norm_key("v"), " Lot #  7 ")
+    got = one(spark, F.expr(norm_key_sql("v")), " Lot #  7 ")
     assert got == ["lot7"]
     # NBSP and zero-width characters are stripped, not kept as spaces
     messy = "a\xa0\xa0b #1\u200b"
-    assert one(spark, norm_ws("v"), messy) == ["ab #1"]
-    assert one(spark, norm_key("v"), messy) == ["ab1"]
+    assert one(spark, F.expr(norm_ws_sql("v")), messy) == ["ab #1"]
+    assert one(spark, F.expr(norm_key_sql("v")), messy) == ["ab1"]
+
+
+def test_text_rules_match_their_renderers(spark):
+    """The driver's Python copies of the ``.0`` strip, the hidden-character
+    strip and the key normalization give what their SQL renderers give."""
+    vals = ["14.0", "14.00", "14.50", "x.0", "1.000", "a\u200bb\ufeff\xa0c"]
+    assert [strip_dot_zero_text(v) for v in vals] == one(spark, F.expr(strip_dot_zero_sql("v")), *vals)
+    assert [strip_hidden_text(v) for v in vals] == one(spark, F.expr(strip_hidden_sql("v")), *vals)
+    keys = [" Lot #  7 ", "Item#", "ITEM\tNo", "a\xa0b"]
+    assert [norm_key_text(k) for k in keys] == one(spark, F.expr(norm_key_sql("v")), *keys)
 
 
 def test_parse_money(spark):
     got = one(
         spark,
-        parse_money("v"),
+        F.expr(parse_money_sql("v")),
         "$1,234.50",
         "(123.4)",
         "123-",
@@ -63,29 +71,29 @@ def test_parse_money(spark):
 
 
 def test_first_int(spark):
-    got = one(spark, first_int("v"), "498-68594 39024", "no digits", "77x88")
+    got = one(spark, F.expr(first_int_sql("v")), "498-68594 39024", "no digits", "77x88")
     assert got == [498, None, 77]
 
 
 def test_item7(spark):
-    got = one(spark, item7("v"), "12345", "990033.0", "ab-1-2", "", None)
+    got = one(spark, F.expr(item7_sql("v")), "12345", "990033.0", "ab-1-2", "", None)
     assert got == ["0012345", "0990033", "0000012", None, None]
 
 
 def test_item7_never_truncates(spark):
     # zfill semantics: 8+ digit codes pass through whole (Spark's bare
     # lpad would truncate '12345678' to '1234567')
-    got = one(spark, item7("v"), "12345678", "123456789012", "1234567")
+    got = one(spark, F.expr(item7_sql("v")), "12345678", "123456789012", "1234567")
     assert got == ["12345678", "123456789012", "1234567"]
 
 
 def test_split_first_dash(spark):
-    got = one(spark, split_first_dash("v"), "114-28937", "402–20721", "458—41774-x")
+    got = one(spark, F.expr(split_first_dash_sql("v")), "114-28937", "402–20721", "458—41774-x")
     assert got == [["114", "28937"], ["402", "20721"], ["458", "41774-x"]]
 
 
 def test_normalize_na(spark):
-    got = one(spark, normalize_na("v"), "NA", " n/a ", "nah", "value", "", "0")
+    got = one(spark, F.expr(normalize_na_sql("v")), "NA", " n/a ", "nah", "value", "", "0")
     assert got == [None, None, None, "value", None, "0"]
 
 
@@ -98,7 +106,7 @@ def test_money2dp(spark):
 def test_extract_emails(spark):
     got = one(
         spark,
-        extract_emails("v"),
+        F.expr(extract_emails_sql("v")),
         "mail A@x.com; b@y.org, a@X.COM not-an-email@ c@z.io",
     )
     assert got == [["A@x.com", "b@y.org", "c@z.io"]]
@@ -106,14 +114,14 @@ def test_extract_emails(spark):
 
 def test_default_edd(spark):
     # 2026-08-13 is a Thursday -> +2 = Saturday -> roll to Monday 2026-08-17
-    got = one(spark, default_edd("v"), "2026-08-13", "2026-08-10")
+    got = one(spark, F.expr(default_edd_sql("v")), "2026-08-13", "2026-08-10")
     assert [str(g) for g in got] == ["2026-08-17", "2026-08-12"]
 
 
 def test_next_mwf(spark):
     # Mon->Wed, Tue->Wed, Wed->Fri, Thu->Fri, Fri->Mon, Sat->Mon, Sun->Mon
     days = ["2026-08-10", "2026-08-11", "2026-08-12", "2026-08-13", "2026-08-14", "2026-08-15", "2026-08-16"]
-    got = one(spark, next_mwf("v"), *days)
+    got = one(spark, F.expr(next_mwf_sql("v")), *days)
     assert [str(g) for g in got] == [
         "2026-08-12", "2026-08-12", "2026-08-14", "2026-08-14",
         "2026-08-17", "2026-08-17", "2026-08-17",
@@ -121,39 +129,13 @@ def test_next_mwf(spark):
 
 
 def test_reformat_date_tolerant(spark):
-    got = one(spark, reformat_date_tolerant("v"), "9/5/2025", "2025-09-05", "soon")
+    got = one(spark, F.expr(reformat_date_tolerant_sql("v")), "9/5/2025", "2025-09-05", "soon")
     assert got == ["09/05/25", "09/05/25", "soon"]
 
 
-def test_char_shingles_and_fingerprint(spark):
-    got = one(spark, char_shingles("v", 4), "Ab cd!", "ab")
-    assert got[0] == ["ab c", "b cd"]
-    assert got[1] == []
+def test_doc_fingerprint_normalizes_text(spark):
     fp = one(spark, doc_fingerprint("v"), "Hello,  World", "hello world")
     assert fp[0] == fp[1]
-
-
-def test_minhash_identical_docs_match(spark):
-    sig = minhash_signature(word_shingles("v", 2), num_hashes=8)
-    got = one(spark, sig, "the quick brown fox jumps", "the quick brown fox jumps", "totally different text here")
-    assert got[0] == got[1] != got[2]
-    assert len(got[0]) == 8
-
-
-def test_simhash_near_dup_closer_than_random(spark):
-    df = spark.createDataFrame(
-        [
-            ("a", "the quick brown fox jumps over the lazy dog again and again",),
-            ("b", "the quick brown fox jumps over the lazy cat again and again",),
-            ("c", "completely unrelated content about spark query optimizers",),
-        ],
-        "id string, v string",
-    )
-    sh = df.select("id", simhash_bits(word_shingles("v", 2)).alias("s"))
-    vals = {r["id"]: r["s"] for r in sh.collect()}
-    assert all(len(v) == 64 for v in vals.values())
-    d = lambda x, y: sum(1 for a, b in zip(vals[x], vals[y]) if a != b)
-    assert d("a", "b") < d("a", "c")
 
 
 def test_stopword_regex_escapes_metacharacters():

@@ -1,9 +1,10 @@
 """Every package module is imported, at some depth, from an entry point,
-and the supplier path imports none of the query catalog.
+every public function and class is named outside the tests, and the
+supplier path imports none of the query catalog.
 
-A module that only its own tests import is code nothing runs. The walk is
-static (stdlib ``ast``, no Spark): it follows ``import`` and
-``from … import`` statements anywhere in a file, including function
+A module or function that only its own tests use is code nothing runs.
+The walks are static (stdlib ``ast``, no Spark): they follow ``import``
+and ``from … import`` statements anywhere in a file, including function
 bodies, because the query catalog imports operators lazily.
 """
 
@@ -17,6 +18,10 @@ PKG = "etl_jetro_spark"
 
 # besides ``etl_jetro_spark/__main__.py``
 ENTRY_POINTS = [ROOT / "__spark_entry__.py", *sorted((ROOT / "perfbench").glob("*.py"))]
+
+# Public names of the package that only a run-time lookup reaches, each
+# with its reason. A catalog query needs no entry: ``@query`` registers it.
+DYNAMIC_NAMES: dict[str, str] = {}
 
 def _package_modules() -> dict[str, Path]:
     mods = {}
@@ -120,6 +125,49 @@ def test_every_package_module_is_reached():
     reached = _reached(mods)
     unreached = sorted(set(mods) - reached)
     assert not unreached, f"no entry point imports these modules: {unreached}"
+
+
+def _names_used(tree: ast.AST) -> set[str]:
+    """Every name a file reads, reads as an attribute, or imports."""
+    used = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name):
+            used.add(node.id)
+        elif isinstance(node, ast.Attribute):
+            used.add(node.attr)
+        elif isinstance(node, ast.alias):
+            used.add(node.name.rpartition(".")[2])
+    return used
+
+
+def _registered(node: ast.AST) -> bool:
+    """A catalog query: its ``@query(...)`` decorator registers it."""
+    return any(
+        isinstance(d, ast.Call) and isinstance(d.func, ast.Name) and d.func.id == "query"
+        for d in getattr(node, "decorator_list", [])
+    )
+
+
+def test_every_public_function_is_reached():
+    """Each public top-level function or class of the package is named in
+    the package, ``perfbench/``, ``tools/`` or ``__spark_entry__.py``;
+    one that only tests name is test code kept in the package."""
+    files = [*_package_modules().values(), *ENTRY_POINTS, *sorted((ROOT / "tools").glob("*.py"))]
+    defined: dict[str, str] = {}
+    used: set[str] = set()
+    for path in files:
+        tree = ast.parse(path.read_text(), str(path))
+        used |= _names_used(tree)
+        if PKG in path.relative_to(ROOT).parts:
+            for node in tree.body:
+                public = isinstance(node, (ast.FunctionDef, ast.ClassDef)) and not node.name.startswith("_")
+                if public and not _registered(node):
+                    defined[node.name] = f"{path.relative_to(ROOT)}:{node.lineno}"
+    unreached = sorted(
+        f"{where} {name}" for name, where in defined.items()
+        if name not in used and name not in DYNAMIC_NAMES
+    )
+    assert not unreached, f"only tests name these: {unreached}"
 
 
 def test_supplier_path_reaches_only_its_modules():

@@ -1,4 +1,4 @@
-"""Tests for snapshot reconciliation (table/schema diff)."""
+"""Tests for snapshot reconciliation (table diff)."""
 
 from __future__ import annotations
 
@@ -6,7 +6,6 @@ import pyspark.sql.functions as F
 
 from etl_jetro_spark.operators.reconcile import (
     diff_summary,
-    schema_diff,
     table_diff,
 )
 
@@ -50,13 +49,3 @@ def test_table_diff_compare_cols_subset(spark):
     got = table_diff(a, b, ["k"], compare_cols=["s"]).collect()
     assert got[0].diff_status == "unchanged"  # v excluded from comparison
 
-
-def test_schema_diff_detects_drift(spark):
-    a = spark.createDataFrame([(1, "x", 1.0)], "k INT, s STRING, v DOUBLE")
-    b = spark.createDataFrame([(1, 2, True)], "k INT, v INT, extra BOOLEAN")
-    drift = schema_diff(a, b)
-    by_col = {d["column"]: d for d in drift}
-    assert by_col["extra"]["drift"] == "added"
-    assert by_col["s"]["drift"] == "removed"
-    assert by_col["v"]["drift"] == "type_changed"
-    assert by_col["v"]["type"] == "double->int"

@@ -59,3 +59,16 @@ print(json.dumps({{"alive": [r() is not None for r in old], "rows": rows}}))
     assert p.returncode == 0, p.stderr[-2000:]
     got = json.loads(p.stdout.strip().splitlines()[-1])
     assert got == {"alive": [False, False], "rows": 5}
+
+
+def test_catalog_queries_leave_no_views(spark, sf_dir):
+    """q98–q100 bind their tables for one statement only: running them
+    leaves the session catalog as it was, with no view named after a table."""
+    from etl_jetro_spark.plans.queries import QUERIES
+
+    before = spark.catalog.listTables()
+    for name in ("q98_small_qty_revenue", "q99_hierarchy_rollup", "q100_waiting_suppliers"):
+        QUERIES[name](spark, sf_dir).collect()
+    after = spark.catalog.listTables()
+    assert after == before
+    assert not {"lineitem", "part", "supplier"} & {t.name for t in after}

@@ -21,13 +21,40 @@ from etl_jetro_spark.operators.profile import (
 )
 from etl_jetro_spark.operators.timeseries import (
     cohort_retention,
-    funnel,
     funnel_df,
     gap_fill_linear,
     gap_fill_locf,
     time_spine,
     value_histogram,
 )
+
+
+def funnel(events, user_col: str, ts_col: str, type_col: str, steps: list[str]):
+    """Ordered funnel computed stage by stage with one count per step:
+    for each step i, the users who performed steps[0..i] in strict
+    timestamp order (each step strictly after the previous one's earliest
+    qualifying time) — the oracle for the one-plan ``funnel_df``."""
+    u, t = F.col(user_col), F.col(ts_col)
+    frontier = (
+        events.filter(F.col(type_col) == steps[0])
+        .groupBy(u.alias("_u"))
+        .agg(F.min(t).alias("_t"))
+    )
+    counts = [frontier.count()]
+    for step in steps[1:]:
+        frontier = (
+            events.filter(F.col(type_col) == step)
+            .select(u.alias("_u"), t.alias("_ts"))
+            .join(frontier, "_u")
+            .filter(F.col("_ts") > F.col("_t"))
+            .groupBy("_u")
+            .agg(F.min("_ts").alias("_t"))
+        )
+        counts.append(frontier.count())
+    return events.sparkSession.createDataFrame(
+        [(i + 1, s, int(n)) for i, (s, n) in enumerate(zip(steps, counts))],
+        "step INT, event_type STRING, n_users BIGINT",
+    )
 
 
 # ---------------------------------------------------------------- timeseries
