@@ -4,16 +4,13 @@ Row-ordered outputs are not Spark sorts. Their post-agg tables are small
 by construction, are collected once and are ordered on the driver by
 ``sinks.excel_sink.collect_ordered``: the canonical sheet by its columns,
 the baby-flip table by :func:`lot_last4_key_sql` and the DLPM price rows by
-W1's keys, each key computed in the table's plan.
-:func:`numeric_first_order` is W1 as a Python sort key, the driver-side
-twin of :func:`numeric_first_key_sql` that the ADPO,X renderer orders its
-branch groups with. The key helpers are SQL-text renderers, as in
-``functions/text.py``.
+W1's keys, each key computed in the table's plan. The ADPO,X renderer
+orders its integer Branch groups in the same W1 order with an Arrow sort
+(``sinks.macro.render_adpo_x``). The key helpers are SQL-text renderers,
+as in ``functions/text.py``.
 """
 
 from __future__ import annotations
-
-import math
 
 from etl_jetro_spark.sqltext import string_lit
 
@@ -30,23 +27,10 @@ def numeric_first_key_sql(x: str) -> str:
 def numeric_first_sort_keys(x: str) -> dict[str, str]:
     """W1's leading sort keys as named SQL texts over ``x``: ascending
     with NULLs first (``collect_ordered``), then ``x`` itself and any
-    tie-breakers, they order rows like ``numeric_first_order``."""
+    tie-breakers, they order rows like Spark's
+    ``orderBy(numeric_first_key_sql(x) ASC NULLS LAST, x, …)``."""
     key = numeric_first_key_sql(x)
     return {"key_null": f"{key} IS NULL", "key_nan": f"isnan({key})", "key": key}
-
-
-def numeric_first_order(key: float | None, text: str | None, item: str | None) -> tuple:
-    """W1 on the driver: a Python sort key that orders rows exactly like
-    Spark's ``orderBy(numeric_first_key_sql(c) ASC NULLS LAST, c, item)``,
-    given each row's ``numeric_first_key_sql`` value ``key``. NULL keys sort
-    last and NaN above every number; NULL ``c``/``item`` sort first (Spark's
-    ascending default)."""
-    nan = key is not None and math.isnan(key)
-    return (
-        key is None, nan, 0.0 if key is None or nan else key,
-        text is not None, text or "",
-        item is not None, item or "",
-    )
 
 
 def lot_last4_key_sql(x: str) -> str:

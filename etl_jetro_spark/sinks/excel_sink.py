@@ -10,14 +10,14 @@ The canonical table is small by construction (stores × items), so a run
 executes its plan once: :func:`collect_ordered` collects it as one Arrow
 table and orders it on the driver, and every artifact is written from that
 table — the Parquet directory (pyarrow), the workbook (the engine's native
-OOXML writer, ``sources/xlsx.py``, no optional dependencies) and the
-keystroke macros (``sinks/macro.py``). The Flips baby table and the DLPM
+OOXML writer, ``sources/xlsx.py``, no optional dependencies, which renders
+the sheet from the table's columns) and the keystroke macros
+(``sinks/macro.py``). The Flips baby table and the DLPM
 price table are ordered the same way, by their own keys.
 """
 
 from __future__ import annotations
 
-import datetime
 import json
 import os
 import shutil
@@ -26,7 +26,7 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame
 
-from etl_jetro_spark.sources.xlsx import write_xlsx
+from etl_jetro_spark.sources.xlsx import sheet_xml, write_xlsx
 
 AUX_SHEETS = ("ANOMALY", "STORE CLUSTER")
 CANONICAL_ORDER = ("Branch", "Item", "Distro Size")
@@ -65,33 +65,19 @@ def write_parquet_dir(table: pa.Table, path: str) -> None:
     pq.write_table(table, os.path.join(path, "part-00000.parquet"))
 
 
-def _sheet_rows(columns: list[str], rows) -> list[list[object]]:
-    """Header + data rows for the workbook render: dates formatted
-    m/d/yyyy (the reference's K1 cell format), NaN→blank."""
-    out = [list(columns)]
-    for r in rows:
-        out.append([
-            f"{v.month}/{v.day}/{v.year}"
-            if isinstance(v, (datetime.date, datetime.datetime)) else v
-            for v in r
-        ])
-    return out
-
-
 def write_canonical(table: pa.Table, out_dir: str, name: str = "order_sheet") -> dict:
     """K1: Parquet + the reference's workbook — sheet ``Scripting`` plus
     empty ``ANOMALY``/``STORE CLUSTER`` (247/tools/allocation_tool.py:168-207).
 
     ``table`` is the collected, ordered canonical table
     (:func:`collect_ordered`); both files are written from it with no
-    Spark job. Returns a manifest {parquet: path, xlsx: path, rows: n}.
+    Spark job, the sheet column-wise (``sources.xlsx.sheet_xml``; dates
+    as m/d/yyyy text, the reference's K1 cell format). Returns a manifest
+    {parquet: path, xlsx: path, rows: n}.
     """
     pq_path = os.path.join(out_dir, f"{name}.parquet")
     write_parquet_dir(table, pq_path)
     xlsx_path = os.path.join(out_dir, f"{name}.xlsx")
-    rows = zip(*(col.to_pylist() for col in table.columns))
-    sheets = {"Scripting": _sheet_rows(table.column_names, rows)}
-    for s in AUX_SHEETS:
-        sheets[s] = []
-    write_xlsx(xlsx_path, sheets)
+    empty = sheet_xml(pa.table({}))
+    write_xlsx(xlsx_path, {"Scripting": sheet_xml(table), **dict.fromkeys(AUX_SHEETS, empty)})
     return {"parquet": pq_path, "xlsx": xlsx_path, "rows": table.num_rows}

@@ -12,8 +12,10 @@ inputs are small by construction (stores × items, not fact volume), so
 each is executed once and ordered on the driver: ADPO,X and ADPO,I render
 from the run's collected canonical Arrow table, and DLPM collects the
 price table, ordered by its W1 keys, through the same
-``sinks.excel_sink.collect_ordered``. Every renderer is one pass over its
-sorted rows.
+``sinks.excel_sink.collect_ordered``. Every renderer works on whole
+columns (``pyarrow.compute``): it computes each row's item block as one
+string column, puts a group's header and trailer, formatted once per group,
+around each run of equal Branch, and joins the text once.
 """
 
 from __future__ import annotations
@@ -22,13 +24,13 @@ import re
 from datetime import date
 from decimal import Decimal
 from itertools import groupby
-from operator import itemgetter
 
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 
 from etl_jetro_spark.functions.text import item7_sql, money2dp_sql
-from etl_jetro_spark.operators.sort import numeric_first_order, numeric_first_sort_keys
+from etl_jetro_spark.operators.sort import numeric_first_sort_keys
 from etl_jetro_spark.sinks.excel_sink import collect_ordered
 from etl_jetro_spark.sqltext import ident
 
@@ -40,9 +42,30 @@ def _mdy2(d: date) -> str:
     return d.strftime("%m/%d/%y")
 
 
-def _item7(v: int | None) -> str | None:
-    """``functions.text.item7`` over the canonical (long) Item column."""
-    return None if v is None else str(abs(v)).zfill(7)
+def _int_text(col: pa.ChunkedArray | pa.Array, null: str) -> pa.ChunkedArray:
+    """Each value of an integer column as text (``str``), ``null`` where
+    it is null."""
+    if not pa.types.is_integer(col.type):
+        raise TypeError(f"expected an integer column, got {col.type}")
+    return pc.fill_null(pc.cast(col, pa.string()), null)
+
+
+def _item7(item: pa.ChunkedArray) -> pa.ChunkedArray:
+    """``functions.text.item7`` over the canonical (long) Item column: the
+    absolute value's digits, zero-padded to 7 (8+ digits unchanged);
+    NULL stays NULL."""
+    digits = pc.utf8_ltrim(pc.cast(item, pa.string()), "-")
+    return pc.utf8_lpad(digits, 7, "0")
+
+
+def _runs(values: list) -> list[tuple[object, int, int]]:
+    """(value, start, stop) of each run of equal consecutive values."""
+    out, start = [], 0
+    for v, group in groupby(values):
+        stop = start + sum(1 for _ in group)
+        out.append((v, start, stop))
+        start = stop
+    return out
 
 
 def _num_text(v: object) -> str | None:
@@ -105,22 +128,28 @@ def render_dlpm(
         price_long.selectExpr(*[f"{e} AS {ident(name)}" for name, e in cols.items()]),
         *keys, "store", "item",
     )
-    date_text = _mdy2(run_date)
-    out: list[str] = []
-    for store, item, vendor, cost in zip(
-        *(table.column(c).to_pylist() for c in ("store", "item", "vendor", "cost"))
-    ):
-        cost = (cost or "0.00").replace(",", "")
-        out += [
-            "Key Tab", f"Type {store}-{item}", "Key Tab", "Key Delete",
-            "Type H", "Key Tab", "Type A", "Key Enter", f"Type {date_text}",
-            *["Key Tab"] * 3, f"Type {initials}",
-            *["Key Tab"] * 4, f"Type {vendor}",
-            *["Key Tab"] * 5, f"Type {cost}",
-            "Key Enter", "Type n", *["Key Enter"] * 6,
-        ]
     name = f"{run_date.strftime('%m-%d-%y')} 247DLPM.txt"
-    return name, "\n".join(out)
+    return name, _dlpm_text(table, initials, run_date)
+
+
+def _dlpm_text(table: pa.Table, initials: str, run_date: date) -> str:
+    """DLPM's blocks over the ordered price table (string columns store,
+    item, vendor, cost), one string column of blocks joined once. A NULL
+    value types ``None``; a NULL or empty cost types 0.00, commas
+    dropped."""
+    store, item, vendor = (pc.fill_null(table.column(c), "None") for c in ("store", "item", "vendor"))
+    cost = table.column("cost")
+    cost = pc.replace_substring(
+        pc.if_else(pc.fill_null(pc.equal(cost, ""), True), "0.00", cost), ",", ""
+    )
+    tabs = lambda n: "\nKey Tab" * n  # noqa: E731
+    blocks = pc.binary_join_element_wise(
+        "Key Tab\nType ", store, "-", item,
+        f"\nKey Tab\nKey Delete\nType H\nKey Tab\nType A\nKey Enter\nType {_mdy2(run_date)}"
+        f"{tabs(3)}\nType {initials}{tabs(4)}\nType ",
+        vendor, f"{tabs(5)}\nType ", cost, "\nKey Enter\nType n" + "\nKey Enter" * 6, "",
+    )
+    return "\n".join(blocks.to_pylist())
 
 
 # --------------------------------------------------------------------------
@@ -150,55 +179,63 @@ def render_adpo_x(canonical: pa.Table, run_date: date) -> tuple[str, str]:
     header, 10-line item block, freight trailer with EDD, and the
     clipboard block appending cut-PO CSVs.
 
-    ``canonical`` is the run's collected canonical table. Supplier and
-    buyer come from the table itself (first row), like the reference.
-    Returns (filename '{iso}_ADPO_X_Vendor{supplier}.txt', text).
+    ``canonical`` is the run's collected canonical table. Rows are
+    reordered by W1 (``operators.sort.numeric_first_sort_keys``'s order:
+    Branch by value, NULL last, then the 7-digit item text, NULL first;
+    ties keep the table's order). Supplier and buyer come from the table
+    itself (first row), like the reference. A run of NULL Branch gets a
+    ``Type None`` header and no trailer. Returns (filename
+    '{iso}_ADPO_X_Vendor{supplier}.txt', text).
     """
-    cols = ("Branch", "Item", "Distro Size", "Expected Delivery Date",
-            "Supplier On Record", "WW Buyer")
-    rows = []
-    for b, i, qty, edd, supplier, buyer in zip(*(canonical.column(c).to_pylist() for c in cols)):
-        branch, item = (None if b is None else str(b)), _item7(i)
-        key = numeric_first_order(None if b is None else float(b), branch, item)
-        rows.append((key, branch, item, qty, edd and _mdy2(edd), _num_text(supplier), buyer))
-    if not rows:
+    if canonical.num_rows == 0:
         raise ValueError("canonical output is empty")
-    rows.sort(key=itemgetter(0))
-    first_supplier, first_buyer = rows[0][5], rows[0][6]
+    item7 = _item7(canonical.column("Item"))
+    order = pc.sort_indices(
+        pa.table({"b": canonical.column("Branch"), "v": pc.is_valid(item7), "i": item7}),
+        sort_keys=[("b", "ascending"), ("v", "ascending"), ("i", "ascending")],
+        null_placement="at_end",
+    )
+    branch = canonical.column("Branch").take(order)
+    edd = canonical.column("Expected Delivery Date").take(order)
+    first = canonical.take(order[:1]).to_pylist()[0]
+    first_supplier = _num_text(first["Supplier On Record"])
     supplier = "".join(ch for ch in first_supplier.removesuffix(".0") if ch.isdigit()) or first_supplier
-    buyer = (first_buyer or "P20").strip() or "P20"
+    buyer = (first["WW Buyer"] or "P20").strip() or "P20"
 
-    lines: list[str] = []
-    current = group_edd = None
-    for _key, branch, item, qty, edd, _s, _b in rows:
-        if branch != current:
-            if current is not None:
-                lines += _group_trailer(current, group_edd)
-                lines += _clipboard_block(supplier, buyer, run_date)
-            current, group_edd = branch, edd
-            lines += ["Key tab", f"Type {buyer}", f"Type {branch}", f"Type {supplier}", "Key Enter"]
-        lines += [
-            f"Type  {branch}-{item}", "Key enter", "Key tab", *["Key delete"] * 4,
-            f"Type  {qty if qty is not None else 0}", "Key Enter", "Key PF24",
-        ]
-    if current is not None:
-        lines += _group_trailer(current, group_edd)
-        lines += _clipboard_block(supplier, buyer, run_date)
+    blocks = pc.binary_join_element_wise(
+        "Type  ", _int_text(branch, "None"), "-", pc.fill_null(item7.take(order), "None"),
+        "\nKey enter\nKey tab" + "\nKey delete" * 4 + "\nType  ",
+        _int_text(canonical.column("Distro Size").take(order), "0"),
+        "\nKey Enter\nKey PF24", "",
+    ).to_pylist()
+    clipboard = "\n".join(_clipboard_block(supplier, buyer, run_date))
+    pieces: list[str] = []
+    for k, (b, start, stop) in enumerate(_runs(branch.to_pylist())):
+        if k or b is not None:  # a leading NULL run gets no header
+            pieces.append(f"Key tab\nType {buyer}\nType {b}\nType {supplier}\nKey Enter")
+        pieces += blocks[start:stop]
+        if b is not None:
+            group_edd = edd[start].as_py()
+            pieces += [_group_trailer(b, group_edd and _mdy2(group_edd)), clipboard]
 
-    text = "\n".join(str(ln).replace("\r", "") for ln in lines)
-    text = re.sub(r"[ \t]+(\n)", r"\1", text)
-    text = re.sub(r"\n{2,}", "\n", text)
+    # the reference's cleanup: no CR, no trailing blanks, no empty lines
+    # (each substitution runs only where its pattern can match)
+    text = "\n".join(pieces).replace("\r", "")
+    if " \n" in text or "\t\n" in text:
+        text = re.sub(r"[ \t]+(\n)", r"\1", text)
+    if "\n\n" in text:
+        text = re.sub(r"\n{2,}", "\n", text)
     name = f"{run_date.isoformat()}_ADPO_X_Vendor{supplier}.txt"
     return name, text
 
 
-def _group_trailer(branch: str, edd: str | None) -> list[str]:
+def _group_trailer(branch: object, edd: str | None) -> str:
     """Freight line and EDD entry closing a branch group; ``edd`` is the
     group's first row's."""
-    return [
+    return "\n".join([
         f"Type  {branch}-{FREIGHT_ITEM}", "Key Enter", "Key tab", *["Key delete"] * 4,
         "Type 0", "Key Enter", "Key PF13", "Key Enter", f"Type {edd}", "Key Enter", "Key Enter",
-    ]
+    ])
 
 
 # --------------------------------------------------------------------------
@@ -209,35 +246,35 @@ def render_adpo_i(canonical: pa.Table, run_date: date) -> tuple[str, str]:
     """K5: per-branch blocks with warehouse-addressed items, a freight
     trailer whose terminal choreography varies with FOB presence, and
     per-branch XDCK/FOB value injection. Groups iterate in string-sorted
-    Branch order (reference groupby sort=True on the string column);
-    ``canonical`` is the run's collected canonical table. The warehouse
-    (498), buyer (P20), freight type (W) and XDCK letter (M) are the
-    reference's fixed values. Returns (filename
-    '{iso}_ADPO_I_output.txt', text)."""
-    cols = ("Branch", "Item", "Distro Size", "Expected Delivery Date", "XDCK", "FOB")
-    rows = sorted(
-        (
-            (_num_text(b), _item7(i), _num_text(q), edd and _mdy2(edd),
-             _num_text(x), _num_text(f))
-            for b, i, q, edd, x, f in zip(*(canonical.column(c).to_pylist() for c in cols))
-        ),
-        key=lambda r: (r[0] is not None, r[0] or "", r[1] is not None, r[1] or ""),
+    Branch order (reference groupby sort=True on the string column), items
+    in 7-digit item text order, NULLs first and ties in the table's order;
+    ``canonical`` is the run's collected canonical table. A group's EDD,
+    XDCK and FOB are its first row's. The warehouse (498), buyer (P20),
+    freight type (W) and XDCK letter (M) are the reference's fixed values.
+    Returns (filename '{iso}_ADPO_I_output.txt', text)."""
+    branch = pc.cast(canonical.column("Branch"), pa.string())
+    item7 = _item7(canonical.column("Item"))
+    order = pc.sort_indices(
+        pa.table({"b": branch, "i": item7}),
+        sort_keys=[("b", "ascending"), ("i", "ascending")], null_placement="at_start",
     )
+    branch = branch.take(order)
+    firsts = canonical.select(["Expected Delivery Date", "XDCK", "FOB"]).take(order)
+    blocks = pc.binary_join_element_wise(
+        "\nType 498-", pc.fill_null(item7.take(order), "None"),
+        "\nKey enter\nKey tab" + "\nKey delete" * 4 + "\nType ",
+        _int_text(canonical.column("Distro Size").take(order), "None"),
+        "\nKey Enter\nKey PF24", "",
+    ).to_pylist()
     iso = run_date.isoformat()
-    lines: list[str] = []
-    for _branch, group in groupby(rows, key=itemgetter(0)):
-        group = list(group)
-        branch, _item, _qty, edd, xdck, fob = group[0]
-        edd, xdck, fob = edd or "", _clean_num_str(xdck), _clean_num_str(fob)
-        # outer cycle start, then one block per item
-        lines += ["", "Key tab", "Type P20", f"Type {branch}", "Type 20000", "Key Enter"]
-        for _b, item, qty, *_ in group:
-            lines += [
-                "", f"Type 498-{item}", "Key enter", "Key tab", *["Key delete"] * 4,
-                f"Type {qty}", "Key Enter", "Key PF24",
-            ]
-        # trailer: shared head, FOB-dependent middle, XDCK tail + clipboard
-        lines += [
+    pieces: list[str] = []
+    for b, start, stop in _runs(branch.to_pylist()):
+        edd, xdck, fob = (firsts.column(c)[start].as_py() for c in firsts.column_names)
+        edd = edd and _mdy2(edd) or ""
+        xdck, fob = _clean_num_str(_num_text(xdck)), _clean_num_str(_num_text(fob))
+        pieces.append(f"\nKey tab\nType P20\nType {b}\nType 20000\nKey Enter")
+        pieces += blocks[start:stop]
+        trailer = [
             "", f"Type 498-{FREIGHT_ITEM}", "Key enter", "Key tab", *["Key delete"] * 4,
             "Type 0", "Key Enter", "Key PF13", "Key Enter", "wait 500", "wait 500",
             f"Type {edd}", "Key PF2", "wait 500", "Type M", "key pf2", "wait 1500",
@@ -245,13 +282,13 @@ def render_adpo_i(canonical: pa.Table, run_date: date) -> tuple[str, str]:
             "key tab", "wait 500", "key cursordown", f"Type {edd}", "Key Tab",
         ]
         if fob:
-            lines += [
+            trailer += [
                 *["key delete"] * 4, f"type {fob}", "wait 500", "key tab",
                 "type W", "Key cursordown", "Key tab", "key tab",
             ]
         else:
-            lines += ["key tab", "key tab", "wait 500", "key tab", "Key cursordown", "Key tab"]
-        lines += [
+            trailer += ["key tab", "key tab", "wait 500", "key tab", "Key cursordown", "Key tab"]
+        trailer += [
             "", "key delete", "wait 500", *["key delete"] * 3, f"Type {xdck}", "wait 500",
             "key tab", "type W", "Key tab", "key tab", "wait 500", "key tab",
             "wait 500", "Key cursordown", "wait 500", "Key cursordown", "key tab",
@@ -262,6 +299,7 @@ def render_adpo_i(canonical: pa.Table, run_date: date) -> tuple[str, str]:
             f"FileSpec clipboard,{FAXSHARE_UNC}\\{iso}_P20.csv,append",
             "key EditSaveClipboard",
         ]
+        pieces.append("\n".join(ln.rstrip() for ln in trailer))
 
     name = f"{iso}_ADPO_I_output.txt"
-    return name, "\n".join(ln.rstrip() for ln in lines) + "\n"
+    return name, "\n".join(pieces) + "\n"

@@ -11,9 +11,11 @@ ingest/sink paths run for real:
   active-visible sheet and skips hidden/veryHidden;
   SouthernCross/tools/read_file_tool.py:55-60 errors when the named
   sheet 'IBT FORMAT' is absent).
-- **writer**: inline-string worksheets, optional hidden/veryHidden sheet
-  states and activeTab — enough to exercise every reader behavior in
-  tests and to emit the reference's K1 workbook.
+- **writer**: the workbook skeleton (:func:`write_xlsx`: sheets in tab
+  order, optional hidden/veryHidden states and activeTab) around
+  worksheets that :func:`sheet_xml` renders column-wise from an Arrow
+  table (inline strings, numbers, booleans, m/d/yyyy dates) — the
+  reference's K1 workbook.
 
 Only OOXML workbooks (.xlsx/.xlsm) are read: a legacy binary .xls or a
 truncated file is a ``ValueError`` naming the path.
@@ -31,6 +33,8 @@ from xml.etree import ElementTree as ET
 from xml.sax.saxutils import escape
 
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 
 _NS = {
     "m": "http://schemas.openxmlformats.org/spreadsheetml/2006/main",
@@ -185,41 +189,98 @@ def read_xlsx_grid(path: str, sheet: str | None = None) -> pd.DataFrame:
 # writer
 # --------------------------------------------------------------------------
 
-def _sheet_xml(rows: list[list[object]]) -> str:
-    parts = [
-        '<?xml version="1.0" encoding="UTF-8" standalone="yes"?>',
-        f'<worksheet xmlns="{_NS["m"]}"><sheetData>',
-    ]
-    letters = [col_letters(ci) for ci in range(max(map(len, rows), default=0))]
-    for ri, row in enumerate(rows):
-        cells = []
-        for ci, v in enumerate(row):
-            if v is None or (isinstance(v, float) and v != v):
+_SHEET_HEAD = (
+    '<?xml version="1.0" encoding="UTF-8" standalone="yes"?>'
+    f'<worksheet xmlns="{_NS["m"]}"><sheetData>'
+).encode()
+_SHEET_TAIL = b"</sheetData></worksheet>"
+_INLINE = ' t="inlineStr"><is><t xml:space="preserve">', "</t></is></c>"
+_NUMBER = "><v>", "</v></c>"
+_BOOL = ' t="b"><v>', "</v></c>"
+
+
+def _escaped(col: pa.ChunkedArray) -> pa.ChunkedArray:
+    """XML text of each string: ``&``, ``<`` and ``>`` escaped."""
+    for old, new in (("&", "&amp;"), ("<", "&lt;"), (">", "&gt;")):
+        col = pc.replace_substring(col, old, new)
+    return col
+
+
+def _cell_text(col: pa.ChunkedArray) -> tuple[tuple[str, str], pa.ChunkedArray | pa.Array]:
+    """The cell form of a column (its ``<c>`` attributes and value tags)
+    and each value's text, null where the cell is blank."""
+    t = col.type
+    if pa.types.is_boolean(t):
+        return _BOOL, pc.if_else(col, "1", "0")
+    if pa.types.is_integer(t):
+        return _NUMBER, pc.cast(col, pa.string())
+    if pa.types.is_floating(t):  # Python's repr, the shortest round-trip text
+        values = pc.fill_null(col, float("nan")).to_numpy().tolist()
+        return _NUMBER, pa.array([None if v != v else repr(v) for v in values], pa.string())
+    if pa.types.is_string(t) or pa.types.is_large_string(t):
+        return _INLINE, _escaped(col)
+    if pa.types.is_date(t) or pa.types.is_timestamp(t):  # m/d/yyyy, the K1 format
+        parts = (pc.cast(f(col), pa.string()) for f in (pc.month, pc.day, pc.year))
+        return _INLINE, pc.binary_join_element_wise(*parts, "/")
+    raise TypeError(f"no worksheet cell form for a {t} column")
+
+
+def _joined(arr: pa.ChunkedArray | pa.Array) -> bytes:
+    """The values of a string array, back to back."""
+    chunks = arr.chunks if isinstance(arr, pa.ChunkedArray) else [arr]
+    out = []
+    for c in chunks:
+        if len(c):
+            offsets = pa.Array.from_buffers(
+                pa.int32(), len(c) + 1, [None, c.buffers()[1]], offset=c.offset
+            )
+            lo, hi = offsets[0].as_py(), offsets[-1].as_py()
+            out.append(c.buffers()[2].to_pybytes()[lo:hi])
+    return b"".join(out)
+
+
+def sheet_xml(table: pa.Table) -> bytes:
+    """Worksheet XML of ``table``: a header row of its column names, then
+    a row per table row. Integers and floats are numbers (a float as its
+    Python ``repr``; NaN blank), booleans booleans, strings inline strings
+    and dates inline m/d/yyyy text; a null is no cell. Each column's cell
+    texts are rendered column-wise by ``pyarrow.compute`` and each row is
+    one element-wise join of them. A table with no columns is an empty
+    sheet."""
+    if table.num_columns == 0:
+        return _SHEET_HEAD + _SHEET_TAIL
+    letters = [col_letters(ci) for ci in range(table.num_columns)]
+    header = "".join(
+        f'<c r="{letter}1"{_INLINE[0]}{escape(name)}{_INLINE[1]}'
+        for letter, name in zip(letters, table.column_names)
+    )
+    body = b""
+    if table.num_rows:
+        nums = pc.cast(pa.array(range(2, table.num_rows + 2), pa.int64()), pa.string())
+        parts: list = ['<row r="', nums, '">']
+        for letter, col in zip(letters, table.columns):
+            if col.null_count == len(col):
                 continue
-            ref = f"{letters[ci]}{ri + 1}"
-            if isinstance(v, bool):
-                cells.append(f'<c r="{ref}" t="b"><v>{int(v)}</v></c>')
-            elif isinstance(v, (int, float)):
-                cells.append(f'<c r="{ref}"><v>{v!r}</v></c>')
-            else:
-                cells.append(
-                    f'<c r="{ref}" t="inlineStr"><is><t xml:space="preserve">'
-                    f"{escape(str(v))}</t></is></c>"
-                )
-        parts.append(f'<row r="{ri + 1}">{"".join(cells)}</row>')
-    parts.append("</sheetData></worksheet>")
-    return "".join(parts)
+            (attrs, close), text = _cell_text(col)
+            cell = [f'<c r="{letter}', nums, f'"{attrs}', text, close]
+            # a cell with a null text is joined first, so the null drops it whole
+            parts += [pc.binary_join_element_wise(*cell, "")] if text.null_count else cell
+        body = _joined(pc.binary_join_element_wise(*parts, "</row>", "", null_handling="skip"))
+    return b"".join((
+        _SHEET_HEAD, f'<row r="1">{header}</row>'.encode(), body, _SHEET_TAIL
+    ))
 
 
 def write_xlsx(
     path: str,
-    sheets: dict[str, list[list[object]] | pd.DataFrame],
+    sheets: dict[str, bytes],
     states: dict[str, str] | None = None,
     active: int = 0,
 ) -> str:
-    """Write a workbook. ``sheets`` maps name → rows (or positional grid);
-    ``states`` maps name → visible|hidden|veryHidden (default visible);
-    ``active`` is the activeTab index."""
+    """Write a workbook: the package skeleton around each sheet's
+    worksheet XML (:func:`sheet_xml`). ``sheets`` maps name → worksheet
+    XML, in tab order; ``states`` maps name → visible|hidden|veryHidden
+    (default visible); ``active`` is the activeTab index."""
     states = states or {}
     names = list(sheets)
     with zipfile.ZipFile(path, "w", zipfile.ZIP_DEFLATED) as zf:
@@ -276,11 +337,5 @@ def write_xlsx(
             f'<Relationships xmlns="{_NS["rel"]}">{rels}</Relationships>',
         )
         for i, n in enumerate(names):
-            rows = sheets[n]
-            if isinstance(rows, pd.DataFrame):
-                rows = [
-                    [None if (isinstance(v, float) and v != v) else v for v in r]
-                    for r in rows.itertuples(index=False)
-                ]
-            zf.writestr(f"xl/worksheets/sheet{i + 1}.xml", _sheet_xml(rows))
+            zf.writestr(f"xl/worksheets/sheet{i + 1}.xml", sheets[n])
     return path

@@ -6,14 +6,19 @@ double-pick them), fan vendors out to workers, and finalize each to
 ``Sent`` or ``ERROR`` with the missing-PO detail. A tick handles at most a
 few hundred (vendor, PO) pairs, so the transitions are pure Python over the
 ``VendorRow`` list of ``sources.sheet.parse_sections`` — deterministic,
-testable, and runnable without a Spark session.
+testable, and runnable without a Spark session. Like the reference's
+concurrent watchers, every Ready vendor's watch is polled in the same
+rounds: a round lists each watch folder once and hands each watch the
+entries of its own POs (:func:`poll_round`).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterable
+import os
+from collections.abc import Callable, Iterable
 
 from etl_jetro_spark.sources.sheet import VendorRow
+from etl_jetro_spark.streaming import snapshot as S
 
 READY, SENDING, SENT, ERROR = "Ready", "SENDING", "Sent", "ERROR"
 
@@ -54,25 +59,50 @@ def finalize(
     ]
 
 
+def poll_round(
+    watches: list[S.WatchState], watch_dirs: list[str], dest_dir: str
+) -> list[S.WatchState]:
+    """One poll of every watch in ``watches``: each directory of
+    ``watch_dirs`` is listed once (``snapshot.list_dir``), its listing
+    indexed by PO, and ``snapshot.poll_step`` runs for each watch with the
+    entries of its expected POs, in listing order. Every watch counts one
+    poll per directory, as if it had listed the directories itself.
+    Returns the watches still live: some PO pending and the deadline not
+    reached."""
+    for d in watch_dirs:
+        listing = S.list_dir(d)
+        at: dict[str | None, list[int]] = {}
+        for k, (path, _size) in enumerate(listing):
+            at.setdefault(S.po_of(os.path.basename(path)), []).append(k)
+        for st in watches:
+            own = sorted(k for po in st.expected for k in at.get(po, ()))
+            S.poll_step(st, [listing[k] for k in own], dest_dir)
+    return [st for st in watches if st.pending() and st.polls < st.deadline_polls]
+
+
 def orchestrate_tick(
     spark,
     control_grid: list[list[str]],
     watch_dirs: list[str],
     dest_dir: str,
     deadline_polls: int = 600,
-    poll_fn=None,
+    poll_fn: Callable[[list[S.WatchState], str], None] | None = None,
 ) -> dict:
     """One full control-loop tick — the reference's ``main()`` body
     (sheet_bot/main.py:336-395) as a deterministic function:
 
     parse sections → select Ready → lock (Ready→SENDING payload) →
-    watch/settle/move per expected PO → finalize (Sent/ERROR payload).
+    pre-check every Ready row's watch → poll all watches together until
+    each settles or hits its deadline → finalize (Sent/ERROR payload).
 
     ``spark`` is unused (the tick needs no session; pass ``None``).
-    ``poll_fn(state, dest_dir) -> None`` drives the snapshot poller until
-    done/deadline; the default polls ``watch_dirs`` with no sleep (tests
-    and batch replays), so it needs at least one directory: an empty list
+    ``poll_fn(watches, dest_dir) -> None`` is called once with every
+    pre-checked watch and drives them until done/deadline; the default
+    runs :func:`poll_round` over ``watch_dirs`` with no sleep (tests and
+    batch replays), so it needs at least one directory: an empty list
     would never count a poll toward the deadline and raises ValueError.
+    Every row's watch is pre-checked before any poll, so a PO that two
+    rows expect is settled by both rows' watches in the same rounds.
     Returns a manifest with both write-back payloads, the final per-PO
     status and each ERROR row's reason. Every locked row ends Sent or
     ERROR; a row with no expected PO is ERROR.
@@ -82,7 +112,6 @@ def orchestrate_tick(
     # looked up per call so perfbench's attribute wrappers see every call
     from etl_jetro_spark.sinks.notify import status_update_payload
     from etl_jetro_spark.sources.sheet import parse_sections
-    from etl_jetro_spark.streaming import snapshot as S
 
     ready = select_ready(parse_sections(control_grid))
     lock_payload = [
@@ -92,8 +121,8 @@ def orchestrate_tick(
     ]
 
     expected_rows = []
-    status_rows = []
     final = []
+    watches = []
     for r in ready:
         pos = expected_pos_for_vendor(r.stores)
         if not pos:
@@ -102,15 +131,14 @@ def orchestrate_tick(
         expected_rows += [(r.vendor_num, r.status_a1, po) for po in pos]
         st = S.new_watch(pos, deadline_polls=deadline_polls)
         S.precheck_dest(st, dest_dir)
-        if poll_fn is not None:
-            poll_fn(st, dest_dir)
-        else:
-            while st.pending():
-                for d in watch_dirs:
-                    S.poll_step(st, S.list_dir(d), dest_dir)
-                if st.polls >= st.deadline_polls:
-                    break
-        status_rows += [(po, s) for po, s in st.status.items()]
+        watches.append(st)
+    if poll_fn is None:
+        live = [st for st in watches if st.pending()]
+        while live:
+            live = poll_round(live, watch_dirs, dest_dir)
+    else:
+        poll_fn(watches, dest_dir)
+    status_rows = [(po, s) for st in watches for po, s in st.status.items()]
 
     final += finalize(expected_rows, status_rows)
     return {

@@ -7,7 +7,9 @@ sweeping messy-cell space far wider than the fixtures do.
 from __future__ import annotations
 
 import re
+from datetime import date
 
+import pyarrow as pa
 import pyspark.sql.functions as F
 import pytest
 from hypothesis import HealthCheck, example, given, settings
@@ -22,13 +24,13 @@ from etl_jetro_spark.operators.graph import connected_components
 from etl_jetro_spark.operators.joins import map_lookup_sql
 from etl_jetro_spark.operators.sort import (
     numeric_first_key_sql,
-    numeric_first_order,
     numeric_first_sort_keys,
 )
 from etl_jetro_spark.operators.unpivot import _is_numeric_name
 from etl_jetro_spark.sinks.excel_sink import collect_ordered
 from etl_jetro_spark.sqltext import sql_over
 from tests.conftest import melt, union_find_components
+from tests.oracles import numeric_first_order
 
 
 def word_shingles(col: str, n: int):
@@ -241,10 +243,11 @@ grid_cells = st.one_of(
 def test_xlsx_roundtrip_property(tmp_path_factory, rows):
     """write_xlsx → read_xlsx_grid preserves every cell value and type
     (None cells read back as None; ints stay int, floats float)."""
-    from etl_jetro_spark.sources.xlsx import read_xlsx_grid, write_xlsx
+    from etl_jetro_spark.sources.xlsx import read_xlsx_grid
+    from tests.oracles import write_rows_xlsx
 
     p = str(tmp_path_factory.mktemp("xl") / "t.xlsx")
-    write_xlsx(p, {"S": rows})
+    write_rows_xlsx(p, {"S": rows})
     got = read_xlsx_grid(p)
     width = max(len(r) for r in rows)
     for ri, row in enumerate(rows):
@@ -403,10 +406,12 @@ def test_quantize_int8_error_bound(spark, vecs):
         unique=True,
     )
 )
-@settings(max_examples=20, deadline=None)
-def test_morton_key_is_bijective(pairs):
-    """Distinct (x, y) -> distinct Morton codes, and the code decodes
-    back (pure-Python mirror of the generated SQL)."""
+@settings(max_examples=20, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+def test_morton_key_is_bijective(spark, pairs):
+    """``morton_sql`` evaluated by Spark on the pairs, in one query, gives
+    the pure-Python interleaving: distinct (x, y) get distinct codes, and
+    each code decodes back to its pair."""
     from etl_jetro_spark.operators.layout import morton_sql
 
     def py_morton(x, y, bits=10):
@@ -415,10 +420,11 @@ def test_morton_key_is_bijective(pairs):
             out |= ((x >> i) & 1) << (2 * i) | ((y >> i) & 1) << (2 * i + 1)
         return out
 
-    codes = {py_morton(x, y) for x, y in pairs}
-    assert len(codes) == len(pairs)
-    for x, y in pairs:
-        z = py_morton(x, y)
+    df = spark.createDataFrame(pairs, "x long, y long")
+    got = {(r["x"], r["y"]): r["z"] for r in df.selectExpr("x", "y", f"{morton_sql('x', 'y')} AS z").collect()}
+    assert got == {(x, y): py_morton(x, y) for x, y in pairs}
+    assert len(set(got.values())) == len(pairs)
+    for (x, y), z in got.items():
         dx = sum(((z >> (2 * i)) & 1) << i for i in range(10))
         dy = sum(((z >> (2 * i + 1)) & 1) << i for i in range(10))
         assert (dx, dy) == (x, y)
@@ -973,3 +979,139 @@ def test_ivf_two_level_rejects_non_integral_cid(spark):
         ivf_assign_two_level(
             corpus, "vec_id", "embedding", cents, coarse
         )
+
+
+# --------------------------------------------------------------------------
+# column-wise sinks give the bytes of the row-at-a-time renderers
+# --------------------------------------------------------------------------
+
+_EDGE_STRINGS = ["a & b", "<x>", '"q"', "'s'", " edge ", "two\nlines", "naïve 日本", ""]
+_EDGE_DOUBLES = [float("nan"), float("inf"), float("-inf"), -0.0, 1e16, 1e-5, 0.1 + 0.2]
+_SHEET_COLUMNS = {
+    "long": (pa.int64(), st.integers(-(2**63), 2**63 - 1)),
+    "int": (pa.int32(), st.integers(-(2**31), 2**31 - 1)),
+    "double": (pa.float64(), st.one_of(
+        st.floats(),
+        st.sampled_from(_EDGE_DOUBLES),
+    )),
+    "string": (pa.string(), st.one_of(
+        st.text(alphabet=st.one_of(
+            st.sampled_from("&<>\"' \nxé日"), st.characters(blacklist_categories=("Cs",))
+        ), max_size=8),
+        st.sampled_from(_EDGE_STRINGS),
+    )),
+    "date": (pa.date32(), st.dates()),
+    "bool": (pa.bool_(), st.booleans()),
+    "null": (pa.null(), st.none()),
+}
+
+
+@st.composite
+def sheet_tables(draw):
+    n = draw(st.integers(0, 6))
+    kinds = draw(st.lists(st.sampled_from(sorted(_SHEET_COLUMNS)), min_size=1, max_size=6))
+    cols = {}
+    for k, kind in enumerate(kinds):
+        typ, values = _SHEET_COLUMNS[kind]
+        cell = st.none() if draw(st.booleans()) and n else st.one_of(st.none(), values)
+        cols[f"{kind} {k} <&>"] = pa.array(draw(st.lists(cell, min_size=n, max_size=n)), typ)
+    return pa.table(cols)
+
+
+_EDGE_TABLE = pa.table({
+    "Item & <no>": pa.array([114, None, -7, 2**62, None, 0, 1, 2], pa.int64()),
+    "Qty": pa.array([None, 3, -(2**31), 5, 6, 7, 8, 9], pa.int32()),
+    "Cost": pa.array([*_EDGE_DOUBLES, None], pa.float64()),
+    "Note": pa.array([*_EDGE_STRINGS], pa.string()),
+    "EDD": pa.array([date(2026, 1, 9), None, date(1, 1, 1), date(9999, 12, 31), *[None] * 4],
+                    pa.date32()),
+    "Flag": pa.array([True, False, None, True, False, None, True, False], pa.bool_()),
+    "Blank": pa.array([None] * 8, pa.int64()),
+    "Null": pa.array([None] * 8, pa.null()),
+})
+
+
+@settings(max_examples=150, deadline=None)
+@given(sheet_tables())
+@example(_EDGE_TABLE)
+@example(_EDGE_TABLE.slice(0, 0))
+def test_sheet_xml_matches_row_renderer(table):
+    """``sources.xlsx.sheet_xml`` (column-wise) writes the bytes of the
+    row-at-a-time worksheet renderer: int/long with nulls, doubles with
+    NaN, ±inf, -0.0, 1e16, 1e-5 and 0.1+0.2, strings with XML
+    metacharacters, edge spaces, newlines, non-ASCII text and '', dates,
+    bools, all-null columns and zero rows."""
+    from etl_jetro_spark.sources.xlsx import sheet_xml
+    from tests.oracles import table_sheet_xml
+
+    assert sheet_xml(table) == table_sheet_xml(table)
+
+
+_EDDS = (date(2026, 1, 9), date(2026, 1, 12))
+_MONEY = st.one_of(st.none(), st.sampled_from(
+    [float("nan"), 0.0, 1.5, 10.0, 2.25, -2.5, 1e7, 1e-4, 123456789.0]
+))
+
+
+@st.composite
+def canonical_tables(draw):
+    """Canonical tables (``operators.canonical.canonical_sql``'s types)
+    with NULL Branch/Item, 8-digit and negative items, two EDDs in one
+    branch group and NULL or NaN XDCK/FOB."""
+    rows = draw(st.lists(st.tuples(
+        st.one_of(st.none(), st.sampled_from([9, 86, 114, 452, 1000])),
+        st.one_of(st.none(), st.integers(-(10**9), 10**9),
+                  st.sampled_from([12, -12, 12345678, 99999999, -(2**63)])),
+        st.one_of(st.none(), st.integers(0, 500)),
+        st.one_of(st.none(), st.sampled_from(_EDDS)),
+        _MONEY, _MONEY,
+    ), min_size=1, max_size=14))
+    n = len(rows)
+    branch, item, qty, edd, xdck, fob = map(list, zip(*rows))
+    return pa.table({
+        "Branch": pa.array(branch, pa.int32()),
+        "Item": pa.array(item, pa.int64()),
+        "Description": pa.array([""] * n),
+        "Distro Size": pa.array(qty, pa.int64()),
+        "Supplier On Record": pa.array([draw(st.sampled_from([81214, 114544]))] * n, pa.int32()),
+        "Expected Delivery Date": pa.array(edd, pa.date32()),
+        "WW Buyer": pa.array([draw(st.sampled_from(["P2E", " P20 ", "", None]))] * n, pa.string()),
+        "XDCK": pa.array(xdck, pa.float64()),
+        "FOB": pa.array(fob, pa.float64()),
+    })
+
+
+@settings(max_examples=150, deadline=None)
+@given(canonical_tables())
+def test_macros_match_row_renderers(table):
+    """ADPO,X and ADPO,I rendered from the table's columns are byte for
+    byte the row-at-a-time renders: the same W1 / string orders, ties in
+    the table's order, group headers, trailers and cleanup."""
+    from etl_jetro_spark.sinks import macro
+    from tests import oracles
+
+    run_date = date(2026, 8, 13)
+    assert macro.render_adpo_x(table, run_date) == oracles.render_adpo_x(table, run_date)
+    assert macro.render_adpo_i(table, run_date) == oracles.render_adpo_i(table, run_date)
+
+
+_PRICE_TEXT = st.one_of(st.none(), st.sampled_from(["9", "10", "0000012", "81214", "", " 7 "]))
+
+
+@settings(max_examples=80, deadline=None)
+@given(st.lists(st.tuples(
+    _PRICE_TEXT, _PRICE_TEXT, _PRICE_TEXT,
+    st.one_of(st.none(), st.sampled_from(["", "0.00", "1,234.50", "2.50", "-1.00"])),
+), max_size=8))
+def test_dlpm_text_matches_row_renderer(rows):
+    """DLPM's blocks from the price table's columns are the row-at-a-time
+    text: NULL values type None, a NULL or empty cost types 0.00, commas go."""
+    from etl_jetro_spark.sinks.macro import _dlpm_text
+    from tests.oracles import dlpm_text
+
+    cols = list(zip(*rows)) if rows else [()] * 4
+    table = pa.table({
+        name: pa.array(list(c), pa.string()) for name, c in zip(("store", "item", "vendor", "cost"), cols)
+    })
+    run_date = date(2026, 8, 13)
+    assert _dlpm_text(table, "AB", run_date) == dlpm_text(table, "AB", run_date)

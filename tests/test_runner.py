@@ -311,14 +311,14 @@ def _xlsx_drop(drop, xdrop, sheet: str | None) -> None:
     an Excel ``~$`` lock file beside it. Given ``sheet``, the grid goes on
     that tab behind an active cover sheet."""
     from etl_jetro_spark.sources.excel import grid_from_csv
-    from etl_jetro_spark.sources.xlsx import write_xlsx
+    from tests.oracles import write_rows_xlsx
 
     xdrop.mkdir()
     for path in sorted(drop.glob("*.csv")):
         rows = [[_typed_cell(v) for v in r] for r in grid_from_csv(str(path)).values.tolist()]
         sheets = {"Sheet1": rows} if sheet is None else {"Cover": [["see next tab"]], sheet: rows}
         name = f"{path.stem}.xlsx"
-        write_xlsx(str(xdrop / name), sheets, active=0)
+        write_rows_xlsx(str(xdrop / name), sheets, active=0)
         (xdrop / f"~${name}").write_bytes(b"lock")
 
 

@@ -206,10 +206,11 @@ def test_read_po_lines_rules(tmp_path, case):
 # --------------------------------------------------------------------------
 
 def test_xlsx_roundtrip_types(tmp_path):
-    from etl_jetro_spark.sources.xlsx import read_xlsx_grid, write_xlsx
+    from etl_jetro_spark.sources.xlsx import read_xlsx_grid
+    from tests.oracles import write_rows_xlsx
 
     p = str(tmp_path / "t.xlsx")
-    write_xlsx(p, {"S": [["Item#", "Qty", "Note"], [114, 3.5, "a & <b>"], [7, True, None]]})
+    write_rows_xlsx(p, {"S": [["Item#", "Qty", "Note"], [114, 3.5, "a & <b>"], [7, True, None]]})
     g = read_xlsx_grid(p)
     assert list(g.iloc[0]) == ["Item#", "Qty", "Note"]
     assert g.iat[1, 0] == 114 and isinstance(g.iat[1, 0], int)
@@ -233,10 +234,11 @@ def test_xlsx_hidden_sheet_and_active_selection(tmp_path):
     """Reference behaviors (247/tools/read_file_tool.py:83-101): hidden and
     veryHidden sheets are never picked; active tab wins when visible, else
     the first visible sheet."""
-    from etl_jetro_spark.sources.xlsx import read_xlsx_grid, write_xlsx
+    from etl_jetro_spark.sources.xlsx import read_xlsx_grid
+    from tests.oracles import write_rows_xlsx
 
     p = str(tmp_path / "wb.xlsx")
-    write_xlsx(
+    write_rows_xlsx(
         p,
         {"ghost": [["G"]], "front": [["F"]], "back": [["B"]]},
         states={"ghost": "veryHidden"},
@@ -246,7 +248,7 @@ def test_xlsx_hidden_sheet_and_active_selection(tmp_path):
     assert ("ghost", "veryHidden") in _sheet_states(p)
 
     p2 = str(tmp_path / "wb2.xlsx")
-    write_xlsx(
+    write_rows_xlsx(
         p2,
         {"h": [["H"]], "v": [["V"]]},
         states={"h": "hidden"},
@@ -259,17 +261,18 @@ def test_xlsx_named_sheet_ibt_format(tmp_path):
     """SouthernCross reads the fixed tab 'IBT FORMAT' and errors when it is
     absent (reference SouthernCross/tools/read_file_tool.py:55-60)."""
     from etl_jetro_spark.sources.excel import read_single_with_token
-    from etl_jetro_spark.sources.xlsx import read_xlsx_grid, write_xlsx
+    from etl_jetro_spark.sources.xlsx import read_xlsx_grid
+    from tests.oracles import write_rows_xlsx
 
     folder = tmp_path / "sc"
     folder.mkdir()
     p = str(folder / "Southern Cross IBT.xlsx")
-    write_xlsx(p, {"cover": [["junk"]], "IBT FORMAT": [["Item", "449"], ["12", "3"]]})
+    write_rows_xlsx(p, {"cover": [["junk"]], "IBT FORMAT": [["Item", "449"], ["12", "3"]]})
     grid, token = read_single_with_token(str(folder), sheet="IBT FORMAT")
     assert token == "southern cross ibt"
     assert list(grid.iloc[0]) == ["Item", "449"]
     missing = str(folder / "missing.xlsx")
-    write_xlsx(missing, {"only": [["x"]]})
+    write_rows_xlsx(missing, {"only": [["x"]]})
     with pytest.raises(ValueError, match="IBT FORMAT"):
         read_xlsx_grid(missing, sheet="IBT FORMAT")
 
@@ -281,13 +284,13 @@ def test_247_pipeline_through_real_xlsx(spark, tmp_path, sf_dir):
     from etl_jetro_spark.pipelines import batch as B
     from etl_jetro_spark.plans import fixtures as FX
     from etl_jetro_spark.sources.excel import read_allocation_pricesheet
-    from etl_jetro_spark.sources.xlsx import write_xlsx
+    from tests.oracles import write_rows_xlsx
 
     grid = FX.allocation_grid(sf_dir)
     folder = tmp_path / "drop"
     folder.mkdir()
     rows = [list(r) for r in grid.itertuples(index=False)]
-    write_xlsx(
+    write_rows_xlsx(
         str(folder / "Weekly Allocation.xlsx"),
         {"notes": [["ignore me"]], "data": rows},
         states={"notes": "hidden"},
@@ -381,10 +384,11 @@ def test_send_mail_request_payload():
 
 
 def test_xlsx_int_sheet_index_and_quoted_names(tmp_path):
-    from etl_jetro_spark.sources.xlsx import read_xlsx_grid, write_xlsx
+    from etl_jetro_spark.sources.xlsx import read_xlsx_grid
+    from tests.oracles import write_rows_xlsx
 
     p = str(tmp_path / "t.xlsx")
-    write_xlsx(p, {'He said "hi"': [["A"]], "second": [["B"]]})
+    write_rows_xlsx(p, {'He said "hi"': [["A"]], "second": [["B"]]})
     assert read_xlsx_grid(p, sheet="second").iat[0, 0] == "B"
     assert read_xlsx_grid(p, sheet='He said "hi"').iat[0, 0] == "A"
 
@@ -395,7 +399,7 @@ def test_unreadable_workbook_is_an_explicit_error(tmp_path, name):
     .xlsx each fail with a ValueError that names the file and says which
     workbooks are read."""
     from etl_jetro_spark.sources.excel import read_single_with_token
-    from etl_jetro_spark.sources.xlsx import write_xlsx
+    from tests.oracles import write_rows_xlsx
 
     drop = tmp_path / "drop"
     drop.mkdir()
@@ -403,7 +407,7 @@ def test_unreadable_workbook_is_an_explicit_error(tmp_path, name):
     if name.endswith(".xls"):
         path.write_bytes(b"\xd0\xcf\x11\xe0\xa1\xb1\x1a\xe1" + b"\x00" * 504)
     else:
-        write_xlsx(str(tmp_path / "whole.xlsx"), {"S": [["a", 1]]})
+        write_rows_xlsx(str(tmp_path / "whole.xlsx"), {"S": [["a", 1]]})
         path.write_bytes((tmp_path / "whole.xlsx").read_bytes()[:200])
     with pytest.raises(ValueError, match="only OOXML workbooks") as err:
         read_single_with_token(str(drop))

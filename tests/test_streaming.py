@@ -251,7 +251,7 @@ def test_tick_rejects_empty_watch_dirs(tmp_path):
     assert "watch_dirs" in got.get("error", "")
 
     m = orch.orchestrate_tick(
-        None, CONTROL_GRID, [], str(tmp_path), deadline_polls=3, poll_fn=lambda st, d: None
+        None, CONTROL_GRID, [], str(tmp_path), deadline_polls=3, poll_fn=lambda watches, d: None
     )
     assert set(m["errors"]) == {"G2", "E7"}
 
@@ -410,10 +410,11 @@ def test_orchestrate_tick_wall_clock_soak(tmp_path):
     cadence = 0.4
     ticks = []
 
-    def poll_fn(st, dest_dir):
-        while st.pending() and st.polls < st.deadline_polls:
+    def poll_fn(watches, dest_dir):
+        live = [st for st in watches if st.pending()]
+        while live:
             ticks.append(time.time())
-            S.poll_step(st, S.list_dir(str(watch)), dest_dir)
+            live = orch.poll_round(live, [str(watch)], dest_dir)
             time.sleep(cadence)
 
     t0 = time.time()
@@ -440,3 +441,133 @@ def test_orchestrate_tick_wall_clock_soak(tmp_path):
     # exactly-once ERROR in the status map (dict by construction, and the
     # error set is only the never-arrived PO)
     assert [po for po, s in m["po_status"].items() if s == "error"] == ["88102"]
+
+
+def _sequential_tick(grid, watch_dirs, dest_dir, deadline_polls):
+    """The tick as one vendor at a time: pre-check one row's watch, poll
+    it until it settles, then the next row. The oracle of the shared
+    rounds of ``orchestrate_tick``."""
+    from etl_jetro_spark.sinks.notify import status_update_payload
+
+    ready = orch.select_ready(parse_sections(grid))
+    lock = [{"range": r.status_a1, "values": [["SENDING"]]}
+            for r in sorted(ready, key=lambda r: r.status_a1)]
+    expected_rows, status_rows, final = [], [], []
+    for r in ready:
+        pos = orch.expected_pos_for_vendor(r.stores)
+        if not pos:
+            final.append((r.vendor_num, r.status_a1, orch.ERROR, "no expected POs"))
+            continue
+        expected_rows += [(r.vendor_num, r.status_a1, po) for po in pos]
+        st = S.new_watch(pos, deadline_polls=deadline_polls)
+        S.precheck_dest(st, dest_dir)
+        while st.pending():
+            for d in watch_dirs:
+                S.poll_step(st, S.list_dir(d), dest_dir)
+            if st.polls >= st.deadline_polls:
+                break
+        status_rows += list(st.status.items())
+    final += orch.finalize(expected_rows, status_rows)
+    return {
+        "lock": lock,
+        "final": status_update_payload((a1, new) for _, a1, new, _ in final),
+        "po_status": dict(status_rows),
+        "errors": {a1: detail for _, a1, new, detail in final if new == orch.ERROR},
+    }
+
+
+_TICK_HEADER = ["Note", "Vendor #", "Vendor Name", "452/490", "114", "86", "PO count", "Status"]
+
+
+def _tick_case(case, root):
+    """A control grid, its watch dirs and its destination under ``root``,
+    each PDF named ``<vendor>-<store>-<po>.pdf``."""
+    rows = {
+        # 7001 is expected by two vendors; both rows also have a PO of their own
+        "shared_po": [("501", ["7001", "7002", "x"]), ("502", ["7003", "7001", "x"])],
+        # two rows whose POs sit in two different watch dirs
+        "two_dirs": [("511", ["7101", "7102", "x"]), ("512", ["x", "7103", "7104"])],
+        # 7202 was delivered before the tick
+        "pre_delivered": [("521", ["7201", "7202", "x"]), ("522", ["x", "x", "7202"])],
+        # 7302 and 7304 never arrive: their rows poll until the deadline
+        "missing": [("531", ["7301", "7302", "x"]), ("532", ["7303", "x", "7304"])],
+        # a Ready row whose store cells are all 'x'
+        "no_pos": [("541", ["x", "x", "x"]), ("542", ["7401", "x", "x"])],
+    }[case]
+    dirs = [root / "w1", root / "w2"]
+    dest = root / "d"
+    for d in (*dirs, dest):
+        d.mkdir(parents=True)
+    grid = [_TICK_HEADER] + [["", v, f"V{v}", *pos, "", "Ready"] for v, pos in rows]
+    files = {
+        "shared_po": [(0, "501-114-7001"), (0, "501-114-7002"), (0, "502-114-7003")],
+        "two_dirs": [(0, "511-114-7101"), (1, "511-114-7102"), (1, "512-86-7103"),
+                     (0, "512-86-7104")],
+        "pre_delivered": [(0, "521-114-7201")],
+        "missing": [(0, "531-114-7301"), (1, "532-86-7303")],
+        "no_pos": [(1, "542-114-7401")],
+    }[case]
+    for k, name in files:
+        (dirs[k] / f"{name}.pdf").write_bytes(name.encode())
+    if case == "pre_delivered":
+        (dest / "522-86-7202.pdf").write_bytes(b"delivered")
+    return grid, [str(d) for d in dirs], dest
+
+
+@pytest.mark.parametrize("case", ["shared_po", "two_dirs", "pre_delivered", "missing", "no_pos"])
+def test_tick_rounds_match_sequential_tick(case, tmp_path):
+    """Polling every row's watch in shared rounds gives the same lock,
+    final, per-PO status, errors and delivered files as polling the rows
+    one after another. Intended difference: a PO two rows expect used to
+    be delivered by the first row before the second row's pre-check; now
+    both rows' watches see it in the same rounds and the second row's
+    move finds it delivered, so the second row polls where it did not."""
+    def files(dirs, dest):
+        return [sorted(os.listdir(d)) for d in (*dirs, dest)]
+
+    grid, dirs, dest = _tick_case(case, tmp_path / "seq")
+    want = _sequential_tick(grid, dirs, str(dest), deadline_polls=4)
+    want_files = files(dirs, dest)
+    grid, dirs, dest = _tick_case(case, tmp_path / "rounds")
+    got = orch.orchestrate_tick(None, grid, dirs, str(dest), deadline_polls=4)
+    assert got == want
+    assert files(dirs, dest) == want_files
+
+
+def test_tick_lists_each_dir_once_per_round(tmp_path, monkeypatch):
+    """A round lists each watch dir once for all rows: V rows over D dirs
+    cost D × rounds listings, not V × D × polls. Each row still counts a
+    poll per dir per round."""
+    vendors, dirs = 5, [tmp_path / "w1", tmp_path / "w2"]
+    for d in dirs:
+        d.mkdir()
+    grid = [["Note", "Vendor #", "Vendor Name", "114", "86", "PO count", "Status"]]
+    for v in range(vendors):
+        po_a, po_b = f"80{v}1", f"80{v}2"
+        grid.append(["", f"60{v}", f"V{v}", po_a, po_b, "2", "Ready"])
+        (dirs[0] / f"60{v}-114-{po_a}.pdf").write_bytes(b"a")
+        if v:  # the first row's second PO never arrives
+            (dirs[1] / f"60{v}-86-{po_b}.pdf").write_bytes(b"b")
+    calls, polls = [], []
+    list_dir, poll_step = S.list_dir, S.poll_step
+
+    def counting_list_dir(d):
+        calls.append(d)
+        return list_dir(d)
+
+    def counting_poll_step(st, listing, dest_dir):
+        polls.append(id(st))
+        return poll_step(st, listing, dest_dir)
+
+    monkeypatch.setattr(S, "list_dir", counting_list_dir)
+    monkeypatch.setattr(S, "poll_step", counting_poll_step)
+    m = orch.orchestrate_tick(
+        None, grid, [str(d) for d in dirs], str(tmp_path / "d"), deadline_polls=6
+    )
+    # sighting, then settle: 2 rounds settle rows 1-4; row 0 waits for its
+    # deadline of 6 polls, 3 rounds of 2 dirs
+    rounds = 3
+    assert len(calls) == len(dirs) * rounds
+    assert calls == [str(d) for d in dirs] * rounds
+    assert sorted(polls.count(k) for k in set(polls)) == [4, 4, 4, 4, 6]
+    assert set(m["errors"]) == {"G2"} and m["po_status"]["8002"] == "error"
