@@ -220,7 +220,7 @@ def clean_southern_cross(raw: pd.DataFrame) -> pd.DataFrame:
     wide = G.promote_header(raw, header_row=0)
     wide = G.slice_at_marker(wide, "LOT #", keep="left")
     wide = G.drop_columns_ci(wide, ["Description"])
-    wide = wide.map(_coerce_cell) if hasattr(wide, "map") else wide.applymap(_coerce_cell)
+    wide = wide.map(_coerce_cell)
     item = wide.columns[G.find_column(wide, "Item")]
     wide = wide[wide[item].map(lambda v: v != 0)].reset_index(drop=True)
     rest = sorted([c for c in wide.columns if c != item], key=lambda c: str(c).lower())
@@ -236,14 +236,7 @@ def split_big_and_baby(raw: pd.DataFrame) -> tuple[pd.DataFrame, pd.DataFrame]:
     """P11: big region = rows above the first 'Total Weight' in col 3;
     baby region = rows from the SECOND 'Item' in col 0."""
     big, _ = G.split_at_sentinel(raw, col=3, sentinel="Total Weight", occurrence=1)
-    matches = [
-        i for i, v in enumerate(raw.iloc[:, 0]) if norm_key_text(v) == "item"
-    ]
-    baby = (
-        raw.iloc[matches[1]:].reset_index(drop=True)
-        if len(matches) >= 2
-        else raw.iloc[0:0]
-    )
+    _, baby = G.split_at_sentinel(raw, col=0, sentinel="Item", occurrence=2)
     return big, baby
 
 

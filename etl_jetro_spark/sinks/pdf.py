@@ -44,19 +44,40 @@ _OBJ_RE = re.compile(rb"(\d+)\s+(\d+)\s+obj\b(.*?)endobj", re.S)
 _REF_RE = re.compile(rb"(\d+)\s+(\d+)\s+R\b")
 
 
+def _write_pdf(kids: list[int], objs: list[bytes]) -> bytes:
+    """Serialize a PDF whose object 1 is the catalog, object 2 the pages
+    tree over ``kids`` and objects 3… are ``objs``: each object, a classic
+    xref table and the trailer."""
+    kids_s = " ".join(f"{n} 0 R" for n in kids)
+    bodies = [
+        b"<< /Type /Catalog /Pages 2 0 R >>",
+        f"<< /Type /Pages /Kids [{kids_s}] /Count {len(kids)} >>".encode(),
+        *objs,
+    ]
+    out = bytearray(b"%PDF-1.4\n")
+    offsets: list[int] = []
+    for i, body in enumerate(bodies, start=1):
+        offsets.append(len(out))
+        out += b"%d 0 obj\n%s\nendobj\n" % (i, body)
+    xref_at = len(out)
+    out += b"xref\n0 %d\n0000000000 65535 f \n" % (len(bodies) + 1)
+    out += b"".join(b"%010d 00000 n \n" % off for off in offsets)
+    out += (
+        b"trailer\n<< /Size %d /Root 1 0 R >>\nstartxref\n%d\n%%%%EOF\n"
+        % (len(bodies) + 1, xref_at)
+    )
+    return bytes(out)
+
+
 def write_simple_pdf_bytes(pages: list[str]) -> bytes:
     """A minimal valid PDF: one Helvetica text line per page."""
-    objs: list[bytes] = []
     n_pages = len(pages)
-    kids = " ".join(f"{3 + 2 * i} 0 R" for i in range(n_pages))
-    objs.append(b"<< /Type /Catalog /Pages 2 0 R >>")
-    objs.append(f"<< /Type /Pages /Kids [{kids}] /Count {n_pages} >>".encode())
+    objs: list[bytes] = []
     for i, text in enumerate(pages):
-        page_num, cont_num = 3 + 2 * i, 4 + 2 * i
         objs.append(
             f"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
             f"/Resources << /Font << /F1 {3 + 2 * n_pages} 0 R >> >> "
-            f"/Contents {cont_num} 0 R >>".encode()
+            f"/Contents {4 + 2 * i} 0 R >>".encode()
         )
         safe = text.replace("\\", r"\\").replace("(", r"\(").replace(")", r"\)")
         stream = f"BT /F1 12 Tf 72 720 Td ({safe}) Tj ET".encode()
@@ -64,22 +85,7 @@ def write_simple_pdf_bytes(pages: list[str]) -> bytes:
             b"<< /Length %d >>\nstream\n%s\nendstream" % (len(stream), stream)
         )
     objs.append(b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>")
-
-    out = bytearray(b"%PDF-1.4\n")
-    offsets = [0]
-    for i, body in enumerate(objs, start=1):
-        offsets.append(len(out))
-        out += b"%d 0 obj\n%s\nendobj\n" % (i, body)
-    xref_at = len(out)
-    out += b"xref\n0 %d\n" % (len(objs) + 1)
-    out += b"0000000000 65535 f \n"
-    for off in offsets[1:]:
-        out += b"%010d 00000 n \n" % off
-    out += (
-        b"trailer\n<< /Size %d /Root 1 0 R >>\nstartxref\n%d\n%%%%EOF\n"
-        % (len(objs) + 1, xref_at)
-    )
-    return bytes(out)
+    return _write_pdf([3 + 2 * i for i in range(n_pages)], objs)
 
 
 def _parse_objects(data: bytes) -> dict[int, bytes]:
@@ -131,27 +137,7 @@ def merge_pdfs_bytes(inputs: list[bytes]) -> bytes:
             new_objs.append(_renumber(objs[n], mapping))
         all_pages += [mapping[k] for k in kids]
 
-    out = bytearray(b"%PDF-1.4\n")
-    offsets: list[int] = []
-    kids_s = " ".join(f"{n} 0 R" for n in all_pages)
-    bodies = [
-        b"<< /Type /Catalog /Pages 2 0 R >>",
-        f"<< /Type /Pages /Kids [{kids_s}] /Count {len(all_pages)} >>".encode(),
-        *new_objs,
-    ]
-    for i, body in enumerate(bodies, start=1):
-        offsets.append(len(out))
-        out += b"%d 0 obj\n%s\nendobj\n" % (i, body)
-    xref_at = len(out)
-    out += b"xref\n0 %d\n" % (len(bodies) + 1)
-    out += b"0000000000 65535 f \n"
-    for off in offsets:
-        out += b"%010d 00000 n \n" % off
-    out += (
-        b"trailer\n<< /Size %d /Root 1 0 R >>\nstartxref\n%d\n%%%%EOF\n"
-        % (len(bodies) + 1, xref_at)
-    )
-    return bytes(out)
+    return _write_pdf(all_pages, new_objs)
 
 
 def combine_pdfs(folder: str, out_dir: str, run_date: date) -> str:

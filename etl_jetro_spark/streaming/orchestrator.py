@@ -7,14 +7,13 @@ double-pick them), fan vendors out to workers, and finalize each to
 few hundred (vendor, PO) pairs, so the transitions are pure Python over the
 ``VendorRow`` list of ``sources.sheet.parse_sections`` — deterministic,
 testable, and runnable without a Spark session. Like the reference's
-concurrent watchers, every Ready vendor's watch is polled in the same
-rounds: a round lists each watch folder once and hands each watch the
-entries of its own POs (:func:`poll_round`).
+``retrieve_pdf(po_df, output_folder, *watch_folders)``, a tick keeps one
+watch over every Ready row's POs, and one poll is one pass over every
+watch folder.
 """
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable, Iterable
 
 from etl_jetro_spark.sources.sheet import VendorRow
@@ -23,11 +22,9 @@ from etl_jetro_spark.streaming import snapshot as S
 READY, SENDING, SENT, ERROR = "Ready", "SENDING", "Sent", "ERROR"
 
 
-def select_ready(rows: Iterable[VendorRow], active: Iterable[str] = ()) -> list[VendorRow]:
-    """Rows eligible for pickup: status Ready and not currently active
-    (T2 lock precondition). ``active`` holds the status_a1 keys in flight."""
-    active = set(active)
-    return [r for r in rows if r.status == READY and r.status_a1 not in active]
+def select_ready(rows: Iterable[VendorRow]) -> list[VendorRow]:
+    """Rows eligible for pickup: status Ready (T2 lock precondition)."""
+    return [r for r in rows if r.status == READY]
 
 
 def expected_pos_for_vendor(control_row_stores: dict[str, str]) -> list[str]:
@@ -59,53 +56,30 @@ def finalize(
     ]
 
 
-def poll_round(
-    watches: list[S.WatchState], watch_dirs: list[str], dest_dir: str
-) -> list[S.WatchState]:
-    """One poll of every watch in ``watches``: each directory of
-    ``watch_dirs`` is listed once (``snapshot.list_dir``), its listing
-    indexed by PO, and ``snapshot.poll_step`` runs for each watch with the
-    entries of its expected POs, in listing order. Every watch counts one
-    poll per directory, as if it had listed the directories itself.
-    Returns the watches still live: some PO pending and the deadline not
-    reached."""
-    for d in watch_dirs:
-        listing = S.list_dir(d)
-        at: dict[str | None, list[int]] = {}
-        for k, (path, _size) in enumerate(listing):
-            at.setdefault(S.po_of(os.path.basename(path)), []).append(k)
-        for st in watches:
-            own = sorted(k for po in st.expected for k in at.get(po, ()))
-            S.poll_step(st, [listing[k] for k in own], dest_dir)
-    return [st for st in watches if st.pending() and st.polls < st.deadline_polls]
-
-
 def orchestrate_tick(
     spark,
     control_grid: list[list[str]],
     watch_dirs: list[str],
     dest_dir: str,
     deadline_polls: int = 600,
-    poll_fn: Callable[[list[S.WatchState], str], None] | None = None,
+    poll_fn: Callable[[S.WatchState, str], None] | None = None,
 ) -> dict:
     """One full control-loop tick — the reference's ``main()`` body
     (sheet_bot/main.py:336-395) as a deterministic function:
 
     parse sections → select Ready → lock (Ready→SENDING payload) →
-    pre-check every Ready row's watch → poll all watches together until
-    each settles or hits its deadline → finalize (Sent/ERROR payload).
+    pre-check one watch over every Ready row's POs → poll it until every
+    PO settles or the deadline → finalize (Sent/ERROR payload).
 
     ``spark`` is unused (the tick needs no session; pass ``None``).
-    ``poll_fn(watches, dest_dir) -> None`` is called once with every
-    pre-checked watch and drives them until done/deadline; the default
-    runs :func:`poll_round` over ``watch_dirs`` with no sleep (tests and
-    batch replays), so it needs at least one directory: an empty list
-    would never count a poll toward the deadline and raises ValueError.
-    Every row's watch is pre-checked before any poll, so a PO that two
-    rows expect is settled by both rows' watches in the same rounds.
-    Returns a manifest with both write-back payloads, the final per-PO
-    status and each ERROR row's reason. Every locked row ends Sent or
-    ERROR; a row with no expected PO is ERROR.
+    ``poll_fn(state, dest_dir) -> None`` drives the pre-checked watch until
+    done/deadline; the default polls with no sleep (tests and batch
+    replays), each poll one ``snapshot.poll_step`` over the listings of
+    ``watch_dirs`` in order, so it needs at least one directory and raises
+    ValueError on an empty list. A PO that two rows expect is watched and
+    moved once. Returns a manifest with both write-back payloads, the final
+    per-PO status and each ERROR row's reason. Every locked row ends Sent
+    or ERROR; a row with no expected PO is ERROR.
     """
     if poll_fn is None and not watch_dirs:
         raise ValueError("orchestrate_tick: watch_dirs is empty and no poll_fn is given")
@@ -122,28 +96,23 @@ def orchestrate_tick(
 
     expected_rows = []
     final = []
-    watches = []
     for r in ready:
         pos = expected_pos_for_vendor(r.stores)
         if not pos:
             final.append((r.vendor_num, r.status_a1, ERROR, "no expected POs"))
-            continue
         expected_rows += [(r.vendor_num, r.status_a1, po) for po in pos]
-        st = S.new_watch(pos, deadline_polls=deadline_polls)
-        S.precheck_dest(st, dest_dir)
-        watches.append(st)
+    st = S.new_watch([po for _, _, po in expected_rows], deadline_polls=deadline_polls)
+    S.precheck_dest(st, dest_dir)
     if poll_fn is None:
-        live = [st for st in watches if st.pending()]
-        while live:
-            live = poll_round(live, watch_dirs, dest_dir)
+        while st.pending():
+            S.poll_step(st, [f for d in watch_dirs for f in S.list_dir(d)], dest_dir)
     else:
-        poll_fn(watches, dest_dir)
-    status_rows = [(po, s) for st in watches for po, s in st.status.items()]
+        poll_fn(st, dest_dir)
 
-    final += finalize(expected_rows, status_rows)
+    final += finalize(expected_rows, st.status.items())
     return {
         "lock": lock_payload,
         "final": status_update_payload((a1, new) for _, a1, new, _ in final),
-        "po_status": dict(status_rows),
+        "po_status": dict(st.status),
         "errors": {a1: detail for _, a1, new, detail in final if new == ERROR},
     }

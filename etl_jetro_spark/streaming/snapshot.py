@@ -2,12 +2,14 @@
 
 ``retrieve_pdf`` (reference sheet_bot/utils.py:77-406) polls watch folders,
 debounces each candidate on a size-stability window, moves settled files,
-and errors POs that never complete within the deadline. Directory listings
-are control-plane small (hundreds of names), so the state machine is a
-deterministic pure-Python step function over successive snapshots —
-trivially testable, restartable, and drivable from any scheduler (a cron
-or the reference's 60 s loop). The data-plane (what's *in* the PDFs) never
-touches this path.
+and errors POs that never complete within the deadline. One poll is one
+pass over every watch folder: :func:`poll_step` takes their listings
+concatenated in folder order, so the first folder wins a PO found in two,
+and the deadline counts passes. Directory listings are control-plane small
+(hundreds of names), so the state machine is a deterministic pure-Python
+step function over successive snapshots — trivially testable, restartable,
+and drivable from any scheduler (a cron or the reference's 60 s loop). The
+data-plane (what's *in* the PDFs) never touches this path.
 
 State transitions per PO (T2/T4/T5):
     (unseen) --sighting--> waiting --same size next poll--> done
@@ -22,6 +24,7 @@ import os
 import re
 import shutil
 from dataclasses import dataclass, field
+from typing import NamedTuple
 
 PO_FROM_NAME = re.compile(r"-(\d+)\.pdf$", re.IGNORECASE)
 
@@ -31,11 +34,9 @@ def po_of(name: str) -> str | None:
     return m.group(1) if m else None
 
 
-@dataclass
-class Sighting:
+class Sighting(NamedTuple):
     path: str
     size: int
-    polls_stable: int = 0
 
 
 @dataclass
@@ -44,7 +45,6 @@ class WatchState:
     deadline_polls: int
     sightings: dict[str, Sighting] = field(default_factory=dict)  # po -> file
     status: dict[str, str] = field(default_factory=dict)          # po -> waiting|done|error
-    moved_to: dict[str, str] = field(default_factory=dict)
     polls: int = 0
 
     def pending(self) -> set[str]:
@@ -124,38 +124,33 @@ def precheck_dest(state: WatchState, dest_dir: str) -> WatchState:
             po = po_of(name)
             if po in state.expected:
                 state.status[po] = "done"
-                state.moved_to[po] = os.path.join(dest_dir, name)
     return state
 
 
 def poll_step(
     state: WatchState, listing: list[tuple[str, int]], dest_dir: str
 ) -> list[tuple[str, str]]:
-    """One poll tick over a (path, size) listing. Mutates ``state`` and
-    returns this tick's transitions [(po, new_status)]."""
+    """One poll over a (path, size) listing, the listings of every watch
+    folder in folder order. Mutates ``state`` and returns this poll's
+    transitions [(po, new_status)]."""
     state.polls += 1
     transitions: list[tuple[str, str]] = []
-    by_po: dict[str, tuple[str, int]] = {}
+    by_po: dict[str, Sighting] = {}
     for path, size in listing:
         po = po_of(os.path.basename(path))
         if po in state.expected and state.status.get(po) != "done":
-            by_po.setdefault(po, (path, size))  # first match wins (D1)
+            by_po.setdefault(po, Sighting(path, size))  # first match wins (D1)
 
-    for po, (path, size) in by_po.items():
-        s = state.sightings.get(po)
-        if s is None or s.path != path or s.size != size:
-            state.sightings[po] = Sighting(path, size, polls_stable=0)
+    for po, seen in by_po.items():
+        if state.sightings.get(po) != seen:
+            state.sightings[po] = seen
             if state.status.get(po) != "waiting":
                 state.status[po] = "waiting"
                 transitions.append((po, "waiting"))
-        else:
-            s.polls_stable += 1
-            # settle: unchanged across one full poll interval
-            dest = move_file_idempotent(path, dest_dir)
-            if dest is not None:
-                state.status[po] = "done"
-                state.moved_to[po] = dest
-                transitions.append((po, "done"))
+        elif move_file_idempotent(seen.path, dest_dir) is not None:
+            # settled: unchanged across one full poll interval, and moved
+            state.status[po] = "done"
+            transitions.append((po, "done"))
 
     if state.polls >= state.deadline_polls:
         for po in sorted(state.pending()):

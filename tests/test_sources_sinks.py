@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import hashlib
 import os
 from datetime import date
 
@@ -345,7 +346,9 @@ def test_write_canonical_emits_real_workbook(spark, tmp_path, sf_dir):
 # --------------------------------------------------------------------------
 
 def test_pdf_native_merge(tmp_path):
-    from etl_jetro_spark.sinks.pdf import combine_pdfs, merged_name, write_simple_pdf_bytes
+    from etl_jetro_spark.sinks.pdf import (
+        combine_pdfs, merge_pdfs_bytes, merged_name, write_simple_pdf_bytes,
+    )
     from tests.conftest import pdf_page_count
 
     folder = tmp_path / "pdfs"
@@ -360,6 +363,15 @@ def test_pdf_native_merge(tmp_path):
     assert pdf_page_count(data) == 3
     # sorted merge order: a-114 pages come before b-402's
     assert data.index(b"PO 1001") < data.index(b"PO 1002")
+    # the native writer's and merger's bytes do not drift
+    a = write_simple_pdf_bytes(["PO 1001", "PO 1001 p2"])
+    b = write_simple_pdf_bytes(["PO 1002"])
+    assert hashlib.sha256(a).hexdigest() == (
+        "9ecdf757589937714ca7fd5ee669440eaf44c2f8dc0786b4c3f9366606578288"
+    )
+    assert hashlib.sha256(merge_pdfs_bytes([a, b])).hexdigest() == (
+        "8d0d3231ee7e412081158393ed112ea9778e130ab250e143c2d21b7a7b171567"
+    )
 
 
 def test_send_mail_request_payload():

@@ -185,10 +185,6 @@ def test_orchestrator_transitions(tmp_path):
     locks = {p["range"]: p["values"][0][0] for p in m["lock"]}
     assert locks == {"G2": "SENDING", "E7": "SENDING"}
 
-    # active-key exclusion prevents double pickup (T2)
-    left = orch.select_ready(rows, ["G2"])
-    assert {r.vendor_num for r in left} == {"44602"}
-
     # finalize: vendor 79906 got 88101 but not 88102 -> ERROR with detail
     expected = [("79906", "G2", "88101"), ("79906", "G2", "88102"), ("44602", "E7", "88104")]
     status = [("88101", "done"), ("88104", "done"), ("88102", "waiting")]
@@ -230,10 +226,10 @@ def test_ready_row_without_expected_po_ends_in_error(tmp_path):
 
 
 def test_tick_rejects_empty_watch_dirs(tmp_path):
-    """The default poller counts polls per watched directory, so with no
-    directory a Ready row's deadline is never reached. The tick refuses an
-    empty list up front; the call runs in a thread so a regression fails
-    instead of hanging the suite. A caller's ``poll_fn`` needs no dirs."""
+    """With no watch directory the default poller could never find a PO,
+    so the tick refuses an empty list up front; the call runs in a thread
+    so a regression fails instead of hanging the suite. A caller's
+    ``poll_fn`` needs no dirs."""
     import threading
 
     got = {}
@@ -251,7 +247,7 @@ def test_tick_rejects_empty_watch_dirs(tmp_path):
     assert "watch_dirs" in got.get("error", "")
 
     m = orch.orchestrate_tick(
-        None, CONTROL_GRID, [], str(tmp_path), deadline_polls=3, poll_fn=lambda watches, d: None
+        None, CONTROL_GRID, [], str(tmp_path), deadline_polls=3, poll_fn=lambda st, d: None
     )
     assert set(m["errors"]) == {"G2", "E7"}
 
@@ -410,11 +406,10 @@ def test_orchestrate_tick_wall_clock_soak(tmp_path):
     cadence = 0.4
     ticks = []
 
-    def poll_fn(watches, dest_dir):
-        live = [st for st in watches if st.pending()]
-        while live:
+    def poll_fn(st, dest_dir):
+        while st.pending():
             ticks.append(time.time())
-            live = orch.poll_round(live, [str(watch)], dest_dir)
+            S.poll_step(st, S.list_dir(str(watch)), dest_dir)
             time.sleep(cadence)
 
     t0 = time.time()
@@ -445,8 +440,8 @@ def test_orchestrate_tick_wall_clock_soak(tmp_path):
 
 def _sequential_tick(grid, watch_dirs, dest_dir, deadline_polls):
     """The tick as one vendor at a time: pre-check one row's watch, poll
-    it until it settles, then the next row. The oracle of the shared
-    rounds of ``orchestrate_tick``."""
+    it until it settles, then the next row. Each poll is one pass over
+    every watch dir. The oracle of the one watch of ``orchestrate_tick``."""
     from etl_jetro_spark.sinks.notify import status_update_payload
 
     ready = orch.select_ready(parse_sections(grid))
@@ -462,10 +457,7 @@ def _sequential_tick(grid, watch_dirs, dest_dir, deadline_polls):
         st = S.new_watch(pos, deadline_polls=deadline_polls)
         S.precheck_dest(st, dest_dir)
         while st.pending():
-            for d in watch_dirs:
-                S.poll_step(st, S.list_dir(d), dest_dir)
-            if st.polls >= st.deadline_polls:
-                break
+            S.poll_step(st, [f for d in watch_dirs for f in S.list_dir(d)], dest_dir)
         status_rows += list(st.status.items())
     final += orch.finalize(expected_rows, status_rows)
     return {
@@ -516,12 +508,9 @@ def _tick_case(case, root):
 
 @pytest.mark.parametrize("case", ["shared_po", "two_dirs", "pre_delivered", "missing", "no_pos"])
 def test_tick_rounds_match_sequential_tick(case, tmp_path):
-    """Polling every row's watch in shared rounds gives the same lock,
-    final, per-PO status, errors and delivered files as polling the rows
-    one after another. Intended difference: a PO two rows expect used to
-    be delivered by the first row before the second row's pre-check; now
-    both rows' watches see it in the same rounds and the second row's
-    move finds it delivered, so the second row polls where it did not."""
+    """One watch over every row's POs gives the same lock, final, per-PO
+    status, errors and delivered files as polling the rows one after
+    another."""
     def files(dirs, dest):
         return [sorted(os.listdir(d)) for d in (*dirs, dest)]
 
@@ -535,11 +524,12 @@ def test_tick_rounds_match_sequential_tick(case, tmp_path):
 
 
 def test_tick_lists_each_dir_once_per_round(tmp_path, monkeypatch):
-    """A round lists each watch dir once for all rows: V rows over D dirs
-    cost D × rounds listings, not V × D × polls. Each row still counts a
-    poll per dir per round."""
+    """One watch serves every row: the destination is listed once per
+    tick, and each poll lists each watch dir once and calls ``poll_step``
+    once, so V rows over D dirs cost D × polls listings, not V × D × polls."""
     vendors, dirs = 5, [tmp_path / "w1", tmp_path / "w2"]
-    for d in dirs:
+    dest = tmp_path / "d"
+    for d in (*dirs, dest):
         d.mkdir()
     grid = [["Note", "Vendor #", "Vendor Name", "114", "86", "PO count", "Status"]]
     for v in range(vendors):
@@ -548,26 +538,46 @@ def test_tick_lists_each_dir_once_per_round(tmp_path, monkeypatch):
         (dirs[0] / f"60{v}-114-{po_a}.pdf").write_bytes(b"a")
         if v:  # the first row's second PO never arrives
             (dirs[1] / f"60{v}-86-{po_b}.pdf").write_bytes(b"b")
-    calls, polls = [], []
-    list_dir, poll_step = S.list_dir, S.poll_step
+    listed, polls = [], []
+    listdir, poll_step = os.listdir, S.poll_step
 
-    def counting_list_dir(d):
-        calls.append(d)
-        return list_dir(d)
+    def counting_listdir(d):
+        listed.append(str(d))
+        return listdir(d)
 
     def counting_poll_step(st, listing, dest_dir):
         polls.append(id(st))
         return poll_step(st, listing, dest_dir)
 
-    monkeypatch.setattr(S, "list_dir", counting_list_dir)
+    monkeypatch.setattr(os, "listdir", counting_listdir)
     monkeypatch.setattr(S, "poll_step", counting_poll_step)
     m = orch.orchestrate_tick(
-        None, grid, [str(d) for d in dirs], str(tmp_path / "d"), deadline_polls=6
+        None, grid, [str(d) for d in dirs], str(dest), deadline_polls=6
     )
-    # sighting, then settle: 2 rounds settle rows 1-4; row 0 waits for its
-    # deadline of 6 polls, 3 rounds of 2 dirs
-    rounds = 3
-    assert len(calls) == len(dirs) * rounds
-    assert calls == [str(d) for d in dirs] * rounds
-    assert sorted(polls.count(k) for k in set(polls)) == [4, 4, 4, 4, 6]
+    # sighting, then settle: 2 polls settle rows 1-4; row 0's missing PO
+    # keeps the watch polling until its deadline of 6 polls
+    n_polls = 6
+    assert listed == [str(dest)] + [str(d) for d in dirs] * n_polls
+    assert len(polls) == n_polls and len(set(polls)) == 1
     assert set(m["errors"]) == {"G2"} and m["po_status"]["8002"] == "error"
+
+
+def test_tick_po_in_two_watch_dirs(tmp_path):
+    """The same PO's PDF in two watch dirs: one pass sees both, the first
+    dir's file wins, settles and is moved, and the second dir's copy stays
+    where it is."""
+    dirs = [tmp_path / "w1", tmp_path / "w2"]
+    dest = tmp_path / "d"
+    for d in (*dirs, dest):
+        d.mkdir()
+    grid = [["Note", "Vendor #", "Vendor Name", "114", "PO count", "Status"],
+            ["", "601", "V1", "9001", "1", "Ready"]]
+    for d in dirs:
+        (d / "601-114-9001.pdf").write_bytes(d.name.encode())
+    m = orch.orchestrate_tick(None, grid, [str(d) for d in dirs], str(dest), deadline_polls=10)
+    assert m["po_status"] == {"9001": "done"}
+    assert m["errors"] == {}
+    assert m["final"] == [{"range": "F2", "values": [["Sent"]]}]
+    assert (dest / "601-114-9001.pdf").read_bytes() == b"w1"
+    assert os.listdir(dirs[0]) == []
+    assert (dirs[1] / "601-114-9001.pdf").read_bytes() == b"w2"
